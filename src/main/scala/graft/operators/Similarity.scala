@@ -44,20 +44,37 @@ object Metric {
   }
 }
 
-/** Corpus packed for broadcast: row-major `data` (n × dim), ids sorted
-  * ascending (position j ↔ ids(j)), plus norms for cosine/euclidean.
-  * `dataF` is populated only when the source column was array<float>
-  * (the reference's f32 fast path).
+/** Corpus packed for broadcast: ids sorted ascending (position j ↔
+  * ids(j)), norms and square norms for cosine/euclidean, and the
+  * row-major n × dim vectors stored ONCE, in the source precision:
+  *  - array<double> corpus: `f64` holds the matrix, `dataF` is null;
+  *  - array<float> corpus: `dataF` holds the matrix (the reference's
+  *    f32 fast path) and `f64` is null, so the index costs 4 B/element
+  *    on the driver and in every broadcast.
+  * `data` is the f64 view every f64 reader uses (mixed-precision
+  * GEMM, the quantizers, the stream serve): `f64` itself, or for an
+  * f32 corpus the f32 matrix widened with `Float.toDouble` on first
+  * use — exactly the values a packed f64 copy holds. The view is
+  * transient: a broadcast never carries it, and a JVM that needs it
+  * widens once per deserialized index.
   */
 final case class CorpusIndex(
     ids: Array[Long],
-    data: Array[Double],
+    f64: Array[Double],
     dataF: Array[Float],
     n: Int,
     dim: Int,
     norms: Array[Double],
     sqNorms: Array[Double]) extends Serializable {
   def isF32: Boolean = dataF != null
+  @transient lazy val data: Array[Double] =
+    if (f64 != null) f64
+    else {
+      val out = new Array[Double](dataF.length)
+      var i = 0
+      while (i < out.length) { out(i) = dataF(i).toDouble; i += 1 }
+      out
+    }
 }
 
 object Similarity {
@@ -74,6 +91,15 @@ object Similarity {
     * ContextCleaner reclaims their blocks. Callers that re-search the
     * same index repeatedly amortize by REUSING THE RETURNED DATAFRAME
     * (the plan holds its broadcast), not by re-calling topk.
+    *
+    * Memoizing the broadcast on the index itself (dropped with the
+    * index) was measured and rejected. On perfbench's 10k×256 f32
+    * corpus (4-vCPU host) it took the 16-query request from ~156 ms
+    * to ~125 ms, but it pins the serialized pieces in driver heap for
+    * the index's lifetime: the IVF-PQ lifecycle workload's live-heap
+    * peak rose from 92.3 MB to 100.3 MB (+8.7%). Storing f32 corpora
+    * once, as f32 (see [[CorpusIndex]]), is the cheaper way to shrink
+    * the per-call broadcast.
     */
   private def broadcastOf[T: scala.reflect.ClassTag](
       spark: org.apache.spark.sql.SparkSession, cx: T): Broadcast[T] =
@@ -82,7 +108,9 @@ object Similarity {
   /** Collect + pack a corpus DataFrame column. Ids are sorted so that
     * output `index` values are deterministic and block splits are
     * range-based. Throws on empty corpus / ragged dims (reference:
-    * "Empty corpus", "Dimension mismatch").
+    * "Empty corpus", "Dimension mismatch") and names the row of a null
+    * id, embedding or element ("Null id", "Null embedding",
+    * "Null element").
     */
   def collectCorpus(corpus: DataFrame, idCol: String, embCol: String): CorpusIndex =
     collectCorpusOpt(corpus, idCol, embCol)
@@ -101,11 +129,19 @@ object Similarity {
     }
     val rows = corpus.select(col(idCol).cast(LongType), col(embCol)).collect()
     if (rows.isEmpty) return None
+    if (rows.exists(_.isNullAt(0))) throw new IllegalArgumentException(
+      s"Null id: corpus column $idCol has a null; every corpus row needs an id")
     val sorted = rows.sortBy(_.getLong(0))
+    def embOf(row: Row): scala.collection.Seq[Any] = {
+      if (row.isNullAt(1)) throw new IllegalArgumentException(
+        s"Null embedding: corpus row $idCol=${row.getLong(0)} has a null $embCol")
+      row.getSeq[Any](1)
+    }
     val n = sorted.length
-    val dim = sorted.head.getSeq[Any](1).length
+    val dim = embOf(sorted.head).length
     val ids = new Array[Long](n)
-    val data = new Array[Double](n * dim)
+    // one matrix, in the source precision (see CorpusIndex)
+    val f64 = if (isF32) null else new Array[Double](n * dim)
     val dataF = if (isF32) new Array[Float](n * dim) else null
     val norms = new Array[Double](n)
     val sqNorms = new Array[Double](n)
@@ -113,7 +149,7 @@ object Similarity {
     while (j < n) {
       val row = sorted(j)
       ids(j) = row.getLong(0)
-      val emb = row.getSeq[Any](1)
+      val emb = embOf(row)
       if (emb.length != dim) throw new IllegalArgumentException(
         s"Dimension mismatch: corpus rows have $dim and ${emb.length} elements")
       var d = 0; var sq = 0.0
@@ -123,9 +159,10 @@ object Similarity {
           case f: java.lang.Float => f.toDouble
           case x: java.lang.Double => x.doubleValue
           case x: Number => x.doubleValue
+          case null => throw new IllegalArgumentException(
+            s"Null element: corpus row $idCol=${ids(j)} has a null at $embCol[$d]")
         }
-        data(j * dim + d) = v
-        if (isF32) dataF(j * dim + d) = v.toFloat
+        if (isF32) dataF(j * dim + d) = v.toFloat else f64(j * dim + d) = v
         sq += v * v
         d += 1
       }
@@ -133,7 +170,7 @@ object Similarity {
       norms(j) = math.sqrt(sq)
       j += 1
     }
-    Some(CorpusIndex(ids, data, dataF, n, dim, norms, sqNorms))
+    Some(CorpusIndex(ids, f64, dataF, n, dim, norms, sqNorms))
   }
 
   /** Per-query top-k against a broadcast corpus. Adds `outputCol`:

@@ -156,6 +156,91 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  /** 40×16 gaussian corpus as array<float>, and the same frame cast to
+    * array<double> (every element widened exactly). */
+  private def f32CorpusPair(seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    val f32 = (0L until 40L).map(i => (i, Seq.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("cid", "embedding")
+    (f32, f32.select($"cid", $"embedding".cast("array<double>").as("embedding")))
+  }
+
+  test("f32 corpus, f64 queries: topk/matmul/matmulFlat equal the f64-cast corpus exactly") {
+    val (cF, cD) = f32CorpusPair(5)
+    val cxF = Similarity.collectCorpus(cF, "cid", "embedding")
+    val cxD = Similarity.collectCorpus(cD, "cid", "embedding")
+    assert(cxF.isF32 && !cxD.isF32)
+    assert(cxF.data.sameElements(cxD.data) && cxF.norms.sameElements(cxD.norms))
+    val rnd = new scala.util.Random(6)
+    val q = queriesDf((0L until 12L).map(i => (i, Seq.fill(16)(rnd.nextGaussian()))))
+    def rows(df: org.apache.spark.sql.DataFrame, keys: String*) =
+      df.orderBy(keys.map(col): _*).collect().toSeq
+    for (m <- Seq(Metric.Cosine, Metric.Dot, Metric.Euclidean)) {
+      assert(rows(Similarity.topk(q, "embedding", cxF, 5, m), "qid") ==
+        rows(Similarity.topk(q, "embedding", cxD, 5, m), "qid"), s"topk $m")
+    }
+    assert(rows(Similarity.matmul(q, "embedding", cxF), "qid") ==
+      rows(Similarity.matmul(q, "embedding", cxD), "qid"))
+    assert(rows(Similarity.matmulFlat(q, "embedding", cxF), "qid", "index") ==
+      rows(Similarity.matmulFlat(q, "embedding", cxD), "qid", "index"))
+  }
+
+  test("a packed f32 index holds its vectors once, as f32 (no f64 shadow copy)") {
+    val (cF, _) = f32CorpusPair(7)
+    val cx = Similarity.collectCorpus(cF, "cid", "embedding")
+    // f32 matrix + 10% slack, plus a long id and two double norms per row
+    val bound = (cx.n * cx.dim * 4L * 1.1 + cx.n * 24L + 1024L).toLong
+    val size = org.apache.spark.util.SizeEstimator.estimate(cx)
+    assert(size < bound, s"packed f32 index is $size bytes, bound $bound")
+  }
+
+  test("quantizers: an f32 corpus gives the same codes and parameters as its f64 cast") {
+    val (cF, cD) = f32CorpusPair(8)
+    val s8F = Similarity.collectCorpusSq8(cF, "cid", "embedding")
+    val s8D = Similarity.collectCorpusSq8(cD, "cid", "embedding")
+    assert(s8F.codes.sameElements(s8D.codes) && s8F.dimMin.sameElements(s8D.dimMin) &&
+      s8F.dimScale.sameElements(s8D.dimScale) && s8F.norms.sameElements(s8D.norms))
+    val bqF = Similarity.collectCorpusBq(cF, "cid", "embedding")
+    val bqD = Similarity.collectCorpusBq(cD, "cid", "embedding")
+    assert(bqF.words.sameElements(bqD.words) && bqF.thresholds.sameElements(bqD.thresholds) &&
+      bqF.bitCut.sameElements(bqD.bitCut) && bqF.sq8.codes.sameElements(bqD.sq8.codes))
+    val pqF = Similarity.collectCorpusPq(cF, "cid", "embedding", m = 4)
+    val pqD = Similarity.collectCorpusPq(cD, "cid", "embedding", m = 4)
+    assert(pqF.codes.sameElements(pqD.codes) && pqF.codebooks.sameElements(pqD.codebooks) &&
+      pqF.norms.sameElements(pqD.norms) && pqF.sqNorms.sameElements(pqD.sqNorms))
+    assert(pqF.sq8.get.codes.sameElements(pqD.sq8.get.codes))
+  }
+
+  test("a null corpus embedding or element is a named refusal giving the row id") {
+    val nullEmb = Seq((3L, Seq(1.0, 2.0)), (7L, null.asInstanceOf[Seq[Double]]))
+      .toDF("cid", "embedding")
+    val e1 = intercept[IllegalArgumentException] {
+      Similarity.collectCorpus(nullEmb, "cid", "embedding")
+    }
+    assert(e1.getMessage.contains("Null embedding") && e1.getMessage.contains("cid=7"),
+      e1.getMessage)
+    // a null first row (the one that fixes the dimension) names itself too
+    val nullFirst = Seq((1L, null.asInstanceOf[Seq[Double]]), (2L, Seq(1.0)))
+      .toDF("cid", "embedding")
+    assert(intercept[IllegalArgumentException] {
+      Similarity.collectCorpus(nullFirst, "cid", "embedding")
+    }.getMessage.contains("cid=1"))
+    val nullElem = spark.createDataFrame(
+      java.util.Arrays.asList(Row(4L, Seq(1.0f, 2.0f)), Row(9L, Seq(1.0f, null))),
+      StructType(Seq(StructField("cid", LongType),
+        StructField("embedding", ArrayType(FloatType, containsNull = true)))))
+    val e2 = intercept[IllegalArgumentException] {
+      Similarity.collectCorpus(nullElem, "cid", "embedding")
+    }
+    assert(e2.getMessage.contains("Null element") && e2.getMessage.contains("cid=9") &&
+      e2.getMessage.contains("embedding[1]"), e2.getMessage)
+    val nullId = Seq((Option(1L), Seq(1.0)), (Option.empty[Long], Seq(2.0)))
+      .toDF("cid", "embedding")
+    assert(intercept[IllegalArgumentException] {
+      Similarity.collectCorpus(nullId, "cid", "embedding")
+    }.getMessage.contains("Null id"))
+  }
+
   test("dimension mismatch and empty corpus raise reference-style errors") {
     val q = queriesDf(Seq((0L, Seq(1.0, 2.0))))
     val c3 = corpusOf(Seq((0L, Seq(1.0, 2.0, 3.0))))
