@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.ShardedLayout.{Manifest, ShardKey, carry, copyDir, shardDir, shardDirs}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -364,9 +365,7 @@ object Sink {
       path: String,
       overwrite: Boolean = false): Unit =
     publishAtomically(spark, path, overwrite) { tmp =>
-      import spark.implicits._
-      Seq((ox.dim, ox.rot.toSeq)).toDF("dim", "rot")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/rot")
+      ShardedLayout.writeRotation(spark, tmp, ox.dim, ox.rot)
       writePqIndex(spark, ox.pq, s"$tmp/pq")
     }
 
@@ -437,34 +436,37 @@ object Sink {
       overwrite: Boolean = false,
       hashModulus: Int = 0,
       shardHashVals: Seq[Long] = Nil): Unit = {
-    require(shards.nonEmpty, "Empty shard list")
-    // identity default carries the same caveat as the IVF+PQ persist:
-    // correct only when no hash shard was compacted away at build —
-    // prefer the ShardedBqBuild overload, which carries the real
-    // layout
-    val modulus = if (hashModulus > 0) hashModulus else shards.size
+    val (modulus, hashVals) = routingIdentity("writeBqShardedIndex", "ShardedBqBuild",
+      shards.size, hashModulus, shardHashVals)
+    publishAtomically(spark, path, overwrite) { tmp =>
+      ShardedLayout.writeShards(spark, tmp, shards, modulus, hashVals)(
+        _.n, writeBqInto(spark, _, _))
+    }
+  }
+
+  /** The routing identity a shard-list persist records: the explicit
+    * `hashModulus`/`shardHashVals`, or the IDENTITY layout. The
+    * identity default is only correct when NO hash shard was compacted
+    * away during the build — a collect build that dropped empties
+    * would persist a confidently wrong routing identity, so the
+    * layout-carrying build overloads are preferred (round-11 advisor).
+    */
+  private def routingIdentity(caller: String, buildType: String, numShards: Int,
+      hashModulus: Int, shardHashVals: Seq[Long]): (Int, Seq[Long]) = {
+    require(numShards > 0, "Empty shard list")
+    val modulus = if (hashModulus > 0) hashModulus else numShards
     if (hashModulus <= 0)
-      log.warn(s"writeBqShardedIndex: recording the IDENTITY routing layout " +
-        s"(hash_modulus=${shards.size}) — if this build compacted empty hash " +
-        "shards, appends will mis-route; pass the build's ShardedBqBuild " +
+      log.warn(s"$caller: recording the IDENTITY routing layout " +
+        s"(hash_modulus=$numShards) — if this build compacted empty hash " +
+        s"shards, appends will mis-route; pass the build's $buildType " +
         "or explicit hashModulus/shardHashVals")
     val hashVals =
-      if (shardHashVals.nonEmpty) shardHashVals else shards.indices.map(_.toLong)
-    require(hashVals.size == shards.size,
-      s"shardHashVals has ${hashVals.size} entries for ${shards.size} shards")
-    require(modulus >= shards.size,
-      s"hash_modulus $modulus < ${shards.size} shard directories")
-    publishAtomically(spark, path, overwrite) { tmp =>
-      import spark.implicits._
-      Seq((shards.size, shards.map(_.n.toLong).sum, "xxhash64_pmod",
-          modulus, hashVals))
-        .toDF("num_shards", "total_n", "shard_key",
-          "hash_modulus", "shard_hash_vals")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
-      Par.shards(shards.zipWithIndex) { case (sx, i) =>
-        writeBqInto(spark, sx, f"$tmp/shard_$i%04d")
-      }
-    }
+      if (shardHashVals.nonEmpty) shardHashVals else (0 until numShards).map(_.toLong)
+    require(hashVals.size == numShards,
+      s"shardHashVals has ${hashVals.size} entries for $numShards shards")
+    require(modulus >= numShards,
+      s"hash_modulus $modulus < $numShards shard directories")
+    (modulus, hashVals)
   }
 
   /** [[writeBqShardedIndex]] taking the build WITH its routing
@@ -547,25 +549,9 @@ object Sink {
     require(numShards >= 1, s"numShards must be >= 1, got $numShards")
     requireEmbColType(corpus, embCol)
     val sc = spark.sparkContext
-    val shardCol =
-      pmod(xxhash64(col(idCol).cast(LongType)), lit(numShards)).cast(LongType)
-    val narrow = corpus.select(shardCol.as("shard"),
-      col(idCol).cast(LongType).as("id"))
-    // ONE (shard, id) aggregation serves both the dup-id refusal and
-    // the per-shard counts (the writeIvfPqShardedIndexDistributed
-    // pass-1 shape: equal ids land in the same shard, so per-(shard,
-    // id) counts see every duplicate)
-    val perId = narrow.groupBy("shard", "id").count()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts: Map[Long, Long] =
-      try {
-        val dupId = perId.filter(col("count") > 1).limit(1).collect()
-        require(dupId.isEmpty,
-          s"duplicate id in corpus: ${dupId.headOption.map(_.getLong(1)).getOrElse(-1L)}")
-        perId.groupBy("shard").agg(sum("count").as("count"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally { perId.unpersist(); () }
-    require(counts.nonEmpty, "Empty corpus")
+    val shardCol = ShardedLayout.hashOf(idCol, numShards)
+    val counts = ShardedLayout.buildCounts(
+      corpus.select(shardCol.as("shard"), col(idCol).cast(LongType).as("id")))
     val dim = corpus.select(col(embCol)).filter(col(embCol).isNotNull)
       .head().getSeq[Any](0).length
     val nWords = (dim + 63) >>> 6
@@ -634,54 +620,30 @@ object Sink {
     try {
       publishAtomically(spark, path, overwrite) { tmp =>
         import spark.implicits._
-        Seq((shardVals.size, nTot, "xxhash64_pmod", numShards, shardVals))
-          .toDF("num_shards", "total_n", "shard_key",
-            "hash_modulus", "shard_hash_vals")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
+        ShardedLayout.writeManifest(spark, tmp,
+          Manifest(shardVals.size, nTot, ShardKey, numShards, shardVals))
         val withShard = corpus.select(shardCol.as("shard"),
           col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
         val encoded = withShard.rdd.mapPartitions { it =>
           val (mn, scl, cut) = bcEnc.value
           it.map { row =>
-            val v = embDoubles(row.getSeq[Any](2))
-            if (v.length != dd) throw new IllegalArgumentException(
-              s"Dimension mismatch: corpus rows have $dd and ${v.length} elements")
+            val v = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
             val codes = new Array[Byte](dd)
             val sq = Similarity.sq8EncodeRow(v, 0, dd, mn, scl, codes, 0)
-            val words = new Array[Long](nW)
-            var d = 0
-            while (d < dd) {
-              if ((codes(d) & 0xFF) >= cut(d)) words(d >>> 6) |= 1L << (d & 63)
-              d += 1
-            }
-            Row(row.getLong(0), row.getLong(1), words, codes, math.sqrt(sq), sq)
+            Row(row.getLong(0), row.getLong(1), bqBits(codes, cut, nW), codes,
+              math.sqrt(sq), sq)
           }
         }
-        val wIdx = Window.partitionBy("shard").orderBy("id")
-        spark.createDataFrame(encoded, bqEncSchema)
-          .withColumn("idx", (row_number().over(wIdx) - 1).cast(IntegerType))
-          .withColumn("shard_out", element_at(typedLit(shardOut), col("shard")))
-          .select("shard_out", "idx", "id", "words", "code", "norm", "sq_norm")
-          .write.partitionBy("shard_out").mode(SaveMode.ErrorIfExists)
-          .parquet(s"$tmp/__vectors__")
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(sc.hadoopConfiguration)
-        Par.shards(shardVals.zipWithIndex) { case (s, i) =>
-          val shardDir = new org.apache.hadoop.fs.Path(f"$tmp/shard_$i%04d")
-          require(fs.mkdirs(shardDir), s"could not create $shardDir")
-          val src = new org.apache.hadoop.fs.Path(s"$tmp/__vectors__/shard_out=$i")
-          require(fs.exists(src),
-            s"encode pass produced no partition for shard $s at $src")
-          require(fs.rename(src,
-            new org.apache.hadoop.fs.Path(shardDir, "vectors")),
-            s"could not move $src into $shardDir")
-          Seq((counts(s).toInt, dd, nW, thresholds.toSeq, gridMin.toSeq,
-              gridScale.toSeq, bitCut.toSeq))
-            .toDF("n", "dim", "n_words", "thresholds", "dim_min",
-              "dim_scale", "bit_cut")
-            .write.mode(SaveMode.ErrorIfExists).parquet(s"$shardDir/meta")
+        ShardedLayout.writeShardParts(spark.createDataFrame(encoded, bqEncSchema),
+          element_at(typedLit(shardOut), col("shard")), lit(0L), s"$tmp/__vectors__")
+        ShardedLayout.installBuiltShards(spark, tmp, s"$tmp/__vectors__", shardVals) {
+          (s, dir) =>
+            Seq((counts(s).toInt, dd, nW, thresholds.toSeq, gridMin.toSeq,
+                gridScale.toSeq, bitCut.toSeq))
+              .toDF("n", "dim", "n_words", "thresholds", "dim_min",
+                "dim_scale", "bit_cut")
+              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
         }
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__vectors__"), true)
       }
     } finally bcEnc.destroy()
   }
@@ -689,16 +651,12 @@ object Sink {
   /** APPEND new rows to a persisted SHARDED BQ index — the
     * [[appendBqIndex]] encode (frozen corpus-global grid/thresholds/
     * `bit_cut`, shard-INDEPENDENT because every BQ shard cuts on the
-    * same global threshold) composed with
-    * [[appendIvfPqShardedIndex]]'s routing/copy/publish contracts:
-    * new rows route to `pmod(xxhash64(id), hash_modulus)` (falling
-    * back to `hash mod num_dirs` for hash values whose shard was
-    * compacted away at build — any shard can encode any row, only
-    * the degenerate placement is approximate), old vectors are
-    * copied AS FILES, pack positions continue from each shard's old
-    * `n`, tombstones carry forward, and the grown index publishes
-    * atomically. Duplicate/clashing ids and dimension mismatches
-    * refuse by name.
+    * same global threshold) inside the [[ShardedLayout]] append
+    * envelope: rows route by the manifest's build identity, old
+    * vectors copy AS FILES, pack positions continue from each shard's
+    * old `n`, tombstones carry forward, and the grown index publishes
+    * atomically. Null/duplicate/clashing ids, null embeddings and
+    * dimension mismatches refuse by name.
     */
   def appendBqShardedIndex(
       spark: SparkSession,
@@ -709,159 +667,81 @@ object Sink {
       outPath: String,
       overwrite: Boolean = false): Unit = {
     import spark.implicits._
-    requireEmbColType(newRows, embCol)
-    val manifestDf = spark.read.parquet(s"$indexPath/manifest")
-    val manifest = manifestDf.head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    val totalN = manifest.getLong(manifest.fieldIndex("total_n"))
-    val shardKey = manifest.getString(manifest.fieldIndex("shard_key"))
-    require(shardKey == "xxhash64_pmod",
-      s"cannot append to an index with shard key '$shardKey'")
-    val hashModulus = manifest.getInt(manifest.fieldIndex("hash_modulus"))
-    val hashVals = manifest.getSeq[Long](manifest.fieldIndex("shard_hash_vals"))
-    val built = hashVals.zipWithIndex.toMap
-    val dirOfHash: Map[Long, Long] = (0L until hashModulus.toLong)
-      .map(h => h -> built.getOrElse(h, (h % numShards).toInt).toLong).toMap
     // the frozen encode artifacts are corpus-GLOBAL — every shard's
     // meta carries the same grid/thresholds/cut (validated here so a
     // corrupt mixed-grid index refuses instead of encoding wrong)
-    require(spark.read.parquet(s"$indexPath/shard_0000/meta")
+    require(spark.read.parquet(s"${shardDir(indexPath, 0)}/meta")
       .schema.fieldNames.contains("bit_cut"),
       s"the BQ index at $indexPath predates the bit_cut meta column — " +
         "appends need the frozen integer threshold; re-persist once to " +
         "upgrade the layout")
-    def metaOf(i: Int) = spark.read.parquet(f"$indexPath/shard_$i%04d/meta")
-      .select("n", "dim", "n_words", "thresholds", "dim_min", "dim_scale",
-        "bit_cut").head()
-    val m0 = metaOf(0)
+    val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath) { i =>
+      spark.read.parquet(s"${shardDir(indexPath, i)}/meta")
+        .select("n", "dim", "n_words", "thresholds", "dim_min", "dim_scale",
+          "bit_cut").head()
+    }(_.getInt(0).toLong, (m, grown) =>
+      // grown*dim guards the SQ8 code array read-back allocates (dim
+      // can be 64× nWords, so the words cap alone lets an append
+      // succeed whose restore would overflow Int)
+      grown <= Int.MaxValue && grown * m.getInt(2) <= Int.MaxValue &&
+        grown * m.getInt(1) <= Int.MaxValue)
+    val m0 = ap.metas(0)
+    ap.metas.zipWithIndex.foreach { case (m, i) =>
+      require(m.getSeq[Int](6) == m0.getSeq[Int](6) &&
+        m.getSeq[Double](3) == m0.getSeq[Double](3),
+        s"shard $i cuts on a different threshold than shard 0 — corrupt index")
+    }
     val dim = m0.getInt(1)
     val nWords = m0.getInt(2)
     val dimMin = m0.getSeq[Float](4).toArray
     val dimScale = m0.getSeq[Float](5).toArray
     val bitCut = m0.getSeq[Int](6).toArray
-    // independent per-shard meta reads fanned out per guide §2.6
-    val oldN: Map[Int, Int] = Par.shards(0 until numShards) { i =>
-      val m = metaOf(i)
-      require(m.getSeq[Int](6) == m0.getSeq[Int](6) &&
-        m.getSeq[Double](3) == m0.getSeq[Double](3),
-        s"shard $i cuts on a different threshold than shard 0 — corrupt index")
-      i -> m.getInt(0)
-    }.toMap
-
-    val narrow = newRows.select(
-      element_at(typedLit(dirOfHash),
-        pmod(xxhash64(col(idCol).cast(LongType)), lit(hashModulus))
-          .cast(LongType)).as("shard"),
-      col(idCol).cast(LongType).as("id"),
-      col(embCol).as("emb"))
-    val dupIn = narrow.groupBy("id").count().filter(col("count") > 1)
-      .limit(1).collect()
-    require(dupIn.isEmpty,
-      s"duplicate id in append batch: ${dupIn.headOption.map(_.getLong(0)).getOrElse(-1L)}")
-    val storedIds = spark.read.parquet(
-      (0 until numShards).map(i => f"$indexPath/shard_$i%04d/vectors"): _*)
-      .select(col("id"))
-    val clash = narrow.select("id").join(storedIds, Seq("id"), "left_semi")
-      .limit(1).collect()
-    require(clash.isEmpty,
-      s"id ${clash.headOption.map(_.getLong(0)).getOrElse(-1L)} already " +
-        s"exists in the index at $indexPath")
-    val newCounts: Map[Long, Long] = narrow.groupBy("shard").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val newTotal = newCounts.values.sum
-    (0 until numShards).foreach { i =>
-      val grown = oldN(i).toLong + newCounts.getOrElse(i.toLong, 0L)
-      // grown*dim guards the SQ8 code array read-back allocates (dim
-      // can be 64× nWords, so the words cap alone lets an append
-      // succeed whose restore would overflow Int)
-      require(grown <= Int.MaxValue && grown * nWords <= Int.MaxValue &&
-          grown * dim <= Int.MaxValue,
-        s"shard $i would grow to $grown rows — one shard must fit an index")
-    }
 
     val dd = dim
     val nW = nWords
-    val sc = spark.sparkContext
-    val bcG = sc.broadcast((dimMin, dimScale, bitCut))
+    val bcG = spark.sparkContext.broadcast((dimMin, dimScale, bitCut))
     try {
       publishAtomically(spark, outPath, overwrite) { tmp =>
-        Seq((numShards, totalN + newTotal, shardKey, hashModulus, hashVals))
-          .toDF("num_shards", "total_n", "shard_key",
-            "hash_modulus", "shard_hash_vals")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
-        val encoded = narrow.rdd.mapPartitions { it =>
+        ShardedLayout.writeManifest(spark, tmp, ap.grown)
+        val encoded = ap.narrow.rdd.mapPartitions { it =>
           val (mn, scale, cut) = bcG.value
           it.map { row =>
-            val v = embDoubles(row.getSeq[Any](2))
-            if (v.length != dd) throw new IllegalArgumentException(
-              s"Dimension mismatch: corpus rows have $dd and ${v.length} elements")
+            val v = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
             val codes = new Array[Byte](dd)
             val sq = graft.operators.Similarity.sq8EncodeRow(
               v, 0, dd, mn, scale, codes, 0)
-            val words = new Array[Long](nW)
-            var d = 0
-            while (d < dd) {
-              if ((codes(d) & 0xFF) >= cut(d)) words(d >>> 6) |= 1L << (d & 63)
-              d += 1
-            }
-            Row(row.getLong(0), row.getLong(1), words, codes,
+            Row(row.getLong(0), row.getLong(1), bqBits(codes, cut, nW), codes,
               math.sqrt(sq), sq)
           }
         }
-        val wIdx = Window.partitionBy("shard").orderBy("id")
-        val baseCol = element_at(
-          typedLit(oldN.map { case (i, n) => i.toLong -> n.toLong }),
-          col("shard"))
-        spark.createDataFrame(encoded, bqEncSchema)
-          .withColumn("idx",
-            (baseCol + row_number().over(wIdx) - 1).cast(IntegerType))
-          .withColumn("shard_out", col("shard").cast(IntegerType))
-          .select("shard_out", "idx", "id", "words", "code", "norm", "sq_norm")
-          .write.partitionBy("shard_out").mode(SaveMode.ErrorIfExists)
-          .parquet(s"$tmp/__append__")
-        val conf = sc.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-        // per-shard copy/move/meta tails are independent — guide §2.6
-        Par.shards(0 until numShards) { i =>
-          val shardDir = new org.apache.hadoop.fs.Path(f"$tmp/shard_$i%04d")
-          require(fs.mkdirs(shardDir), s"could not create $shardDir")
-          val oldVec = new org.apache.hadoop.fs.Path(f"$indexPath/shard_$i%04d/vectors")
-          val dstVec = new org.apache.hadoop.fs.Path(shardDir, "vectors")
-          require(org.apache.hadoop.fs.FileUtil.copy(
-            oldVec.getFileSystem(conf), oldVec, fs, dstVec, false, conf),
-            s"could not copy $oldVec into $shardDir")
-          val part = new org.apache.hadoop.fs.Path(s"$tmp/__append__/shard_out=$i")
-          if (fs.exists(part)) {
-            fs.listStatus(part).foreach { st =>
-              val nm = st.getPath.getName
-              if (nm.startsWith("part-"))
-                require(fs.rename(st.getPath,
-                  new org.apache.hadoop.fs.Path(dstVec, s"append-$nm")),
-                  s"could not move ${st.getPath} into $dstVec")
-            }
-          }
-          Seq(((oldN(i) + newCounts.getOrElse(i.toLong, 0L)).toInt, dim,
+        ShardedLayout.appendTail(spark, spark.createDataFrame(encoded, bqEncSchema),
+          ap.metas.map(_.getInt(0)), indexPath, tmp) { (i, dir) =>
+          Seq(((ap.metas(i).getInt(0) + ap.newOf(i)).toInt, dim,
               nWords, m0.getSeq[Double](3), dimMin.toSeq, dimScale.toSeq,
               bitCut.toSeq))
             .toDF("n", "dim", "n_words", "thresholds", "dim_min",
               "dim_scale", "bit_cut")
-            .write.mode(SaveMode.ErrorIfExists).parquet(s"$shardDir/meta")
+            .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
         }
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__append__"), true)
-        // carry tombstones forward (re-adding a tombstoned id is
-        // refused by the stored-id clash above — compact to free it)
-        val oldTs = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-        if (oldTs.getFileSystem(conf).exists(oldTs))
-          require(org.apache.hadoop.fs.FileUtil.copy(
-            oldTs.getFileSystem(conf), oldTs, fs,
-            new org.apache.hadoop.fs.Path(s"$tmp/tombstones"), false, conf),
-            s"could not carry $oldTs forward")
       }
     } finally bcG.destroy()
   }
 
-  /** TOMBSTONE delete from a persisted sharded BQ index — the
-    * [[deleteFromIvfPqShardedIndex]] contracts verbatim: metadata-only
+  /** Bit words of one SQ8-coded row: bit `d` is set iff
+    * `code(d) >= cut(d)` — the build's integer threshold contract.
+    */
+  private def bqBits(codes: Array[Byte], cut: Array[Int], nWords: Int): Array[Long] = {
+    val words = new Array[Long](nWords)
+    var d = 0
+    while (d < codes.length) {
+      if ((codes(d) & 0xFF) >= cut(d)) words(d >>> 6) |= 1L << (d & 63)
+      d += 1
+    }
+    words
+  }
+
+  /** TOMBSTONE delete from a persisted sharded BQ index — the one
+    * [[ShardedLayout]] delete every sharded family shares: metadata-only
     * (file-level copy + the grown `tombstones/` id set), every
     * deleted id must be stored, double-delete refused, the plain
     * [[graft.sources.Source.readBqShardedIndex]] refuses a tombstoned
@@ -880,12 +760,9 @@ object Sink {
     deleteFromShardedIndexCore(spark, deleteIds, idCol, indexPath, outPath,
       overwrite)
 
-  /** The layout-generic tombstone delete: every sharded layout here
-    * stores one `id` column per row under `shard_NNNN/vectors` and a
-    * `num_shards` manifest, so the stored-id / double-delete
-    * refusals, the file-level copy, and the grown tombstone set are
-    * ONE implementation shared by the BQ and IVF+BQ deletes (the
-    * IVF+PQ delete keeps its own body for the OPQ `rot/` carry).
+  /** The one tombstone delete of the [[ShardedLayout]] families: the
+    * stored-id / double-delete refusals, the file-level copy of
+    * `manifest/`, `rot/` and every shard, and the grown tombstone set.
     */
   private def deleteFromShardedIndexCore(
       spark: SparkSession,
@@ -894,18 +771,15 @@ object Sink {
       indexPath: String,
       outPath: String,
       overwrite: Boolean): Unit = {
-    val manifest = spark.read.parquet(s"$indexPath/manifest").head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
+    val shards = shardDirs(indexPath,
+      ShardedLayout.readManifest(spark, indexPath).numShards)
     val del = deleteIds.select(col(idCol).cast(LongType).as("id"))
       .na.drop().distinct()
-    val storedIds = spark.read.parquet(
-      (0 until numShards).map(i => f"$indexPath/shard_$i%04d/vectors"): _*)
+    val storedIds = spark.read.parquet(shards.map(d => s"$d/vectors"): _*)
       .select(col("id"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-    val hadTs = tsPath.getFileSystem(conf).exists(tsPath)
     val existing =
-      if (hadTs) spark.read.parquet(tsPath.toString).select(col("id"))
+      if (ShardedLayout.exists(spark, s"$indexPath/tombstones"))
+        spark.read.parquet(s"$indexPath/tombstones").select(col("id"))
       else spark.emptyDataFrame.select(lit(0L).as("id")).limit(0)
     // ONE validation job for all three refusal contracts (empty set /
     // unknown id / double delete) — they were three sequential
@@ -936,14 +810,9 @@ object Sink {
       s"id ${chk.getLong(3)} is already " +
         "tombstoned (double delete)")
     publishAtomically(spark, outPath, overwrite) { tmp =>
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-      Par.shards(Seq("manifest") ++ (0 until numShards).map(i => f"shard_$i%04d")) { d =>
-        val src = new org.apache.hadoop.fs.Path(s"$indexPath/$d")
-        require(org.apache.hadoop.fs.FileUtil.copy(
-          src.getFileSystem(conf), src, fs,
-          new org.apache.hadoop.fs.Path(s"$tmp/$d"), false, conf),
-          s"could not copy $src")
-      }
+      val dirs = Seq("manifest", "rot").filter(d => ShardedLayout.exists(spark, s"$indexPath/$d")) ++
+        shards.indices.map(ShardedLayout.shardName)
+      Par.shards(dirs)(d => copyDir(spark, s"$indexPath/$d", s"$tmp/$d"))
       existing.unionAll(del).repartition(1)
         .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/tombstones")
     }
@@ -952,7 +821,8 @@ object Sink {
   /** Compact a tombstoned sharded BQ index — drop tombstoned rows,
     * renumber pack positions contiguously in original order, shrink
     * each shard meta's `n` and the manifest's `total_n`, emit NO
-    * tombstone set (the [[compactIvfPqShardedIndex]] contract; the
+    * tombstone set (the [[ShardedLayout]] compact, shared with
+    * [[compactIvfPqShardedIndex]]; the
     * frozen thresholds/grid/bit_cut are untouched — dropping rows
     * never moves the cut, exactly like [[appendBqIndex]] never moves
     * it when adding them).
@@ -961,23 +831,34 @@ object Sink {
       spark: SparkSession,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
+      overwrite: Boolean = false): Unit =
+    compactShardedCore(spark, indexPath, outPath, overwrite)
+
+  /** The one map-only compaction of the [[ShardedLayout]] families whose
+    * shards pack rows by an `idx` position (BQ, IVF+PQ/OPQ): drop the
+    * tombstoned rows of each shard's `vectors/`, renumber positions
+    * contiguously in original order, rewrite meta's `n` (by name, so
+    * every meta schema survives) and the manifest's `total_n`, write
+    * no `tombstones/`, and carry `rot/` forward.
+    */
+  private def compactShardedCore(
+      spark: SparkSession,
+      indexPath: String,
+      outPath: String,
+      overwrite: Boolean): Unit = {
     val manifestDf = spark.read.parquet(s"$indexPath/manifest")
-    val manifest = manifestDf.head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-    require(tsPath.getFileSystem(conf).exists(tsPath),
+    val numShards = ShardedLayout.readManifest(spark, indexPath).numShards
+    require(ShardedLayout.exists(spark, s"$indexPath/tombstones"),
       s"no tombstones at $indexPath — nothing to compact")
-    val ts = spark.read.parquet(tsPath.toString).select(col("id"))
+    val ts = spark.read.parquet(s"$indexPath/tombstones").select(col("id"))
       .localCheckpoint(eager = true)
     publishAtomically(spark, outPath, overwrite) { tmp =>
       // per-shard compactions are independent (distinct source and
       // destination dirs; the tombstone set is an eager checkpoint) —
       // fanned out per guide §2.6 so the B small rewrite jobs overlap
       val liveTotal = Par.shards(0 until numShards) { i =>
-        val shardDir = f"shard_$i%04d"
-        val vecs = spark.read.parquet(s"$indexPath/$shardDir/vectors")
+        val (src, dst) = (shardDir(indexPath, i), shardDir(tmp, i))
+        val vecs = spark.read.parquet(s"$src/vectors")
         // pack positions are contiguous 0..n-1 per shard, so a kept
         // row's new position is its old one minus the count of
         // dropped positions below it — a MAP-ONLY renumber (zero
@@ -998,19 +879,20 @@ object Sink {
           }
           p - lo
         }.asNonNullable()
-        val renumbered = vecs.join(ts, Seq("id"), "left_anti")
+        vecs.join(ts, Seq("id"), "left_anti")
           .withColumn("idx", newIdx(col("idx")))
-        renumbered.write.mode(SaveMode.ErrorIfExists)
-          .parquet(s"$tmp/$shardDir/vectors")
+          .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/vectors")
         bcDropped.destroy()
-        val liveN = spark.read.parquet(s"$tmp/$shardDir/vectors").count()
-        spark.read.parquet(s"$indexPath/$shardDir/meta")
+        val liveN = spark.read.parquet(s"$dst/vectors").count()
+        spark.read.parquet(s"$src/meta")
           .withColumn("n", lit(liveN).cast(IntegerType))
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/$shardDir/meta")
+          .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/meta")
         liveN
       }.sum
       manifestDf.withColumn("total_n", lit(liveTotal))
         .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
+      // the compacted index keeps its geometry
+      carry(spark, indexPath, tmp, "rot")
     }
   }
 
@@ -1074,9 +956,7 @@ object Sink {
     val dimScale = meta.getSeq[Float](5).toArray
     val bitCut = meta.getSeq[Int](6).toArray
 
-    val narrow = newRows.select(
-      col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
-    val newN = requireFreshAppendIds(narrow, s"$indexPath/vectors", indexPath)
+    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/vectors", indexPath)
     // the dim product guards the SQ8 code array read-back allocates
     // (dim can be 64× nWords — see the sharded append's same cap)
     require(oldN + newN <= Int.MaxValue &&
@@ -1094,9 +974,7 @@ object Sink {
         val encoded = narrow.orderBy("id").rdd.zipWithIndex.mapPartitions { it =>
           val (mn, sc, cut) = bcG.value
           it.map { case (row, i) =>
-            val v = embDoubles(row.getSeq[Any](1))
-            if (v.length != dd) throw new IllegalArgumentException(
-              s"Dimension mismatch: corpus rows have $dd and ${v.length} elements")
+            val v = embDoubles(row.getLong(0), row.getSeq[Any](1), dd)
             val codes = new Array[Byte](dd)
             val sq = graft.operators.Similarity.sq8EncodeRow(
               v, 0, dd, mn, sc, codes, 0)
@@ -1128,26 +1006,39 @@ object Sink {
     } finally bcG.destroy()
   }
 
-  /** Id hygiene shared by every flat encode-only append: refuse
-    * duplicate ids within the batch and ids already present in the
-    * stored index (ids key an index — a silent double-insert would
-    * corrupt every downstream dedup/join on the serve results).
-    * Returns the batch size (the one `count()` the caps need).
+  /** Id hygiene shared by every encode-only append, flat and sharded:
+    * refuse a null id, duplicate ids within the batch, and ids already
+    * present in the stored index (ids key an index — a silent
+    * double-insert would corrupt every downstream dedup/join on the
+    * serve results). The null and duplicate refusals share one job.
     */
-  private def requireFreshAppendIds(
-      narrow: DataFrame, storedVectorsDir: String, indexPath: String): Long = {
+  private[sources] def requireFreshAppendIds(
+      narrow: DataFrame, idCol: String, storedVectorDirs: Seq[String],
+      indexPath: String): Unit = {
     val spark = narrow.sparkSession
-    val dupIn = narrow.groupBy("id").count().filter(col("count") > 1)
-      .limit(1).collect()
-    require(dupIn.isEmpty,
-      s"duplicate id in append batch: ${dupIn.headOption.map(_.getLong(0)).getOrElse(-1L)}")
-    val storedIds = spark.read.parquet(storedVectorsDir).select(col("id"))
+    val bad = narrow.groupBy("id").count()
+      .filter(col("id").isNull || col("count") > 1).limit(1).collect()
+    require(bad.isEmpty || !bad.head.isNullAt(0),
+      s"Null id: append batch column $idCol has a null; every row needs an id")
+    require(bad.isEmpty, s"duplicate id in append batch: ${bad.head.getLong(0)}")
+    val storedIds = spark.read.parquet(storedVectorDirs: _*).select(col("id"))
     val clash = narrow.select("id").join(storedIds, Seq("id"), "left_semi")
       .limit(1).collect()
     require(clash.isEmpty,
       s"id ${clash.headOption.map(_.getLong(0)).getOrElse(-1L)} already " +
         s"exists in the index at $indexPath")
-    narrow.count()
+  }
+
+  /** A flat append's `(id, emb)` batch, id-checked by
+    * [[requireFreshAppendIds]], with its size (the one `count()` the
+    * caps need).
+    */
+  private def flatBatch(newRows: DataFrame, idCol: String, embCol: String,
+      storedVectorsDir: String, indexPath: String): (DataFrame, Long) = {
+    val narrow = newRows.select(
+      col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
+    requireFreshAppendIds(narrow, idCol, Seq(storedVectorsDir), indexPath)
+    (narrow, narrow.count())
   }
 
   /** The shared tail of every flat encode-only append: old vectors
@@ -1161,21 +1052,10 @@ object Sink {
       spark: SparkSession, destDir: String, srcVectorsDir: String,
       appendDf: DataFrame): Unit = {
     appendDf.write.mode(SaveMode.ErrorIfExists).parquet(s"$destDir/__append__")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(destDir).getFileSystem(conf)
-    val oldVec = new org.apache.hadoop.fs.Path(srcVectorsDir)
-    val dstVec = new org.apache.hadoop.fs.Path(s"$destDir/vectors")
-    require(org.apache.hadoop.fs.FileUtil.copy(
-      oldVec.getFileSystem(conf), oldVec, fs, dstVec, false, conf),
-      s"could not copy $oldVec into $destDir")
     val appDir = new org.apache.hadoop.fs.Path(s"$destDir/__append__")
-    fs.listStatus(appDir).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("part-"))
-        require(fs.rename(st.getPath,
-          new org.apache.hadoop.fs.Path(dstVec, s"append-$nm")),
-          s"could not move ${st.getPath} into $dstVec")
-    }
+    val fs = appDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    copyDir(spark, srcVectorsDir, s"$destDir/vectors")
+    ShardedLayout.movePartsInto(fs, appDir, new org.apache.hadoop.fs.Path(s"$destDir/vectors"))
     fs.delete(appDir, true)
   }
 
@@ -1207,9 +1087,7 @@ object Sink {
     val dim = meta.getInt(1)
     val dimMin = meta.getSeq[Float](2).toArray
     val dimScale = meta.getSeq[Float](3).toArray
-    val narrow = newRows.select(
-      col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
-    val newN = requireFreshAppendIds(narrow, s"$indexPath/vectors", indexPath)
+    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/vectors", indexPath)
     require(oldN + newN <= Int.MaxValue &&
         (oldN + newN) * dim.toLong <= Int.MaxValue,
       s"index would grow to ${oldN + newN} rows × $dim codes — past the " +
@@ -1221,9 +1099,7 @@ object Sink {
         val encoded = narrow.orderBy("id").rdd.zipWithIndex.mapPartitions { it =>
           val (mn, sc) = bcG.value
           it.map { case (row, i) =>
-            val v = embDoubles(row.getSeq[Any](1))
-            if (v.length != dd) throw new IllegalArgumentException(
-              s"Dimension mismatch: corpus rows have $dd and ${v.length} elements")
+            val v = embDoubles(row.getLong(0), row.getSeq[Any](1), dd)
             val codes = new Array[Byte](dd)
             val sq = graft.operators.Similarity.sq8EncodeRow(
               v, 0, dd, mn, sc, codes, 0)
@@ -1299,9 +1175,7 @@ object Sink {
       val encoded = narrow.orderBy("id").rdd.zipWithIndex.mapPartitions { it =>
         val (cb, s8mn, s8sc, rt) = bcE.value
         it.map { case (row, i) =>
-          val raw = embDoubles(row.getSeq[Any](1))
-          if (raw.length != dd) throw new IllegalArgumentException(
-            s"Dimension mismatch: corpus rows have $dd and ${raw.length} elements")
+          val raw = embDoubles(row.getLong(0), row.getSeq[Any](1), dd)
           val v =
             if (rt == null) raw
             else {
@@ -1368,9 +1242,7 @@ object Sink {
       outPath: String,
       overwrite: Boolean = false): Unit = {
     requireEmbColType(newRows, embCol)
-    val narrow = newRows.select(
-      col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
-    val newN = requireFreshAppendIds(narrow, s"$indexPath/vectors", indexPath)
+    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/vectors", indexPath)
     publishAtomically(spark, outPath, overwrite) { tmp =>
       appendPqInto(spark, narrow, newN, indexPath, tmp, None)
     }
@@ -1393,24 +1265,10 @@ object Sink {
       outPath: String,
       overwrite: Boolean = false): Unit = {
     requireEmbColType(newRows, embCol)
-    val rotMeta = spark.read.parquet(s"$indexPath/rot")
-      .select("dim", "rot").head()
-    val dim = rotMeta.getInt(0)
-    val rot = rotMeta.getSeq[Double](1).toArray
-    require(rot.length == dim.toLong * dim,
-      s"corrupt OPQ rotation: dim=$dim but ${rot.length} values")
-    val narrow = newRows.select(
-      col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
-    val newN =
-      requireFreshAppendIds(narrow, s"$indexPath/pq/vectors", indexPath)
+    val (_, rot) = ShardedLayout.readRotation(spark, indexPath)
+    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/pq/vectors", indexPath)
     publishAtomically(spark, outPath, overwrite) { tmp =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-      val srcRot = new org.apache.hadoop.fs.Path(s"$indexPath/rot")
-      require(org.apache.hadoop.fs.FileUtil.copy(
-        srcRot.getFileSystem(conf), srcRot, fs,
-        new org.apache.hadoop.fs.Path(s"$tmp/rot"), false, conf),
-        s"could not copy $srcRot into $tmp")
+      copyDir(spark, s"$indexPath/rot", s"$tmp/rot")
       appendPqInto(spark, narrow, newN, s"$indexPath/pq", s"$tmp/pq",
         Some(rot))
     }
@@ -1484,15 +1342,8 @@ object Sink {
       s"shardHashVals has ${build.shardHashVals.size} entries for " +
         s"${build.shards.size} shards")
     publishAtomically(spark, path, overwrite) { tmp =>
-      import spark.implicits._
-      Seq((build.shards.size, build.shards.map(_.n.toLong).sum,
-          "xxhash64_pmod", build.hashModulus, build.shardHashVals))
-        .toDF("num_shards", "total_n", "shard_key",
-          "hash_modulus", "shard_hash_vals")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
-      Par.shards(build.shards.zipWithIndex) { case (sx, i) =>
-        writeIvfBqInto(spark, sx, f"$tmp/shard_$i%04d")
-      }
+      ShardedLayout.writeShards(spark, tmp, build.shards, build.hashModulus,
+        build.shardHashVals)(_.n, writeIvfBqInto(spark, _, _))
     }
   }
 
@@ -1500,14 +1351,12 @@ object Sink {
     * encode-only ingest for the ROUTED bit rung (the round-15
     * crossover probe's recommendation from ~50M rows/shard up), so a
     * user at the rung's own recommended scale no longer rebuilds the
-    * index per ingest batch. The [[appendBqShardedIndex]] contracts
+    * index per ingest batch. The [[ShardedLayout]] append envelope
     * composed with the IVF structure:
     *
-    *  - rows route to `pmod(xxhash64(id), hash_modulus)` through the
-    *    manifest's routing identity (compacted-away hash values fall
-    *    back to `hash mod num_dirs` — any shard can host any row:
-    *    the encode grid/cut are corpus-global and the cell is
-    *    assigned within whichever shard the row lands in);
+    *  - rows route through the manifest's routing identity (any shard
+    *    can host any row: the encode grid/cut are corpus-global and
+    *    the cell is assigned within whichever shard the row lands in);
     *  - the SQ8 grid, f64 query thresholds, and integer `bit_cut`
     *    are FROZEN (corpus-global, validated identical across shard
     *    metas so a corrupt mixed-grid index refuses): new rows
@@ -1531,7 +1380,7 @@ object Sink {
     *    forward; the grown index publishes atomically at `outPath`
     *    (the source index is never mutated).
     *
-    * Duplicate ids — within the batch or vs the store — and dim
+    * Null, duplicate and stored ids, null embeddings and dim
     * mismatches refuse by name. A pre-`bit_cut` IVF+BQ layout
     * refuses by name with a NON-circular upgrade: the readers derive
     * the cut ([[graft.sources.Source.readIvfBqShardedIndex]]), so
@@ -1551,19 +1400,7 @@ object Sink {
       overwrite: Boolean = false): Unit = {
     import spark.implicits._
     import graft.operators.Similarity
-    requireEmbColType(newRows, embCol)
-    val manifest = spark.read.parquet(s"$indexPath/manifest").head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    val totalN = manifest.getLong(manifest.fieldIndex("total_n"))
-    val shardKey = manifest.getString(manifest.fieldIndex("shard_key"))
-    require(shardKey == "xxhash64_pmod",
-      s"cannot append to an index with shard key '$shardKey'")
-    val hashModulus = manifest.getInt(manifest.fieldIndex("hash_modulus"))
-    val hashVals = manifest.getSeq[Long](manifest.fieldIndex("shard_hash_vals"))
-    val built = hashVals.zipWithIndex.toMap
-    val dirOfHash: Map[Long, Long] = (0L until hashModulus.toLong)
-      .map(h => h -> built.getOrElse(h, (h % numShards).toInt).toLong).toMap
-    require(spark.read.parquet(s"$indexPath/shard_0000/meta")
+    require(spark.read.parquet(s"${shardDir(indexPath, 0)}/meta")
       .schema.fieldNames.contains("bit_cut"),
       s"the IVF+BQ index at $indexPath predates the bit_cut meta column — " +
         "appends need the frozen integer threshold; read it once through " +
@@ -1574,54 +1411,25 @@ object Sink {
         centroids: Array[Double], thresholds: Seq[Double],
         cellStart: Array[Int], dimMin: Array[Float],
         dimScale: Array[Float], bitCut: Array[Int])
-    def metaOf(i: Int): ShardMeta = {
-      val m = spark.read.parquet(f"$indexPath/shard_$i%04d/meta")
+    val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath) { i =>
+      val m = spark.read.parquet(s"${shardDir(indexPath, i)}/meta")
         .select("n", "dim", "n_words", "n_cells", "centroids", "thresholds",
           "cell_start", "dim_min", "dim_scale", "bit_cut").head()
       ShardMeta(m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3),
         m.getSeq[Double](4).toArray, m.getSeq[Double](5),
         m.getSeq[Int](6).toArray, m.getSeq[Float](7).toArray,
         m.getSeq[Float](8).toArray, m.getSeq[Int](9).toArray)
-    }
-    // independent per-shard meta reads fanned out per guide §2.6
-    val metas: Map[Int, ShardMeta] =
-      Par.shards(0 until numShards)(i => i -> metaOf(i)).toMap
+    }(_.n.toLong, (m, grown) => grown <= Int.MaxValue &&
+      grown * m.nWords <= Int.MaxValue && grown * m.dim <= Int.MaxValue)
+    val metas = ap.metas
     val m0 = metas(0)
     val dim = m0.dim
     val nWords = m0.nWords
-    metas.foreach { case (i, m) =>
+    metas.zipWithIndex.foreach { case (m, i) =>
       require(m.dim == dim && m.nWords == nWords &&
           m.bitCut.sameElements(m0.bitCut) && m.thresholds == m0.thresholds &&
           m.dimMin.sameElements(m0.dimMin) && m.dimScale.sameElements(m0.dimScale),
         s"shard $i cuts on a different grid/threshold than shard 0 — corrupt index")
-    }
-
-    val narrow = newRows.select(
-      element_at(typedLit(dirOfHash),
-        pmod(xxhash64(col(idCol).cast(LongType)), lit(hashModulus))
-          .cast(LongType)).as("shard"),
-      col(idCol).cast(LongType).as("id"),
-      col(embCol).as("emb"))
-    val dupIn = narrow.groupBy("id").count().filter(col("count") > 1)
-      .limit(1).collect()
-    require(dupIn.isEmpty,
-      s"duplicate id in append batch: ${dupIn.headOption.map(_.getLong(0)).getOrElse(-1L)}")
-    val storedIds = spark.read.parquet(
-      (0 until numShards).map(i => f"$indexPath/shard_$i%04d/vectors"): _*)
-      .select(col("id"))
-    val clash = narrow.select("id").join(storedIds, Seq("id"), "left_semi")
-      .limit(1).collect()
-    require(clash.isEmpty,
-      s"id ${clash.headOption.map(_.getLong(0)).getOrElse(-1L)} already " +
-        s"exists in the index at $indexPath")
-    val newCounts: Map[Long, Long] = narrow.groupBy("shard").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val newTotal = newCounts.values.sum
-    (0 until numShards).foreach { i =>
-      val grown = metas(i).n.toLong + newCounts.getOrElse(i.toLong, 0L)
-      require(grown <= Int.MaxValue && grown * nWords <= Int.MaxValue &&
-          grown * dim <= Int.MaxValue,
-        s"shard $i would grow to $grown rows — one shard must fit an index")
     }
 
     val dd = dim
@@ -1629,32 +1437,22 @@ object Sink {
     val sc = spark.sparkContext
     val bcG = sc.broadcast((m0.dimMin, m0.dimScale, m0.bitCut))
     val bcCells = sc.broadcast(
-      metas.map { case (i, m) => i.toLong -> (m.centroids, m.nCells) })
+      metas.zipWithIndex.map { case (m, i) => i.toLong -> (m.centroids, m.nCells) }.toMap)
     try {
       publishAtomically(spark, outPath, overwrite) { tmp =>
-        Seq((numShards, totalN + newTotal, shardKey, hashModulus, hashVals))
-          .toDF("num_shards", "total_n", "shard_key",
-            "hash_modulus", "shard_hash_vals")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
+        ShardedLayout.writeManifest(spark, tmp, ap.grown)
         // scan-stage encode + frozen-cell assignment: raw vectors
         // leave their executor as code-width rows
-        val encoded = narrow.rdd.mapPartitions { it =>
+        val encoded = ap.narrow.rdd.mapPartitions { it =>
           val (mn, scl, cut) = bcG.value
           val cells = bcCells.value
           it.map { row =>
             val sh = row.getLong(0)
-            val v = embDoubles(row.getSeq[Any](2))
-            if (v.length != dd) throw new IllegalArgumentException(
-              s"Dimension mismatch: corpus rows have $dd and ${v.length} elements")
+            val v = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
             val codes = new Array[Byte](dd)
             val sq = Similarity.sq8EncodeRow(v, 0, dd, mn, scl, codes, 0)
             val nrm = math.sqrt(sq)
-            val words = new Array[Long](nW)
-            var d = 0
-            while (d < dd) {
-              if ((codes(d) & 0xFF) >= cut(d)) words(d >>> 6) |= 1L << (d & 63)
-              d += 1
-            }
+            val words = bqBits(codes, cut, nW)
             // ivfBqFromSq8's decode + unit-normalize (zero-norm rows
             // stay zero) then the build's strict-max assignment
             val unit = new Array[Double](dd)
@@ -1683,8 +1481,7 @@ object Sink {
           .withColumn("shard_out", col("shard").cast(IntegerType))
           .write.partitionBy("shard_out").mode(SaveMode.ErrorIfExists)
           .parquet(s"$tmp/__append__")
-        val conf = sc.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
+        val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(sc.hadoopConfiguration)
         val vecCols = Seq("slot", "row", "id", "words", "code", "norm", "sq_norm")
         val vecSchema = StructType(Seq(
           StructField("slot", IntegerType, nullable = false),
@@ -1696,23 +1493,14 @@ object Sink {
           StructField("norm", DoubleType, nullable = false),
           StructField("sq_norm", DoubleType, nullable = false)))
         // per-shard remap/copy/meta tails are independent — guide §2.6
-        Par.shards(0 until numShards) { i =>
+        Par.shards(metas.indices) { i =>
           val m = metas(i)
-          val shardDir = f"$tmp/shard_$i%04d"
+          val dst = shardDir(tmp, i)
           val part = new org.apache.hadoop.fs.Path(s"$tmp/__append__/shard_out=$i")
-          val nNew = newCounts.getOrElse(i.toLong, 0L).toInt
-          if (nNew == 0) {
-            // untouched shard: bytes stay bytes
-            require(fs.mkdirs(new org.apache.hadoop.fs.Path(shardDir)),
-              s"could not create $shardDir")
-            Seq("vectors", "meta").foreach { d =>
-              val src = new org.apache.hadoop.fs.Path(f"$indexPath/shard_$i%04d/$d")
-              require(org.apache.hadoop.fs.FileUtil.copy(
-                src.getFileSystem(conf), src, fs,
-                new org.apache.hadoop.fs.Path(s"$shardDir/$d"), false, conf),
-                s"could not copy $src into $shardDir")
-            }
-          } else {
+          val nNew = ap.newOf(i).toInt
+          // untouched shard: bytes stay bytes
+          if (nNew == 0) copyDir(spark, shardDir(indexPath, i), dst)
+          else {
             require(fs.exists(part),
               s"encode pass produced no partition for shard $i at $part")
             val batch = spark.read.parquet(part.toString)
@@ -1733,7 +1521,7 @@ object Sink {
             val bcRemap = sc.broadcast((m.cellStart, cumIns))
             try {
               val oldRdd = spark.read
-                .parquet(f"$indexPath/shard_$i%04d/vectors")
+                .parquet(s"${shardDir(indexPath, i)}/vectors")
                 .select(vecCols.map(col): _*).rdd.mapPartitions { it =>
                   val (ost, cum) = bcRemap.value
                   it.map { r =>
@@ -1775,31 +1563,26 @@ object Sink {
               }
               val newMembers = spark.createDataFrame(newRdd, vecSchema)
               remappedOld.unionAll(newMembers)
-                .write.mode(SaveMode.ErrorIfExists).parquet(s"$shardDir/vectors")
+                .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/vectors")
             } finally bcRemap.destroy()
             Seq(((m.n + nNew), dim, nWords, m.nCells, m.centroids.toSeq,
                 m.thresholds, newStart.toSeq, m.dimMin.toSeq,
                 m.dimScale.toSeq, m.bitCut.toSeq))
               .toDF("n", "dim", "n_words", "n_cells", "centroids",
                 "thresholds", "cell_start", "dim_min", "dim_scale", "bit_cut")
-              .write.mode(SaveMode.ErrorIfExists).parquet(s"$shardDir/meta")
+              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/meta")
           }
         }
         fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__append__"), true)
-        // carry tombstones forward (re-adding a tombstoned id is
-        // refused by the stored-id clash above — compact to free it)
-        val oldTs = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-        if (oldTs.getFileSystem(conf).exists(oldTs))
-          require(org.apache.hadoop.fs.FileUtil.copy(
-            oldTs.getFileSystem(conf), oldTs, fs,
-            new org.apache.hadoop.fs.Path(s"$tmp/tombstones"), false, conf),
-            s"could not carry $oldTs forward")
+        // re-adding a tombstoned id is refused by the stored-id clash —
+        // compact to free it
+        carry(spark, indexPath, tmp, "tombstones", "rot")
       }
     } finally { bcG.destroy(); bcCells.destroy() }
   }
 
   /** TOMBSTONE delete from a persisted sharded IVF+BQ index — the
-    * [[deleteFromBqShardedIndex]] contracts verbatim (a delete never
+    * [[ShardedLayout]] delete (a delete never
     * touches the CSR — it is metadata-only; serving deny-masks the
     * probed-cell scan via [[graft.operators.Similarity
     * .topkIvfBqShardedTombstoned]] / the wave serves' `deniedIds`).
@@ -1827,28 +1610,18 @@ object Sink {
       indexPath: String,
       outPath: String,
       overwrite: Boolean = false): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-    require(tsPath.getFileSystem(conf).exists(tsPath),
+    require(ShardedLayout.exists(spark, s"$indexPath/tombstones"),
       s"no tombstones at $indexPath — nothing to compact")
     val (shards, ts) = graft.sources.Source
       .readIvfBqShardedIndexWithTombstones(spark, indexPath)
     val sorted = java.util.Arrays.copyOf(ts, ts.length)
     java.util.Arrays.sort(sorted)
-    val manifest = spark.read.parquet(s"$indexPath/manifest").head()
+    val manifest = ShardedLayout.readManifest(spark, indexPath)
     val compacted = shards.map(sx =>
       graft.operators.Similarity.compactIvfBq(sx, sorted))
     publishAtomically(spark, outPath, overwrite) { tmp =>
-      import spark.implicits._
-      Seq((compacted.size, compacted.map(_.n.toLong).sum, "xxhash64_pmod",
-          manifest.getInt(manifest.fieldIndex("hash_modulus")),
-          manifest.getSeq[Long](manifest.fieldIndex("shard_hash_vals"))))
-        .toDF("num_shards", "total_n", "shard_key",
-          "hash_modulus", "shard_hash_vals")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
-      Par.shards(compacted.zipWithIndex) { case (sx, i) =>
-        writeIvfBqInto(spark, sx, f"$tmp/shard_$i%04d")
-      }
+      ShardedLayout.writeShards(spark, tmp, compacted, manifest.hashModulus,
+        manifest.hashVals)(_.n, writeIvfBqInto(spark, _, _))
     }
   }
 
@@ -1991,32 +1764,12 @@ object Sink {
       overwrite: Boolean = false,
       hashModulus: Int = 0,
       shardHashVals: Seq[Long] = Nil): Unit = {
-    require(shards.nonEmpty, "Empty shard list")
-    // The manifest records the BUILD's hash modulus (`hash_modulus`)
-    // and each directory's raw hash value (`shard_hash_vals`), so an
-    // append can route new ids with the original `pmod(xxhash64(id),
-    // hash_modulus)` split even after empty hash shards were
-    // compacted away — without these the original modulus is lost
-    // forever (round-10 ADVICE). Callers that built with no dropped
-    // shards (the non-degenerate case) can omit both: the defaults
-    // record the identity layout.
-    val modulus = if (hashModulus > 0) hashModulus else shards.size
-    if (hashModulus <= 0)
-      // the identity default is only correct when NO hash shard was
-      // compacted away during the build — a collect build that dropped
-      // empties would persist a confidently wrong routing identity
-      // here, so prefer the ShardedIvfPqBuild overload, which carries
-      // the build's real layout (round-11 advisor)
-      log.warn(s"writeIvfPqShardedIndex: recording the IDENTITY routing layout " +
-        s"(hash_modulus=${shards.size}) — if this build compacted empty hash " +
-        "shards, appends will mis-route; pass the build's ShardedIvfPqBuild " +
-        "or explicit hashModulus/shardHashVals")
-    val hashVals =
-      if (shardHashVals.nonEmpty) shardHashVals else shards.indices.map(_.toLong)
-    require(hashVals.size == shards.size,
-      s"shardHashVals has ${hashVals.size} entries for ${shards.size} shards")
-    require(modulus >= shards.size,
-      s"hash_modulus $modulus < ${shards.size} shard directories")
+    // the manifest records the BUILD's routing identity (see
+    // ShardedLayout) so appends split new ids the way the build did
+    // even after empty hash shards were compacted away (round-10
+    // ADVICE); callers that dropped no shard can omit both
+    val (modulus, hashVals) = routingIdentity("writeIvfPqShardedIndex",
+      "ShardedIvfPqBuild", shards.size, hashModulus, shardHashVals)
     publishAtomically(spark, path, overwrite) { tmp =>
       writeIvfPqShardedInto(spark, shards, tmp, modulus, hashVals)
     }
@@ -2032,17 +1785,9 @@ object Sink {
       shards: Seq[graft.operators.Similarity.CorpusIndexIvfPq],
       tmp: String,
       modulus: Int,
-      hashVals: Seq[Long]): Unit = {
-    import spark.implicits._
-    Seq((shards.size, shards.map(_.n.toLong).sum, "xxhash64_pmod",
-        modulus, hashVals))
-      .toDF("num_shards", "total_n", "shard_key",
-        "hash_modulus", "shard_hash_vals")
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
-    Par.shards(shards.zipWithIndex) { case (ix, i) =>
-      writeIvfPqInto(spark, ix, f"$tmp/shard_$i%04d")
-    }
-  }
+      hashVals: Seq[Long]): Unit =
+    ShardedLayout.writeShards(spark, tmp, shards, modulus, hashVals)(
+      _.n, writeIvfPqInto(spark, _, _))
 
   /** Persist a sharded IVF+OPQ build — the rotation (`rot/`, one meta
     * row) beside the standard sharded layout, ONE atomic publish. The
@@ -2060,9 +1805,7 @@ object Sink {
       overwrite: Boolean = false): Unit = {
     require(build.shards.nonEmpty, "Empty shard list")
     publishAtomically(spark, path, overwrite) { tmp =>
-      import spark.implicits._
-      Seq((build.shards.head.dim, build.rot.toSeq)).toDF("dim", "rot")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/rot")
+      ShardedLayout.writeRotation(spark, tmp, build.shards.head.dim, build.rot)
       writeIvfPqShardedInto(spark, build.shards, tmp,
         build.build.hashModulus, build.build.shardHashVals)
     }
@@ -2104,7 +1847,7 @@ object Sink {
     * otherwise silently widen through [[embDoubles]]'s Number case, a
     * parity deviation from the byte-identical contract).
     */
-  private def requireEmbColType(df: DataFrame, embCol: String): Unit =
+  private[sources] def requireEmbColType(df: DataFrame, embCol: String): Unit =
     df.schema(embCol).dataType match {
       case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => ()
       case dt => throw new IllegalArgumentException(
@@ -2114,8 +1857,15 @@ object Sink {
   /** Element conversion mirror of `Similarity.collectCorpusOpt` — the
     * distributed builder must see the SAME doubles the driver path
     * packs, including the f32→f64 widening of `array<float>` corpora.
+    * Refuses by name, as `collectCorpus` does, a null embedding or
+    * element of row `id` and (with `dim >= 0`) a row of another
+    * dimension.
     */
-  private[graft] def embDoubles(emb: Seq[Any]): Array[Double] = {
+  private[graft] def embDoubles(id: Long, emb: Seq[Any], dim: Int = -1): Array[Double] = {
+    if (emb == null) throw new IllegalArgumentException(
+      s"Null embedding: corpus row id=$id has a null emb")
+    if (dim >= 0 && emb.length != dim) throw new IllegalArgumentException(
+      s"Dimension mismatch: corpus rows have $dim and ${emb.length} elements")
     val out = new Array[Double](emb.length)
     var d = 0
     val it = emb.iterator
@@ -2124,6 +1874,8 @@ object Sink {
         case f: java.lang.Float => f.toDouble
         case x: java.lang.Double => x.doubleValue
         case x: Number => x.doubleValue
+        case null => throw new IllegalArgumentException(
+          s"Null element: corpus row id=$id has a null at emb[$d]")
       }
       d += 1
     }
@@ -2206,30 +1958,12 @@ object Sink {
     // distributed path refuse the same inputs — round-10 ADVICE)
     requireEmbColType(corpus, embCol)
     val sc = spark.sparkContext
-    val shardCol =
-      pmod(xxhash64(col(idCol).cast(LongType)), lit(numShards)).cast(LongType)
+    val shardCol = ShardedLayout.hashOf(idCol, numShards)
     val narrow = corpus.select(shardCol.as("shard"), col(idCol).cast(LongType).as("id"))
-
-    // pass 1: ONE (shard, id) aggregation serves both the dup-id
-    // refusal and the per-shard counts — ids key the pack order
-    // (row_number over id) and the sample map silently dedups, so
-    // duplicates would corrupt the pack with no error; a separate
-    // groupBy(id) job cost the round-11 gate ~1.3 s (verdict #4), and
-    // equal ids land in the same shard, so per-(shard,id) counts see
-    // every duplicate. Cached because two actions read it; narrow
-    // rows (two longs + a count), spills to disk if a 100 TB corpus'
-    // distinct ids outgrow memory.
-    val perId = narrow.groupBy("shard", "id").count()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts: Map[Long, Long] =
-      try {
-        val dupId = perId.filter(col("count") > 1).limit(1).collect()
-        require(dupId.isEmpty,
-          s"duplicate id in corpus: ${dupId.headOption.map(_.getLong(1)).getOrElse(-1L)}")
-        perId.groupBy("shard").agg(sum("count").as("count"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally { perId.unpersist(); () }
-    require(counts.nonEmpty, "Empty corpus")
+    // pass 1: per-shard counts + the duplicate-id refusal — ids key the
+    // pack order (row_number over id) and the sample map silently
+    // dedups, so duplicates would corrupt the pack with no error
+    val counts = ShardedLayout.buildCounts(narrow)
     counts.foreach { case (s, c) => require(c <= Int.MaxValue,
       s"shard $s holds $c rows — one shard must fit an index; raise numShards") }
     // non-empty shards in ascending hash order = buildIvfPqSharded's
@@ -2263,7 +1997,7 @@ object Sink {
       .select(col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
       .join(broadcast(idsDf), "id").collect()
     val embOfRaw: Map[Long, Array[Double]] =
-      fetched.map(r => r.getLong(0) -> embDoubles(r.getSeq[Any](1))).toMap
+      fetched.map(r => r.getLong(0) -> embDoubles(r.getLong(0), r.getSeq[Any](1))).toMap
     val dim = embOfRaw.head._2.length
     embOfRaw.valuesIterator.foreach(v => require(v.length == dim,
       s"Dimension mismatch: corpus rows have $dim and ${v.length} elements"))
@@ -2347,16 +2081,14 @@ object Sink {
         val bcM = sc.broadcast(models)
         val bcRotB = if (rot == null) null else sc.broadcast(rot)
         try {
-          val partials = withShard.select("shard", "emb").rdd.mapPartitions { it =>
+          val partials = withShard.rdd.mapPartitions { it =>
             val ms = bcM.value
             val rm = if (bcRotB == null) null else bcRotB.value
             val acc = scala.collection.mutable.Map.empty[Long, (Array[Double], Array[Double])]
             it.foreach { row =>
               val sh = row.getLong(0)
               val mdl = ms(sh)
-              val vRaw = embDoubles(row.getSeq[Any](1))
-              if (vRaw.length != dd) throw new IllegalArgumentException(
-                s"Dimension mismatch: corpus rows have $dd and ${vRaw.length} elements")
+              val vRaw = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
               val v =
                 if (rm == null) vRaw
                 else {
@@ -2418,43 +2150,23 @@ object Sink {
         // the rotation rides the index (the writeIvfOpqShardedIndex
         // layout) so the plain reader refuses and the OPQ reader +
         // append path restore it
-        if (rot != null)
-          Seq((dd, rot.toSeq)).toDF("dim", "rot")
-            .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/rot")
-        Seq((shardVals.size, counts.values.sum, "xxhash64_pmod",
-            numShards, shardVals))
-          .toDF("num_shards", "total_n", "shard_key",
-            "hash_modulus", "shard_hash_vals")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
+        if (rot != null) ShardedLayout.writeRotation(spark, tmp, dd, rot)
+        ShardedLayout.writeManifest(spark, tmp,
+          Manifest(shardVals.size, counts.values.sum, ShardKey, numShards, shardVals))
         val encoded = encodeWithModels(withShard, bcF, dd, m, sub, withRerank,
           bcRotE)
-        val wIdx = Window.partitionBy("shard").orderBy("id")
-        spark.createDataFrame(encoded, ivfPqEncSchema)
-          .withColumn("idx", (row_number().over(wIdx) - 1).cast(IntegerType))
-          .withColumn("shard_out", element_at(typedLit(shardOut), col("shard")))
-          .select("shard_out", "idx", "id", "code", "cell",
-            "sq8_code", "sq8_norm", "sq8_sq_norm")
-          .write.partitionBy("shard_out").mode(SaveMode.ErrorIfExists)
-          .parquet(s"$tmp/__vectors__")
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Par.shards(shardVals.zipWithIndex) { case (s, i) =>
-          val mdl = finalModels(s)
-          val shardDir = new org.apache.hadoop.fs.Path(f"$tmp/shard_$i%04d")
-          require(fs.mkdirs(shardDir), s"could not create $shardDir")
-          val src = new org.apache.hadoop.fs.Path(s"$tmp/__vectors__/shard_out=$i")
-          require(fs.exists(src),
-            s"encode pass produced no partition for shard $s at $src")
-          require(fs.rename(src, new org.apache.hadoop.fs.Path(shardDir, "vectors")),
-            s"could not move $src into $shardDir")
-          Seq((mdl.n, dd, m, mdl.k,
-              mdl.centroids.toSeq, mdl.codebooks.toSeq,
-              Option(mdl.sq8Min).map(_.toSeq), Option(mdl.sq8Scale).map(_.toSeq)))
-            .toDF("n", "dim", "m", "n_cells", "centroids", "codebooks",
-              "sq8_dim_min", "sq8_dim_scale")
-            .write.mode(SaveMode.ErrorIfExists).parquet(s"$shardDir/meta")
+        ShardedLayout.writeShardParts(spark.createDataFrame(encoded, ivfPqEncSchema),
+          element_at(typedLit(shardOut), col("shard")), lit(0L), s"$tmp/__vectors__")
+        ShardedLayout.installBuiltShards(spark, tmp, s"$tmp/__vectors__", shardVals) {
+          (s, dir) =>
+            val mdl = finalModels(s)
+            Seq((mdl.n, dd, m, mdl.k,
+                mdl.centroids.toSeq, mdl.codebooks.toSeq,
+                Option(mdl.sq8Min).map(_.toSeq), Option(mdl.sq8Scale).map(_.toSeq)))
+              .toDF("n", "dim", "m", "n_cells", "centroids", "codebooks",
+                "sq8_dim_min", "sq8_dim_scale")
+              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
         }
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__vectors__"), true)
       }
     } finally { bcF.destroy(); if (bcRotE != null) bcRotE.destroy() }
   }
@@ -2535,9 +2247,7 @@ object Sink {
       it.map { row =>
         val sh = row.getLong(0); val id = row.getLong(1)
         val mdl = ms(sh)
-        val vRaw = embDoubles(row.getSeq[Any](2))
-        if (vRaw.length != dd) throw new IllegalArgumentException(
-          s"Dimension mismatch: corpus rows have $dd and ${vRaw.length} elements")
+        val vRaw = embDoubles(id, row.getSeq[Any](2), dd)
         val v =
           if (rm == null) vRaw
           else {
@@ -2572,8 +2282,8 @@ object Sink {
     */
   private def readShardModel(
       spark: org.apache.spark.sql.SparkSession,
-      shardDir: String): IvfPqShardModel = {
-    val metaDf = spark.read.parquet(s"$shardDir/meta")
+      dir: String): IvfPqShardModel = {
+    val metaDf = spark.read.parquet(s"$dir/meta")
     val hasKpq = metaDf.schema.fieldNames.contains("k_pq")
     val meta = metaDf.head()
     val n = meta.getAs[Int]("n")
@@ -2597,14 +2307,10 @@ object Sink {
     * `indexPath` are undisturbed, and a crash leaves no torn state
     * anywhere).
     *
-    *  - New rows route to shard `pmod(xxhash64(id), num_shards)` —
-    *    the build split's own key, so ingest stays balanced and
-    *    deterministic. (If the ORIGINAL build compacted away empty
-    *    hash shards the dir numbering shifted relative to raw hash
-    *    values; routing correctness is unaffected — every query fans
-    *    out to all shards, so ANY shard's codebooks can encode any
-    *    row — only the exact build-time placement is not reproduced
-    *    in that degenerate small-corpus case.)
+    *  - New rows route by the build's split, through the manifest's
+    *    routing identity ([[ShardedLayout]]), so ingest stays
+    *    balanced and deterministic; an OPQ rotation is applied first
+    *    and carried forward with the tombstones.
     *  - Each row is encoded scan-stage with the destination shard's
     *    broadcast model through [[encodeWithModels]] — the same
     *    arithmetic the build ran, against the codebooks as trained
@@ -2619,10 +2325,10 @@ object Sink {
     *    reader of build-written metas is untouched); the manifest's
     *    `total_n` grows to match.
     *
-    * Duplicate ids — within `newRows` or against the stored index —
-    * throw (ids key an index; silent duplicates would serve the same
-    * row twice). Dimension mismatches throw the kernel's named error.
-    * Shards that receive no new rows are copied unchanged. The result
+    * Null and duplicate ids — within `newRows` or against the stored
+    * index — throw (ids key an index; silent duplicates would serve
+    * the same row twice). Null embeddings and dimension mismatches
+    * throw the kernel's named errors. The result
     * reads back through
     * [[graft.sources.Source.readIvfPqShardedIndex]] and serves
     * through `topkIvfPqSharded` like any built index (SinkSpec pins
@@ -2638,47 +2344,22 @@ object Sink {
       outPath: String,
       overwrite: Boolean = false): Unit = {
     import spark.implicits._
-    requireEmbColType(newRows, embCol)
     // an OPQ-rotated index appends fine — new rows must rotate with
     // the STORED R before encoding (frozen like the codebooks), and
     // the rotation is carried forward so the grown index serves
     // through the same OPQ reader
     val rotStored: Array[Double] =
       if (graft.sources.Source.hasOpqRotation(spark, indexPath))
-        spark.read.parquet(s"$indexPath/rot").select("rot").head()
-          .getSeq[Double](0).toArray
+        ShardedLayout.readRotation(spark, indexPath)._2
       else null
-    val manifestDf = spark.read.parquet(s"$indexPath/manifest")
-    val manifest = manifestDf.head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    val totalN = manifest.getLong(manifest.fieldIndex("total_n"))
-    val shardKey = manifest.getString(manifest.fieldIndex("shard_key"))
-    require(shardKey == "xxhash64_pmod",
-      s"cannot append to an index with shard key '$shardKey'")
-    // The BUILD's hash modulus + the raw-hash value behind each shard
-    // directory (present since round 11; older manifests fall back to
-    // the compacted directory count — the pre-fix behavior). Appends
-    // route with the ORIGINAL modulus, so new ids land under the same
-    // split the build used even when empty hash shards were compacted
-    // away; a hash value whose shard was dropped at build time (no
-    // model exists for it) maps deterministically to directory
-    // `hash mod num_dirs` — any shard's codebooks can encode any row,
-    // so only that degenerate placement is approximate.
-    val hasModulus = manifestDf.schema.fieldNames.contains("hash_modulus")
-    val hashModulus =
-      if (hasModulus) manifest.getInt(manifest.fieldIndex("hash_modulus"))
-      else numShards
-    val dirOfHash: Map[Long, Int] =
-      if (hasModulus) {
-        val vals = manifest.getSeq[Long](manifest.fieldIndex("shard_hash_vals"))
-        val built = vals.zipWithIndex.toMap
-        (0L until hashModulus.toLong)
-          .map(h => h -> built.getOrElse(h, (h % numShards).toInt)).toMap
-      } else (0L until hashModulus.toLong).map(h => h -> h.toInt).toMap
-    // independent per-shard model reads fanned out per guide §2.6
-    val models: Map[Long, IvfPqShardModel] = Par.shards(0 until numShards) { i =>
-      i.toLong -> readShardModel(spark, f"$indexPath/shard_$i%04d")
-    }.toMap
+    // routing with the BUILD's modulus (ShardedLayout): a hash value
+    // whose shard was dropped at build time has no model, and any
+    // shard's codebooks can encode any row
+    val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath)(
+      i => readShardModel(spark, shardDir(indexPath, i)))(_.n.toLong,
+      (_, grown) => grown <= Int.MaxValue)
+    val models: Map[Long, IvfPqShardModel] =
+      ap.metas.zipWithIndex.map { case (m, i) => i.toLong -> m }.toMap
     // dim falls out of each shard's centroid block; m does not
     // (codebooks are always m·256·(dim/m) = 256·dim values), so m
     // comes from the first shard's meta — every writer of this layout
@@ -2686,118 +2367,34 @@ object Sink {
     val dd = models.values.head.centroids.length / models.values.head.k
     models.foreach { case (i, m) => require(m.centroids.length / m.k == dd,
       s"shard $i dim ${m.centroids.length / m.k} != $dd — corrupt index") }
-    val mm = spark.read.parquet(f"$indexPath/shard_0000/meta")
+    val mm = spark.read.parquet(s"${shardDir(indexPath, 0)}/meta")
       .select("m").head().getInt(0)
     val subb = dd / mm
     val withRerank = models.values.head.sq8Min != null
     require(models.values.forall(m => (m.sq8Min != null) == withRerank),
       "corrupt index: shards disagree on the SQ8 sidecar")
 
-    val newNarrow = newRows.select(
-      element_at(
-        typedLit(dirOfHash.map { case (h, d) => h -> d.toLong }),
-        pmod(xxhash64(col(idCol).cast(LongType)), lit(hashModulus)).cast(LongType))
-        .as("shard"),
-      col(idCol).cast(LongType).as("id"),
-      col(embCol).as("emb"))
-
-    // id hygiene: unique within the batch, disjoint from the index
-    val dupIn = newNarrow.groupBy("id").count().filter(col("count") > 1).limit(1).collect()
-    require(dupIn.isEmpty, s"duplicate id in append batch: ${dupIn.headOption.map(_.getLong(0)).getOrElse(-1L)}")
-    val storedIds = spark.read.parquet(
-      (0 until numShards).map(i => f"$indexPath/shard_$i%04d/vectors"): _*)
-      .select(col("id"))
-    val clash = newNarrow.select("id").join(storedIds, Seq("id"), "left_semi")
-      .limit(1).collect()
-    require(clash.isEmpty,
-      s"id ${clash.headOption.map(_.getLong(0)).getOrElse(-1L)} already exists in the index at $indexPath")
-
-    val newCounts: Map[Long, Long] = newNarrow.groupBy("shard").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val newTotal = newCounts.values.sum
-    (0 until numShards).foreach { i =>
-      val grown = models(i.toLong).n.toLong + newCounts.getOrElse(i.toLong, 0L)
-      require(grown <= Int.MaxValue,
-        s"shard $i would grow to $grown rows — one shard must fit an index")
-    }
-
     val sc = spark.sparkContext
     val bcF = sc.broadcast(models)
     val bcRotA = if (rotStored == null) null else sc.broadcast(rotStored)
     try {
       publishAtomically(spark, outPath, overwrite) { tmp =>
-        // carry the build's routing identity forward (old manifests
+        // carries the build's routing identity forward (old manifests
         // upgrade to the identity layout they in fact had)
-        val hashVals: Seq[Long] =
-          if (hasModulus) manifest.getSeq[Long](manifest.fieldIndex("shard_hash_vals"))
-          else (0 until numShards).map(_.toLong)
-        Seq((numShards, totalN + newTotal, shardKey, hashModulus, hashVals))
-          .toDF("num_shards", "total_n", "shard_key",
-            "hash_modulus", "shard_hash_vals")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
-        val encoded = encodeWithModels(newNarrow, bcF, dd, mm, subb, withRerank,
+        ShardedLayout.writeManifest(spark, tmp, ap.grown)
+        val encoded = encodeWithModels(ap.narrow, bcF, dd, mm, subb, withRerank,
           bcRotA)
-        val oldN: Map[Long, Int] = models.map { case (i, m) => i -> m.n }
-        val wIdx = Window.partitionBy("shard").orderBy("id")
-        val baseCol = element_at(
-          typedLit(oldN.map { case (i, n) => i -> n.toLong }), col("shard"))
-        spark.createDataFrame(encoded, ivfPqEncSchema)
-          .withColumn("idx",
-            (baseCol + row_number().over(wIdx) - 1).cast(IntegerType))
-          .withColumn("shard_out", col("shard").cast(IntegerType))
-          .select("shard_out", "idx", "id", "code", "cell",
-            "sq8_code", "sq8_norm", "sq8_sq_norm")
-          .write.partitionBy("shard_out").mode(SaveMode.ErrorIfExists)
-          .parquet(s"$tmp/__append__")
-        val conf = sc.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-        // per-shard copy/move/meta tails are independent — guide §2.6
-        Par.shards(0 until numShards) { i =>
-          val mdl = models(i.toLong)
-          val shardDir = new org.apache.hadoop.fs.Path(f"$tmp/shard_$i%04d")
-          require(fs.mkdirs(shardDir), s"could not create $shardDir")
-          val oldVec = new org.apache.hadoop.fs.Path(f"$indexPath/shard_$i%04d/vectors")
-          val dstVec = new org.apache.hadoop.fs.Path(shardDir, "vectors")
-          require(org.apache.hadoop.fs.FileUtil.copy(
-            oldVec.getFileSystem(conf), oldVec, fs, dstVec, false, conf),
-            s"could not copy $oldVec into $shardDir")
-          val part = new org.apache.hadoop.fs.Path(s"$tmp/__append__/shard_out=$i")
-          if (fs.exists(part)) {
-            fs.listStatus(part).foreach { st =>
-              val nm = st.getPath.getName
-              if (nm.startsWith("part-"))
-                require(fs.rename(st.getPath,
-                  new org.apache.hadoop.fs.Path(dstVec, s"append-$nm")),
-                  s"could not move ${st.getPath} into $dstVec")
-            }
-          }
-          Seq((mdl.n + newCounts.getOrElse(i.toLong, 0L).toInt, dd, mm, mdl.k,
+        ShardedLayout.appendTail(spark, spark.createDataFrame(encoded, ivfPqEncSchema),
+          ap.metas.map(_.n), indexPath, tmp) { (i, dir) =>
+          val mdl = ap.metas(i)
+          Seq((mdl.n + ap.newOf(i).toInt, dd, mm, mdl.k,
               mdl.centroids.toSeq, mdl.codebooks.toSeq,
               Option(mdl.sq8Min).map(_.toSeq), Option(mdl.sq8Scale).map(_.toSeq),
               mdl.kPq))
             .toDF("n", "dim", "m", "n_cells", "centroids", "codebooks",
               "sq8_dim_min", "sq8_dim_scale", "k_pq")
-            .write.mode(SaveMode.ErrorIfExists).parquet(s"$shardDir/meta")
+            .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
         }
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__append__"), true)
-        // carry tombstones forward: a delete-then-append index keeps
-        // serving with the deleted rows masked (re-adding a
-        // tombstoned id is refused by the stored-id clash above —
-        // compact first to free the id)
-        val oldTs = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-        if (oldTs.getFileSystem(conf).exists(oldTs))
-          require(org.apache.hadoop.fs.FileUtil.copy(
-            oldTs.getFileSystem(conf), oldTs, fs,
-            new org.apache.hadoop.fs.Path(s"$tmp/tombstones"), false, conf),
-            s"could not carry $oldTs forward")
-        // carry the OPQ rotation forward: the grown index's geometry
-        // IS the stored rotation's
-        val oldRot = new org.apache.hadoop.fs.Path(s"$indexPath/rot")
-        if (oldRot.getFileSystem(conf).exists(oldRot))
-          require(org.apache.hadoop.fs.FileUtil.copy(
-            oldRot.getFileSystem(conf), oldRot, fs,
-            new org.apache.hadoop.fs.Path(s"$tmp/rot"), false, conf),
-            s"could not carry $oldRot forward")
       }
     } finally { bcF.destroy(); if (bcRotA != null) bcRotA.destroy() }
   }
@@ -2827,65 +2424,9 @@ object Sink {
       idCol: String,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
-    val manifest = spark.read.parquet(s"$indexPath/manifest").head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    val del = deleteIds.select(col(idCol).cast(LongType).as("id"))
-      .na.drop().distinct()
-    val storedIds = spark.read.parquet(
-      (0 until numShards).map(i => f"$indexPath/shard_$i%04d/vectors"): _*)
-      .select(col("id"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-    val hadTs = tsPath.getFileSystem(conf).exists(tsPath)
-    val existing =
-      if (hadTs) spark.read.parquet(tsPath.toString).select(col("id"))
-      else spark.emptyDataFrame.select(lit(0L).as("id")).limit(0)
-    // ONE validation job for all three refusal contracts (empty set /
-    // unknown id / double delete) — they were three sequential
-    // actions, each re-scanning the delete set; stored and tombstone
-    // ids are unique by the index contract, so the left joins
-    // preserve the delete-set cardinality exactly. That uniqueness is
-    // VERIFIED, not assumed (round-16 advisor): `del` is distinct, so
-    // any join-row multiplication (n > distinct n) can only come from
-    // a duplicated stored/tombstone id — a corrupt index — and
-    // refuses by name instead of silently passing the count checks.
-    val chk = del
-      .join(storedIds.withColumn("__stored", lit(1)), Seq("id"), "left")
-      .join(existing.withColumn("__ts", lit(1)), Seq("id"), "left")
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("id")).as("nd"),
-        min(when(col("__stored").isNull, col("id"))).as("unknown"),
-        min(when(col("__ts").isNotNull, col("id"))).as("dbl"))
-      .head()
-    require(chk.getLong(0) > 0L, "empty delete set")
-    require(chk.getLong(0) == chk.getLong(1),
-      s"corrupt index at $indexPath: a stored or tombstone id is " +
-        s"duplicated (delete validation saw ${chk.getLong(0)} rows for " +
-        s"${chk.getLong(1)} distinct delete ids)")
-    require(chk.isNullAt(2),
-      s"cannot delete id ${chk.getLong(2)}: " +
-        s"not stored in the index at $indexPath")
-    require(chk.isNullAt(3),
-      s"id ${chk.getLong(3)} is already " +
-        "tombstoned (double delete)")
-    publishAtomically(spark, outPath, overwrite) { tmp =>
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-      val rotDirs =
-        if (graft.sources.Source.hasOpqRotation(spark, indexPath)) Seq("rot")
-        else Seq.empty[String]
-      Par.shards(Seq("manifest") ++ rotDirs ++
-          (0 until numShards).map(i => f"shard_$i%04d")) { d =>
-        val src = new org.apache.hadoop.fs.Path(s"$indexPath/$d")
-        require(org.apache.hadoop.fs.FileUtil.copy(
-          src.getFileSystem(conf), src, fs,
-          new org.apache.hadoop.fs.Path(s"$tmp/$d"), false, conf),
-          s"could not copy $src")
-      }
-      existing.unionAll(del).repartition(1)
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/tombstones")
-    }
-  }
+      overwrite: Boolean = false): Unit =
+    deleteFromShardedIndexCore(spark, deleteIds, idCol, indexPath, outPath,
+      overwrite)
 
   /** Compact a tombstoned sharded IVF+PQ index: rewrite each shard's
     * `vectors/` DROPPING tombstoned rows (pack positions renumbered
@@ -2903,64 +2444,6 @@ object Sink {
       spark: SparkSession,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
-    val manifestDf = spark.read.parquet(s"$indexPath/manifest")
-    val manifest = manifestDf.head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-    require(tsPath.getFileSystem(conf).exists(tsPath),
-      s"no tombstones at $indexPath — nothing to compact")
-    val ts = spark.read.parquet(tsPath.toString).select(col("id"))
-      .localCheckpoint(eager = true)
-    publishAtomically(spark, outPath, overwrite) { tmp =>
-      // independent per-shard rewrites fanned out per guide §2.6
-      val liveTotal = Par.shards(0 until numShards) { i =>
-        val shardDir = f"shard_$i%04d"
-        val vecs = spark.read.parquet(s"$indexPath/$shardDir/vectors")
-        // renumber pack positions contiguously in original order:
-        // positions are 0..n-1 per shard, so a kept row's new
-        // position is its old one minus the dropped positions below
-        // it — a MAP-ONLY renumber (zero shuffle; the previous
-        // global-orderBy window funneled the whole shard through one
-        // task, guide §2). Dropped set bounded by the tombstone batch.
-        val dropped = vecs.select("id", "idx")
-          .join(ts, Seq("id"), "left_semi")
-          .select("idx").collect().map(_.getInt(0)).sorted
-        val bcDropped = spark.sparkContext.broadcast(dropped)
-        val newIdx = udf { (p: Int) =>
-          val d = bcDropped.value
-          var lo = 0; var hi = d.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (d(mid) < p) lo = mid + 1 else hi = mid
-          }
-          p - lo
-        }.asNonNullable()
-        val renumbered = vecs.join(ts, Seq("id"), "left_anti")
-          .withColumn("idx", newIdx(col("idx")))
-        renumbered.write.mode(SaveMode.ErrorIfExists)
-          .parquet(s"$tmp/$shardDir/vectors")
-        bcDropped.destroy()
-        val liveN = spark.read.parquet(s"$tmp/$shardDir/vectors").count()
-        // meta rewritten by NAME so both build-written (8-col) and
-        // append-written (9-col, k_pq) schemas survive unchanged
-        spark.read.parquet(s"$indexPath/$shardDir/meta")
-          .withColumn("n", lit(liveN).cast(IntegerType))
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/$shardDir/meta")
-        liveN
-      }.sum
-      manifestDf.withColumn("total_n", lit(liveTotal))
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/manifest")
-      // the compacted index keeps its geometry: carry rot/ forward
-      if (graft.sources.Source.hasOpqRotation(spark, indexPath)) {
-        val src = new org.apache.hadoop.fs.Path(s"$indexPath/rot")
-        val fs2 = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-        require(org.apache.hadoop.fs.FileUtil.copy(
-          src.getFileSystem(conf), src, fs2,
-          new org.apache.hadoop.fs.Path(s"$tmp/rot"), false, conf),
-          s"could not carry $src forward")
-      }
-    }
-  }
+      overwrite: Boolean = false): Unit =
+    compactShardedCore(spark, indexPath, outPath, overwrite)
 }

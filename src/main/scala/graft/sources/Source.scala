@@ -144,11 +144,7 @@ object Source {
     */
   def readOpqIndex(
       spark: SparkSession, path: String): graft.operators.Similarity.CorpusIndexOpq = {
-    val meta = spark.read.parquet(s"$path/rot").select("dim", "rot").head()
-    val dim = meta.getInt(0)
-    val rot = meta.getSeq[Double](1).toArray
-    require(rot.length == dim.toLong * dim,
-      s"corrupt OPQ rotation: dim=$dim but ${rot.length} values")
+    val (dim, rot) = ShardedLayout.readRotation(spark, path)
     val pq = readPqIndex(spark, s"$path/pq")
     require(pq.dim == dim,
       s"corrupt OPQ index: rotation dim=$dim but PQ payload dim=${pq.dim}")
@@ -331,20 +327,17 @@ object Source {
   }
 
   /** Restore a SHARDED BQ index persisted by
-    * [[graft.sources.Sink.writeBqShardedIndex]] — per-shard
-    * byte-identical restores, manifest-validated totals, and the
-    * tombstone refusal ([[readIvfPqShardedIndex]]'s contract: a
-    * deleted row must never serve through the plain reader).
+    * [[graft.sources.Sink.writeBqShardedIndex]] (layout:
+    * [[ShardedLayout]]) — per-shard byte-identical restores,
+    * manifest-validated totals, and the tombstone refusal
+    * ([[readIvfPqShardedIndex]]'s contract: a deleted row must never
+    * serve through the plain reader).
     */
   def readBqShardedIndex(
       spark: SparkSession,
       path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexBq] = {
-    val ts = readBqShardedIndexTombstones(spark, path)
-    require(ts.isEmpty,
-      s"index at $path carries ${ts.length} tombstoned ids — read through " +
-        "readBqShardedIndexWithTombstones and serve with " +
-        "topkBqShardedTombstoned, or rewrite with " +
-        "Sink.compactBqShardedIndex first")
+    refuseTombstoned(spark, path, "readBqShardedIndexWithTombstones",
+      "topkBqShardedTombstoned", "compactBqShardedIndex")
     readBqShardedIndexShards(spark, path)
   }
 
@@ -355,70 +348,32 @@ object Source {
   def readBqShardedIndexWithTombstones(
       spark: SparkSession,
       path: String): (IndexedSeq[graft.operators.Similarity.CorpusIndexBq], Array[Long]) =
-    (readBqShardedIndexShards(spark, path),
-      readBqShardedIndexTombstones(spark, path))
+    (readBqShardedIndexShards(spark, path), ShardedLayout.readTombstones(spark, path))
 
   /** The tombstone id set of a persisted sharded BQ index — empty
     * when `tombstones/` is absent.
     */
   def readBqShardedIndexTombstones(
-      spark: SparkSession, path: String): Array[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Array.empty[Long]
-    else spark.read.parquet(p.toString).select("id").collect().map(_.getLong(0))
-  }
+      spark: SparkSession, path: String): Array[Long] =
+    ShardedLayout.readTombstones(spark, path)
 
   private def readBqShardedIndexShards(
       spark: SparkSession,
-      path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexBq] = {
-    val meta = spark.read.parquet(s"$path/manifest").head()
-    val numShards = meta.getInt(meta.fieldIndex("num_shards"))
-    val totalN = meta.getLong(meta.fieldIndex("total_n"))
-    require(numShards >= 1, s"corrupt sharded index manifest: num_shards=$numShards")
-    val hasBitCut = spark.read.parquet(s"$path/shard_0000/meta")
-      .schema.fieldNames.contains("bit_cut")
-    // independent per-shard restores fanned out per guide §2.6
-    val shards = Par.shards(0 until numShards)(
-      i => readBqIndex(spark, f"$path/shard_$i%04d"))
-    val n = shards.map(_.n.toLong).sum
-    require(n == totalN,
-      s"corrupt sharded index: manifest total_n=$totalN but shards hold $n rows")
-    if (hasBitCut || numShards == 1) shards
-    else {
-      // pre-bit_cut SHARDED layout: each readBqIndex derived its own
-      // per-shard cut, but the build cut on the corpus-GLOBAL column
-      // totals — re-derive those exactly (integer sums over all
-      // shards' stored codes = the build corpus, since the old layout
-      // predates appends) and patch every shard with the global cut
-      val dim = shards.head.dim
-      val colSum = new Array[Long](dim)
-      shards.foreach { sx =>
-        val cs = graft.operators.Similarity.bqColSums(sx.sq8)
-        var d = 0
-        while (d < dim) { colSum(d) += cs(d); d += 1 }
-      }
-      val cut = new Array[Int](dim)
-      var d = 0
-      while (d < dim) { cut(d) = (colSum(d) / n + 1L).toInt; d += 1 }
-      shards.map(_.copy(bitCut = cut))
-    }
-  }
+      path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexBq] =
+    withGlobalBitCut(spark, path,
+      ShardedLayout.restoreShards(spark, path)(readBqIndex(spark, _))(_.n))(
+      _.sq8, (sx, cut) => sx.copy(bitCut = cut))
 
   /** Restore a SHARDED IVF+BQ index persisted by
-    * [[graft.sources.Sink.writeIvfBqShardedIndex]] — per-shard
-    * byte-identical restores, manifest-validated totals, tombstone
-    * refusal on the plain reader.
+    * [[graft.sources.Sink.writeIvfBqShardedIndex]] (layout:
+    * [[ShardedLayout]]) — per-shard byte-identical restores,
+    * manifest-validated totals, tombstone refusal on the plain reader.
     */
   def readIvfBqShardedIndex(
       spark: SparkSession,
       path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexIvfBq] = {
-    val ts = readIvfBqShardedIndexTombstones(spark, path)
-    require(ts.isEmpty,
-      s"index at $path carries ${ts.length} tombstoned ids — read through " +
-        "readIvfBqShardedIndexWithTombstones and serve with " +
-        "topkIvfBqShardedTombstoned, or rewrite with " +
-        "Sink.compactIvfBqShardedIndex first")
+    refuseTombstoned(spark, path, "readIvfBqShardedIndexWithTombstones",
+      "topkIvfBqShardedTombstoned", "compactIvfBqShardedIndex")
     readIvfBqShardedIndexShards(spark, path)
   }
 
@@ -428,53 +383,60 @@ object Source {
   def readIvfBqShardedIndexWithTombstones(
       spark: SparkSession,
       path: String): (IndexedSeq[graft.operators.Similarity.CorpusIndexIvfBq], Array[Long]) =
-    (readIvfBqShardedIndexShards(spark, path),
-      readIvfBqShardedIndexTombstones(spark, path))
+    (readIvfBqShardedIndexShards(spark, path), ShardedLayout.readTombstones(spark, path))
 
   /** The tombstone id set of a persisted sharded IVF+BQ index —
     * empty when `tombstones/` is absent.
     */
   def readIvfBqShardedIndexTombstones(
-      spark: SparkSession, path: String): Array[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Array.empty[Long]
-    else spark.read.parquet(p.toString).select("id").collect().map(_.getLong(0))
-  }
+      spark: SparkSession, path: String): Array[Long] =
+    ShardedLayout.readTombstones(spark, path)
 
   private def readIvfBqShardedIndexShards(
       spark: SparkSession,
-      path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexIvfBq] = {
-    val meta = spark.read.parquet(s"$path/manifest").head()
-    val numShards = meta.getInt(meta.fieldIndex("num_shards"))
-    val totalN = meta.getLong(meta.fieldIndex("total_n"))
-    require(numShards >= 1, s"corrupt sharded index manifest: num_shards=$numShards")
-    val hasBitCut = spark.read.parquet(s"$path/shard_0000/meta")
-      .schema.fieldNames.contains("bit_cut")
-    // independent per-shard restores fanned out per guide §2.6
-    val shards = Par.shards(0 until numShards)(
-      i => readIvfBqIndex(spark, f"$path/shard_$i%04d"))
-    val n = shards.map(_.n.toLong).sum
-    require(n == totalN,
-      s"corrupt sharded index: manifest total_n=$totalN but shards hold $n rows")
-    if (hasBitCut || numShards == 1) shards
+      path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexIvfBq] =
+    withGlobalBitCut(spark, path,
+      ShardedLayout.restoreShards(spark, path)(readIvfBqIndex(spark, _))(_.n))(
+      _.sq8, (sx, cut) => sx.copy(bitCut = cut))
+
+  /** The plain sharded readers' tombstone refusal: a tombstoned index
+    * must NOT serve through them — every row it returns would include
+    * the deleted ones. Named refusal instead of a silent wrong serve.
+    */
+  private def refuseTombstoned(spark: SparkSession, path: String,
+      withTombstones: String, serve: String, compact: String): Unit = {
+    val ts = ShardedLayout.readTombstones(spark, path)
+    require(ts.isEmpty,
+      s"index at $path carries ${ts.length} tombstoned ids — read through " +
+        s"$withTombstones and serve with $serve, or rewrite with " +
+        s"Sink.$compact first")
+  }
+
+  /** Pre-`bit_cut` SHARDED BQ/IVF+BQ layouts: each per-shard restore
+    * derived its own cut, but the build cut on the corpus-GLOBAL column
+    * totals — re-derive those exactly (integer sums over all shards'
+    * stored codes = the build corpus, since the old layout predates
+    * appends) and patch every shard with the global cut.
+    */
+  private def withGlobalBitCut[T](spark: SparkSession, path: String,
+      shards: IndexedSeq[T])(sq8: T => graft.operators.Similarity.CorpusIndexSq8,
+      patch: (T, Array[Int]) => T): IndexedSeq[T] =
+    if (shards.size == 1 || spark.read.parquet(s"${ShardedLayout.shardDir(path, 0)}/meta")
+        .schema.fieldNames.contains("bit_cut")) shards
     else {
-      // pre-bit_cut sharded layout: patch the corpus-GLOBAL cut (the
-      // readBqShardedIndexShards derivation verbatim — the build cut
-      // on global column totals, and the old layout predates appends)
-      val dim = shards.head.dim
+      val dim = sq8(shards.head).dim
       val colSum = new Array[Long](dim)
       shards.foreach { sx =>
-        val cs = graft.operators.Similarity.bqColSums(sx.sq8)
+        val cs = graft.operators.Similarity.bqColSums(sq8(sx))
         var d = 0
         while (d < dim) { colSum(d) += cs(d); d += 1 }
       }
+      val n = shards.map(sq8(_).n.toLong).sum
       val cut = new Array[Int](dim)
       var d = 0
       while (d < dim) { cut(d) = (colSum(d) / n + 1L).toInt; d += 1 }
-      shards.map(_.copy(bitCut = cut))
+      shards.map(patch(_, cut))
     }
-  }
 
   /** Restore a persisted PCA model byte-identically (see
     * [[graft.sources.Sink.writePcaModel]]).
@@ -641,15 +603,8 @@ object Source {
   def readIvfPqShardedIndex(
       spark: SparkSession,
       path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexIvfPq] = {
-    // a tombstoned index must NOT serve through the plain reader —
-    // every row it returns would include the deleted ones. Named
-    // refusal instead of a silent wrong serve.
-    val ts = readIvfPqShardedIndexTombstones(spark, path)
-    require(ts.isEmpty,
-      s"index at $path carries ${ts.length} tombstoned ids — read through " +
-        "readIvfPqShardedIndexWithTombstones and serve with " +
-        "topkIvfPqShardedTombstoned, or rewrite with " +
-        "Sink.compactIvfPqShardedIndex first")
+    refuseTombstoned(spark, path, "readIvfPqShardedIndexWithTombstones",
+      "topkIvfPqShardedTombstoned", "compactIvfPqShardedIndex")
     // an OPQ-rotated index must not serve rotation-unaware either:
     // unrotated queries against rotated codebooks are silently wrong
     require(!hasOpqRotation(spark, path),
@@ -669,25 +624,19 @@ object Source {
     require(hasOpqRotation(spark, path),
       s"index at $path has no rot/ — it is a plain sharded IVF+PQ " +
         "index; read through readIvfPqShardedIndex")
-    val ts = readIvfPqShardedIndexTombstones(spark, path)
+    val ts = ShardedLayout.readTombstones(spark, path)
     require(ts.isEmpty,
       s"index at $path carries ${ts.length} tombstoned ids — serve the " +
         "shards with the deniedIds form after reading them, or compact first")
-    val rotRow = spark.read.parquet(s"$path/rot").select("dim", "rot").head()
-    val dim = rotRow.getInt(0)
-    val rot = rotRow.getSeq[Double](1).toArray
-    require(rot.length == dim.toLong * dim,
-      s"corrupt rot meta: dim=$dim but ${rot.length} rotation values")
+    val (dim, rot) = ShardedLayout.readRotation(spark, path)
     val shards = readIvfPqShardedIndexShards(spark, path)
     require(shards.forall(_.dim == dim),
       s"corrupt index: rotation dim $dim != shard dim ${shards.map(_.dim).distinct}")
     (rot, shards)
   }
 
-  private[graft] def hasOpqRotation(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/rot")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private[graft] def hasOpqRotation(spark: SparkSession, path: String): Boolean =
+    ShardedLayout.exists(spark, s"$path/rot")
 
   /** Restore a sharded IVF+PQ index TOGETHER with its tombstone id
     * set (empty for a never-deleted or compacted index) — the serve
@@ -707,8 +656,7 @@ object Source {
       s"index at $path carries an OPQ rotation — read through " +
         "readIvfOpqShardedIndexWithTombstones and serve with " +
         "topkIvfOpqShardedWaves(deniedIds = ...)")
-    (readIvfPqShardedIndexShards(spark, path),
-      readIvfPqShardedIndexTombstones(spark, path))
+    (readIvfPqShardedIndexShards(spark, path), ShardedLayout.readTombstones(spark, path))
   }
 
   /** Restore a sharded IVF+OPQ index TOGETHER with its tombstone id
@@ -721,13 +669,8 @@ object Source {
     require(hasOpqRotation(spark, path),
       s"index at $path has no rot/ — it is a plain sharded IVF+PQ " +
         "index; read through readIvfPqShardedIndexWithTombstones")
-    val rotRow = spark.read.parquet(s"$path/rot").select("dim", "rot").head()
-    val dim = rotRow.getInt(0)
-    val rot = rotRow.getSeq[Double](1).toArray
-    require(rot.length == dim.toLong * dim,
-      s"corrupt rot meta: dim=$dim but ${rot.length} rotation values")
-    (rot, readIvfPqShardedIndexShards(spark, path),
-      readIvfPqShardedIndexTombstones(spark, path))
+    val (_, rot) = ShardedLayout.readRotation(spark, path)
+    (rot, readIvfPqShardedIndexShards(spark, path), ShardedLayout.readTombstones(spark, path))
   }
 
   /** The tombstone id set of a persisted sharded index — empty when
@@ -735,30 +678,11 @@ object Source {
     * post-compaction).
     */
   def readIvfPqShardedIndexTombstones(
-      spark: SparkSession, path: String): Array[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Array.empty[Long]
-    else spark.read.parquet(p.toString).select("id").collect().map(_.getLong(0))
-  }
+      spark: SparkSession, path: String): Array[Long] =
+    ShardedLayout.readTombstones(spark, path)
 
   private def readIvfPqShardedIndexShards(
       spark: SparkSession,
-      path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexIvfPq] = {
-    // by field name, not position — the manifest schema has already
-    // grown twice (hash_modulus, shard_hash_vals) and the append path
-    // reads it by name; positional reads here were only correct while
-    // column order happened to be preserved (round-11 advisor)
-    val meta = spark.read.parquet(s"$path/manifest").head()
-    val numShards = meta.getInt(meta.fieldIndex("num_shards"))
-    val totalN = meta.getLong(meta.fieldIndex("total_n"))
-    require(numShards >= 1, s"corrupt sharded index manifest: num_shards=$numShards")
-    // independent per-shard restores fanned out per guide §2.6
-    val shards = Par.shards(0 until numShards)(
-      i => readIvfPqIndex(spark, f"$path/shard_$i%04d"))
-    val n = shards.map(_.n.toLong).sum
-    require(n == totalN,
-      s"corrupt sharded index: manifest total_n=$totalN but shards hold $n rows")
-    shards
-  }
+      path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexIvfPq] =
+    ShardedLayout.restoreShards(spark, path)(readIvfPqIndex(spark, _))(_.n)
 }

@@ -1688,4 +1688,34 @@ class SinkSpec extends AnyFunSuite {
       .filter(col("a").between(96, 127) && col("b").between(96, 127)).count()
     assert(zRows == 32L * 32)
   }
+
+  test("sharded appends refuse a null id, embedding or element by name, for every family") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(97)
+    val corpus = (0L until 200L).map(i => i -> Seq.fill(8)(rnd.nextGaussian()))
+      .toDF("id", "emb")
+    val schema = StructType(Seq(StructField("id", LongType, nullable = true),
+      StructField("emb", ArrayType(DoubleType, containsNull = true), nullable = true)))
+    def batch(rows: Row*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema)
+    val ok: Seq[Any] = Seq.fill(8)(0.25)
+    val cases = Seq(
+      "Null id: append batch column id has a null" ->
+        batch(Row(500L, ok), Row(null, ok)),
+      "Null embedding: corpus row id=501 has a null emb" ->
+        batch(Row(500L, ok), Row(501L, null)),
+      "Null element: corpus row id=502 has a null at emb[3]" ->
+        batch(Row(502L, ok.updated(3, null))))
+    ShardedFamilies.all(spark).foreach { f =>
+      val base = Files.createTempDirectory(s"sink-null-${f.name}").toString
+      f.write(corpus, s"$base/ix")
+      cases.zipWithIndex.foreach { case ((expected, df), j) =>
+        val e = intercept[Exception](f.append(df, s"$base/ix", s"$base/out$j", false))
+        assert(ShardedFamilies.messages(e).contains(expected),
+          s"${f.name}: ${ShardedFamilies.messages(e)}")
+      }
+    }
+  }
 }
