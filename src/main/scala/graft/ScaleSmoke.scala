@@ -877,10 +877,10 @@ object ScaleSmoke {
         .select(col("doc_id").as("qid"),
           col("vec").cast("array<double>").as("vec")).cache()
       queries.count()
-      val manifest = spark.read.parquet(s"$root/bq/manifest").head()
-      val nDirs = manifest.getInt(manifest.fieldIndex("num_shards"))
-      val hashModulus = manifest.getInt(manifest.fieldIndex("hash_modulus"))
-      val hashVals = manifest.getSeq[Long](manifest.fieldIndex("shard_hash_vals"))
+      val manifest = graft.sources.ShardedLayout.readManifest(spark, s"$root/bq")
+      val nDirs = manifest.numShards
+      val hashModulus = manifest.hashModulus
+      val hashVals = manifest.hashVals
       def bqDir(i: Int) = f"$root/bq/shard_$i%04d"
       val scratch = Similarity.resolveWaveScratch(isLocal = true, "")
       // FLAT serve: wave paging off the persisted layout, ONE shard

@@ -1343,15 +1343,14 @@ object Similarity {
       numShards, surviving.map(_._2).toIndexedSeq)
   }
 
-  /** Merge per-shard [[topkBq]] serves into a global top-k — the
-    * [[topkIvfPqSharded]] merge shape: every shard returns its local
-    * reranked top-k (per-shard Hamming shortlists only WIDEN the
-    * candidate pool vs one global shortlist), then one distributed
-    * `row_number` over (query | score, index) keeps k. Queries must
-    * carry `qIdCol`; output is the flat (qIdCol, rank, index, score)
-    * shape of [[topkFlat]] — which means queries with a NULL
-    * embedding produce NO output rows (the per-shard posexplode of
-    * their null match array yields nothing), unlike [[topkBq]]'s
+  /** Merge per-shard [[topkBq]] serves into a global top-k through
+    * [[serveSharded]]: every shard returns its local reranked top-k
+    * (per-shard Hamming shortlists only WIDEN the candidate pool vs
+    * one global shortlist), then one distributed `row_number` keeps k.
+    * Queries must carry `qIdCol`; output is the flat (qIdCol, rank,
+    * index, score) shape of [[topkFlat]] — which means queries with a
+    * NULL embedding produce NO output rows (the per-shard posexplode
+    * of their null match array yields nothing), unlike [[topkBq]]'s
     * null-passthrough match column. Same shape as every sharded flat
     * serve ([[topkIvfPqSharded]], [[topkIvfBqSharded]]).
     */
@@ -1362,20 +1361,8 @@ object Similarity {
       shards: Seq[CorpusIndexBq],
       k: Int,
       metric: Metric,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val partials = shards.map(sx =>
-      topkBqFlat(queries.select(col(qIdCol), col(embCol)), embCol, sx,
-        k, metric, shortlist).drop("rank"))
-    val unioned = partials.reduce(_ unionAll _)
-    val order = if (metric.higherIsBetter)
-      Seq(col("score").desc, col("index").asc)
-    else Seq(col("score").asc, col("index").asc)
-    val w = Window.partitionBy(col(qIdCol)).orderBy(order: _*)
-    unioned
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      shortlist: Int): DataFrame =
+    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Unmasked, k, metric, shortlist)
 
   /** Collect + pack + binarize in one call (one collect feeds both the
     * bit matrix and the SQ8 envelope).
@@ -1457,8 +1444,7 @@ object Similarity {
       outputCol: String = "matches"): DataFrame = {
     validateBqArgs(k, shortlist)
     val spark = queries.sparkSession
-    val (mask, nAllowed) =
-      allowedMaskPresortedIds(corpus.ids, sortedAllowed(allowedIds))
+    val (mask, nAllowed) = idMask(corpus.ids, sortedIds(allowedIds), null)
     topkBqBc(queries, embCol, broadcastOf(spark, corpus), k, metric,
       shortlist, outputCol,
       maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
@@ -1482,7 +1468,7 @@ object Similarity {
       outputCol: String): DataFrame = {
     validateBqArgs(k, shortlist)
     val spark = queries.sparkSession
-    val (mask, nAllowed) = allowedMaskFromDfIds(corpus.ids, allowed, allowedIdCol)
+    val (mask, nAllowed) = allowedMasksFromDfMulti(Seq(corpus.ids), allowed, allowedIdCol).head
     topkBqBc(queries, embCol, broadcastOf(spark, corpus), k, metric,
       shortlist, outputCol,
       maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
@@ -1519,7 +1505,7 @@ object Similarity {
       topkBqFiltered(queries, embCol, corpus, allowed, allowedIdCol, k,
         metric, shortlist, "matches"), embCol)
 
-  private def validateBqArgs(k: Int, shortlist: Int): Unit =
+  private[graft] def validateBqArgs(k: Int, shortlist: Int): Unit =
     require(shortlist >= k,
       s"shortlist must be >= k, got $shortlist (k=$k) — the Hamming pass " +
         "only pre-screens; k results come from the SQ8 rerank")
@@ -1702,16 +1688,8 @@ object Similarity {
       corpus: CorpusIndexBq,
       k: Int,
       metric: Metric,
-      shortlist: Int): DataFrame = {
-    val withMatches = topkBq(queries, embCol, corpus, k, metric, shortlist, "matches")
-    withMatches
-      .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
-        posexplode(col("matches")).as(Seq("rank0", "m"))): _*)
-      .withColumn("rank", col("rank0") + 1)
-      .withColumn("index", col("m.index"))
-      .withColumn("score", col("m.score"))
-      .drop("rank0", "m", embCol)
-  }
+      shortlist: Int): DataFrame =
+    flattenMatches(topkBq(queries, embCol, corpus, k, metric, shortlist, "matches"), embCol)
 
   /** [[topkBqFlat]] over a caller-owned broadcast (see [[topkBqBc]])
     * — the BQ wave server's per-shard partial.
@@ -1730,15 +1708,8 @@ object Similarity {
         maskBc, allowedCount), embCol)
 
   /** [[topkBqSharded]] restricted to an allowed-id subset — the
-    * sharded composition of [[topkBqFiltered]] ([[
-    * topkIvfPqShardedFiltered]]'s shape): each shard masks against
-    * the SAME sorted allowed array (ids living in other shards fall
-    * out as not-found, which is exactly the per-shard intersection),
-    * so the merge needs no filter awareness; the global
-    * k > |allowed| clamp emerges from the merge. Per-shard mask
-    * broadcasts share the lazy-plan lifetime caveat of
-    * [[topkBqFiltered]]; long-lived drivers should prefer
-    * [[topkBqShardedWaves]] with `allowedIds`.
+    * sharded composition of [[topkBqFiltered]] (allow mask of
+    * [[serveSharded]]).
     */
   def topkBqShardedFiltered(
       queries: DataFrame,
@@ -1748,19 +1719,9 @@ object Similarity {
       allowedIds: Array[Long],
       k: Int,
       metric: Metric,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val sorted = sortedAllowed(allowedIds)
-    val partials = shards.map { sx =>
-      val (mask, nAllowed) = allowedMaskPresortedIds(sx.ids, sorted)
-      topkBqFlatBc(queries.select(col(qIdCol), col(embCol)), embCol,
-          broadcastOf(spark, sx), k, metric, shortlist,
-          spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
-    }
-    mergeShardPartials(partials, qIdCol, k, metric)
-  }
+      shortlist: Int): DataFrame =
+    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Allow(allowedIds), k, metric,
+      shortlist)
 
   /** [[topkBqShardedFiltered]] with the allowed set as a one-column
     * DataFrame — never collected ([[allowedMasksFromDfMulti]]).
@@ -1774,25 +1735,14 @@ object Similarity {
       allowedIdCol: String,
       k: Int,
       metric: Metric,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val masks = allowedMasksFromDfMulti(shards.map(_.ids), allowed, allowedIdCol)
-    val partials = shards.zip(masks).map { case (sx, (mask, nAllowed)) =>
-      topkBqFlatBc(queries.select(col(qIdCol), col(embCol)), embCol,
-          broadcastOf(spark, sx), k, metric, shortlist,
-          spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
-    }
-    mergeShardPartials(partials, qIdCol, k, metric)
-  }
+      shortlist: Int): DataFrame =
+    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.AllowDf(allowed, allowedIdCol),
+      k, metric, shortlist)
 
   /** [[topkBqSharded]] over an index with TOMBSTONED ids — the deny
-    * form of [[topkBqShardedFiltered]] (the [[
-    * topkIvfPqShardedTombstoned]] shape): each shard masks its
-    * tombstoned rows out of the popcount scan, a deleted row can
-    * never be served, and k clamps to the LIVE population. An empty
-    * tombstone array serves identically to [[topkBqSharded]].
+    * mask of [[serveSharded]]: a deleted row can never be served and k
+    * clamps to the LIVE population. An empty tombstone array serves
+    * identically to [[topkBqSharded]].
     */
   def topkBqShardedTombstoned(
       queries: DataFrame,
@@ -1802,35 +1752,21 @@ object Similarity {
       tombstoneIds: Array[Long],
       k: Int,
       metric: Metric,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val sorted = sortedAllowed(tombstoneIds)
-    val partials = shards.map { sx =>
-      val (mask, nAllowed) = deniedMaskPresortedIds(sx.ids, sorted)
-      topkBqFlatBc(queries.select(col(qIdCol), col(embCol)), embCol,
-          broadcastOf(spark, sx), k, metric, shortlist,
-          spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
-    }
-    mergeShardPartials(partials, qIdCol, k, metric)
-  }
+      shortlist: Int): DataFrame =
+    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Deny(tombstoneIds), k, metric,
+      shortlist)
 
-  /** The distributed union + row_number merge every sharded flat
-    * serve ends with — metric-aware ordering (score desc for
-    * higher-is-better metrics, asc otherwise; ties to the lowest
-    * index, the exact kernel's rule).
+  /** The BQ family's [[serveSharded]] kernel (output keeps only
+    * `(qIdCol, index, score, rank)`).
     */
-  private def mergeShardPartials(
-      partials: Seq[DataFrame], qIdCol: String, k: Int, metric: Metric): DataFrame = {
-    val unioned = partials.reduce(_ unionAll _)
-    val order = if (metric.higherIsBetter)
-      Seq(col("score").desc, col("index").asc)
-    else Seq(col("score").asc, col("index").asc)
-    val w = Window.partitionBy(col(qIdCol)).orderBy(order: _*)
-    unioned
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+  private def serveBqSharded(
+      queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexBq],
+      masks: ShardMasks, k: Int, metric: Metric, shortlist: Int): DataFrame = {
+    val q = queries.select(col(qIdCol), col(embCol))
+    serveSharded(queries, qIdCol, shards, masks, k, metric)(
+      _.ids, _ => validateBqArgs(k, shortlist)) { (bc, maskBc, nAllowed) =>
+      topkBqFlatBc(q, embCol, bc, k, metric, shortlist, maskBc, nAllowed)
+    }
   }
 
   /** [[topkBqSharded]] with BOUNDED broadcast memory — the BQ family
@@ -1866,17 +1802,11 @@ object Similarity {
       meter: ShardedServeMeter = ShardedServeStats.default,
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
-      deniedIds: Array[Long] = null): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val memParts =
-      memoryPartialsDefault(queries.sparkSession, memoryPartials, scratchDir)
-    topkBqWavesCore(queries, qIdCol, embCol, shards.map(sx => () => sx),
-      k, metric, shortlist, waveSize,
-      if (memParts) ""
-      else resolveWaveScratch(queries.sparkSession.sparkContext.isLocal,
-        scratchDir),
-      meter, memParts, allowedIds, deniedIds)
-  }
+      deniedIds: Array[Long] = null): DataFrame =
+    serveWaves(queries, shards, scratchDir, memoryPartials) { (providers, scratch, mem) =>
+      topkBqWavesCore(queries, qIdCol, embCol, providers, k, metric, shortlist, waveSize,
+        scratch, meter, mem, allowedIds, deniedIds)
+    }
 
   /** The BQ wave loop over shard PROVIDERS — the
     * [[topkIvfPqWavesCore]] shape: a caller paging shards off a
@@ -1898,17 +1828,11 @@ object Similarity {
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
       deniedIds: Array[Long] = null): DataFrame = {
-    val spark = queries.sparkSession
     val q = queries.select(col(qIdCol), col(embCol))
-    val order = if (metric.higherIsBetter)
-      Seq(col("score").desc, col("index").asc)
-    else Seq(col("score").asc, col("index").asc)
     topkShardedWavesCore[CorpusIndexBq](
-      spark, qIdCol, order, shardProviders,
-      maskOf = (sx, a, dny) => combinedMaskIds(sx.ids, a, dny),
+      queries.sparkSession, qIdCol, metric, shardProviders, _.ids,
       partialOf = (bc, maskBc, nAllowed) =>
-        topkBqFlatBc(q, embCol, bc, k, metric, shortlist, maskBc, nAllowed)
-          .drop("rank"),
+        topkBqFlatBc(q, embCol, bc, k, metric, shortlist, maskBc, nAllowed),
       k = k, waveSize = waveSize, scratch = scratch,
       meter = meter, memoryPartials = memoryPartials,
       allowedIds = allowedIds, deniedIds = deniedIds)
@@ -2076,8 +2000,7 @@ object Similarity {
       outputCol: String = "matches"): DataFrame = {
     validateIvfBqArgs(k, nProbe, shortlist)
     val spark = queries.sparkSession
-    val (mask, nAllowed) =
-      allowedMaskPresortedIds(corpus.ids, sortedAllowed(allowedIds))
+    val (mask, nAllowed) = idMask(corpus.ids, sortedIds(allowedIds), null)
     topkIvfBqBc(queries, embCol, broadcastOf(spark, corpus), k, nProbe,
       shortlist, outputCol,
       maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
@@ -2098,7 +2021,7 @@ object Similarity {
       topkIvfBqFiltered(queries, embCol, corpus, allowedIds, k, nProbe,
         shortlist, "matches"), embCol)
 
-  private def validateIvfBqArgs(k: Int, nProbe: Int, shortlist: Int): Unit = {
+  private[graft] def validateIvfBqArgs(k: Int, nProbe: Int, shortlist: Int): Unit = {
     require(k >= 0, s"k must be >= 0, got $k")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     require(shortlist >= k,
@@ -2307,16 +2230,8 @@ object Similarity {
       corpus: CorpusIndexIvfBq,
       k: Int,
       nProbe: Int,
-      shortlist: Int): DataFrame = {
-    val withMatches = topkIvfBq(queries, embCol, corpus, k, nProbe, shortlist, "matches")
-    withMatches
-      .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
-        posexplode(col("matches")).as(Seq("rank0", "m"))): _*)
-      .withColumn("rank", col("rank0") + 1)
-      .withColumn("index", col("m.index"))
-      .withColumn("score", col("m.score"))
-      .drop("rank0", "m", embCol)
-  }
+      shortlist: Int): DataFrame =
+    flattenMatches(topkIvfBq(queries, embCol, corpus, k, nProbe, shortlist, "matches"), embCol)
 
   /** One IVF+BQ index per hash-mod shard, derived ENTIRELY from
     * [[buildSq8Sharded]]'s envelopes — no second collect: bits from
@@ -2390,8 +2305,8 @@ object Similarity {
     */
   private[graft] def compactIvfBq(
       ix: CorpusIndexIvfBq, sortedDeny: Array[Long]): CorpusIndexIvfBq = {
-    val keep = (0 until ix.n).filter(g =>
-      java.util.Arrays.binarySearch(sortedDeny, ix.ids(g)) < 0).toArray
+    val (live, _) = idMask(ix.ids, null, sortedDeny)
+    val keep = (0 until ix.n).filter(live(_)).toArray
     require(keep.nonEmpty, "compaction would empty the shard")
     val n2 = keep.length
     // old row -> old CSR slot (invert cellMembers once)
@@ -2426,7 +2341,7 @@ object Similarity {
   }
 
   /** Merge per-shard [[topkIvfBq]] serves — the [[topkBqSharded]]
-    * row_number merge (cosine, so higher-is-better ordering).
+    * serve ([[serveSharded]], cosine, so higher-is-better ordering).
     */
   def topkIvfBqSharded(
       queries: DataFrame,
@@ -2435,13 +2350,9 @@ object Similarity {
       shards: Seq[CorpusIndexIvfBq],
       k: Int,
       nProbe: Int,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val partials = shards.map(sx =>
-      topkIvfBqFlat(queries.select(col(qIdCol), col(embCol)), embCol, sx,
-        k, nProbe, shortlist).drop("rank"))
-    mergeShardPartials(partials, qIdCol, k, Metric.Cosine)
-  }
+      shortlist: Int): DataFrame =
+    serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Unmasked, k, nProbe,
+      shortlist)
 
   /** [[topkIvfBqFlat]] over a caller-owned broadcast (see
     * [[topkIvfBqBc]]) — the wave server's per-shard partial.
@@ -2460,9 +2371,8 @@ object Similarity {
         maskBc, allowedCount), embCol)
 
   /** [[topkIvfBqSharded]] restricted to an allowed-id subset — the
-    * [[topkBqShardedFiltered]] composition over the routed form
-    * (per-shard masks from the SAME sorted allowed array; the merge
-    * needs no filter awareness).
+    * [[topkBqShardedFiltered]] composition over the routed form (allow
+    * mask of [[serveSharded]]).
     */
   def topkIvfBqShardedFiltered(
       queries: DataFrame,
@@ -2472,19 +2382,9 @@ object Similarity {
       allowedIds: Array[Long],
       k: Int,
       nProbe: Int,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val sorted = sortedAllowed(allowedIds)
-    val partials = shards.map { sx =>
-      val (mask, nAllowed) = allowedMaskPresortedIds(sx.ids, sorted)
-      topkIvfBqFlatBc(queries.select(col(qIdCol), col(embCol)), embCol,
-          broadcastOf(spark, sx), k, nProbe, shortlist,
-          spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
-    }
-    mergeShardPartials(partials, qIdCol, k, Metric.Cosine)
-  }
+      shortlist: Int): DataFrame =
+    serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Allow(allowedIds), k,
+      nProbe, shortlist)
 
   /** [[topkIvfBqShardedFiltered]] with the allowed set as a
     * one-column DataFrame — never collected
@@ -2499,23 +2399,13 @@ object Similarity {
       allowedIdCol: String,
       k: Int,
       nProbe: Int,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val masks = allowedMasksFromDfMulti(shards.map(_.ids), allowed, allowedIdCol)
-    val partials = shards.zip(masks).map { case (sx, (mask, nAllowed)) =>
-      topkIvfBqFlatBc(queries.select(col(qIdCol), col(embCol)), embCol,
-          broadcastOf(spark, sx), k, nProbe, shortlist,
-          spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
-    }
-    mergeShardPartials(partials, qIdCol, k, Metric.Cosine)
-  }
+      shortlist: Int): DataFrame =
+    serveIvfBqSharded(queries, qIdCol, embCol, shards,
+      ShardMasks.AllowDf(allowed, allowedIdCol), k, nProbe, shortlist)
 
   /** [[topkIvfBqSharded]] with TOMBSTONED ids masked out of the
-    * probed-cell scan — the deny form (the
-    * [[topkIvfPqShardedTombstoned]] shape; an empty tombstone array
-    * serves identically to [[topkIvfBqSharded]]).
+    * probed-cell scan — the deny mask of [[serveSharded]] (an empty
+    * tombstone array serves identically to [[topkIvfBqSharded]]).
     */
   def topkIvfBqShardedTombstoned(
       queries: DataFrame,
@@ -2525,18 +2415,21 @@ object Similarity {
       tombstoneIds: Array[Long],
       k: Int,
       nProbe: Int,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val sorted = sortedAllowed(tombstoneIds)
-    val partials = shards.map { sx =>
-      val (mask, nAllowed) = deniedMaskPresortedIds(sx.ids, sorted)
-      topkIvfBqFlatBc(queries.select(col(qIdCol), col(embCol)), embCol,
-          broadcastOf(spark, sx), k, nProbe, shortlist,
-          spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
+      shortlist: Int): DataFrame =
+    serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Deny(tombstoneIds), k,
+      nProbe, shortlist)
+
+  /** The IVF+BQ family's [[serveSharded]] kernel (output keeps only
+    * `(qIdCol, index, score, rank)`).
+    */
+  private def serveIvfBqSharded(
+      queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexIvfBq],
+      masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int): DataFrame = {
+    val q = queries.select(col(qIdCol), col(embCol))
+    serveSharded(queries, qIdCol, shards, masks, k, Metric.Cosine)(
+      _.ids, _ => validateIvfBqArgs(k, nProbe, shortlist)) { (bc, maskBc, nAllowed) =>
+      topkIvfBqFlatBc(q, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed)
     }
-    mergeShardPartials(partials, qIdCol, k, Metric.Cosine)
   }
 
   /** [[topkIvfBqSharded]] with BOUNDED broadcast memory — the routed
@@ -2558,17 +2451,11 @@ object Similarity {
       meter: ShardedServeMeter = ShardedServeStats.default,
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
-      deniedIds: Array[Long] = null): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val memParts =
-      memoryPartialsDefault(queries.sparkSession, memoryPartials, scratchDir)
-    topkIvfBqWavesCore(queries, qIdCol, embCol, shards.map(sx => () => sx),
-      k, nProbe, shortlist, waveSize,
-      if (memParts) ""
-      else resolveWaveScratch(queries.sparkSession.sparkContext.isLocal,
-        scratchDir),
-      meter, memParts, allowedIds, deniedIds)
-  }
+      deniedIds: Array[Long] = null): DataFrame =
+    serveWaves(queries, shards, scratchDir, memoryPartials) { (providers, scratch, mem) =>
+      topkIvfBqWavesCore(queries, qIdCol, embCol, providers, k, nProbe, shortlist, waveSize,
+        scratch, meter, mem, allowedIds, deniedIds)
+    }
 
   /** The IVF+BQ wave loop over shard PROVIDERS (the
     * [[topkBqWavesCore]] / [[topkIvfPqWavesCore]] shape — the
@@ -2588,15 +2475,11 @@ object Similarity {
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
       deniedIds: Array[Long] = null): DataFrame = {
-    val spark = queries.sparkSession
     val q = queries.select(col(qIdCol), col(embCol))
     topkShardedWavesCore[CorpusIndexIvfBq](
-      spark, qIdCol, Seq(col("score").desc, col("index").asc),
-      shardProviders,
-      maskOf = (sx, a, dny) => combinedMaskIds(sx.ids, a, dny),
+      queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
       partialOf = (bc, maskBc, nAllowed) =>
-        topkIvfBqFlatBc(q, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed)
-          .drop("rank"),
+        topkIvfBqFlatBc(q, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed),
       k = k, waveSize = waveSize, scratch = scratch,
       meter = meter, memoryPartials = memoryPartials,
       allowedIds = allowedIds, deniedIds = deniedIds)
@@ -3174,7 +3057,7 @@ object Similarity {
       nProbe: Int,
       shortlist: Int = 0,
       outputCol: String = "matches"): DataFrame = {
-    validateIvfPqArgs(corpus.ivf, k, nProbe, shortlist)
+    validateIvfPqArgs(corpus.ivf, k, nProbe, shortlist, corpus.rot)
     val spark = queries.sparkSession
     topkIvfPqBc(queries, embCol, broadcastOf(spark, corpus.ivf), k, nProbe,
       shortlist, outputCol,
@@ -3272,10 +3155,10 @@ object Similarity {
   }
 
   /** Top-k cosine against a sharded IVF+OPQ index — the
-    * [[topkIvfPqSharded]] merge with every shard's kernel rotating
-    * the query first (ONE rotation broadcast shared by all shard
-    * partials; scores from all shards live in the same rotated space
-    * because the build used one corpus-wide R).
+    * [[topkIvfPqSharded]] serve ([[serveSharded]]) with every shard's
+    * kernel rotating the query first (ONE rotation broadcast shared by
+    * all shard partials; scores from all shards live in the same
+    * rotated space because the build used one corpus-wide R).
     */
   def topkIvfOpqSharded(
       queries: DataFrame,
@@ -3285,15 +3168,9 @@ object Similarity {
       shards: Seq[CorpusIndexIvfPq],
       k: Int,
       nProbe: Int,
-      shortlist: Int = 0): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val rotBc = spark.sparkContext.broadcast(rot)
-    val partials = shards.map(ix =>
-      topkIvfPqFlatBc(queries, embCol, broadcastOf(spark, ix), k, nProbe,
-        shortlist, rotBc = rotBc).drop("rank"))
-    mergeShardPartials(partials, qIdCol, k, Metric.Cosine)
-  }
+      shortlist: Int = 0): DataFrame =
+    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.Unmasked, k, nProbe,
+      shortlist, rot)
 
   /** Rotate a packed corpus: out-row = R·row, norms recomputed from
     * the rotated values (equal to the originals up to FP — the
@@ -3789,7 +3666,7 @@ object Similarity {
       shortlist: Int = 0,
       outputCol: String = "matches"): DataFrame = {
     validateIvfPqArgs(corpus, k, nProbe, shortlist)
-    val (mask, nAllowed) = allowedMask(corpus, allowedIds)
+    val (mask, nAllowed) = idMask(corpus.ids, sortedIds(allowedIds), null)
     val spark = queries.sparkSession
     topkIvfPqBc(queries, embCol, broadcastOf(spark, corpus),
       k, nProbe, shortlist, outputCol,
@@ -3799,7 +3676,7 @@ object Similarity {
   /** [[topkIvfPqFiltered]] with the allowed set as a one-column
     * DataFrame — the relational form. The allowed ids NEVER collect
     * to the driver: the mask is built executor-side
-    * ([[allowedMaskFromDf]] — broadcast the sorted corpus ids,
+    * ([[allowedMasksFromDfMulti]] — broadcast the sorted corpus ids,
     * binary-search each allowed id where it lives, ship back only the
     * MATCHED row positions), so an arbitrarily large allowed set —
     * a predicate over a 100 TB metadata table — works; what returns
@@ -3817,38 +3694,25 @@ object Similarity {
       shortlist: Int,
       outputCol: String): DataFrame = {
     validateIvfPqArgs(corpus, k, nProbe, shortlist)
-    val (mask, nAllowed) = allowedMaskFromDf(corpus, allowed, allowedIdCol)
+    val (mask, nAllowed) = allowedMasksFromDfMulti(Seq(corpus.ids), allowed, allowedIdCol).head
     val spark = queries.sparkSession
     topkIvfPqBc(queries, embCol, broadcastOf(spark, corpus),
       k, nProbe, shortlist, outputCol,
       maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
   }
 
-  /** Executor-side mask build for the DataFrame-allowed forms: the
-    * corpus ids are sorted ascending (the pack contract,
-    * [[CorpusIndex]]), so broadcast them once (8 B/row — a copy of
-    * state the driver already holds) and binary-search each allowed
-    * id in place over the allowed DataFrame; only matched row
-    * POSITIONS come back through a distinct (≤ 4 B/corpus row).
-    * The allowed set itself is never counted, collected, or priced —
-    * its size does not bound this path. Unknown ids fall out as
-    * not-found; duplicates collapse in the distinct.
-    */
-  private[graft] def allowedMaskFromDf(
-      corpus: CorpusIndexIvfPq,
-      allowed: DataFrame,
-      allowedIdCol: String): (Array[Boolean], Int) =
-    allowedMaskFromDfIds(corpus.ids, allowed, allowedIdCol)
-
-  /** [[allowedMaskFromDfIds]] for MANY id arrays in ONE distributed
-    * pass — the sharded filtered serves' DataFrame overloads: the
-    * per-shard sorted ids + permutations concatenate into one
-    * broadcast (total size = the index's own id arrays, state the
-    * driver already holds), every allowed id binary-searches EVERY
-    * shard where it lives, and only matched (shard, position) pairs
-    * return through a distinct. One job for B shards instead of B
-    * jobs over the allowed set, and the allowed set itself is never
-    * collected, counted, or priced.
+  /** Executor-side mask build for the DataFrame-allowed forms, for
+    * MANY id arrays (one per shard; a flat index is the one-shard
+    * case) in ONE distributed pass: each id array is sorted with its
+    * permutation back to pack positions (an APPENDED index's pack is
+    * old-rows-then-new, two sorted runs, not one), all of them ride
+    * one broadcast (12 B/row of state the driver already holds),
+    * every allowed id binary-searches EVERY shard where it lives, and
+    * only matched (shard, position) pairs return through a distinct
+    * (≤ 4 B/corpus row). The allowed set itself is never counted,
+    * collected, or priced — its size does not bound this path.
+    * Unknown ids fall out as not-found; duplicates collapse in the
+    * distinct.
     */
   private[graft] def allowedMasksFromDfMulti(
       idsPerShard: Seq[Array[Long]],
@@ -3899,49 +3763,6 @@ object Similarity {
     } finally { bc.destroy(); () }
   }
 
-  /** [[allowedMaskFromDf]] over a bare id array. The ids are NOT
-    * assumed sorted: an APPENDED index's pack is old-rows-then-new
-    * (two sorted runs, not one), so the broadcast carries a sorted
-    * copy plus the permutation back to pack positions — still
-    * 12 B/corpus row of state the driver already holds, and the
-    * executor-side binary search is unchanged.
-    */
-  private[graft] def allowedMaskFromDfIds(
-      ids: Array[Long],
-      allowed: DataFrame,
-      allowedIdCol: String): (Array[Boolean], Int) = {
-    val spark = allowed.sparkSession
-    import spark.implicits._
-    val n = ids.length
-    val order = Array.range(0, n)
-    // sort positions by id (boxed sort on the index array — n log n
-    // driver work on state the serve already holds)
-    val orderBoxed = order.map(Integer.valueOf)
-    java.util.Arrays.sort(orderBoxed,
-      (a: Integer, b: Integer) => java.lang.Long.compare(ids(a), ids(b)))
-    val sortedIds = new Array[Long](n)
-    val perm = new Array[Int](n)
-    var i = 0
-    while (i < n) { perm(i) = orderBoxed(i); sortedIds(i) = ids(perm(i)); i += 1 }
-    val idsBc = spark.sparkContext.broadcast((sortedIds, perm))
-    try {
-      val positions = allowed
-        .select(col(allowedIdCol).cast(LongType)).na.drop().as[Long]
-        .mapPartitions { iter =>
-          val (sIds, p) = idsBc.value
-          iter.flatMap { id =>
-            val pos = java.util.Arrays.binarySearch(sIds, id)
-            if (pos >= 0) Iterator.single(p(pos)) else Iterator.empty
-          }
-        }
-        .distinct()
-        .collect()
-      val mask = new Array[Boolean](n)
-      positions.foreach(mask(_) = true)
-      (mask, positions.length)
-    } finally { idsBc.destroy(); () }
-  }
-
   /** [[topkIvfPqFiltered]] then explode+unnest — the flat
     * (rank, index, score) shape of [[topkFlat]].
     */
@@ -3974,116 +3795,156 @@ object Similarity {
       topkIvfPqFiltered(queries, embCol, corpus, allowed, allowedIdCol,
         k, nProbe, shortlist, "matches"), embCol)
 
-  /** The allowed-id mask over corpus ROW indices: sort the allowed
-    * set once, binary-search each CORPUS id against it — O(a·log a +
-    * n·log a), corpus-side-bound, so the SHARDED forms (which build
-    * one mask per shard against the SAME allowed array) sort once via
-    * [[allowedMaskPresorted]] and pay only n·log a per shard instead
-    * of re-walking a 10M-id allowed set per shard. Unknown ids are
-    * ignored; duplicates in the allowed set are harmless; the
-    * returned count is |allowed ∩ corpus| (corpus ids are unique by
-    * the build contract).
+  /** The sorted copy of an allow or deny set that [[idMask]] searches
+    * — sorted ONCE per serve, however many shards or waves mask
+    * against it.
     */
-  private[graft] def allowedMask(
-      corpus: CorpusIndexIvfPq, allowedIds: Array[Long]): (Array[Boolean], Int) =
-    allowedMaskPresorted(corpus, sortedAllowed(allowedIds))
-
-  private[graft] def sortedAllowed(allowedIds: Array[Long]): Array[Long] = {
-    val sorted = java.util.Arrays.copyOf(allowedIds, allowedIds.length)
+  private[graft] def sortedIds(ids: Array[Long]): Array[Long] = {
+    val sorted = java.util.Arrays.copyOf(ids, ids.length)
     java.util.Arrays.sort(sorted)
     sorted
   }
 
-  /** The DENY-set complement of [[allowedMaskPresorted]]: mask true
-    * everywhere EXCEPT ids in the sorted tombstone array — the serve
-    * form of a persisted delete ([[graft.sources.Sink
-    * .deleteFromIvfPqShardedIndex]]). Returned count is the LIVE
-    * population (n − tombstoned-in-this-shard), which the k clamp
-    * needs. Unknown tombstone ids are harmless (routing sends each
-    * id's tombstone to the shard that holds it — others just miss).
+  /** The one id-array mask over corpus ROW positions: row g is served
+    * iff its id is in `sortedAllow` (null: every id) and NOT in
+    * `sortedDeny` (null: none — the deny set is the persisted
+    * tombstone form). O(n·log a) per index, corpus-side bound. Unknown
+    * ids in either set are ignored and duplicates are harmless; the
+    * count is the served population (|allow ∩ ids| minus denied — the
+    * k clamp's input; ids are unique by the build contract). Both null
+    * → (null, -1): no mask at all, the unmasked kernel path.
     */
-  private[graft] def deniedMaskPresorted(
-      corpus: CorpusIndexIvfPq, sortedDeny: Array[Long]): (Array[Boolean], Int) =
-    deniedMaskPresortedIds(corpus.ids, sortedDeny)
-
-  /** [[deniedMaskPresorted]] over a bare id array — every index
-    * family (BQ, IVF+BQ, IVF+PQ) masks by row position against its
-    * own `ids`, so the mask math lives once here. Returned count is
-    * the LIVE population (the k clamp's input).
-    */
-  private[graft] def deniedMaskPresortedIds(
-      ids: Array[Long], sortedDeny: Array[Long]): (Array[Boolean], Int) = {
-    val n = ids.length
-    val mask = new Array[Boolean](n)
-    var nAllowed = 0
-    var g = 0
-    while (g < n) {
-      if (java.util.Arrays.binarySearch(sortedDeny, ids(g)) < 0) {
-        mask(g) = true; nAllowed += 1
-      }
-      g += 1
-    }
-    (mask, nAllowed)
-  }
-
-  /** allow ∧ ¬deny over a bare id array — the wave servers' combined
-    * mask (the deny set is the persisted tombstone form). Both null →
-    * (null, -1): no mask at all, the unfiltered serve.
-    */
-  private[graft] def combinedMaskIds(
+  private[graft] def idMask(
       ids: Array[Long],
       sortedAllow: Array[Long],
       sortedDeny: Array[Long]): (Array[Boolean], Int) =
     if (sortedAllow == null && sortedDeny == null) (null, -1)
-    else if (sortedDeny == null) allowedMaskPresortedIds(ids, sortedAllow)
-    else if (sortedAllow == null) deniedMaskPresortedIds(ids, sortedDeny)
     else {
-      val (am, _) = allowedMaskPresortedIds(ids, sortedAllow)
-      var cnt = 0
+      val mask = new Array[Boolean](ids.length)
+      var n = 0
       var g = 0
       while (g < ids.length) {
-        if (am(g) && java.util.Arrays.binarySearch(sortedDeny, ids(g)) >= 0)
-          am(g) = false
-        if (am(g)) cnt += 1
+        if ((sortedAllow == null || java.util.Arrays.binarySearch(sortedAllow, ids(g)) >= 0) &&
+            (sortedDeny == null || java.util.Arrays.binarySearch(sortedDeny, ids(g)) < 0)) {
+          mask(g) = true; n += 1
+        }
         g += 1
       }
-      (am, cnt)
+      (mask, n)
     }
 
-  private[graft] def allowedMaskPresorted(
-      corpus: CorpusIndexIvfPq, sorted: Array[Long]): (Array[Boolean], Int) =
-    allowedMaskPresortedIds(corpus.ids, sorted)
-
-  /** [[allowedMaskPresorted]] over a bare id array (see
-    * [[deniedMaskPresortedIds]] for why the math lives id-shaped).
+  /** Where a resident sharded serve's per-shard masks come from (see
+    * [[serveSharded]]).
     */
-  private[graft] def allowedMaskPresortedIds(
-      ids: Array[Long], sorted: Array[Long]): (Array[Boolean], Int) = {
-    val n = ids.length
-    val mask = new Array[Boolean](n)
-    var nAllowed = 0
-    var g = 0
-    while (g < n) {
-      if (java.util.Arrays.binarySearch(sorted, ids(g)) >= 0) {
-        mask(g) = true; nAllowed += 1
-      }
-      g += 1
+  private sealed trait ShardMasks
+  private object ShardMasks {
+    case object Unmasked extends ShardMasks
+    final case class Allow(ids: Array[Long]) extends ShardMasks
+    final case class AllowDf(allowed: DataFrame, idCol: String) extends ShardMasks
+    final case class Deny(ids: Array[Long]) extends ShardMasks
+  }
+
+  /** The one resident sharded serve behind every family's
+    * `topk{Bq,IvfBq,IvfPq}Sharded`, `…ShardedFiltered` (id-array and
+    * DataFrame forms), `…ShardedTombstoned` and [[topkIvfOpqSharded]].
+    * The family passes its shards' ids, its argument check and its
+    * kernel partial (a `topk*FlatBc` over the shard's broadcast).
+    *
+    *  - Validation: `check` runs on every shard BEFORE the first mask
+    *    job or broadcast, so a refused call mints nothing.
+    *  - Masks: `Unmasked` serves through the unmasked kernel path;
+    *    `Allow`/`Deny` sort the set once and build each shard's
+    *    [[idMask]] (ids living in other shards fall out as not-found,
+    *    exactly the per-shard intersection); `AllowDf` builds every
+    *    shard's mask in one distributed pass
+    *    ([[allowedMasksFromDfMulti]]) without collecting the set.
+    *  - k clamp: each shard returns min(k, served rows in the shard),
+    *    so k > |allowed ∩ corpus| (or > the LIVE population under
+    *    `Deny`) returns every served row; an empty intersection
+    *    returns no rows.
+    *  - Merge: [[mergeShardPartials]] — score desc for higher-is-better
+    *    metrics (asc otherwise), ties to the lowest index, the exact
+    *    kernel's rule; output `(query columns…, index, score, rank)`.
+    *  - Broadcast lifetime: the plan is LAZY, so the shard and mask
+    *    broadcasts it mints cannot be destroyed eagerly — they live
+    *    until Spark's ContextCleaner collects the unreferenced plan,
+    *    and every executor pins every shard at once. Long-lived
+    *    drivers and indexes past one executor's memory should serve
+    *    through the `…ShardedWaves` forms ([[topkShardedWavesCore]]),
+    *    which destroy each wave's broadcasts.
+    */
+  private def serveSharded[I <: AnyRef: scala.reflect.ClassTag](
+      queries: DataFrame,
+      qIdCol: String,
+      shards: Seq[I],
+      masks: ShardMasks,
+      k: Int,
+      metric: Metric)(
+      ids: I => Array[Long],
+      check: I => Unit)(
+      partial: (Broadcast[I], Broadcast[Array[Boolean]], Int) => DataFrame): DataFrame = {
+    require(shards.nonEmpty, "Empty shard list")
+    shards.foreach(check)
+    val spark = queries.sparkSession
+    val shardMasks = masks match {
+      case ShardMasks.Unmasked => shards.map(_ => (null: Array[Boolean], -1))
+      case ShardMasks.Allow(a) =>
+        val sorted = sortedIds(a)
+        shards.map(sx => idMask(ids(sx), sorted, null))
+      case ShardMasks.Deny(d) =>
+        val sorted = sortedIds(d)
+        shards.map(sx => idMask(ids(sx), null, sorted))
+      case ShardMasks.AllowDf(allowed, idCol) =>
+        allowedMasksFromDfMulti(shards.map(ids), allowed, idCol)
     }
-    (mask, nAllowed)
+    val partials = shards.zip(shardMasks).map { case (sx, (mask, nAllowed)) =>
+      partial(broadcastOf(spark, sx),
+        if (mask == null) null else spark.sparkContext.broadcast(mask), nAllowed)
+    }
+    mergeShardPartials(partials, qIdCol, k, metric)
+  }
+
+  /** The distributed union + row_number merge every sharded serve
+    * ends with — the resident serves, each wave's cut and the final
+    * wave merge, and [[topkBlocked]]: a partial's own `rank` is
+    * dropped, then metric-aware ordering (score desc for
+    * higher-is-better metrics, asc otherwise; ties to the lowest
+    * index, the exact kernel's rule) keeps k rows per query.
+    */
+  private def mergeShardPartials(
+      partials: Seq[DataFrame], qIdCol: String, k: Int, metric: Metric): DataFrame = {
+    val order = if (metric.higherIsBetter)
+      Seq(col("score").desc, col("index").asc)
+    else Seq(col("score").asc, col("index").asc)
+    partials.map(_.drop("rank")).reduce(_ unionAll _)
+      .withColumn("rank", row_number().over(Window.partitionBy(col(qIdCol)).orderBy(order: _*)))
+      .filter(col("rank") <= k)
   }
 
   /** The IVF+PQ argument contract, shared by the broadcast-owning
-    * wrapper (which must validate before it broadcasts) and
+    * wrappers (which must validate before they broadcast) and
     * [[topkIvfPqBc]] (whose callers hand it an already-minted
-    * broadcast).
+    * broadcast): [[validateIvfPqCall]], the SQ8 sidecar a rerank
+    * needs, and a non-null OPQ `rot`'s shape.
     */
   private def validateIvfPqArgs(
-      corpus: CorpusIndexIvfPq, k: Int, nProbe: Int, shortlist: Int): Unit = {
+      corpus: CorpusIndexIvfPq, k: Int, nProbe: Int, shortlist: Int,
+      rot: Array[Double] = null): Unit = {
+    validateIvfPqCall(k, nProbe, shortlist)
+    require(shortlist == 0 || corpus.sq8.nonEmpty,
+      "shortlist rerank needs the SQ8 sidecar — build the index with withRerank = true")
+    require(rot == null || rot.length == corpus.dim.toLong * corpus.dim,
+      s"rotation must be dim×dim = ${corpus.dim * corpus.dim} doubles, " +
+        s"got ${rot.length}")
+  }
+
+  /** The index-free half of [[validateIvfPqArgs]] — what a streaming
+    * serve can check at wiring time.
+    */
+  private[graft] def validateIvfPqCall(k: Int, nProbe: Int, shortlist: Int): Unit = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     require(shortlist == 0 || shortlist >= k,
       s"shortlist must be 0 (off) or >= k, got $shortlist (k=$k)")
-    require(shortlist == 0 || corpus.sq8.nonEmpty,
-      "shortlist rerank needs the SQ8 sidecar — build the index with withRerank = true")
   }
 
   /** [[topkIvfPq]] against a CALLER-OWNED broadcast of the index —
@@ -4105,11 +3966,7 @@ object Similarity {
       allowedCount: Int = -1,
       rotBc: Broadcast[Array[Double]] = null): DataFrame = {
     val corpus = bc.value
-    validateIvfPqArgs(corpus, k, nProbe, shortlist)
-    require(rotBc == null ||
-      rotBc.value.length == corpus.dim.toLong * corpus.dim,
-      s"rotation must be dim×dim = ${corpus.dim * corpus.dim} doubles, " +
-        s"got ${if (rotBc == null) 0 else rotBc.value.length}")
+    validateIvfPqArgs(corpus, k, nProbe, shortlist, if (rotBc == null) null else rotBc.value)
     val spark = queries.sparkSession
     val schema = queries.schema
     val embIdx = schema.fieldIndex(embCol)
@@ -4437,17 +4294,11 @@ object Similarity {
       } finally pool.shutdown()
     val partials = blocks.flatten
       .map {
-        case Right(q8) => topkSq8Flat(queries, embCol, q8, k, metric).drop("rank")
-        case Left(cx) => topkFlat(queries, embCol, cx, k, metric).drop("rank")
+        case Right(q8) => topkSq8Flat(queries, embCol, q8, k, metric)
+        case Left(cx) => topkFlat(queries, embCol, cx, k, metric)
       }
     require(partials.nonEmpty, "Empty corpus")
-    val unioned = partials.reduce(_ unionAll _)
-    val order = if (metric.higherIsBetter)
-      Seq(col("score").desc, col("index").asc) else Seq(col("score").asc, col("index").asc)
-    val w = Window.partitionBy(col(qIdCol)).orderBy(order: _*)
-    unioned
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    mergeShardPartials(partials, qIdCol, k, metric)
   }
 
   /** One SQ8 envelope per hash-mod shard of the corpus — the
@@ -4663,13 +4514,11 @@ object Similarity {
   /** Top-k cosine against a SHARDED IVF+PQ index: every shard serves
     * the query batch through [[topkIvfPqFlat]] (same ADC / optional
     * SQ8-residual-rerank contract), and the per-shard partials merge
-    * DISTRIBUTED — union + `row_number` over (qid | score desc, index
-    * asc), the one-shuffle `groupBy(qid)` merge [[topkBlocked]]
-    * already proved — instead of the round-9 smoke's driver-side
-    * collect+sort (fine for 1k probe queries, a driver bottleneck for
-    * a real query table). Scores from different shards approximate
-    * the same cosine, so they merge directly; ties pin to the lowest
-    * index, matching the exact kernel (reference topk.rs:28-31).
+    * DISTRIBUTED through [[serveSharded]] — one `row_number` shuffle
+    * instead of the round-9 smoke's driver-side collect+sort. Scores
+    * from different shards approximate the same cosine, so they merge
+    * directly; ties pin to the lowest index, matching the exact kernel
+    * (reference topk.rs:28-31). Keeps every query column.
     *
     * MEMORY NOTE: this form unions all B per-shard plans into one
     * job, so every executor holds every shard's broadcast
@@ -4686,45 +4535,20 @@ object Similarity {
       shards: Seq[CorpusIndexIvfPq],
       k: Int,
       nProbe: Int,
-      shortlist: Int = 0): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val partials = shards.map(ix =>
-      topkIvfPqFlat(queries, embCol, ix, k, nProbe, shortlist).drop("rank"))
-    val unioned = partials.reduce(_ unionAll _)
-    val w = Window.partitionBy(col(qIdCol))
-      .orderBy(col("score").desc, col("index").asc)
-    unioned
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      shortlist: Int = 0): DataFrame =
+    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.Unmasked, k, nProbe, shortlist)
 
-  /** [[topkIvfPqSharded]] restricted to an allowed-id subset — the
-    * sharded composition of [[topkIvfPqFiltered]]. Each shard builds
-    * its own mask from the SAME allowed-id array (ids routed to other
-    * shards fall out as not-found, which is exactly the per-shard
-    * intersection), so the merge needs no filter awareness at all: a
-    * shard whose allowed intersection is empty contributes zero
-    * partial rows and the row_number merge is unchanged. The global
-    * k > |allowed| clamp emerges from the merge: every shard returns
-    * min(k, allowed-in-shard) rows and the union can only contain
-    * allowed rows. Per-shard mask broadcasts share the lazy-plan
-    * lifetime caveat of [[topkIvfPqFiltered]] — long-lived drivers
-    * should prefer the wave form, which destroys per wave.
-    */
   /** [[topkIvfPqSharded]] over an index with TOMBSTONED ids — the
     * serve half of the delete lifecycle ([[graft.sources.Sink
     * .deleteFromIvfPqShardedIndex]] persists the tombstone set,
     * [[graft.sources.Source.readIvfPqShardedIndexWithTombstones]]
-    * restores it beside the shards): each shard masks its tombstoned
-    * rows out of the probed-cell scan (the ID-selector machinery with
-    * the set INVERTED — deny, not allow), so a deleted row can never
-    * be served, k clamps to the LIVE population, and the result is
-    * bit-identical to serving the COMPACTED index (same geometry,
-    * same candidates, same scores — SinkSpec pins it). An empty
-    * tombstone array serves identically to [[topkIvfPqSharded]].
-    * Per-shard mask broadcasts share the lazy-plan lifetime caveat of
-    * [[topkIvfPqFiltered]]; compaction ([[graft.sources.Sink
-    * .compactIvfPqShardedIndex]]) retires the masks entirely.
+    * restores it beside the shards): the deny mask of [[serveSharded]]
+    * keeps tombstoned rows out of the probed-cell scan, so a deleted
+    * row can never be served, k clamps to the LIVE population, and the
+    * result is bit-identical to serving the COMPACTED index (same
+    * geometry, same candidates, same scores — SinkSpec pins it).
+    * Compaction ([[graft.sources.Sink.compactIvfPqShardedIndex]])
+    * retires the masks entirely.
     */
   def topkIvfPqShardedTombstoned(
       queries: DataFrame,
@@ -4734,24 +4558,15 @@ object Similarity {
       tombstoneIds: Array[Long],
       k: Int,
       nProbe: Int,
-      shortlist: Int = 0): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val sorted = sortedAllowed(tombstoneIds)
-    val partials = shards.map { ix =>
-      val (mask, nAllowed) = deniedMaskPresorted(ix, sorted)
-      topkIvfPqFlatBc(queries, embCol, broadcastOf(spark, ix), k, nProbe,
-          shortlist, spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
-    }
-    val unioned = partials.reduce(_ unionAll _)
-    val w = Window.partitionBy(col(qIdCol))
-      .orderBy(col("score").desc, col("index").asc)
-    unioned
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      shortlist: Int = 0): DataFrame =
+    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.Deny(tombstoneIds),
+      k, nProbe, shortlist)
 
+  /** [[topkIvfPqSharded]] restricted to an allowed-id subset — the
+    * sharded composition of [[topkIvfPqFiltered]] (allow mask of
+    * [[serveSharded]]: each shard masks against the same sorted set,
+    * and the global k > |allowed| clamp emerges from the merge).
+    */
   def topkIvfPqShardedFiltered(
       queries: DataFrame,
       embCol: String,
@@ -4760,23 +4575,9 @@ object Similarity {
       allowedIds: Array[Long],
       k: Int,
       nProbe: Int,
-      shortlist: Int = 0): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val sorted = sortedAllowed(allowedIds)
-    val partials = shards.map { ix =>
-      val (mask, nAllowed) = allowedMaskPresorted(ix, sorted)
-      topkIvfPqFlatBc(queries, embCol, broadcastOf(spark, ix), k, nProbe,
-          shortlist, spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
-    }
-    val unioned = partials.reduce(_ unionAll _)
-    val w = Window.partitionBy(col(qIdCol))
-      .orderBy(col("score").desc, col("index").asc)
-    unioned
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      shortlist: Int = 0): DataFrame =
+    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.Allow(allowedIds),
+      k, nProbe, shortlist)
 
   /** [[topkIvfPqShardedFiltered]] with the allowed set as a
     * one-column DataFrame — the allowed ids NEVER collect to the
@@ -4793,16 +4594,23 @@ object Similarity {
       allowedIdCol: String,
       k: Int,
       nProbe: Int,
-      shortlist: Int): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val masks = allowedMasksFromDfMulti(shards.map(_.ids), allowed, allowedIdCol)
-    val partials = shards.zip(masks).map { case (ix, (mask, nAllowed)) =>
-      topkIvfPqFlatBc(queries, embCol, broadcastOf(spark, ix), k, nProbe,
-          shortlist, spark.sparkContext.broadcast(mask), nAllowed)
-        .drop("rank")
+      shortlist: Int): DataFrame =
+    serveIvfPqSharded(queries, embCol, qIdCol, shards,
+      ShardMasks.AllowDf(allowed, allowedIdCol), k, nProbe, shortlist)
+
+  /** The IVF+PQ/OPQ family's [[serveSharded]] kernel: every query
+    * column is kept, and a non-null `rot` (IVF+OPQ) is checked against
+    * each shard, then broadcast once and shared by every partial.
+    */
+  private def serveIvfPqSharded(
+      queries: DataFrame, embCol: String, qIdCol: String, shards: Seq[CorpusIndexIvfPq],
+      masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int,
+      rot: Array[Double] = null): DataFrame = {
+    lazy val rotBc = if (rot == null) null else queries.sparkSession.sparkContext.broadcast(rot)
+    serveSharded(queries, qIdCol, shards, masks, k, Metric.Cosine)(
+      _.ids, validateIvfPqArgs(_, k, nProbe, shortlist, rot)) { (bc, maskBc, nAllowed) =>
+      topkIvfPqFlatBc(queries, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed, rotBc)
     }
-    mergeShardPartials(partials, qIdCol, k, Metric.Cosine)
   }
 
   /** Live/peak shard-broadcast accounting for
@@ -4911,23 +4719,27 @@ object Similarity {
       meter: ShardedServeMeter = ShardedServeStats.default,
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
-      deniedIds: Array[Long] = null): DataFrame = {
+      deniedIds: Array[Long] = null): DataFrame =
+    serveWaves(queries, shards, scratchDir, memoryPartials) { (providers, scratch, mem) =>
+      topkIvfPqWavesCore(queries, embCol, qIdCol, providers, k, nProbe, shortlist,
+        waveSize, scratch, meter, mem, allowedIds, deniedIds)
+    }
+
+  /** The public wave serves' prelude: refuse an empty shard list, pick
+    * the partial persistence ([[memoryPartialsDefault]]) and, for
+    * parquet partials, the scratch dir ([[resolveWaveScratch]]), then
+    * run the family's wave core over the resident shards.
+    */
+  private def serveWaves[I](
+      queries: DataFrame, shards: Seq[I], scratchDir: String, memoryPartials: Boolean)(
+      core: (Seq[() => I], String, Boolean) => DataFrame): DataFrame = {
     require(shards.nonEmpty, "Empty shard list")
-    val memParts =
-      memoryPartialsDefault(queries.sparkSession, memoryPartials, scratchDir)
-    topkIvfPqWavesCore(queries, embCol, qIdCol, shards.map(ix => () => ix),
-      k, nProbe, shortlist, waveSize,
-      if (memParts) ""
-      else resolveWaveScratch(queries.sparkSession.sparkContext.isLocal, scratchDir),
-      meter, memParts, allowedIds, deniedIds)
+    val spark = queries.sparkSession
+    val mem = memoryPartialsDefault(spark, memoryPartials, scratchDir)
+    core(shards.map(sx => () => sx),
+      if (mem) "" else resolveWaveScratch(spark.sparkContext.isLocal, scratchDir), mem)
   }
 
-  /** Scratch-dir policy for the wave server (see
-    * [[topkIvfPqShardedWaves]]'s scaladoc): an explicit path is taken
-    * as-is; the generated-temp default is refused off local mode
-    * because a driver-local path is not a shared filesystem there.
-    * Factored pure so the refusal is unit-testable without a cluster.
-    */
   /** Default partial-persistence policy for the wave serves: an
     * explicit `memoryPartials = true` always wins; otherwise a
     * DEFAULT-scratch caller in LOCAL mode gets the in-memory partial
@@ -4945,11 +4757,17 @@ object Similarity {
       scratchDir: String): Boolean =
     memoryPartials || (scratchDir.isEmpty && spark.sparkContext.isLocal)
 
+  /** Scratch-dir policy for the wave server (see
+    * [[topkIvfPqShardedWaves]]'s scaladoc): an explicit path is taken
+    * as-is; the generated-temp default is refused off local mode
+    * because a driver-local path is not a shared filesystem there.
+    * Factored pure so the refusal is unit-testable without a cluster.
+    */
   private[graft] def resolveWaveScratch(isLocal: Boolean, scratchDir: String): String =
     if (scratchDir.nonEmpty) scratchDir
     else {
       require(isLocal,
-        "topkIvfPqShardedWaves needs an explicit shared-filesystem scratchDir " +
+        "A sharded wave serve needs an explicit shared-filesystem scratchDir " +
           "when the master is not local: the default driver-local temp dir is " +
           "not visible to remote executors, so wave partials would be lost")
       WaveScratch.next()
@@ -5006,12 +4824,10 @@ object Similarity {
       deniedIds: Array[Long] = null,
       rotBc: Broadcast[Array[Double]] = null): DataFrame =
     topkShardedWavesCore[CorpusIndexIvfPq](
-      queries.sparkSession, qIdCol,
-      Seq(col("score").desc, col("index").asc), shardProviders,
-      maskOf = (ix, a, dny) => combinedMaskIds(ix.ids, a, dny),
+      queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
       partialOf = (bc, maskBc, nAllowed) =>
         topkIvfPqFlatBc(queries, embCol, bc, k, nProbe, shortlist,
-          maskBc, nAllowed, rotBc).drop("rank"),
+          maskBc, nAllowed, rotBc),
       k = k, waveSize = waveSize, scratch = scratch, meter = meter,
       memoryPartials = memoryPartials,
       allowedIds = allowedIds, deniedIds = deniedIds)
@@ -5036,39 +4852,34 @@ object Similarity {
       meter: ShardedServeMeter = ShardedServeStats.default,
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
-      deniedIds: Array[Long] = null): DataFrame = {
-    require(shards.nonEmpty, "Empty shard list")
-    val spark = queries.sparkSession
-    val memParts = memoryPartialsDefault(spark, memoryPartials, scratchDir)
-    val rotBc = spark.sparkContext.broadcast(rot)
-    try topkIvfPqWavesCore(queries, embCol, qIdCol,
-      shards.map(ix => () => ix), k, nProbe, shortlist, waveSize,
-      if (memParts) ""
-      else resolveWaveScratch(spark.sparkContext.isLocal, scratchDir),
-      meter, memParts, allowedIds, deniedIds, rotBc)
-    finally rotBc.destroy()
-  }
+      deniedIds: Array[Long] = null): DataFrame =
+    serveWaves(queries, shards, scratchDir, memoryPartials) { (providers, scratch, mem) =>
+      val rotBc = queries.sparkSession.sparkContext.broadcast(rot)
+      try topkIvfPqWavesCore(queries, embCol, qIdCol, providers, k, nProbe, shortlist,
+        waveSize, scratch, meter, mem, allowedIds, deniedIds, rotBc)
+      finally rotBc.destroy()
+    }
 
   /** The index-family-agnostic wave loop — ONE machinery serves
     * IVF+PQ, BQ, and IVF+BQ shards ([[topkIvfPqShardedWaves]] /
     * [[topkBqShardedWaves]] / [[topkIvfBqShardedWaves]]): per wave,
     * invoke at most `waveSize` shard providers, broadcast each shard
-    * (+ its optional allow∧¬deny mask, built only while the shard is
-    * live), reduce the wave's union to a k-row-per-query partial
-    * (the only state that outlives the wave), persist it (parquet
-    * scratch or eager localCheckpoint), then DESTROY the wave's
-    * broadcasts. Peak per-executor broadcast memory is one wave's
-    * shards, metered; the final broadcast-free merge re-ranks the
-    * partials. Per-wave top-k cuts are lossless for a global top-k
-    * under any total `order` whose ties pin deterministically —
-    * callers pass their metric's ordering.
+    * (+ its optional allow∧¬deny [[idMask]], built only while the
+    * shard is live), cut the wave's partials to k rows per query with
+    * [[mergeShardPartials]] (the only state that outlives the wave),
+    * persist that cut (parquet scratch or eager localCheckpoint), then
+    * DESTROY the wave's broadcasts. Peak per-executor broadcast memory
+    * is one wave's shards, metered; the final broadcast-free
+    * [[mergeShardPartials]] re-ranks the wave cuts. Per-wave top-k
+    * cuts are lossless for a global top-k because the merge order is
+    * total (ties pin to the lowest index).
     */
   private[graft] def topkShardedWavesCore[I <: AnyRef](
       spark: org.apache.spark.sql.SparkSession,
       qIdCol: String,
-      order: Seq[Column],
+      metric: Metric,
       shardProviders: Seq[() => I],
-      maskOf: (I, Array[Long], Array[Long]) => (Array[Boolean], Int),
+      ids: I => Array[Long],
       partialOf: (Broadcast[I], Broadcast[Array[Boolean]], Int) => DataFrame,
       k: Int,
       waveSize: Int,
@@ -5080,10 +4891,9 @@ object Similarity {
       implicit ct: scala.reflect.ClassTag[I]): DataFrame = {
     require(shardProviders.nonEmpty, "Empty shard list")
     require(waveSize >= 1, s"waveSize must be >= 1, got $waveSize")
-    val w = Window.partitionBy(col(qIdCol)).orderBy(order: _*)
     val waves = shardProviders.grouped(waveSize).toIndexedSeq
-    val sorted = if (allowedIds == null) null else sortedAllowed(allowedIds)
-    val sortedDeny = if (deniedIds == null) null else sortedAllowed(deniedIds)
+    val sorted = if (allowedIds == null) null else sortedIds(allowedIds)
+    val sortedDeny = if (deniedIds == null) null else sortedIds(deniedIds)
     val memParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     waves.zipWithIndex.foreach { case (wave, wi) =>
       // a wave's shards are ALL live at once by definition (the peak
@@ -5094,33 +4904,22 @@ object Similarity {
         val ix = load()
         ix -> org.apache.spark.util.SizeEstimator.estimate(ix)
       }
-      // per-shard ID-selector masks ride each wave: built only while
-      // the shard is live (corpus-side cost — the allowed set sorts
-      // ONCE per serve), broadcast with the shard, destroyed with it
-      // — the mask never outlives its wave, so the one-wave peak
-      // bound carries over to filtered/tombstoned serving
+      // per-shard masks ride each wave: built only while the shard is
+      // live (the allow/deny sets sort ONCE per serve), broadcast with
+      // the shard, destroyed with it — the mask never outlives its
+      // wave, so the one-wave peak bound carries over to filtered and
+      // tombstoned serving
       val bcs = sized.map { case (ix, bytes) =>
-        val (maskBc, nAllowed) =
-          if (sorted == null && sortedDeny == null)
-            (null: Broadcast[Array[Boolean]], -1)
-          else {
-            // allow ∧ ¬deny: the deny set is the persisted tombstone
-            // form ([[graft.sources.Sink.deleteFromIvfPqShardedIndex]])
-            val (mask, n) = maskOf(ix, sorted, sortedDeny)
-            (spark.sparkContext.broadcast(mask), n)
-          }
+        val (mask, nAllowed) = idMask(ids(ix), sorted, sortedDeny)
+        val maskBc = if (mask == null) null else spark.sparkContext.broadcast(mask)
         val bc = broadcastOf(spark, ix)
         meter.add(bytes)
         (bc, bytes, maskBc, nAllowed)
       }
       try {
-        val partial = bcs.map { case (bc, _, maskBc, nAllowed) =>
-            partialOf(bc, maskBc, nAllowed)
-          }
-          .reduce(_ unionAll _)
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .drop("rank")
+        val partial = mergeShardPartials(
+          bcs.map { case (bc, _, maskBc, nAllowed) => partialOf(bc, maskBc, nAllowed) },
+          qIdCol, k, metric).drop("rank")
         if (memoryPartials)
           // eager localCheckpoint: materialized in the block manager
           // (MEMORY_AND_DISK) while this wave's broadcasts are still
@@ -5140,10 +4939,7 @@ object Similarity {
     val parts =
       if (memoryPartials) memParts.toSeq
       else waves.indices.map(wi => spark.read.parquet(s"$scratch/wave_$wi"))
-    parts
-      .reduce(_ unionAll _)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    mergeShardPartials(parts, qIdCol, k, metric)
   }
 
   // ===== SQ8 point-lookup scoring (candidate rerank beyond the f64

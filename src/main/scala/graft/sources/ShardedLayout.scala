@@ -43,7 +43,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *  - compact drops tombstoned rows, shrinks `n`/`total_n`, writes no
   *    `tombstones/` and carries `rot/` forward.
   */
-private[sources] object ShardedLayout {
+private[graft] object ShardedLayout {
 
   val ShardKey = "xxhash64_pmod"
 

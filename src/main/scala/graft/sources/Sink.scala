@@ -1614,8 +1614,7 @@ object Sink {
       s"no tombstones at $indexPath — nothing to compact")
     val (shards, ts) = graft.sources.Source
       .readIvfBqShardedIndexWithTombstones(spark, indexPath)
-    val sorted = java.util.Arrays.copyOf(ts, ts.length)
-    java.util.Arrays.sort(sorted)
+    val sorted = graft.operators.Similarity.sortedIds(ts)
     val manifest = ShardedLayout.readManifest(spark, indexPath)
     val compacted = shards.map(sx =>
       graft.operators.Similarity.compactIvfBq(sx, sorted))

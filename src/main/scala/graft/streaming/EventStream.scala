@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.operators.Similarity
+import graft.sources.{ShardedLayout, Source}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY §2.2 #20): the event stream
@@ -447,8 +450,13 @@ object EventStream {
     * (allow ∧ ¬deleted) — this serve reads shard dirs directly, so
     * it must enforce what the plain reader's refusal enforces.
     *
-    * Returns the configured `DataStreamWriter` — the caller attaches
-    * trigger/checkpoint and calls `start()`.
+    * An index with `rot/` (IVF+OPQ) rotates every query with its
+    * persisted rotation. The wave, residency and kernel arguments
+    * (`nProbe`, `shortlist`) are checked at wiring time, so a refused
+    * call never starts a stream. Returns the configured
+    * `DataStreamWriter` — the caller attaches trigger/checkpoint and
+    * calls `start()`. The body ([[serveShardedWaves]]) is shared with
+    * the BQ and IVF+BQ streaming serves.
     */
   def topkServeIvfPqShardedWaves(
       queries: DataFrame,
@@ -462,16 +470,116 @@ object EventStream {
       residentShards: Int = -1,
       scratchDir: String = "",
       residentBudgetBytes: Long = 0L,
-      meter: graft.operators.Similarity.ShardedServeMeter =
-        graft.operators.Similarity.ShardedServeStats.default,
+      meter: Similarity.ShardedServeMeter = Similarity.ShardedServeStats.default,
       allowedIds: Array[Long] = null)(
-      onBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Similarity
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    serveShardedWaves(queries, indexPath, waveSize, residentShards, scratchDir,
+      residentBudgetBytes, meter, Similarity.validateIvfPqCall(k, nProbe, shortlist))(
+      Source.readIvfPqIndex) { w =>
+      Similarity.topkIvfPqWavesCore(w.batch, embCol, qIdCol, w.shards, k, nProbe, shortlist,
+        waveSize, w.scratch, meter, w.memoryPartials, allowedIds, w.tombstones, w.rotBc)
+    }(onBatch)
+
+  /** STREAMING bounded serve over a PERSISTED sharded BQ index — the
+    * [[topkServeIvfPqShardedWaves]] serve ([[serveShardedWaves]]) for
+    * the bit rung: shards page off
+    * [[graft.sources.Sink.writeBqShardedIndex]]'s layout in waves per
+    * micro-batch (peak per-executor broadcast memory = one wave's bits
+    * + envelopes, metered), with the same residency policy, tombstone
+    * deny mask and `allowedIds` filter (allow ∧ ¬deny).
+    */
+  def topkServeBqShardedWaves(
+      queries: DataFrame,
+      qIdCol: String,
+      embCol: String,
+      indexPath: String,
+      k: Int,
+      metric: graft.operators.Metric,
+      shortlist: Int,
+      waveSize: Int = 2,
+      residentShards: Int = -1,
+      scratchDir: String = "",
+      residentBudgetBytes: Long = 0L,
+      meter: Similarity.ShardedServeMeter = Similarity.ShardedServeStats.default,
+      allowedIds: Array[Long] = null)(
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    serveShardedWaves(queries, indexPath, waveSize, residentShards, scratchDir,
+      residentBudgetBytes, meter, Similarity.validateBqArgs(k, shortlist))(
+      Source.readBqIndex) { w =>
+      Similarity.topkBqWavesCore(w.batch, qIdCol, embCol, w.shards, k, metric, shortlist,
+        waveSize, w.scratch, meter, w.memoryPartials, allowedIds, w.tombstones)
+    }(onBatch)
+
+  /** STREAMING bounded serve over a PERSISTED sharded IVF+BQ index —
+    * the [[topkServeBqShardedWaves]] serve ([[serveShardedWaves]]) for
+    * the ROUTED bit rung (the 50–100M-rows-per-shard form the
+    * round-15 crossover probe measured).
+    */
+  def topkServeIvfBqShardedWaves(
+      queries: DataFrame,
+      qIdCol: String,
+      embCol: String,
+      indexPath: String,
+      k: Int,
+      nProbe: Int,
+      shortlist: Int,
+      waveSize: Int = 2,
+      residentShards: Int = -1,
+      scratchDir: String = "",
+      residentBudgetBytes: Long = 0L,
+      meter: Similarity.ShardedServeMeter = Similarity.ShardedServeStats.default,
+      allowedIds: Array[Long] = null)(
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    serveShardedWaves(queries, indexPath, waveSize, residentShards, scratchDir,
+      residentBudgetBytes, meter, Similarity.validateIvfBqArgs(k, nProbe, shortlist))(
+      Source.readIvfBqIndex) { w =>
+      Similarity.topkIvfBqWavesCore(w.batch, qIdCol, embCol, w.shards, k, nProbe, shortlist,
+        waveSize, w.scratch, meter, w.memoryPartials, allowedIds, w.tombstones)
+    }(onBatch)
+
+  /** One micro-batch's inputs to a family's wave core: the persisted
+    * batch, the shard providers, its scratch dir (empty with
+    * in-memory partials), the tombstone deny set (null: none) and the
+    * OPQ rotation broadcast (null: no `rot/`).
+    */
+  private final case class WaveBatch[I](
+      batch: DataFrame,
+      shards: Seq[() => I],
+      scratch: String,
+      memoryPartials: Boolean,
+      tombstones: Array[Long],
+      rotBc: Broadcast[Array[Double]])
+
+  /** The one streaming sharded wave serve behind
+    * `topkServe{IvfPq,Bq,IvfBq}ShardedWaves` (contract on
+    * [[topkServeIvfPqShardedWaves]]). At wiring time it checks the
+    * wave arguments and the family's index-free kernel arguments
+    * (`check`), so a bad `shortlist`/`nProbe` refuses before the
+    * stream starts; picks the partial persistence and a per-serve
+    * scratch namespace; reads the tombstones, the OPQ rotation and the
+    * manifest ([[graft.sources.ShardedLayout]]); and walks the
+    * residency policy, reading shards through the family's `read`.
+    * Per micro-batch it persists the batch, runs the family's wave
+    * core `serve`, hands the result to `onBatch`, then unpersists and
+    * deletes the batch scratch.
+    */
+  private def serveShardedWaves[I <: AnyRef](
+      queries: DataFrame,
+      indexPath: String,
+      waveSize: Int,
+      residentShards: Int,
+      scratchDir: String,
+      residentBudgetBytes: Long,
+      meter: Similarity.ShardedServeMeter,
+      check: => Unit)(
+      read: (SparkSession, String) => I)(
+      serve: WaveBatch[I] => DataFrame)(
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val spark = queries.sparkSession
     require(waveSize >= 1, s"waveSize must be >= 1, got $waveSize")
     require(residentShards >= -1,
       s"residentShards must be >= 0, or -1 for budget-priced auto, got $residentShards")
+    check
     // default-scratch local-mode serves keep per-wave partials as
     // eager localCheckpoints instead of parquet scratch (the
     // [[graft.operators.Similarity.memoryPartialsDefault]] policy:
@@ -488,8 +596,7 @@ object EventStream {
     // rows, and this serve reads shard dirs directly (it bypasses the
     // plain reader's tombstone refusal)
     val tombstones = {
-      val ts = graft.sources.Source
-        .readIvfPqShardedIndexTombstones(spark, indexPath)
+      val ts = ShardedLayout.readTombstones(spark, indexPath)
       if (ts.isEmpty) null else ts
     }
     // an OPQ rotation is auto-applied the same way (this serve also
@@ -497,16 +604,12 @@ object EventStream {
     // codebooks against unrotated queries would be silently wrong):
     // one long-lived broadcast for the stream's lifetime
     val rotBc =
-      if (!graft.sources.Source.hasOpqRotation(spark, indexPath)) null
-      else spark.sparkContext.broadcast(
-        spark.read.parquet(s"$indexPath/rot").select("rot").head()
-          .getSeq[Double](0).toArray)
+      if (!ShardedLayout.exists(spark, s"$indexPath/rot")) null
+      else spark.sparkContext.broadcast(ShardedLayout.readRotation(spark, indexPath)._2)
     // manifest read once at wiring time; shards page per wave
-    val manifest = spark.read.parquet(s"$indexPath/manifest").head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    require(numShards >= 1, s"corrupt sharded index manifest: num_shards=$numShards")
-    def shardDir(i: Int) = f"$indexPath/shard_$i%04d"
-    val pinned = new java.util.concurrent.ConcurrentHashMap[Int, Similarity.CorpusIndexIvfPq]
+    val numShards = ShardedLayout.readManifest(spark, indexPath).numShards
+    def load(i: Int): I = read(spark, ShardedLayout.shardDir(indexPath, i))
+    val pinned = new java.util.concurrent.ConcurrentHashMap[Int, I]
     // Residency decision at wiring time. Auto mode loads shards IN
     // ORDER, sizing each, and pins while the running total fits the
     // budget — one shard is read at a time, so peak driver memory
@@ -518,7 +621,7 @@ object EventStream {
       if (residentShards >= 0) {
         val target = math.min(residentShards, numShards)
         while (n < target) {
-          val ix = graft.sources.Source.readIvfPqIndex(spark, shardDir(n))
+          val ix = load(n)
           pinned.put(n, ix)
           used += org.apache.spark.util.SizeEstimator.estimate(ix)
           n += 1
@@ -529,7 +632,7 @@ object EventStream {
           else math.max(64L << 20, Runtime.getRuntime.maxMemory() / 8)
         var stop = false
         while (n < numShards && !stop) {
-          val ix = graft.sources.Source.readIvfPqIndex(spark, shardDir(n))
+          val ix = load(n)
           val bytes = org.apache.spark.util.SizeEstimator.estimate(ix)
           if (used + bytes <= budget) { pinned.put(n, ix); used += bytes; n += 1 }
           else stop = true
@@ -540,12 +643,10 @@ object EventStream {
       meter.setPinned(n, used)
       n
     }
-    def shardAt(i: Int): Similarity.CorpusIndexIvfPq =
-      if (i < resident)
-        pinned.computeIfAbsent(i, _ => graft.sources.Source.readIvfPqIndex(spark, shardDir(i)))
-      else graft.sources.Source.readIvfPqIndex(spark, shardDir(i))
+    def shardAt(i: Int): I =
+      if (i < resident) pinned.computeIfAbsent(i, _ => load(i)) else load(i)
     val providers = (0 until numShards).map(i => () => shardAt(i))
-    queries.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    queries.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       val batchScratch = if (memParts) "" else s"$scratchRoot/batch_$batchId"
       // every wave is its own action over the micro-batch plan;
       // without a persist each wave would RE-SCAN the source offsets
@@ -553,222 +654,8 @@ object EventStream {
       val pinnedBatch = batch.toDF()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val merged = Similarity.topkIvfPqWavesCore(
-          pinnedBatch, embCol, qIdCol, providers,
-          k, nProbe, shortlist, waveSize, batchScratch, meter,
-          memoryPartials = memParts,
-          allowedIds = allowedIds, deniedIds = tombstones, rotBc = rotBc)
-        onBatch(merged, batchId)
-      } finally {
-        pinnedBatch.unpersist()
-        if (!memParts) {
-          val p = new org.apache.hadoop.fs.Path(batchScratch)
-          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-        }
-        ()
-      }
-    }
-  }
-
-  /** STREAMING bounded serve over a PERSISTED sharded BQ index — the
-    * [[topkServeIvfPqShardedWaves]] shape for the bit rung: shards
-    * page off [[graft.sources.Sink.writeBqShardedIndex]]'s layout in
-    * waves per micro-batch (peak per-executor broadcast memory = one
-    * wave's bits + envelopes, metered), a driver-side residency
-    * policy pins a prefix of shards across batches (explicit count or
-    * budget-priced auto), tombstones are read ONCE at wiring time and
-    * applied as an always-on deny mask (this serve reads shard dirs
-    * directly, bypassing the plain reader's tombstone refusal — the
-    * auto-apply keeps a takedown-carrying index from ever serving
-    * deleted rows), and `allowedIds` composes the filtered serve per
-    * wave (allow ∧ ¬deny).
-    */
-  def topkServeBqShardedWaves(
-      queries: DataFrame,
-      qIdCol: String,
-      embCol: String,
-      indexPath: String,
-      k: Int,
-      metric: graft.operators.Metric,
-      shortlist: Int,
-      waveSize: Int = 2,
-      residentShards: Int = -1,
-      scratchDir: String = "",
-      residentBudgetBytes: Long = 0L,
-      meter: graft.operators.Similarity.ShardedServeMeter =
-        graft.operators.Similarity.ShardedServeStats.default,
-      allowedIds: Array[Long] = null)(
-      onBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Similarity
-    val spark = queries.sparkSession
-    require(waveSize >= 1, s"waveSize must be >= 1, got $waveSize")
-    require(residentShards >= -1,
-      s"residentShards must be >= 0, or -1 for budget-priced auto, got $residentShards")
-    // default-scratch local-mode serves keep per-wave partials in
-    // memory ([[graft.operators.Similarity.memoryPartialsDefault]])
-    val memParts = Similarity.memoryPartialsDefault(spark,
-      memoryPartials = false, scratchDir = scratchDir)
-    val scratchRoot = if (memParts) "" else
-      Similarity.resolveWaveScratch(spark.sparkContext.isLocal, scratchDir) +
-        s"/serve_${java.util.UUID.randomUUID().toString.take(8)}"
-    val tombstones = {
-      val ts = graft.sources.Source
-        .readBqShardedIndexTombstones(spark, indexPath)
-      if (ts.isEmpty) null else ts
-    }
-    val manifest = spark.read.parquet(s"$indexPath/manifest").head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    require(numShards >= 1, s"corrupt sharded index manifest: num_shards=$numShards")
-    def shardDir(i: Int) = f"$indexPath/shard_$i%04d"
-    val pinned = new java.util.concurrent.ConcurrentHashMap[Int, Similarity.CorpusIndexBq]
-    // residency decision at wiring time — the IVF+PQ serve's policy
-    // verbatim (one shard read at a time during the walk)
-    val resident: Int = {
-      var used = 0L
-      var n = 0
-      if (residentShards >= 0) {
-        val target = math.min(residentShards, numShards)
-        while (n < target) {
-          val ix = graft.sources.Source.readBqIndex(spark, shardDir(n))
-          pinned.put(n, ix)
-          used += org.apache.spark.util.SizeEstimator.estimate(ix)
-          n += 1
-        }
-      } else {
-        val budget =
-          if (residentBudgetBytes > 0L) residentBudgetBytes
-          else math.max(64L << 20, Runtime.getRuntime.maxMemory() / 8)
-        var stop = false
-        while (n < numShards && !stop) {
-          val ix = graft.sources.Source.readBqIndex(spark, shardDir(n))
-          val bytes = org.apache.spark.util.SizeEstimator.estimate(ix)
-          if (used + bytes <= budget) { pinned.put(n, ix); used += bytes; n += 1 }
-          else stop = true
-        }
-        log.info(s"auto shard residency: pinned $n/$numShards shards " +
-          s"($used bytes within budget $budget)")
-      }
-      meter.setPinned(n, used)
-      n
-    }
-    def shardAt(i: Int): Similarity.CorpusIndexBq =
-      if (i < resident)
-        pinned.computeIfAbsent(i, _ => graft.sources.Source.readBqIndex(spark, shardDir(i)))
-      else graft.sources.Source.readBqIndex(spark, shardDir(i))
-    val providers = (0 until numShards).map(i => () => shardAt(i))
-    queries.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val batchScratch = if (memParts) "" else s"$scratchRoot/batch_$batchId"
-      val pinnedBatch = batch.toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val merged = Similarity.topkBqWavesCore(
-          pinnedBatch, qIdCol, embCol, providers,
-          k, metric, shortlist, waveSize, batchScratch, meter,
-          memoryPartials = memParts,
-          allowedIds = allowedIds, deniedIds = tombstones)
-        onBatch(merged, batchId)
-      } finally {
-        pinnedBatch.unpersist()
-        if (!memParts) {
-          val p = new org.apache.hadoop.fs.Path(batchScratch)
-          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-        }
-        ()
-      }
-    }
-  }
-
-  /** STREAMING bounded serve over a PERSISTED sharded IVF+BQ index —
-    * the [[topkServeBqShardedWaves]] shape for the ROUTED bit rung
-    * (the 50–100M-rows-per-shard form the round-15 crossover probe
-    * measured): wave paging, residency policy, per-invocation
-    * metering, `allowedIds` filters, and tombstones auto-applied
-    * from wiring time.
-    */
-  def topkServeIvfBqShardedWaves(
-      queries: DataFrame,
-      qIdCol: String,
-      embCol: String,
-      indexPath: String,
-      k: Int,
-      nProbe: Int,
-      shortlist: Int,
-      waveSize: Int = 2,
-      residentShards: Int = -1,
-      scratchDir: String = "",
-      residentBudgetBytes: Long = 0L,
-      meter: graft.operators.Similarity.ShardedServeMeter =
-        graft.operators.Similarity.ShardedServeStats.default,
-      allowedIds: Array[Long] = null)(
-      onBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Similarity
-    val spark = queries.sparkSession
-    require(waveSize >= 1, s"waveSize must be >= 1, got $waveSize")
-    require(residentShards >= -1,
-      s"residentShards must be >= 0, or -1 for budget-priced auto, got $residentShards")
-    // default-scratch local-mode serves keep per-wave partials in
-    // memory ([[graft.operators.Similarity.memoryPartialsDefault]])
-    val memParts = Similarity.memoryPartialsDefault(spark,
-      memoryPartials = false, scratchDir = scratchDir)
-    val scratchRoot = if (memParts) "" else
-      Similarity.resolveWaveScratch(spark.sparkContext.isLocal, scratchDir) +
-        s"/serve_${java.util.UUID.randomUUID().toString.take(8)}"
-    val tombstones = {
-      val ts = graft.sources.Source
-        .readIvfBqShardedIndexTombstones(spark, indexPath)
-      if (ts.isEmpty) null else ts
-    }
-    val manifest = spark.read.parquet(s"$indexPath/manifest").head()
-    val numShards = manifest.getInt(manifest.fieldIndex("num_shards"))
-    require(numShards >= 1, s"corrupt sharded index manifest: num_shards=$numShards")
-    def shardDir(i: Int) = f"$indexPath/shard_$i%04d"
-    val pinned = new java.util.concurrent.ConcurrentHashMap[Int, Similarity.CorpusIndexIvfBq]
-    val resident: Int = {
-      var used = 0L
-      var n = 0
-      if (residentShards >= 0) {
-        val target = math.min(residentShards, numShards)
-        while (n < target) {
-          val ix = graft.sources.Source.readIvfBqIndex(spark, shardDir(n))
-          pinned.put(n, ix)
-          used += org.apache.spark.util.SizeEstimator.estimate(ix)
-          n += 1
-        }
-      } else {
-        val budget =
-          if (residentBudgetBytes > 0L) residentBudgetBytes
-          else math.max(64L << 20, Runtime.getRuntime.maxMemory() / 8)
-        var stop = false
-        while (n < numShards && !stop) {
-          val ix = graft.sources.Source.readIvfBqIndex(spark, shardDir(n))
-          val bytes = org.apache.spark.util.SizeEstimator.estimate(ix)
-          if (used + bytes <= budget) { pinned.put(n, ix); used += bytes; n += 1 }
-          else stop = true
-        }
-        log.info(s"auto shard residency: pinned $n/$numShards shards " +
-          s"($used bytes within budget $budget)")
-      }
-      meter.setPinned(n, used)
-      n
-    }
-    def shardAt(i: Int): Similarity.CorpusIndexIvfBq =
-      if (i < resident)
-        pinned.computeIfAbsent(i, _ => graft.sources.Source.readIvfBqIndex(spark, shardDir(i)))
-      else graft.sources.Source.readIvfBqIndex(spark, shardDir(i))
-    val providers = (0 until numShards).map(i => () => shardAt(i))
-    queries.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val batchScratch = if (memParts) "" else s"$scratchRoot/batch_$batchId"
-      val pinnedBatch = batch.toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val merged = Similarity.topkIvfBqWavesCore(
-          pinnedBatch, qIdCol, embCol, providers,
-          k, nProbe, shortlist, waveSize, batchScratch, meter,
-          memoryPartials = memParts,
-          allowedIds = allowedIds, deniedIds = tombstones)
-        onBatch(merged, batchId)
+        onBatch(serve(WaveBatch(pinnedBatch, providers, batchScratch, memParts, tombstones,
+          rotBc)), batchId)
       } finally {
         pinnedBatch.unpersist()
         if (!memParts) {
