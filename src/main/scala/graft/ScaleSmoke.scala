@@ -991,9 +991,8 @@ object ScaleSmoke {
       graft.sources.Sink.compactBqShardedIndex(spark, s"$root/del", s"$root/comp")
       println(f"sharded compact: COMPACT (drop 10%%, renumber, republish): " +
         f"${(System.nanoTime() - tc) / 1e9}%.2f s")
-      val live = spark.read.parquet(s"$root/comp/manifest").head()
       println(s"sharded compact: live total_n=" +
-        s"${live.get(live.fieldIndex("total_n"))}")
+        s"${graft.sources.ShardedLayout.readManifest(spark, s"$root/comp").totalN}")
       stagesRan += 1
       ()
     }

@@ -1270,11 +1270,10 @@ object SparkEntry {
       val loaded = graft.sources.Source.readBqShardedIndex(s, ixDir)
       val built = Similarity.buildBqShardedWithLayout(q, "vec_id",
         "embedding", numShards = 4)
-      val man = s.read.parquet(s"$ixDir/manifest").head()
+      val man = graft.sources.ShardedLayout.readManifest(s, ixDir)
       val parity = loaded.size == built.shards.size &&
-        man.getInt(man.fieldIndex("hash_modulus")) == built.hashModulus &&
-        man.getSeq[Long](man.fieldIndex("shard_hash_vals")) ==
-          built.shardHashVals &&
+        man.hashModulus == built.hashModulus &&
+        man.hashVals == built.shardHashVals &&
         loaded.zip(built.shards).forall { case (l, b) =>
           l.ids.sameElements(b.ids) && l.words.sameElements(b.words) &&
             l.thresholds.sameElements(b.thresholds) &&

@@ -4,7 +4,6 @@ import dev.ludovic.netlib.blas.BLAS
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -173,11 +172,11 @@ object Similarity {
     Some(CorpusIndex(ids, f64, dataF, n, dim, norms, sqNorms))
   }
 
-  /** Per-query top-k against a broadcast corpus. Adds `outputCol`:
-    * array<struct<index:long, score:double>> sorted best-first, ties
-    * broken by lower index (reference leaves ties arbitrary —
-    * src/topk.rs:19-30 — we pin them for determinism). k > |corpus|
-    * returns all corpus entries, like the reference.
+  /** Per-query top-k against a broadcast corpus, on the
+    * [[TopkFrame]] contract (null rows, the k clamp, ties to the lower
+    * id — the reference leaves ties arbitrary, src/topk.rs:19-30 — and
+    * the refusals). The body is one batched BLAS GEMM per 512 queries
+    * with the metric fused into its output buffer.
     */
   def topk(
       queries: DataFrame,
@@ -186,181 +185,80 @@ object Similarity {
       k: Int,
       metric: Metric,
       outputCol: String = "matches"): DataFrame = {
-    val spark = queries.sparkSession
-    val bc = broadcastOf(spark, corpus)
-    val schema = queries.schema
-    val embIdx = schema.fieldIndex(embCol)
-    val embIsF32 = schema(embCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    val fieldTypes = schema.fields.map(_.dataType)
-    // nullable output: a NULL query embedding yields NULL matches (SQL
-    // null-propagation; real corpora have null rows — the kernel must
-    // not crash on them)
-    val outSchema = StructType(schema.fields :+ StructField(outputCol,
-      ArrayType(StructType(Seq(
-        StructField("index", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false))), containsNull = false),
-      nullable = true))
-    // k ≤ 0 → empty matches arrays (the reference clamps k instead of
-    // crashing — src/matmul.rs:443); k > |corpus| → all corpus entries
-    val kk = math.min(math.max(k, 0), corpus.n)
-    val higher = metric.higherIsBetter
-    val m = metric
     // reference dtype rule: both sides f32 → f32 GEMM (2× throughput,
     // scores widened to f64 at the output boundary); any f64 → f64
-    val useF32 = embIsF32 && corpus.isF32
-
-    // InternalRow path (no per-element boxing): the scan's UnsafeRows
-    // are reused by the iterator, so each is copy()d into the batch.
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    val useF32 = TopkFrame.queryIsF32(queries.schema, embCol) && corpus.isF32
+    val bc = broadcastOf(queries.sparkSession, corpus)
+    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
+        batchRows = 512, pack = if (useF32) TopkFrame.F32 else TopkFrame.F64) { _ =>
       val cx = bc.value
       val blas = BLAS.getInstance()
-      it.map(_.copy()).grouped(512).flatMap { batch0 =>
-        // null embeddings sit out of the GEMM and emit null matches
-        val nullFlags = batch0.map(_.isNullAt(embIdx))
-        val batch = batch0.iterator.zip(nullFlags.iterator)
-          .collect { case (r, false) => r }.toSeq
-        val mRows = batch.length
-        val qNorms = new Array[Double](mRows)
-        val qSq = new Array[Double](mRows)
-        val scores = new Array[Double](mRows * cx.n)
-        if (mRows == 0) {
-          // fall through: no GEMM, every row emits null matches
-        } else if (useF32) {
-          val q = new Array[Float](mRows * cx.dim)
-          var i = 0
-          batch.foreach { row =>
-            val emb = row.getArray(embIdx)
-            if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-              s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-            val fa = emb.toFloatArray()
-            var d = 0; var sq = 0.0f
-            while (d < cx.dim) { val v = fa(d); q(i * cx.dim + d) = v; sq += v * v; d += 1 }
-            qSq(i) = sq.toDouble; qNorms(i) = math.sqrt(sq.toDouble); i += 1
+      new TopkBody(cx.ids) {
+        private var scores = new Array[Double](0)
+        private var scoresF = new Array[Float](0)
+        def score(b: QueryBatch, sels: Array[TopSelector]): Unit = {
+          val mRows = b.m
+          val len = mRows * cx.n
+          if (scores.length < len) {
+            scores = new Array[Double](len)
+            if (useF32) scoresF = new Array[Float](len)
           }
-          val scoresF = new Array[Float](mRows * cx.n)
-          blas.sgemm("T", "N", cx.n, mRows, cx.dim, 1.0f, cx.dataF, cx.dim,
-            q, cx.dim, 0.0f, scoresF, cx.n)
-          var j = 0
-          while (j < scores.length) { scores(j) = scoresF(j).toDouble; j += 1 }
-        } else {
-          val q = new Array[Double](mRows * cx.dim)
-          var i = 0
-          batch.foreach { row =>
-            val emb = row.getArray(embIdx)
-            if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-              s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-            var d = 0; var sq = 0.0
-            if (embIsF32) {
-              val fa = emb.toFloatArray()
-              while (d < cx.dim) {
-                val v = fa(d).toDouble
-                q(i * cx.dim + d) = v; sq += v * v; d += 1
-              }
-            } else {
-              val da = emb.toDoubleArray()
-              while (d < cx.dim) {
-                val v = da(d)
-                q(i * cx.dim + d) = v; sq += v * v; d += 1
-              }
-            }
-            qSq(i) = sq; qNorms(i) = math.sqrt(sq); i += 1
+          if (useF32) {
+            blas.sgemm("T", "N", cx.n, mRows, cx.dim, 1.0f, cx.dataF, cx.dim,
+              b.q32, cx.dim, 0.0f, scoresF, cx.n)
+            var j = 0
+            while (j < len) { scores(j) = scoresF(j).toDouble; j += 1 }
+          } else {
+            // scores = Q (m×dim) · C^T (dim×n), row-major out (see SURVEY §3)
+            blas.dgemm("T", "N", cx.n, mRows, cx.dim, 1.0, cx.data, cx.dim,
+              b.q64, cx.dim, 0.0, scores, cx.n)
           }
-          // scores = Q (m×dim) · C^T (dim×n), row-major out (see SURVEY §3)
-          blas.dgemm("T", "N", cx.n, mRows, cx.dim, 1.0, cx.data, cx.dim,
-            q, cx.dim, 0.0, scores, cx.n)
-        }
-        // metric post-processing fused into the GEMM output buffer in
-        // one specialized pass (the per-candidate virtual dispatch a
-        // `match` inside the selection loop costs is measurable at
-        // 10M+ candidates per batch)
-        m match {
-          case Metric.Dot => ()
-          case Metric.Cosine =>
-            // Zero-norm guard follows the reference's per-path epsilon:
-            // the f32 kernel zeroes at norm ≤ 1e-6 (src/metrics.rs:331-334
-            // — the looser bound papers over f32 accumulation error), the
-            // f64 kernel at ≤ 1e-10 (src/metrics.rs:277-289). A vector
-            // with norm in [1e-10, 1e-6) therefore scores 0.0 on the f32
-            // path and divides on the f64 path, exactly like the reference.
-            val normEps = if (useF32) 1e-6 else 1e-10
-            var qi = 0
-            while (qi < mRows) {
-              val base = qi * cx.n
-              val qn = qNorms(qi)
-              var j = 0
-              while (j < cx.n) {
-                scores(base + j) =
-                  if (qn <= normEps || cx.norms(j) <= normEps) 0.0
-                  else scores(base + j) / (qn * cx.norms(j))
-                j += 1
+          // metric post-processing fused into the GEMM output buffer in
+          // one specialized pass (the per-candidate virtual dispatch a
+          // `match` inside the selection loop costs is measurable at
+          // 10M+ candidates per batch)
+          metric match {
+            case Metric.Dot => ()
+            case Metric.Cosine =>
+              // Zero-norm guard follows the reference's per-path epsilon:
+              // the f32 kernel zeroes at norm ≤ 1e-6 (src/metrics.rs:331-334
+              // — the looser bound papers over f32 accumulation error), the
+              // f64 kernel at ≤ 1e-10 (src/metrics.rs:277-289). A vector
+              // with norm in [1e-10, 1e-6) therefore scores 0.0 on the f32
+              // path and divides on the f64 path, exactly like the reference.
+              val normEps = if (useF32) 1e-6 else 1e-10
+              var qi = 0
+              while (qi < mRows) {
+                val base = qi * cx.n
+                val qn = b.qNorm(qi)
+                var j = 0
+                while (j < cx.n) {
+                  scores(base + j) =
+                    if (qn <= normEps || cx.norms(j) <= normEps) 0.0
+                    else scores(base + j) / (qn * cx.norms(j))
+                  j += 1
+                }
+                qi += 1
               }
-              qi += 1
-            }
-          case Metric.Euclidean =>
-            var qi = 0
-            while (qi < mRows) {
-              val base = qi * cx.n
-              val qs = qSq(qi)
-              var j = 0
-              while (j < cx.n) {
-                scores(base + j) =
-                  math.sqrt(math.max(0.0, qs + cx.sqNorms(j) - 2.0 * scores(base + j)))
-                j += 1
+            case Metric.Euclidean =>
+              var qi = 0
+              while (qi < mRows) {
+                val base = qi * cx.n
+                val qs = b.qSq(qi)
+                var j = 0
+                while (j < cx.n) {
+                  scores(base + j) =
+                    math.sqrt(math.max(0.0, qs + cx.sqNorms(j) - 2.0 * scores(base + j)))
+                  j += 1
+                }
+                qi += 1
               }
-              qi += 1
-            }
-        }
-        val results = new Array[AnyRef](mRows)
-        var qi = 0
-        while (qi < mRows) {
-          val base = qi * cx.n
-          val selIdx = new Array[Int](kk)
-          val selScore = new Array[Double](kk)
-          var size = 0
-          var j = if (kk == 0) cx.n else 0
-          while (j < cx.n) {
-            val s = scores(base + j)
-            // keep selIdx/selScore sorted best-first; insert if beats worst
-            val beatsWorst = size < kk || {
-              val w = selScore(size - 1)
-              if (higher) s > w || (s == w && cx.ids(j) < cx.ids(selIdx(size - 1)))
-              else s < w || (s == w && cx.ids(j) < cx.ids(selIdx(size - 1)))
-            }
-            if (beatsWorst) {
-              var pos = if (size < kk) size else kk - 1
-              while (pos > 0 && {
-                val ps = selScore(pos - 1)
-                if (higher) s > ps || (s == ps && cx.ids(j) < cx.ids(selIdx(pos - 1)))
-                else s < ps || (s == ps && cx.ids(j) < cx.ids(selIdx(pos - 1)))
-              }) {
-                selScore(pos) = selScore(pos - 1); selIdx(pos) = selIdx(pos - 1); pos -= 1
-              }
-              selScore(pos) = s; selIdx(pos) = j
-              if (size < kk) size += 1
-            }
-            j += 1
           }
-          val structs = new Array[Any](size)
-          var r = 0
-          while (r < size) { structs(r) = InternalRow(cx.ids(selIdx(r)), selScore(r)); r += 1 }
-          results(qi) = new GenericArrayData(structs)
-          qi += 1
-        }
-        var vi = 0
-        batch0.iterator.zip(nullFlags.iterator).map { case (row, isNull) =>
-          val vals = new Array[Any](fieldTypes.length + 1)
-          var f = 0
-          while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-          vals(fieldTypes.length) =
-            if (isNull) null else { val r = results(vi); vi += 1; r }
-          new GenericInternalRow(vals): InternalRow
+          var qi = 0
+          while (qi < mRows) { sels(qi).offerRow(scores, qi * cx.n, cx.n); qi += 1 }
         }
       }
     }
-    InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
   }
 
   /** topk then explode+unnest (the reference's documented consumption
@@ -372,100 +270,53 @@ object Similarity {
       embCol: String,
       corpus: CorpusIndex,
       k: Int,
-      metric: Metric): DataFrame = {
-    val withMatches = topk(queries, embCol, corpus, k, metric, "matches")
-    withMatches
-      .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
-        posexplode(col("matches")).as(Seq("rank0", "m"))): _*)
-      .withColumn("rank", col("rank0") + 1)
-      .withColumn("index", col("m.index"))
-      .withColumn("score", col("m.score"))
-      .drop("rank0", "m", embCol)
-  }
+      metric: Metric): DataFrame =
+    flattenMatches(topk(queries, embCol, corpus, k, metric, "matches"), embCol)
 
   /** All pairwise dot products — `pmm.matmul`. Adds `outputCol` =
     * array of |corpus| doubles (or floats when both sides are f32,
     * the reference's dtype rule), position j ↔ sorted corpus id j.
+    * Query side (refusals, null rows → null scores, batching) is the
+    * [[TopkFrame.rows]] frame's.
     */
   def matmul(
       queries: DataFrame,
       embCol: String,
       corpus: CorpusIndex,
       outputCol: String = "scores"): DataFrame = {
-    val spark = queries.sparkSession
-    val bc = broadcastOf(spark, corpus)
-    val schema = queries.schema
-    val embIdx = schema.fieldIndex(embCol)
-    val queryIsF32 = schema(embCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    val useF32 = queryIsF32 && corpus.isF32
-    val elemT: DataType = if (useF32) FloatType else DoubleType
-    // nullable output: NULL query embedding → NULL scores (matches topk)
-    val outSchema = StructType(schema.fields :+
-      StructField(outputCol, ArrayType(elemT, containsNull = false), nullable = true))
-
-    val fieldTypes = schema.fields.map(_.dataType)
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    val useF32 = TopkFrame.queryIsF32(queries.schema, embCol) && corpus.isF32
+    val bc = broadcastOf(queries.sparkSession, corpus)
+    val out = StructField(outputCol,
+      ArrayType(if (useF32) FloatType else DoubleType, containsNull = false), nullable = true)
+    TopkFrame.rows(queries, embCol, out, corpus.dim, 512,
+        if (useF32) TopkFrame.F32 else TopkFrame.F64) { () =>
       val cx = bc.value
       val blas = BLAS.getInstance()
-      it.map(_.copy()).grouped(512).flatMap { batch0 =>
-        // null embeddings sit out of the GEMM and emit null scores
-        val nullFlags = batch0.map(_.isNullAt(embIdx))
-        val batch = batch0.iterator.zip(nullFlags.iterator)
-          .collect { case (r, false) => r }.toSeq
-        val mRows = batch.length
-        def emit(slice: Int => Any): Iterator[InternalRow] = {
-          var vi = 0
-          batch0.iterator.zip(nullFlags.iterator).map { case (row, isNull) =>
-            val vals = new Array[Any](fieldTypes.length + 1)
-            var f = 0
-            while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-            vals(fieldTypes.length) =
-              if (isNull) null
-              else { val s = new GenericArrayData(slice(vi)); vi += 1; s }
-            new GenericInternalRow(vals): InternalRow
-          }
-        }
+      var scores = new Array[Double](0)
+      var scoresF = new Array[Float](0)
+      (b, res) => {
+        val n = cx.n
         if (useF32) {
-          val q = new Array[Float](mRows * cx.dim)
+          if (scoresF.length < b.m * n) scoresF = new Array[Float](b.m * n)
+          blas.sgemm("T", "N", n, b.m, cx.dim, 1.0f, cx.dataF, cx.dim,
+            b.q32, cx.dim, 0.0f, scoresF, n)
           var i = 0
-          batch.foreach { row =>
-            val emb = row.getArray(embIdx)
-            if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-              s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-            System.arraycopy(emb.toFloatArray(), 0, q, i * cx.dim, cx.dim)
+          while (i < b.m) {
+            res(i) = new GenericArrayData(java.util.Arrays.copyOfRange(scoresF, i * n, (i + 1) * n))
             i += 1
           }
-          val scores = new Array[Float](mRows * cx.n)
-          if (mRows > 0) blas.sgemm("T", "N", cx.n, mRows, cx.dim, 1.0f, cx.dataF, cx.dim,
-            q, cx.dim, 0.0f, scores, cx.n)
-          emit(qi => java.util.Arrays.copyOfRange(scores, qi * cx.n, (qi + 1) * cx.n))
         } else {
-          val q = new Array[Double](mRows * cx.dim)
+          if (scores.length < b.m * n) scores = new Array[Double](b.m * n)
+          blas.dgemm("T", "N", n, b.m, cx.dim, 1.0, cx.data, cx.dim,
+            b.q64, cx.dim, 0.0, scores, n)
           var i = 0
-          batch.foreach { row =>
-            val emb = row.getArray(embIdx)
-            if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-              s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-            if (queryIsF32) {
-              val fa = emb.toFloatArray()
-              var d = 0
-              while (d < cx.dim) { q(i * cx.dim + d) = fa(d).toDouble; d += 1 }
-            } else {
-              System.arraycopy(emb.toDoubleArray(), 0, q, i * cx.dim, cx.dim)
-            }
+          while (i < b.m) {
+            res(i) = new GenericArrayData(java.util.Arrays.copyOfRange(scores, i * n, (i + 1) * n))
             i += 1
           }
-          val scores = new Array[Double](mRows * cx.n)
-          if (mRows > 0) blas.dgemm("T", "N", cx.n, mRows, cx.dim, 1.0, cx.data, cx.dim,
-            q, cx.dim, 0.0, scores, cx.n)
-          emit(qi => java.util.Arrays.copyOfRange(scores, qi * cx.n, (qi + 1) * cx.n))
         }
       }
     }
-    InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
   }
 
   /** matmul then flatten (the reference's `flatten=True`): one row per
@@ -969,13 +820,12 @@ object Similarity {
   def collectCorpusSq8(corpus: DataFrame, idCol: String, embCol: String): CorpusIndexSq8 =
     quantizeSq8(collectCorpus(corpus, idCol, embCol))
 
-  /** Per-query top-k against an SQ8 corpus — same contract, output
-    * schema, tie rules, and null propagation as [[topk]], but the
-    * broadcast is the BYTE matrix and scoring DEQUANTIZES TILES of
-    * corpus rows into a reusable f32 buffer for the same sgemm the f32
-    * path runs. Compute memory is O(tileRows·dim) per task no matter
-    * how big the (compressed) broadcast is — the full f32 corpus is
-    * never materialized anywhere. The decode is amortized over the
+  /** Per-query top-k against an SQ8 corpus on the [[TopkFrame]]
+    * contract: the broadcast is the BYTE matrix and scoring DEQUANTIZES
+    * TILES of corpus rows into a reusable f32 buffer for the same sgemm
+    * the f32 path runs. Compute memory is O(tileRows·dim) per task no
+    * matter how big the (compressed) broadcast is — the full f32 corpus
+    * is never materialized anywhere. The decode is amortized over the
     * query batch inside each GEMM call (~1/mRows of the FLOPs).
     */
   def topkSq8(
@@ -987,157 +837,59 @@ object Similarity {
       outputCol: String = "matches",
       tileRows: Int = 8192): DataFrame = {
     require(tileRows >= 1, s"tileRows must be >= 1, got $tileRows")
-    val spark = queries.sparkSession
-    val bc = broadcastOf(spark, corpus)
-    val schema = queries.schema
-    val embIdx = schema.fieldIndex(embCol)
-    val embIsF32 = schema(embCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case ArrayType(DoubleType, _) => false
-      case dt => throw new IllegalArgumentException(
-        s"Query column $embCol must be array<float>/array<double>, got ${dt.simpleString}")
-    }
-    val fieldTypes = schema.fields.map(_.dataType)
-    val outSchema = StructType(schema.fields :+ StructField(outputCol,
-      ArrayType(StructType(Seq(
-        StructField("index", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false))), containsNull = false),
-      nullable = true))
-    val kk = math.min(math.max(k, 0), corpus.n)
-    val higher = metric.higherIsBetter
-    val m = metric
-    val tr = tileRows
-
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    TopkFrame.queryIsF32(queries.schema, embCol) // refuses before the broadcast
+    val bc = broadcastOf(queries.sparkSession, corpus)
+    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
+        batchRows = 512, pack = TopkFrame.F32WideNorm) { _ =>
       val cx = bc.value
       val blas = BLAS.getInstance()
       // clamp the tile width ONCE and bound both buffers in Long math:
       // a caller passing tileRows ≥ ~4.2M against a corpus that large
       // would otherwise overflow Int and throw
       // NegativeArraySizeException instead of a clear error
-      val tw0 = math.min(tr, cx.n)
+      val tw0 = math.min(tileRows, cx.n)
       require(tw0.toLong * cx.dim <= Int.MaxValue && tw0.toLong * 512L <= Int.MaxValue,
         s"tileRows $tw0 × max(dim ${cx.dim}, batch 512) exceeds a JVM array — lower tileRows")
       val tileF = new Array[Float](tw0 * cx.dim)  // decoded corpus tile
       val tileScores = new Array[Float](512 * tw0)
-      it.map(_.copy()).grouped(512).flatMap { batch0 =>
-        val nullFlags = batch0.map(_.isNullAt(embIdx))
-        val batch = batch0.iterator.zip(nullFlags.iterator)
-          .collect { case (r, false) => r }.toSeq
-        val mRows = batch.length
-        val q = new Array[Float](mRows * cx.dim)
-        val qNorms = new Array[Double](mRows)
-        val qSq = new Array[Double](mRows)
-        var i = 0
-        batch.foreach { row =>
-          val emb = row.getArray(embIdx)
-          if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-            s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-          var d = 0; var sq = 0.0
-          if (embIsF32) {
-            val fa = emb.toFloatArray()
-            while (d < cx.dim) {
-              val v = fa(d); q(i * cx.dim + d) = v
-              sq += v.toDouble * v.toDouble; d += 1
-            }
-          } else {
-            val da = emb.toDoubleArray()
-            while (d < cx.dim) {
-              val v = da(d); q(i * cx.dim + d) = v.toFloat
-              sq += v * v; d += 1
-            }
-          }
-          qSq(i) = sq; qNorms(i) = math.sqrt(sq); i += 1
-        }
-        // running top-k per query, carried across corpus tiles
-        val selIdx = new Array[Int](mRows * math.max(kk, 1))
-        val selScore = new Array[Double](mRows * math.max(kk, 1))
-        val sizes = new Array[Int](mRows)
-        var t0 = 0
-        while (t0 < cx.n && mRows > 0 && kk > 0) {
-          val tw = math.min(tr, cx.n - t0)
-          // decode tile rows [t0, t0+tw) to f32
-          var r = 0
-          while (r < tw) {
-            val src = (t0 + r) * cx.dim
-            val dst = r * cx.dim
-            var d = 0
-            while (d < cx.dim) {
-              tileF(dst + d) = cx.dimMin(d) +
-                (cx.codes(src + d) & 0xFF) * cx.dimScale(d)
-              d += 1
-            }
-            r += 1
-          }
-          blas.sgemm("T", "N", tw, mRows, cx.dim, 1.0f, tileF, cx.dim,
-            q, cx.dim, 0.0f, tileScores, tw)
-          var qi = 0
-          while (qi < mRows) {
-            val base = qi * tw
-            val selBase = qi * kk
-            var j = 0
-            while (j < tw) {
-              val g = t0 + j // global corpus position
-              val dot = tileScores(base + j).toDouble
-              val s = m match {
-                case Metric.Dot => dot
-                case Metric.Cosine =>
-                  if (qNorms(qi) <= 1e-10 || cx.norms(g) <= 1e-10) 0.0
-                  else dot / (qNorms(qi) * cx.norms(g))
-                case Metric.Euclidean =>
-                  math.sqrt(math.max(0.0, qSq(qi) + cx.sqNorms(g) - 2.0 * dot))
+      new TopkBody(cx.ids) {
+        // the running top-k of each query carries across corpus tiles
+        def score(b: QueryBatch, sels: Array[TopSelector]): Unit = {
+          var t0 = 0
+          while (t0 < cx.n) {
+            val tw = math.min(tileRows, cx.n - t0)
+            // decode tile rows [t0, t0+tw) to f32
+            var r = 0
+            while (r < tw) {
+              val src = (t0 + r) * cx.dim
+              val dst = r * cx.dim
+              var d = 0
+              while (d < cx.dim) {
+                tileF(dst + d) = cx.dimMin(d) + (cx.codes(src + d) & 0xFF) * cx.dimScale(d)
+                d += 1
               }
-              val size = sizes(qi)
-              val beatsWorst = size < kk || {
-                val w = selScore(selBase + size - 1)
-                if (higher) s > w || (s == w && cx.ids(g) < cx.ids(selIdx(selBase + size - 1)))
-                else s < w || (s == w && cx.ids(g) < cx.ids(selIdx(selBase + size - 1)))
-              }
-              if (beatsWorst) {
-                var pos = if (size < kk) size else kk - 1
-                while (pos > 0 && {
-                  val ps = selScore(selBase + pos - 1)
-                  if (higher) s > ps || (s == ps && cx.ids(g) < cx.ids(selIdx(selBase + pos - 1)))
-                  else s < ps || (s == ps && cx.ids(g) < cx.ids(selIdx(selBase + pos - 1)))
-                }) {
-                  selScore(selBase + pos) = selScore(selBase + pos - 1)
-                  selIdx(selBase + pos) = selIdx(selBase + pos - 1)
-                  pos -= 1
-                }
-                selScore(selBase + pos) = s; selIdx(selBase + pos) = g
-                if (size < kk) sizes(qi) = size + 1
-              }
-              j += 1
+              r += 1
             }
-            qi += 1
+            blas.sgemm("T", "N", tw, b.m, cx.dim, 1.0f, tileF, cx.dim,
+              b.q32, cx.dim, 0.0f, tileScores, tw)
+            var qi = 0
+            while (qi < b.m) {
+              val sel = sels(qi)
+              val base = qi * tw
+              var j = 0
+              while (j < tw) {
+                val g = t0 + j // global corpus position
+                sel.offer(scoreOf(metric, tileScores(base + j).toDouble, b.qNorm(qi), b.qSq(qi),
+                  cx.norms(g), cx.sqNorms(g)), g)
+                j += 1
+              }
+              qi += 1
+            }
+            t0 += tw
           }
-          t0 += tw
-        }
-        val results = new Array[AnyRef](mRows)
-        var qi = 0
-        while (qi < mRows) {
-          val size = sizes(qi)
-          val structs = new Array[Any](size)
-          var r = 0
-          while (r < size) {
-            structs(r) = InternalRow(cx.ids(selIdx(qi * kk + r)), selScore(qi * kk + r))
-            r += 1
-          }
-          results(qi) = new GenericArrayData(structs)
-          qi += 1
-        }
-        var vi = 0
-        batch0.iterator.zip(nullFlags.iterator).map { case (row, isNull) =>
-          val vals = new Array[Any](fieldTypes.length + 1)
-          var f = 0
-          while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-          vals(fieldTypes.length) =
-            if (isNull) null else { val r = results(vi); vi += 1; r }
-          new GenericInternalRow(vals): InternalRow
         }
       }
     }
-    InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
   }
 
   /** [[topkSq8]] then explode+unnest — the flat (rank, index, score)
@@ -1148,15 +900,36 @@ object Similarity {
       embCol: String,
       corpus: CorpusIndexSq8,
       k: Int,
-      metric: Metric): DataFrame = {
-    val withMatches = topkSq8(queries, embCol, corpus, k, metric, "matches")
-    withMatches
-      .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
-        posexplode(col("matches")).as(Seq("rank0", "m"))): _*)
-      .withColumn("rank", col("rank0") + 1)
-      .withColumn("index", col("m.index"))
-      .withColumn("score", col("m.score"))
-      .drop("rank0", "m", embCol)
+      metric: Metric): DataFrame =
+    flattenMatches(topkSq8(queries, embCol, corpus, k, metric, "matches"), embCol)
+
+  /** A metric score from a dot product and both sides' norms — the
+    * per-candidate scoring every non-fused pass shares (SQ8 tiles, the
+    * SQ8 reranks, both PQ passes, the stream serve). The cosine
+    * zero-norm guard is the reference's f64 epsilon, 1e-10.
+    */
+  private[graft] def scoreOf(
+      metric: Metric, dot: Double, qNorm: Double, qSq: Double,
+      cNorm: Double, cSq: Double): Double = metric match {
+    case Metric.Dot => dot
+    case Metric.Cosine => if (qNorm <= 1e-10 || cNorm <= 1e-10) 0.0 else dot / (qNorm * cNorm)
+    case Metric.Euclidean => math.sqrt(math.max(0.0, qSq + cSq - 2.0 * dot))
+  }
+
+  /** `acc0` plus the dot of the query at `q(qOff…)` with SQ8 row `g`
+    * decoded on the fly — the shortlist rerank of BQ, IVF-BQ, PQ and
+    * IVF-PQ (which starts from the cell's centroid dot).
+    */
+  private def sq8Dot(
+      sq8: CorpusIndexSq8, g: Int, q: Array[Double], qOff: Int, acc0: Double): Double = {
+    var dot = acc0
+    val src = g * sq8.dim
+    var d = 0
+    while (d < sq8.dim) {
+      dot += q(qOff + d) * (sq8.dimMin(d) + (sq8.codes(src + d) & 0xFF) * sq8.dimScale(d))
+      d += 1
+    }
+    dot
   }
 
   // ===== PQ (product quantization, Jégou et al. TPAMI '11) =====
@@ -1386,9 +1159,8 @@ object Similarity {
     }
   }
 
-  /** Per-query top-k against a binary-quantized corpus — same
-    * contract, output schema, tie rules, and null propagation as
-    * [[topk]]. Two passes per query: (1) Hamming distance of the
+  /** Per-query top-k against a binary-quantized corpus on the
+    * [[TopkFrame]] contract. Two passes per query: (1) Hamming distance of the
     * sign-encoded query against every corpus row (XOR+popcount,
     * `nWords` word ops per row — ties by id ascending) selects a
     * `shortlist`; (2) the shortlist reranks against the SQ8 envelope,
@@ -1426,10 +1198,9 @@ object Similarity {
     * the kernel skips masked rows BEFORE their XOR+popcount — the
     * Hamming pre-screen itself is filtered, so the shortlist holds
     * only allowed candidates and no over-fetch factor is needed.
-    * Semantics mirror [[topkIvfPqFiltered]]: unknown allowed ids are
-    * ignored, k and shortlist clamp to |allowed ∩ corpus|, an empty
-    * intersection returns empty match arrays (not nulls), and an
-    * all-id filter is bit-identical to [[topkBq]]. Shares that
+    * Unknown allowed ids are ignored, k and shortlist clamp to
+    * |allowed ∩ corpus| ([[TopkFrame]]'s mask clamp), and an all-id
+    * filter is bit-identical to [[topkBq]]. Shares that
     * form's lazy-plan broadcast-lifetime caveat — long-lived drivers
     * should prefer [[topkBqShardedWaves]] with `allowedIds`.
     */
@@ -1513,9 +1284,9 @@ object Similarity {
   /** [[topkBq]] against a CALLER-OWNED broadcast of the index, with
     * an optional allowed-row mask (see [[topkIvfPqBc]] — the wave
     * server creates, uses, and DESTROYS its shard broadcasts, so the
-    * plan-building body must not mint its own). With a mask, k and
-    * shortlist clamp to the ALLOWED population and masked rows are
-    * skipped BEFORE their XOR+popcount.
+    * plan-building body must not mint its own). Masked rows are skipped
+    * BEFORE their XOR+popcount; k and shortlist clamp as
+    * [[TopkFrame]] states.
     */
   private[graft] def topkBqBc(
       queries: DataFrame,
@@ -1529,154 +1300,81 @@ object Similarity {
       allowedCount: Int = -1): DataFrame = {
     val corpus = bc.value
     validateBqArgs(k, shortlist)
-    val spark = queries.sparkSession
-    val schema = queries.schema
-    val embIdx = schema.fieldIndex(embCol)
-    val embIsF32 = schema(embCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case ArrayType(DoubleType, _) => false
-      case dt => throw new IllegalArgumentException(
-        s"Query column $embCol must be array<float>/array<double>, got ${dt.simpleString}")
-    }
-    val fieldTypes = schema.fields.map(_.dataType)
-    val outSchema = StructType(schema.fields :+ StructField(outputCol,
-      ArrayType(StructType(Seq(
-        StructField("index", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false))), containsNull = false),
-      nullable = true))
-    // with a mask, k and shortlist clamp to the ALLOWED population —
-    // k > |allowed| returns every allowed row (the k>corpus clamp
-    // applied to the allowed set, the [[topkIvfPqBc]] contract)
-    val nEff = if (allowedCount >= 0) math.min(allowedCount, corpus.n) else corpus.n
-    val kk = math.min(math.max(k, 0), nEff)
-    val sl = math.min(shortlist, nEff)
-    val cap = math.max(sl, 1)
-    val higher = metric.higherIsBetter
-    val mt = metric
-
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
+        shortlist, allowedCount) { c =>
       val cx = bc.value
-      val mask: Array[Boolean] = if (maskBc == null) null else maskBc.value
-      val sq8 = cx.sq8
-      val qf = new Array[Double](cx.dim)
-      val qWords = new Array[Long](cx.nWords)
-      val selIdx = new Array[Int](cap)
-      val selHam = new Array[Int](cap)
-      val rIdx = new Array[Int](math.max(kk, 1))
-      val rScore = new Array[Double](math.max(kk, 1))
-      it.map { row0 =>
-        val row = row0.copy()
-        val isNull = row.isNullAt(embIdx)
-        val result: AnyRef = if (isNull || kk == 0) {
-          if (isNull) null else new GenericArrayData(new Array[Any](0))
-        } else {
-          val emb = row.getArray(embIdx)
-          if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-            s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-          var qSq = 0.0
-          var d0 = 0
-          if (embIsF32) {
-            val fa = emb.toFloatArray()
-            while (d0 < cx.dim) { val v = fa(d0).toDouble; qf(d0) = v; qSq += v * v; d0 += 1 }
-          } else {
-            val da = emb.toDoubleArray()
-            while (d0 < cx.dim) { val v = da(d0); qf(d0) = v; qSq += v * v; d0 += 1 }
-          }
-          val qNorm = math.sqrt(qSq)
-          java.util.Arrays.fill(qWords, 0L)
-          bqEncodeRow(qf, 0, cx.dim, cx.thresholds, qWords, 0)
-          // pass 1: Hamming pre-screen into the shortlist buffer
-          // (insertion-ordered: distance asc, id asc); masked-out
-          // rows are skipped BEFORE their XOR — the filter is exact,
-          // not an over-fetch
-          var size = 0
+      val mask = if (maskBc == null) null else maskBc.value
+      new BqBody(cx.ids, cx.thresholds, cx.nWords, c.sl, cx.sq8, metric) {
+        def screen(b: QueryBatch, i: Int, qWords: Array[Long], ham: TopSelector): Unit = {
           var g = 0
           while (g < cx.n) {
-            if (mask == null || mask(g)) {
-              var ham = 0
-              var w = 0
-              val base = g * cx.nWords
-              while (w < cx.nWords) {
-                ham += java.lang.Long.bitCount(qWords(w) ^ cx.words(base + w))
-                w += 1
-              }
-              val beatsWorst = size < cap || {
-                val worst = selHam(size - 1)
-                ham < worst || (ham == worst && cx.ids(g) < cx.ids(selIdx(size - 1)))
-              }
-              if (beatsWorst) {
-                var pos = if (size < cap) size else cap - 1
-                while (pos > 0 && {
-                  val ph = selHam(pos - 1)
-                  ham < ph || (ham == ph && cx.ids(g) < cx.ids(selIdx(pos - 1)))
-                }) {
-                  selHam(pos) = selHam(pos - 1); selIdx(pos) = selIdx(pos - 1)
-                  pos -= 1
-                }
-                selHam(pos) = ham; selIdx(pos) = g
-                if (size < cap) size += 1
-              }
-            }
+            if (mask == null || mask(g)) ham.offer(hamming(qWords, cx.words, g * cx.nWords), g)
             g += 1
           }
-          // pass 2: SQ8 rerank of the shortlist — topkSq8's exact
-          // score definition (dequantized corpus, true decoded norms)
-          var rSize = 0
-          var ci = 0
-          val lim = math.min(size, sl)
-          while (ci < lim) {
-            val g2 = selIdx(ci)
-            var dot = 0.0
-            val src = g2 * cx.dim
-            var d = 0
-            while (d < cx.dim) {
-              dot += qf(d) * (sq8.dimMin(d) +
-                (sq8.codes(src + d) & 0xFF) * sq8.dimScale(d))
-              d += 1
-            }
-            val s = mt match {
-              case Metric.Dot => dot
-              case Metric.Cosine =>
-                if (qNorm <= 1e-10 || sq8.norms(g2) <= 1e-10) 0.0
-                else dot / (qNorm * sq8.norms(g2))
-              case Metric.Euclidean =>
-                math.sqrt(math.max(0.0, qSq + sq8.sqNorms(g2) - 2.0 * dot))
-            }
-            val beatsWorst = rSize < kk || {
-              val w2 = rScore(rSize - 1)
-              if (higher) s > w2 || (s == w2 && cx.ids(g2) < cx.ids(rIdx(rSize - 1)))
-              else s < w2 || (s == w2 && cx.ids(g2) < cx.ids(rIdx(rSize - 1)))
-            }
-            if (beatsWorst) {
-              var pos = if (rSize < kk) rSize else kk - 1
-              while (pos > 0 && {
-                val ps = rScore(pos - 1)
-                if (higher) s > ps || (s == ps && cx.ids(g2) < cx.ids(rIdx(pos - 1)))
-                else s < ps || (s == ps && cx.ids(g2) < cx.ids(rIdx(pos - 1)))
-              }) {
-                rScore(pos) = rScore(pos - 1); rIdx(pos) = rIdx(pos - 1)
-                pos -= 1
-              }
-              rScore(pos) = s; rIdx(pos) = g2
-              if (rSize < kk) rSize += 1
-            }
-            ci += 1
-          }
-          val structs = new Array[Any](rSize)
-          var r = 0
-          while (r < rSize) {
-            structs(r) = InternalRow(cx.ids(rIdx(r)), rScore(r)); r += 1
-          }
-          new GenericArrayData(structs)
         }
-        val vals = new Array[Any](fieldTypes.length + 1)
-        var f = 0
-        while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-        vals(fieldTypes.length) = result
-        new GenericInternalRow(vals): InternalRow
       }
     }
-    InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
+  }
+
+  /** The BQ / IVF-BQ row body: sign-encode the query, let the family's
+    * `screen` offer Hamming distances (masked rows skipped before their
+    * XOR — the filter is exact, not an over-fetch) into an `sl`-deep
+    * shortlist (distance asc, id asc), then rerank that shortlist
+    * against the SQ8 envelope — [[topkSq8]]'s score definition
+    * (dequantized corpus, true decoded norms).
+    */
+  private abstract class BqBody(
+      ids: Array[Long], thresholds: Array[Double], nWords: Int, sl: Int,
+      sq8: CorpusIndexSq8, metric: Metric) extends RowBody(ids) {
+    private val qWords = new Array[Long](nWords)
+    private val ham = new TopSelector(sl, false, ids)
+    def screen(b: QueryBatch, i: Int, qWords: Array[Long], ham: TopSelector): Unit
+    def scoreRow(b: QueryBatch, i: Int, sel: TopSelector): Unit = {
+      val off = i * b.dim
+      java.util.Arrays.fill(qWords, 0L)
+      bqEncodeRow(b.q64, off, b.dim, thresholds, qWords, 0)
+      ham.reset()
+      screen(b, i, qWords, ham)
+      var r = 0
+      while (r < ham.size) {
+        val g = ham.pos(r)
+        sel.offer(scoreOf(metric, sq8Dot(sq8, g, b.q64, off, 0.0), b.qNorm(i), b.qSq(i),
+          sq8.norms(g), sq8.sqNorms(g)), g)
+        r += 1
+      }
+    }
+  }
+
+  /** Hamming distance between the query words and the bit row at
+    * `base` (XOR + popcount over `q.length` words).
+    */
+  private def hamming(q: Array[Long], words: Array[Long], base: Int): Int = {
+    var h = 0
+    var w = 0
+    while (w < q.length) { h += java.lang.Long.bitCount(q(w) ^ words(base + w)); w += 1 }
+    h
+  }
+
+  /** The IVF probe: the query's dot with every unit cell centroid
+    * (`dots`) and the `nProbe` best cells, best-first with ties to the
+    * lowest cell (`sel`).
+    */
+  private final class CellProbe(centroids: Array[Double], nCells: Int, dim: Int, nProbe: Int) {
+    val dots = new Array[Double](nCells)
+    val sel = new TopSelector(math.min(nProbe, nCells), true, Array.tabulate(nCells)(_.toLong))
+    def pick(q: Array[Double], off: Int): Unit = {
+      sel.reset()
+      var c = 0
+      while (c < nCells) {
+        var dot = 0.0
+        var d = 0
+        val cb = c * dim
+        while (d < dim) { dot += q(off + d) * centroids(cb + d); d += 1 }
+        dots(c) = dot
+        sel.offer(dot, c)
+        c += 1
+      }
+    }
   }
 
   /** [[topkBq]] exploded to one row per (query, match) — the same
@@ -1831,6 +1529,7 @@ object Similarity {
     val q = queries.select(col(qIdCol), col(embCol))
     topkShardedWavesCore[CorpusIndexBq](
       queries.sparkSession, qIdCol, metric, shardProviders, _.ids,
+      validateBqArgs(k, shortlist),
       partialOf = (bc, maskBc, nAllowed) =>
         topkBqFlatBc(q, embCol, bc, k, metric, shortlist, maskBc, nAllowed),
       k = k, waveSize = waveSize, scratch = scratch,
@@ -1962,9 +1661,9 @@ object Similarity {
   /** Per-query cosine top-k against an IVF+BQ index: probe the
     * `nProbe` best cells by centroid dot, XOR+popcount ONLY the
     * probed members (global Hamming shortlist across probed cells,
-    * ties by id), then the mandatory SQ8 rerank — [[topkBq]]'s exact
-    * output/score/tie/null contract restricted to the probed
-    * population (k clamps to it like [[topkIvfPq]]).
+    * ties by id), then the mandatory SQ8 rerank — [[topkBq]]'s scores
+    * on the [[TopkFrame]] contract, restricted to the probed
+    * population.
     */
   def topkIvfBq(
       queries: DataFrame,
@@ -1981,10 +1680,8 @@ object Similarity {
 
   /** FILTERED IVF+BQ search — [[topkIvfBq]] restricted to an
     * allowed-id subset: the mask skips masked members of the probed
-    * cells BEFORE their XOR+popcount (the [[topkBqFiltered]] /
-    * [[topkIvfPqFiltered]] semantics: k clamps to
-    * |allowed ∩ corpus|, unknown ids ignored, empty intersection →
-    * empty arrays, all-true mask bit-identical to [[topkIvfBq]]).
+    * cells BEFORE their XOR+popcount (the [[topkBqFiltered]]
+    * semantics; an all-true mask is bit-identical to [[topkIvfBq]]).
     * Low selectivity concentrates allowed rows in few cells — recall
     * vs the filtered exact ground truth wants proportionally higher
     * `nProbe`, exactly the IVF+PQ filtered caveat.
@@ -2047,178 +1744,31 @@ object Similarity {
       allowedCount: Int = -1): DataFrame = {
     val corpus = bc.value
     validateIvfBqArgs(k, nProbe, shortlist)
-    val spark = queries.sparkSession
-    val schema = queries.schema
-    val embIdx = schema.fieldIndex(embCol)
-    val embIsF32 = schema(embCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case ArrayType(DoubleType, _) => false
-      case dt => throw new IllegalArgumentException(
-        s"Query column $embCol must be array<float>/array<double>, got ${dt.simpleString}")
-    }
-    val fieldTypes = schema.fields.map(_.dataType)
-    val outSchema = StructType(schema.fields :+ StructField(outputCol,
-      ArrayType(StructType(Seq(
-        StructField("index", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false))), containsNull = false),
-      nullable = true))
-    // mask ⇒ k/shortlist clamp to the ALLOWED population (the
-    // topkBqBc contract)
-    val nEff = if (allowedCount >= 0) math.min(allowedCount, corpus.n) else corpus.n
-    val kk = math.min(math.max(k, 0), nEff)
-    val sl = math.min(shortlist, nEff)
-    val cap = math.max(sl, 1)
-    val np = math.min(nProbe, corpus.nCells)
-
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, higher = true,
+        shortlist, allowedCount) { c =>
       val cx = bc.value
-      val mask: Array[Boolean] = if (maskBc == null) null else maskBc.value
-      val sq8 = cx.sq8
-      val qf = new Array[Double](cx.dim)
-      val qWords = new Array[Long](cx.nWords)
-      val cellDots = new Array[Double](cx.nCells)
-      val probed = new Array[Int](np)
-      val selIdx = new Array[Int](cap)
-      val selHam = new Array[Int](cap)
-      val rIdx = new Array[Int](math.max(kk, 1))
-      val rScore = new Array[Double](math.max(kk, 1))
-      it.map { row0 =>
-        val row = row0.copy()
-        val isNull = row.isNullAt(embIdx)
-        val result: AnyRef = if (isNull || kk == 0) {
-          if (isNull) null else new GenericArrayData(new Array[Any](0))
-        } else {
-          val emb = row.getArray(embIdx)
-          if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-            s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-          var qSq = 0.0
-          var d0 = 0
-          if (embIsF32) {
-            val fa = emb.toFloatArray()
-            while (d0 < cx.dim) { val v = fa(d0).toDouble; qf(d0) = v; qSq += v * v; d0 += 1 }
-          } else {
-            val da = emb.toDoubleArray()
-            while (d0 < cx.dim) { val v = da(d0); qf(d0) = v; qSq += v * v; d0 += 1 }
-          }
-          val qNorm = math.sqrt(qSq)
-          java.util.Arrays.fill(qWords, 0L)
-          bqEncodeRow(qf, 0, cx.dim, cx.thresholds, qWords, 0)
-          // probe: nProbe best cells by centroid dot (ties to the
-          // lowest cell — selection sort over the dot array, np·nCells
-          // comparisons, nCells is hundreds)
-          var c = 0
-          while (c < cx.nCells) {
-            var dot = 0.0; var dd = 0
-            val cb = c * cx.dim
-            while (dd < cx.dim) { dot += qf(dd) * cx.centroids(cb + dd); dd += 1 }
-            cellDots(c) = dot
-            c += 1
-          }
-          var p = 0
-          while (p < np) {
-            var best = -1; var bestDot = Double.NegativeInfinity
-            var c2 = 0
-            while (c2 < cx.nCells) {
-              var taken = false
-              var t = 0
-              while (t < p && !taken) { if (probed(t) == c2) taken = true; t += 1 }
-              if (!taken && cellDots(c2) > bestDot) { bestDot = cellDots(c2); best = c2 }
-              c2 += 1
-            }
-            probed(p) = best
-            p += 1
-          }
-          // Hamming pre-screen over the probed cells' members — bits
-          // stream SEQUENTIALLY (CSR-position layout), only shortlist
-          // bookkeeping touches the member indirection; masked-out
-          // members skip their XOR entirely (exact pre-filter)
-          var size = 0
+      val mask = if (maskBc == null) null else maskBc.value
+      val probe = new CellProbe(cx.centroids, cx.nCells, cx.dim, nProbe)
+      new BqBody(cx.ids, cx.thresholds, cx.nWords, c.sl, cx.sq8, Metric.Cosine) {
+        // bits stream SEQUENTIALLY (CSR-position layout); only the
+        // shortlist bookkeeping touches the member indirection
+        def screen(b: QueryBatch, i: Int, qWords: Array[Long], ham: TopSelector): Unit = {
+          probe.pick(b.q64, i * b.dim)
           var pi = 0
-          while (pi < np) {
-            val cell = probed(pi)
+          while (pi < probe.sel.size) {
+            val cell = probe.sel.pos(pi)
             var mi = cx.cellStart(cell)
             val end = cx.cellStart(cell + 1)
             while (mi < end) {
               val g = cx.cellMembers(mi)
-              if (mask == null || mask(g)) {
-                var ham = 0
-                var w = 0
-                val base = mi * cx.nWords
-                while (w < cx.nWords) {
-                  ham += java.lang.Long.bitCount(qWords(w) ^ cx.words(base + w))
-                  w += 1
-                }
-                val beatsWorst = size < cap || {
-                  val worst = selHam(size - 1)
-                  ham < worst || (ham == worst && cx.ids(g) < cx.ids(selIdx(size - 1)))
-                }
-                if (beatsWorst) {
-                  var pos = if (size < cap) size else cap - 1
-                  while (pos > 0 && {
-                    val ph = selHam(pos - 1)
-                    ham < ph || (ham == ph && cx.ids(g) < cx.ids(selIdx(pos - 1)))
-                  }) {
-                    selHam(pos) = selHam(pos - 1); selIdx(pos) = selIdx(pos - 1)
-                    pos -= 1
-                  }
-                  selHam(pos) = ham; selIdx(pos) = g
-                  if (size < cap) size += 1
-                }
-              }
+              if (mask == null || mask(g)) ham.offer(hamming(qWords, cx.words, mi * cx.nWords), g)
               mi += 1
             }
             pi += 1
           }
-          // SQ8 rerank of the shortlist — topkSq8's score definition
-          var rSize = 0
-          var ci = 0
-          val lim = math.min(size, sl)
-          while (ci < lim) {
-            val g2 = selIdx(ci)
-            var dot = 0.0
-            val src = g2 * cx.dim
-            var dd = 0
-            while (dd < cx.dim) {
-              dot += qf(dd) * (sq8.dimMin(dd) +
-                (sq8.codes(src + dd) & 0xFF) * sq8.dimScale(dd))
-              dd += 1
-            }
-            val sc =
-              if (qNorm <= 1e-10 || sq8.norms(g2) <= 1e-10) 0.0
-              else dot / (qNorm * sq8.norms(g2))
-            val beatsWorst = rSize < kk || {
-              val w2 = rScore(rSize - 1)
-              sc > w2 || (sc == w2 && cx.ids(g2) < cx.ids(rIdx(rSize - 1)))
-            }
-            if (beatsWorst) {
-              var pos = if (rSize < kk) rSize else kk - 1
-              while (pos > 0 && {
-                val ps = rScore(pos - 1)
-                sc > ps || (sc == ps && cx.ids(g2) < cx.ids(rIdx(pos - 1)))
-              }) {
-                rScore(pos) = rScore(pos - 1); rIdx(pos) = rIdx(pos - 1)
-                pos -= 1
-              }
-              rScore(pos) = sc; rIdx(pos) = g2
-              if (rSize < kk) rSize += 1
-            }
-            ci += 1
-          }
-          val structs = new Array[Any](rSize)
-          var r = 0
-          while (r < rSize) {
-            structs(r) = InternalRow(cx.ids(rIdx(r)), rScore(r)); r += 1
-          }
-          new GenericArrayData(structs)
         }
-        val vals = new Array[Any](fieldTypes.length + 1)
-        var f = 0
-        while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-        vals(fieldTypes.length) = result
-        new GenericInternalRow(vals): InternalRow
       }
     }
-    InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
   }
 
   /** [[topkIvfBq]] exploded to the flat (query, rank, index, score)
@@ -2478,6 +2028,7 @@ object Similarity {
     val q = queries.select(col(qIdCol), col(embCol))
     topkShardedWavesCore[CorpusIndexIvfBq](
       queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
+      validateIvfBqArgs(k, nProbe, shortlist),
       partialOf = (bc, maskBc, nAllowed) =>
         topkIvfBqFlatBc(q, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed),
       k = k, waveSize = waveSize, scratch = scratch,
@@ -2664,18 +2215,17 @@ object Similarity {
       withRerank: Boolean = true): CorpusIndexPq =
     quantizePq(collectCorpus(corpus, idCol, embCol), m, withRerank = withRerank)
 
-  /** Per-query top-k against a PQ corpus — same contract, tie rules,
-    * and null propagation as [[topk]]. Scoring is asymmetric distance
-    * computation (ADC): each query builds an m×256 table of partial
-    * dots against the codebooks (256·dim multiplies), then every
-    * corpus vector scores in m ADDS from its codes — no GEMM over the
-    * corpus at all, the compute shape that makes billion-vector scans
-    * cheap. With `shortlist > 0` (requires the SQ8 sidecar) the ADC
-    * ranking picks `shortlist` candidates and the final top-k reranks
-    * them against SQ8-decoded vectors — the two-stage
-    * coarse-then-refine shape (DiskANN/IVF-ADC) that restores
-    * near-exact recall while still never touching an uncompressed
-    * vector.
+  /** Per-query top-k against a PQ corpus on the [[TopkFrame]]
+    * contract. Scoring is asymmetric distance computation (ADC): each
+    * query builds an m×256 table of partial dots against the codebooks
+    * (256·dim multiplies), then every corpus vector scores in m ADDS
+    * from its codes — no GEMM over the corpus at all, the compute shape
+    * that makes billion-vector scans cheap. With `shortlist > 0`
+    * (requires the SQ8 sidecar) the ADC ranking picks `shortlist`
+    * candidates and the final top-k reranks them against SQ8-decoded
+    * vectors — the two-stage coarse-then-refine shape (DiskANN/IVF-ADC)
+    * that restores near-exact recall while still never touching an
+    * uncompressed vector.
     */
   def topkPq(
       queries: DataFrame,
@@ -2688,11 +2238,7 @@ object Similarity {
     topkPqImpl(queries, embCol, corpus, k, metric, shortlist, outputCol, null)
 
   /** [[topkPq]] body with an optional query-side ROTATION (the OPQ
-    * hook): when `rot` (d×d row-major, orthogonal) is non-null each
-    * query rotates q ← R·q before the ADC table build, putting it in
-    * the same rotated space the index's codes live in. R orthogonal
-    * preserves dots and norms, so every score/tie/clamp contract of
-    * the unrotated kernel carries over unchanged.
+    * hook, see [[AdcBody]]).
     */
   private def topkPqImpl(
       queries: DataFrame,
@@ -2709,190 +2255,85 @@ object Similarity {
       "shortlist rerank needs the SQ8 sidecar — build the index with withRerank = true")
     require(rot == null || rot.length == corpus.dim.toLong * corpus.dim,
       s"rotation must be dim×dim = ${corpus.dim * corpus.dim} doubles, got ${if (rot == null) 0 else rot.length}")
+    TopkFrame.queryIsF32(queries.schema, embCol) // refuses before the broadcasts
     val spark = queries.sparkSession
     val bc = broadcastOf(spark, corpus)
-    val rotBc = if (rot == null) null
-      else spark.sparkContext.broadcast(rot)
-    val schema = queries.schema
-    val embIdx = schema.fieldIndex(embCol)
-    val embIsF32 = schema(embCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case ArrayType(DoubleType, _) => false
-      case dt => throw new IllegalArgumentException(
-        s"Query column $embCol must be array<float>/array<double>, got ${dt.simpleString}")
-    }
-    val fieldTypes = schema.fields.map(_.dataType)
-    val outSchema = StructType(schema.fields :+ StructField(outputCol,
-      ArrayType(StructType(Seq(
-        StructField("index", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false))), containsNull = false),
-      nullable = true))
-    val kk = math.min(math.max(k, 0), corpus.n)
-    val sl = if (shortlist == 0) 0 else math.min(shortlist, corpus.n)
-    val cap = math.max(if (sl > 0) sl else kk, 1)
-    val higher = metric.higherIsBetter
-    val mt = metric
-
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    val rotBc = if (rot == null) null else spark.sparkContext.broadcast(rot)
+    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
+        shortlist) { c =>
       val cx = bc.value
-      val rm = if (rotBc == null) null else rotBc.value
-      val qraw = if (rm == null) null else new Array[Double](cx.dim)
-      val sub = cx.dim / cx.m
-      val lut = new Array[Float](cx.m * 256)
-      val qf = new Array[Double](cx.dim)
-      val selIdx = new Array[Int](cap)
-      val selScore = new Array[Double](cap)
       val sq8 = cx.sq8.orNull
-      it.map { row0 =>
-        val row = row0.copy()
-        val isNull = row.isNullAt(embIdx)
-        val result: AnyRef = if (isNull || kk == 0) {
-          if (isNull) null else new GenericArrayData(new Array[Any](0))
-        } else {
-          val emb = row.getArray(embIdx)
-          if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-            s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-          var qSq = 0.0
-          var d0 = 0
-          val fillInto = if (rm == null) qf else qraw
-          if (embIsF32) {
-            val fa = emb.toFloatArray()
-            while (d0 < cx.dim) { val v = fa(d0).toDouble; fillInto(d0) = v; qSq += v * v; d0 += 1 }
-          } else {
-            val da = emb.toDoubleArray()
-            while (d0 < cx.dim) { val v = da(d0); fillInto(d0) = v; qSq += v * v; d0 += 1 }
-          }
-          if (rm != null) {
-            // q ← R·q, then score in rotated space; qSq stays the RAW
-            // squared norm (R orthogonal ⇒ equal in exact arithmetic,
-            // and the raw value is the one the euclidean/cosine
-            // contract defines against the caller's vector)
-            var r0 = 0
-            while (r0 < cx.dim) {
-              var acc = 0.0; var j0 = 0
-              val base = r0 * cx.dim
-              while (j0 < cx.dim) { acc += rm(base + j0) * qraw(j0); j0 += 1 }
-              qf(r0) = acc
-              r0 += 1
-            }
-          }
-          val qNorm = math.sqrt(qSq)
-          // ADC table: lut[j*256+c] = <q_subj, codebook[j][c]>
-          var j = 0
-          while (j < cx.m) {
-            var c = 0
-            while (c < 256) {
-              val cb = (j * 256 + c) * sub
-              var acc = 0.0; var d = 0
-              while (d < sub) { acc += qf(j * sub + d) * cx.codebooks(cb + d); d += 1 }
-              lut(j * 256 + c) = acc.toFloat
-              c += 1
-            }
-            j += 1
-          }
-          // pass 1: ADC ranking into the shortlist/top-k buffer
-          var size = 0
+      new AdcBody(cx.ids, cx.dim, cx.m, cx.codebooks, if (rotBc == null) null else rotBc.value,
+          c.sl, metric.higherIsBetter) {
+        def scan(q: Array[Double], qo: Int, b: QueryBatch, i: Int, into: TopSelector): Unit = {
           var g = 0
           while (g < cx.n) {
-            var dot = 0.0
-            var j2 = 0
-            val base = g * cx.m
-            while (j2 < cx.m) {
-              dot += lut(j2 * 256 + (cx.codes(base + j2) & 0xFF)); j2 += 1
-            }
-            val s = mt match {
-              case Metric.Dot => dot
-              case Metric.Cosine =>
-                if (qNorm <= 1e-10 || cx.norms(g) <= 1e-10) 0.0
-                else dot / (qNorm * cx.norms(g))
-              case Metric.Euclidean =>
-                math.sqrt(math.max(0.0, qSq + cx.sqNorms(g) - 2.0 * dot))
-            }
-            val beatsWorst = size < cap || {
-              val w = selScore(size - 1)
-              if (higher) s > w || (s == w && cx.ids(g) < cx.ids(selIdx(size - 1)))
-              else s < w || (s == w && cx.ids(g) < cx.ids(selIdx(size - 1)))
-            }
-            if (beatsWorst) {
-              var pos = if (size < cap) size else cap - 1
-              while (pos > 0 && {
-                val ps = selScore(pos - 1)
-                if (higher) s > ps || (s == ps && cx.ids(g) < cx.ids(selIdx(pos - 1)))
-                else s < ps || (s == ps && cx.ids(g) < cx.ids(selIdx(pos - 1)))
-              }) {
-                selScore(pos) = selScore(pos - 1); selIdx(pos) = selIdx(pos - 1)
-                pos -= 1
-              }
-              selScore(pos) = s; selIdx(pos) = g
-              if (size < cap) size += 1
-            }
+            into.offer(scoreOf(metric, adcDot(lut, cx.codes, g * cx.m, cx.m, 0.0), b.qNorm(i),
+              b.qSq(i), cx.norms(g), cx.sqNorms(g)), g)
             g += 1
           }
-          // pass 2 (optional): rerank the shortlist against the SQ8
-          // sidecar — dims decode on the fly, no tile buffer needed
-          // for a ≤ shortlist-sized candidate set
-          val (outIdx, outScore, outSize) =
-            if (sl == 0) (selIdx, selScore, math.min(size, kk))
-            else {
-              val rIdx = new Array[Int](math.min(size, sl))
-              val rScore = new Array[Double](rIdx.length)
-              var rSize = 0
-              var ci = 0
-              while (ci < math.min(size, sl)) {
-                val g2 = selIdx(ci)
-                var dot = 0.0
-                val src = g2 * cx.dim
-                var d = 0
-                while (d < cx.dim) {
-                  dot += qf(d) * (sq8.dimMin(d) +
-                    (sq8.codes(src + d) & 0xFF) * sq8.dimScale(d))
-                  d += 1
-                }
-                val s = mt match {
-                  case Metric.Dot => dot
-                  case Metric.Cosine =>
-                    if (qNorm <= 1e-10 || cx.norms(g2) <= 1e-10) 0.0
-                    else dot / (qNorm * cx.norms(g2))
-                  case Metric.Euclidean =>
-                    math.sqrt(math.max(0.0, qSq + cx.sqNorms(g2) - 2.0 * dot))
-                }
-                val beatsWorst = rSize < kk || {
-                  val w = rScore(rSize - 1)
-                  if (higher) s > w || (s == w && cx.ids(g2) < cx.ids(rIdx(rSize - 1)))
-                  else s < w || (s == w && cx.ids(g2) < cx.ids(rIdx(rSize - 1)))
-                }
-                if (beatsWorst) {
-                  var pos = if (rSize < kk) rSize else kk - 1
-                  while (pos > 0 && {
-                    val ps = rScore(pos - 1)
-                    if (higher) s > ps || (s == ps && cx.ids(g2) < cx.ids(rIdx(pos - 1)))
-                    else s < ps || (s == ps && cx.ids(g2) < cx.ids(rIdx(pos - 1)))
-                  }) {
-                    rScore(pos) = rScore(pos - 1); rIdx(pos) = rIdx(pos - 1)
-                    pos -= 1
-                  }
-                  rScore(pos) = s; rIdx(pos) = g2
-                  if (rSize < kk) rSize += 1
-                }
-                ci += 1
-              }
-              (rIdx, rScore, rSize)
-            }
-          val structs = new Array[Any](outSize)
-          var r = 0
-          while (r < outSize) {
-            structs(r) = InternalRow(cx.ids(outIdx(r)), outScore(r)); r += 1
-          }
-          new GenericArrayData(structs)
         }
-        val vals = new Array[Any](fieldTypes.length + 1)
-        var f = 0
-        while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-        vals(fieldTypes.length) = result
-        new GenericInternalRow(vals): InternalRow
+        def rerank(q: Array[Double], qo: Int, b: QueryBatch, i: Int, g: Int): Double =
+          scoreOf(metric, sq8Dot(sq8, g, q, qo, 0.0), b.qNorm(i), b.qSq(i),
+            cx.norms(g), cx.sqNorms(g))
       }
     }
-    InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
+  }
+
+  /** The PQ / IVF-PQ row body. A non-null `rot` (OPQ, d×d row-major,
+    * orthogonal) rotates the query q ← R·q first ([[rotateRow]]), so
+    * the ADC table, the probe and the rerank run in the index's rotated
+    * space; qSq and qNorm stay the RAW query's (R orthogonal ⇒ equal in
+    * exact arithmetic, and the raw value is the one the metric contract
+    * defines against the caller's vector). Then the ADC table
+    * lut[j*256+c] = <q_subj, codebook[j][c]> is built, and the family's
+    * `scan` offers candidates — straight into the result without a
+    * shortlist, else into an `sl`-deep shortlist that `rerank` (the
+    * SQ8 sidecar, decoded on the fly) rescores into the result.
+    */
+  private abstract class AdcBody(
+      ids: Array[Long], dim: Int, m: Int, codebooks: Array[Float], rot: Array[Double],
+      sl: Int, higher: Boolean) extends RowBody(ids) {
+    protected val lut = new Array[Float](m * 256)
+    private val sub = dim / m
+    private val qRot = if (rot == null) null else new Array[Double](dim)
+    private val short = if (sl > 0) new TopSelector(sl, higher, ids) else null
+    def scan(q: Array[Double], qo: Int, b: QueryBatch, i: Int, into: TopSelector): Unit
+    def rerank(q: Array[Double], qo: Int, b: QueryBatch, i: Int, g: Int): Double
+    def scoreRow(b: QueryBatch, i: Int, sel: TopSelector): Unit = {
+      if (rot != null) rotateRow(rot, b.q64, i * dim, dim, qRot, 0)
+      val q = if (rot == null) b.q64 else qRot
+      val qo = if (rot == null) i * dim else 0
+      var j = 0
+      while (j < m) {
+        var c = 0
+        while (c < 256) {
+          val cb = (j * 256 + c) * sub
+          var acc = 0.0
+          var d = 0
+          while (d < sub) { acc += q(qo + j * sub + d) * codebooks(cb + d); d += 1 }
+          lut(j * 256 + c) = acc.toFloat
+          c += 1
+        }
+        j += 1
+      }
+      if (short == null) scan(q, qo, b, i, sel)
+      else {
+        short.reset()
+        scan(q, qo, b, i, short)
+        var r = 0
+        while (r < short.size) { val g = short.pos(r); sel.offer(rerank(q, qo, b, i, g), g); r += 1 }
+      }
+    }
+  }
+
+  /** `acc0` plus the ADC dot of the `m` codes at `base` (m table adds). */
+  private def adcDot(
+      lut: Array[Float], codes: Array[Byte], base: Int, m: Int, acc0: Double): Double = {
+    var dot = acc0
+    var j = 0
+    while (j < m) { dot += lut(j * 256 + (codes(base + j) & 0xFF)); j += 1 }
+    dot
   }
 
   /** [[topkPq]] then explode+unnest — the flat (rank, index, score)
@@ -2904,16 +2345,8 @@ object Similarity {
       corpus: CorpusIndexPq,
       k: Int,
       metric: Metric,
-      shortlist: Int = 0): DataFrame = {
-    val withMatches = topkPq(queries, embCol, corpus, k, metric, shortlist, "matches")
-    withMatches
-      .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
-        posexplode(col("matches")).as(Seq("rank0", "m"))): _*)
-      .withColumn("rank", col("rank0") + 1)
-      .withColumn("index", col("m.index"))
-      .withColumn("score", col("m.score"))
-      .drop("rank0", "m", embCol)
-  }
+      shortlist: Int = 0): DataFrame =
+    flattenMatches(topkPq(queries, embCol, corpus, k, metric, shortlist, "matches"), embCol)
 
   /** OPQ — optimized product quantization (Ge et al., CVPR'13
     * non-parametric form): a learned ORTHOGONAL rotation R applied
@@ -2991,16 +2424,8 @@ object Similarity {
       corpus: CorpusIndexOpq,
       k: Int,
       metric: Metric,
-      shortlist: Int = 0): DataFrame = {
-    val withMatches = topkOpq(queries, embCol, corpus, k, metric, shortlist, "matches")
-    withMatches
-      .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
-        posexplode(col("matches")).as(Seq("rank0", "m"))): _*)
-      .withColumn("rank", col("rank0") + 1)
-      .withColumn("index", col("m.index"))
-      .withColumn("score", col("m.score"))
-      .drop("rank0", "m", embCol)
-  }
+      shortlist: Int = 0): DataFrame =
+    flattenMatches(topkOpq(queries, embCol, corpus, k, metric, shortlist, "matches"), embCol)
 
   // ===== IVF+OPQ: the learned rotation composed with the routed
   // residual-PQ family (FAISS's `OPQ16,IVF…,PQ16` index-factory
@@ -3610,8 +3035,8 @@ object Similarity {
     * table once per query, score each probed member in m adds plus
     * the cell's centroid dot, all divided by |q| — cosine with no
     * norm lookup. `shortlist > 0` reranks the ADC shortlist against
-    * the residual SQ8 sidecar (v̂ ≈ c + r̂). Output/ties/null contract
-    * of [[topkPq]].
+    * the residual SQ8 sidecar (v̂ ≈ c + r̂). The query side is
+    * [[TopkFrame]]'s contract.
     */
   def topkIvfPq(
       queries: DataFrame,
@@ -3643,11 +3068,9 @@ object Similarity {
     * proportionally higher `nProbe` (the gate pins floors at the
     * driver's geometry).
     *
-    * Semantics: ids in `allowedIds` that aren't in the corpus are
-    * ignored; k > |allowed ∩ corpus| returns every allowed row
-    * (the k>corpus clamp, applied to the allowed population); an
-    * empty intersection returns empty match arrays, not nulls.
-    * An all-true mask is bit-identical to [[topkIvfPq]].
+    * Ids in `allowedIds` that aren't in the corpus are ignored; k
+    * clamps to |allowed ∩ corpus| ([[TopkFrame]]'s mask clamp). An
+    * all-true mask is bit-identical to [[topkIvfPq]].
     *
     * Broadcast lifetime: the returned plan is LAZY, so the index and
     * mask broadcasts this call mints cannot be destroyed eagerly —
@@ -3952,7 +3375,11 @@ object Similarity {
     * DESTROYS its shard broadcasts explicitly, so the plan-building
     * body must not mint its own. Driver-side metadata (k clamp,
     * shortlist floor, schema) reads `bc.value`, which on the driver
-    * is the local object — no deserialization.
+    * is the local object — no deserialization. A mask skips
+    * masked-out members INSIDE the probed-cell scan, before their ADC
+    * dot (the FAISS IDSelector analog: exact w.r.t. the probed cells,
+    * no post-filter over-fetch); `rotBc` is the OPQ rotation
+    * ([[AdcBody]]).
     */
   private[graft] def topkIvfPqBc(
       queries: DataFrame,
@@ -3967,210 +3394,42 @@ object Similarity {
       rotBc: Broadcast[Array[Double]] = null): DataFrame = {
     val corpus = bc.value
     validateIvfPqArgs(corpus, k, nProbe, shortlist, if (rotBc == null) null else rotBc.value)
-    val spark = queries.sparkSession
-    val schema = queries.schema
-    val embIdx = schema.fieldIndex(embCol)
-    val embIsF32 = schema(embCol).dataType match {
-      case ArrayType(FloatType, _) => true
-      case ArrayType(DoubleType, _) => false
-      case dt => throw new IllegalArgumentException(
-        s"Query column $embCol must be array<float>/array<double>, got ${dt.simpleString}")
-    }
-    val fieldTypes = schema.fields.map(_.dataType)
-    val outSchema = StructType(schema.fields :+ StructField(outputCol,
-      ArrayType(StructType(Seq(
-        StructField("index", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false))), containsNull = false),
-      nullable = true))
-    // With a mask, k and shortlist clamp to the ALLOWED population —
-    // k > |allowed| returns every allowed row, mirroring the k>corpus
-    // clamp (reference tests/test_polars_matmul.py:117 semantics).
-    val nEff = if (allowedCount >= 0) math.min(allowedCount, corpus.n) else corpus.n
-    val kk = math.min(math.max(k, 0), nEff)
-    val sl = if (shortlist == 0) 0 else math.min(shortlist, nEff)
-    val cap = math.max(if (sl > 0) sl else kk, 1)
-
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, higher = true,
+        shortlist, allowedCount) { c =>
       val cx = bc.value
-      val mask: Array[Boolean] = if (maskBc == null) null else maskBc.value
-      val rm = if (rotBc == null) null else rotBc.value
-      val qraw = if (rm == null) null else new Array[Double](cx.dim)
-      val np = math.min(nProbe, cx.nCells)
-      val sub = cx.dim / cx.m
-      val lut = new Array[Float](cx.m * 256)
-      val qf = new Array[Double](cx.dim)
-      val cellDot = new Array[Double](cx.nCells)
-      val probeIdx = new Array[Int](np)
-      val selIdx = new Array[Int](cap)
-      val selScore = new Array[Double](cap)
+      val mask = if (maskBc == null) null else maskBc.value
       val sq8 = cx.sq8.orNull
-      it.map { row0 =>
-        val row = row0.copy()
-        val isNull = row.isNullAt(embIdx)
-        val result: AnyRef = if (isNull || kk == 0) {
-          if (isNull) null else new GenericArrayData(new Array[Any](0))
-        } else {
-          val emb = row.getArray(embIdx)
-          if (emb.numElements() != cx.dim) throw new IllegalArgumentException(
-            s"Dimension mismatch: query has ${emb.numElements()} elements, corpus has ${cx.dim}")
-          var qSq = 0.0
-          var d0 = 0
-          val fillInto = if (rm == null) qf else qraw
-          if (embIsF32) {
-            val fa = emb.toFloatArray()
-            while (d0 < cx.dim) { val v = fa(d0).toDouble; fillInto(d0) = v; qSq += v * v; d0 += 1 }
-          } else {
-            val da = emb.toDoubleArray()
-            while (d0 < cx.dim) { val v = da(d0); fillInto(d0) = v; qSq += v * v; d0 += 1 }
-          }
-          if (rm != null) {
-            // q ← R·q, then route + score in rotated space (the OPQ
-            // serve — [[topkPqImpl]]'s exact rotation pattern); qSq
-            // stays the RAW squared norm, which R preserves
-            var r0 = 0
-            while (r0 < cx.dim) {
-              var acc = 0.0; var j0 = 0
-              val base = r0 * cx.dim
-              while (j0 < cx.dim) { acc += rm(base + j0) * qraw(j0); j0 += 1 }
-              qf(r0) = acc
-              r0 += 1
-            }
-          }
-          val qNorm = math.sqrt(qSq)
-          // centroid dots + top-nProbe probe set (ties to lowest cell)
-          var c = 0
-          while (c < cx.nCells) {
-            var dot = 0.0; var d = 0
-            val cb = c * cx.dim
-            while (d < cx.dim) { dot += qf(d) * cx.centroids(cb + d); d += 1 }
-            cellDot(c) = dot
-            c += 1
-          }
-          var pSize = 0
-          var c1 = 0
-          while (c1 < cx.nCells) {
-            val s = cellDot(c1)
-            val beats = pSize < np || s > cellDot(probeIdx(pSize - 1))
-            if (beats) {
-              var pos = if (pSize < np) pSize else np - 1
-              while (pos > 0 && s > cellDot(probeIdx(pos - 1))) {
-                probeIdx(pos) = probeIdx(pos - 1); pos -= 1
-              }
-              probeIdx(pos) = c1
-              if (pSize < np) pSize += 1
-            }
-            c1 += 1
-          }
-          // residual ADC table
-          var j = 0
-          while (j < cx.m) {
-            var cc = 0
-            while (cc < 256) {
-              val cb = (j * 256 + cc) * sub
-              var acc = 0.0; var d = 0
-              while (d < sub) { acc += qf(j * sub + d) * cx.codebooks(cb + d); d += 1 }
-              lut(j * 256 + cc) = acc.toFloat
-              cc += 1
-            }
-            j += 1
-          }
-          // scan probed cells' members
-          var size = 0
+      val probe = new CellProbe(cx.centroids, cx.nCells, cx.dim, nProbe)
+      new AdcBody(cx.ids, cx.dim, cx.m, cx.codebooks, if (rotBc == null) null else rotBc.value,
+          c.sl, true) {
+        // each probed member scores its cell's centroid dot plus its
+        // residual ADC dot, over |q|: cosine with no norm lookup
+        def scan(q: Array[Double], qo: Int, b: QueryBatch, i: Int, into: TopSelector): Unit = {
+          probe.pick(q, qo)
           var pi = 0
-          while (pi < pSize) {
-            val cell = probeIdx(pi)
-            val qc = cellDot(cell)
+          while (pi < probe.sel.size) {
+            val cell = probe.sel.pos(pi)
+            val qc = probe.dots(cell)
             var mi = cx.cellStart(cell)
             val end = cx.cellStart(cell + 1)
             while (mi < end) {
               val g = cx.cellMembers(mi)
-              // ID-selector gate (FAISS IDSelector analog): a masked-out
-              // member is skipped BEFORE its ADC scan, so filtering is
-              // exact w.r.t. the probed cells — no post-filter over-fetch.
-              if (mask == null || mask(g)) {
-                var dot = qc
-                var j2 = 0
-                val base = g * cx.m
-                while (j2 < cx.m) {
-                  dot += lut(j2 * 256 + (cx.codes(base + j2) & 0xFF)); j2 += 1
-                }
-                val s = if (qNorm <= 1e-10) 0.0 else dot / qNorm
-                val beatsWorst = size < cap || {
-                  val w = selScore(size - 1)
-                  s > w || (s == w && cx.ids(g) < cx.ids(selIdx(size - 1)))
-                }
-                if (beatsWorst) {
-                  var pos = if (size < cap) size else cap - 1
-                  while (pos > 0 && {
-                    val ps = selScore(pos - 1)
-                    s > ps || (s == ps && cx.ids(g) < cx.ids(selIdx(pos - 1)))
-                  }) {
-                    selScore(pos) = selScore(pos - 1); selIdx(pos) = selIdx(pos - 1)
-                    pos -= 1
-                  }
-                  selScore(pos) = s; selIdx(pos) = g
-                  if (size < cap) size += 1
-                }
-              }
+              if (mask == null || mask(g))
+                into.offer(unitCosine(adcDot(lut, cx.codes, g * cx.m, cx.m, qc), b.qNorm(i)), g)
               mi += 1
             }
             pi += 1
           }
-          // optional SQ8-residual rerank: v̂ ≈ c(g) + r̂(g)
-          val (outIdx, outScore, outSize) =
-            if (sl == 0) (selIdx, selScore, math.min(size, kk))
-            else {
-              val rIdx = new Array[Int](math.min(size, sl))
-              val rScore = new Array[Double](rIdx.length)
-              var rSize = 0
-              var ci = 0
-              while (ci < math.min(size, sl)) {
-                val g = selIdx(ci)
-                var dot = cellDot(cx.cellOf(g))
-                val src = g * cx.dim
-                var d = 0
-                while (d < cx.dim) {
-                  dot += qf(d) * (sq8.dimMin(d) +
-                    (sq8.codes(src + d) & 0xFF) * sq8.dimScale(d))
-                  d += 1
-                }
-                val s = if (qNorm <= 1e-10) 0.0 else dot / qNorm
-                val beatsWorst = rSize < kk || {
-                  val w = rScore(rSize - 1)
-                  s > w || (s == w && cx.ids(g) < cx.ids(rIdx(rSize - 1)))
-                }
-                if (beatsWorst) {
-                  var pos = if (rSize < kk) rSize else kk - 1
-                  while (pos > 0 && {
-                    val ps = rScore(pos - 1)
-                    s > ps || (s == ps && cx.ids(g) < cx.ids(rIdx(pos - 1)))
-                  }) {
-                    rScore(pos) = rScore(pos - 1); rIdx(pos) = rIdx(pos - 1)
-                    pos -= 1
-                  }
-                  rScore(pos) = s; rIdx(pos) = g
-                  if (rSize < kk) rSize += 1
-                }
-                ci += 1
-              }
-              (rIdx, rScore, rSize)
-            }
-          val structs = new Array[Any](outSize)
-          var r = 0
-          while (r < outSize) {
-            structs(r) = InternalRow(cx.ids(outIdx(r)), outScore(r)); r += 1
-          }
-          new GenericArrayData(structs)
         }
-        val vals = new Array[Any](fieldTypes.length + 1)
-        var f = 0
-        while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-        vals(fieldTypes.length) = result
-        new GenericInternalRow(vals): InternalRow
+        // the SQ8-residual rerank: v̂ ≈ c(g) + r̂(g)
+        def rerank(q: Array[Double], qo: Int, b: QueryBatch, i: Int, g: Int): Double =
+          unitCosine(sq8Dot(sq8, g, q, qo, probe.dots(cx.cellOf(g))), b.qNorm(i))
       }
     }
-    InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
   }
+
+  private def unitCosine(dot: Double, qNorm: Double): Double =
+    if (qNorm <= 1e-10) 0.0 else dot / qNorm
 
   /** [[topkIvfPq]] then explode+unnest — the flat (rank, index, score)
     * shape of [[topkFlat]].
@@ -4825,6 +4084,7 @@ object Similarity {
       rotBc: Broadcast[Array[Double]] = null): DataFrame =
     topkShardedWavesCore[CorpusIndexIvfPq](
       queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
+      validateIvfPqCall(k, nProbe, shortlist),
       partialOf = (bc, maskBc, nAllowed) =>
         topkIvfPqFlatBc(queries, embCol, bc, k, nProbe, shortlist,
           maskBc, nAllowed, rotBc),
@@ -4854,6 +4114,7 @@ object Similarity {
       allowedIds: Array[Long] = null,
       deniedIds: Array[Long] = null): DataFrame =
     serveWaves(queries, shards, scratchDir, memoryPartials) { (providers, scratch, mem) =>
+      validateIvfPqCall(k, nProbe, shortlist)
       val rotBc = queries.sparkSession.sparkContext.broadcast(rot)
       try topkIvfPqWavesCore(queries, embCol, qIdCol, providers, k, nProbe, shortlist,
         waveSize, scratch, meter, mem, allowedIds, deniedIds, rotBc)
@@ -4872,7 +4133,9 @@ object Similarity {
     * is one wave's shards, metered; the final broadcast-free
     * [[mergeShardPartials]] re-ranks the wave cuts. Per-wave top-k
     * cuts are lossless for a global top-k because the merge order is
-    * total (ties pin to the lowest index).
+    * total (ties pin to the lowest index). `check`, the family's
+    * index-free argument check, runs before the first shard loads or
+    * broadcasts.
     */
   private[graft] def topkShardedWavesCore[I <: AnyRef](
       spark: org.apache.spark.sql.SparkSession,
@@ -4880,6 +4143,7 @@ object Similarity {
       metric: Metric,
       shardProviders: Seq[() => I],
       ids: I => Array[Long],
+      check: => Unit,
       partialOf: (Broadcast[I], Broadcast[Array[Boolean]], Int) => DataFrame,
       k: Int,
       waveSize: Int,
@@ -4891,6 +4155,7 @@ object Similarity {
       implicit ct: scala.reflect.ClassTag[I]): DataFrame = {
     require(shardProviders.nonEmpty, "Empty shard list")
     require(waveSize >= 1, s"waveSize must be >= 1, got $waveSize")
+    check
     val waves = shardProviders.grouped(waveSize).toIndexedSeq
     val sorted = if (allowedIds == null) null else sortedIds(allowedIds)
     val sortedDeny = if (deniedIds == null) null else sortedIds(deniedIds)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, TopSelector, TopkFrame}
 import graft.sources.{ShardedLayout, Source}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -713,6 +713,8 @@ object EventStream {
         // GEMM reads each tile in place via the offset dgemm variant.
         val tw0 = math.min(ct, math.max(cx.n, 1))
         val scores = new Array[Double](512 * tw0)
+        // running top-k per query, carried across corpus tiles
+        val sels = new Array[TopSelector](512)
         it.grouped(512).flatMap { batch =>
           val mRows = batch.length
           val q = new Array[Double](mRows * cx.dim)
@@ -727,10 +729,7 @@ object EventStream {
             while (d < cx.dim) { val v = emb(d); sq += v * v; d += 1 }
             qSq(i) = sq; qNorms(i) = math.sqrt(sq); i += 1
           }
-          // running top-k per query, carried across corpus tiles
-          val selIdx = new Array[Int](mRows * math.max(kk, 1))
-          val selScore = new Array[Double](mRows * math.max(kk, 1))
-          val sizes = new Array[Int](mRows)
+          TopkFrame.prepare(sels, mRows, kk, higher, cx.ids)
           var t0 = 0
           while (t0 < cx.n && mRows > 0 && kk > 0) {
             val tw = math.min(tw0, cx.n - t0)
@@ -738,39 +737,13 @@ object EventStream {
               cx.data, t0 * cx.dim, cx.dim, q, 0, cx.dim, 0.0, scores, 0, tw)
             var qi = 0
             while (qi < mRows) {
+              val sel = sels(qi)
               val base = qi * tw
-              val selBase = qi * kk
               var j = 0
               while (j < tw) {
                 val g = t0 + j // global corpus position
-                val s = m match {
-                  case graft.operators.Metric.Dot => scores(base + j)
-                  case graft.operators.Metric.Cosine =>
-                    if (qNorms(qi) <= 1e-10 || cx.norms(g) <= 1e-10) 0.0
-                    else scores(base + j) / (qNorms(qi) * cx.norms(g))
-                  case graft.operators.Metric.Euclidean =>
-                    math.sqrt(math.max(0.0, qSq(qi) + cx.sqNorms(g) - 2.0 * scores(base + j)))
-                }
-                val size = sizes(qi)
-                val beatsWorst = size < kk || {
-                  val w = selScore(selBase + size - 1)
-                  if (higher) s > w || (s == w && cx.ids(g) < cx.ids(selIdx(selBase + size - 1)))
-                  else s < w || (s == w && cx.ids(g) < cx.ids(selIdx(selBase + size - 1)))
-                }
-                if (beatsWorst) {
-                  var pos = if (size < kk) size else kk - 1
-                  while (pos > 0 && {
-                    val ps = selScore(selBase + pos - 1)
-                    if (higher) s > ps || (s == ps && cx.ids(g) < cx.ids(selIdx(selBase + pos - 1)))
-                    else s < ps || (s == ps && cx.ids(g) < cx.ids(selIdx(selBase + pos - 1)))
-                  }) {
-                    selScore(selBase + pos) = selScore(selBase + pos - 1)
-                    selIdx(selBase + pos) = selIdx(selBase + pos - 1)
-                    pos -= 1
-                  }
-                  selScore(selBase + pos) = s; selIdx(selBase + pos) = g
-                  if (size < kk) sizes(qi) = size + 1
-                }
+                sel.offer(Similarity.scoreOf(m, scores(base + j), qNorms(qi), qSq(qi),
+                  cx.norms(g), cx.sqNorms(g)), g)
                 j += 1
               }
               qi += 1
@@ -778,8 +751,8 @@ object EventStream {
             t0 += tw
           }
           batch.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-            (0 until sizes(qi)).iterator.map(r =>
-              (qid, r + 1, cx.ids(selIdx(qi * kk + r)), selScore(qi * kk + r)))
+            val sel = sels(qi)
+            (0 until sel.size).iterator.map(r => (qid, r + 1, cx.ids(sel.pos(r)), sel.score(r)))
           }
         }
       }

@@ -45,6 +45,10 @@ object ShardedFamilies {
     def tombstoned(q: DataFrame, shortlist: Int): Option[DataFrame]
     /** The wave form at waveSize 1 with the default scratch. */
     def waves(q: DataFrame, allowed: Array[Long], denied: Array[Long]): DataFrame
+    /** The family's wave core at waveSize 1 (in-memory partials), each
+      * shard paged through a provider that calls `paged()` first.
+      */
+    def wavesCore(q: DataFrame, paged: () => Unit, shortlist: Int): DataFrame
     /** The streaming wave serve over `path`. */
     def stream(q: DataFrame, allowed: Array[Long], residentShards: Int, shortlist: Int)(
         onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row]
@@ -78,6 +82,9 @@ object ShardedFamilies {
         def waves(q: DataFrame, a: Array[Long], d: Array[Long]) =
           Similarity.topkBqShardedWaves(q, "qid", "emb", sh, K, Metric.Cosine, Shortlist,
             waveSize = 1, allowedIds = a, deniedIds = d)
+        def wavesCore(q: DataFrame, paged: () => Unit, sl: Int) =
+          Similarity.topkBqWavesCore(q, "qid", "emb", sh.map(x => () => { paged(); x }), K,
+            Metric.Cosine, sl, 1, "", new Similarity.ShardedServeMeter, memoryPartials = true)
         def stream(q: DataFrame, a: Array[Long], r: Int, sl: Int)(
             onBatch: (DataFrame, Long) => Unit) =
           EventStream.topkServeBqShardedWaves(q, "qid", "emb", p, K, Metric.Cosine, sl,
@@ -106,6 +113,9 @@ object ShardedFamilies {
         def waves(q: DataFrame, a: Array[Long], d: Array[Long]) =
           Similarity.topkIvfBqShardedWaves(q, "qid", "emb", sh, K, NProbe, Shortlist,
             waveSize = 1, allowedIds = a, deniedIds = d)
+        def wavesCore(q: DataFrame, paged: () => Unit, sl: Int) =
+          Similarity.topkIvfBqWavesCore(q, "qid", "emb", sh.map(x => () => { paged(); x }), K,
+            NProbe, sl, 1, "", new Similarity.ShardedServeMeter, memoryPartials = true)
         def stream(q: DataFrame, a: Array[Long], r: Int, sl: Int)(
             onBatch: (DataFrame, Long) => Unit) =
           EventStream.topkServeIvfBqShardedWaves(q, "qid", "emb", p, K, NProbe, sl,
@@ -135,6 +145,9 @@ object ShardedFamilies {
         def waves(q: DataFrame, a: Array[Long], d: Array[Long]) =
           Similarity.topkIvfPqShardedWaves(q, "emb", "qid", sh, K, NProbe, Shortlist,
             waveSize = 1, allowedIds = a, deniedIds = d)
+        def wavesCore(q: DataFrame, paged: () => Unit, sl: Int) =
+          Similarity.topkIvfPqWavesCore(q, "emb", "qid", sh.map(x => () => { paged(); x }), K,
+            NProbe, sl, 1, "", new Similarity.ShardedServeMeter, memoryPartials = true)
         def stream(q: DataFrame, a: Array[Long], r: Int, sl: Int)(
             onBatch: (DataFrame, Long) => Unit) =
           EventStream.topkServeIvfPqShardedWaves(q, "emb", "qid", p, K, NProbe, sl,
@@ -161,6 +174,12 @@ object ShardedFamilies {
         def waves(q: DataFrame, a: Array[Long], d: Array[Long]) =
           Similarity.topkIvfOpqShardedWaves(q, "emb", "qid", rot, sh, K, NProbe, Shortlist,
             waveSize = 1, allowedIds = a, deniedIds = d)
+        // minted with the serves, so a refused call's broadcasts are its own
+        val rotBc = spark.sparkContext.broadcast(rot)
+        def wavesCore(q: DataFrame, paged: () => Unit, sl: Int) =
+          Similarity.topkIvfPqWavesCore(q, "emb", "qid", sh.map(x => () => { paged(); x }), K,
+            NProbe, sl, 1, "", new Similarity.ShardedServeMeter, memoryPartials = true,
+            rotBc = rotBc)
         def stream(q: DataFrame, a: Array[Long], r: Int, sl: Int)(
             onBatch: (DataFrame, Long) => Unit) =
           EventStream.topkServeIvfPqShardedWaves(q, "emb", "qid", p, K, NProbe, sl,

@@ -115,6 +115,25 @@ class ShardedServeSpec extends AnyFunSuite {
     }
   }
 
+  test("wave serves refuse bad kernel arguments before loading or broadcasting a shard") {
+    val sc = spark.sparkContext
+    ShardedFamilies.all(spark).foreach { f =>
+      withClue(s"${f.name}: ") {
+        val base = Files.createTempDirectory(s"sharded-waves-refuse-${f.name}").toString
+        f.write(rows(0L, 120L), s"$base/ix")
+        val s = f.serves(s"$base/ix")
+        val q = queries
+        val paged = new java.util.concurrent.atomic.AtomicInteger(0)
+        val before = sc.broadcast(0).id
+        val e = intercept[IllegalArgumentException](
+          s.wavesCore(q, () => { paged.incrementAndGet(); () }, K - 1))
+        assert(e.getMessage.contains("shortlist"), e.getMessage)
+        assert(paged.get == 0, "a shard was loaded before refusing")
+        assert(sc.broadcast(0).id - before == 1, "a broadcast was minted before refusing")
+      }
+    }
+  }
+
   test("streaming sharded serves refuse bad kernel arguments at wiring time") {
     ShardedFamilies.all(spark).foreach { f =>
       withClue(s"${f.name}: ") {

@@ -256,6 +256,32 @@ class SimilaritySpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Metric.fromString("invalid_metric"))
   }
 
+  test("topk, topkFlat, matmul and matmulFlat refuse a non-float query column by name, before broadcasting") {
+    val c = corpusOf(Seq((1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.0)),
+      (3L, Seq(0.0, 0.0, 1.0))))
+    val q = queriesDf(Seq((0L, Seq(3.0, 1.0, 2.0))))
+    val sc = spark.sparkContext
+    Seq(IntegerType, LongType).foreach { t =>
+      val qt = q.withColumn("embedding", col("embedding").cast(ArrayType(t)))
+      Seq[(String, () => Any)](
+        "topk" -> (() => Similarity.topk(qt, "embedding", c, 3, Metric.Dot)),
+        "topkFlat" -> (() => Similarity.topkFlat(qt, "embedding", c, 3, Metric.Dot)),
+        "matmul" -> (() => Similarity.matmul(qt, "embedding", c)),
+        "matmulFlat" -> (() => Similarity.matmulFlat(qt, "embedding", c))).foreach {
+        case (name, call) =>
+          val before = sc.broadcast(0).id
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains("Query column embedding must be " +
+            s"array<float>/array<double>, got array<${t.simpleString}>"), s"$name: ${e.getMessage}")
+          assert(sc.broadcast(0).id - before == 1, s"$name broadcast before refusing")
+      }
+    }
+    // the double column the refusal asks for ranks [1, 3, 2]
+    val top = Similarity.topkFlat(q, "embedding", c, 3, Metric.Dot).orderBy("rank").collect()
+    assert(top.map(r => (r.getAs[Long]("index"), r.getAs[Double]("score"))).toSeq ==
+      Seq((1L, 3.0), (3L, 2.0), (2L, 1.0)))
+  }
+
   test("null query embeddings propagate to null matches/scores, not a crash") {
     val q = Seq((0L, Seq(1.0, 0.0)), (1L, null.asInstanceOf[Seq[Double]]),
       (2L, Seq(0.0, 1.0))).toDF("qid", "embedding")
