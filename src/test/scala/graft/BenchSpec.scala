@@ -179,19 +179,24 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("mc control sees an all-core load the single-thread control shrugs off") {
+    // the probe is as wide as the host, as the Bench's 32-way probe is
+    // on its 32-core host: with n cores and n-1 spinners an n-way probe
+    // slows by (2n-1)/n (1.75x at n=4), while a fixed 8-way probe on 4
+    // cores slows by only 11/8 = 1.375x, under the bar by arithmetic
+    val cores = Runtime.getRuntime.availableProcessors()
     // quiet samples first (same JVM, same moment — relative, not pinned)
-    val mcQuiet = Bench.mcControl(threads = 8, reps = 2)
+    val mcQuiet = Bench.mcControl(threads = cores, reps = 2)
     val ctlQuiet = Bench.cpuControl(reps = 1)
     // induce load on MOST cores (nproc-1 spinners): the box still has
     // ~1 free core, so one pinned thread runs near full speed while
-    // 8-way work must time-share
+    // all-core work must time-share
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val spinners = (0 until Runtime.getRuntime.availableProcessors() - 1).map { _ =>
+    val spinners = (0 until cores - 1).map { _ =>
       val t = new Thread(() => { var x = 1L; while (!stop.get()) { x = x * 6364136223846793005L + 1442695040888963407L }; if (x == 42) println("") })
       t.setDaemon(true); t.start(); t
     }
     try {
-      val mcLoaded = Bench.mcControl(threads = 8, reps = 2)
+      val mcLoaded = Bench.mcControl(threads = cores, reps = 2)
       val ctlLoaded = Bench.cpuControl(reps = 1)
       // the discriminating shape, with slack for scheduler jitter: the
       // multi-core factor must move well past the single-thread factor
