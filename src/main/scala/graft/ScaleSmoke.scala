@@ -1078,9 +1078,9 @@ object ScaleSmoke {
       // round 9 (one shard collect+train at a time — 677 s of the 10M
       // point was that loop, round-9 verdict #1) is now the OPERATOR
       // Similarity.buildIvfPqSharded: shard builds run concurrently
-      // on a small pool, and the search merges per-shard top-k with
-      // the distributed window of topkIvfPqSharded instead of a
-      // driver-side sort. IvfPqSpec pins result parity with the old
+      // on a small pool, and the search merges per-shard top-k in
+      // topkIvfPqSharded's one-pass serve instead of a driver-side
+      // sort. IvfPqSpec pins result parity with the old
       // sequential recipe (deterministic training → byte-identical
       // shards), so the recall machinery below measures the same
       // geometry, faster.

@@ -1703,8 +1703,9 @@ object SparkEntry {
 
     // SHARDED IVF+PQ search path, rows-only (the gate below carries
     // correctness; this row times concurrent shard builds + the
-    // distributed window merge — the past-the-broadcast-envelope
-    // composition the 10M smoke measures, round-10 item 1)
+    // one-pass serve that merges the shard top-ks in the task — the
+    // past-the-broadcast-envelope composition the 10M smoke measures,
+    // round-10 item 1)
     "ann_ivfpq_sharded" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.select(col("vec_id"),
@@ -1717,8 +1718,8 @@ object SparkEntry {
     }),
 
     // sharded IVF+PQ recall gate: hash-mod shards, each probing the
-    // same 1/2 cell fraction as the single-index gate, merged with the
-    // distributed window — recall floors match ann_ivfpq_recall's
+    // same 1/2 cell fraction as the single-index gate, merged in the
+    // serve's task — recall floors match ann_ivfpq_recall's
     // (each shard returns its local top-k, so the merged candidate
     // pool only widens); a shard-build or merge regression turns the
     // row red. Exact kernel is ground truth; DuckDB pins the booleans.

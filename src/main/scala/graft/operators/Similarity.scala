@@ -4,11 +4,12 @@ import dev.ludovic.netlib.blas.BLAS
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.InternalRowBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Distributed similarity search — the Spark-native re-expression of
   * the reference's two kernels (`pmm.topk`, `pmm.matmul`;
@@ -277,7 +278,8 @@ object Similarity {
     * array of |corpus| doubles (or floats when both sides are f32,
     * the reference's dtype rule), position j ↔ sorted corpus id j.
     * Query side (refusals, null rows → null scores, batching) is the
-    * [[TopkFrame.rows]] frame's.
+    * [[TopkFrame.rows]] frame's. Each score row is copied once, unboxed,
+    * into an `UnsafeArrayData`.
     */
   def matmul(
       queries: DataFrame,
@@ -302,8 +304,7 @@ object Similarity {
             b.q32, cx.dim, 0.0f, scoresF, n)
           var i = 0
           while (i < b.m) {
-            res(i) = new GenericArrayData(java.util.Arrays.copyOfRange(scoresF, i * n, (i + 1) * n))
-            i += 1
+            res(i) = scoreRow(scoresF, Platform.FLOAT_ARRAY_OFFSET, 4, i, n); i += 1
           }
         } else {
           if (scores.length < b.m * n) scores = new Array[Double](b.m * n)
@@ -311,11 +312,25 @@ object Similarity {
             b.q64, cx.dim, 0.0, scores, n)
           var i = 0
           while (i < b.m) {
-            res(i) = new GenericArrayData(java.util.Arrays.copyOfRange(scores, i * n, (i + 1) * n))
-            i += 1
+            res(i) = scoreRow(scores, Platform.DOUBLE_ARRAY_OFFSET, 8, i, n); i += 1
           }
         }
       }
+    }
+  }
+
+  /** Row `i` of a row-major `n`-wide f32 or f64 score matrix as an
+    * unboxed array: one copy from the matrix while its byte offset fits
+    * an Int, else through a copy of the row.
+    */
+  private def scoreRow(m: AnyRef, base: Int, elem: Int, i: Int, n: Int): UnsafeArrayData = {
+    val off = base + i.toLong * n * elem
+    if (off <= Int.MaxValue) UnsafeArrayData.fromPrimitiveArray(m, off.toInt, n, elem)
+    else m match {
+      case f: Array[Float] =>
+        UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(f, i * n, (i + 1) * n))
+      case d: Array[Double] =>
+        UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(d, i * n, (i + 1) * n))
     }
   }
 
@@ -1116,16 +1131,16 @@ object Similarity {
       numShards, surviving.map(_._2).toIndexedSeq)
   }
 
-  /** Merge per-shard [[topkBq]] serves into a global top-k through
-    * [[serveSharded]]: every shard returns its local reranked top-k
+  /** A global top-k over BQ shards in one pass ([[serveSharded]]):
+    * per query row, every shard's body yields its local reranked top-k
     * (per-shard Hamming shortlists only WIDEN the candidate pool vs
-    * one global shortlist), then one distributed `row_number` keeps k.
-    * Queries must carry `qIdCol`; output is the flat (qIdCol, rank,
-    * index, score) shape of [[topkFlat]] — which means queries with a
-    * NULL embedding produce NO output rows (the per-shard posexplode
-    * of their null match array yields nothing), unlike [[topkBq]]'s
-    * null-passthrough match column. Same shape as every sharded flat
-    * serve ([[topkIvfPqSharded]], [[topkIvfBqSharded]]).
+    * one global shortlist) and the task merges them into k. Queries
+    * must carry `qIdCol`; output is the flat (qIdCol, index, score,
+    * rank) shape of [[topkFlat]], ranked per query row — which means
+    * queries with a NULL embedding produce NO output rows (the
+    * posexplode of their null match array yields nothing), unlike
+    * [[topkBq]]'s null-passthrough match column. Same shape as every
+    * sharded flat serve ([[topkIvfPqSharded]], [[topkIvfBqSharded]]).
     */
   def topkBqSharded(
       queries: DataFrame,
@@ -1183,18 +1198,13 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int,
-      outputCol: String = "matches"): DataFrame = {
-    // validate BEFORE minting the broadcast (a failed require after
-    // broadcastOf leaks an undestroyed broadcast of the whole index)
-    validateBqArgs(k, shortlist)
-    topkBqBc(queries, embCol, broadcastOf(queries.sparkSession, corpus),
-      k, metric, shortlist, outputCol)
-  }
+      outputCol: String = "matches"): DataFrame =
+    serveBq(queries, embCol, Seq(corpus), ShardMasks.Unmasked, k, metric, shortlist, outputCol)
 
   /** FILTERED BQ search — [[topkBq]] restricted to an allowed-id
     * subset (the FAISS `IDSelector` shape the IVF+PQ family already
     * has, [[topkIvfPqFiltered]]): the allowed ids become a boolean
-    * mask over corpus row positions, broadcast beside the index, and
+    * mask over corpus row positions, broadcast with the index, and
     * the kernel skips masked rows BEFORE their XOR+popcount — the
     * Hamming pre-screen itself is filtered, so the shortlist holds
     * only allowed candidates and no over-fetch factor is needed.
@@ -1212,14 +1222,9 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int,
-      outputCol: String = "matches"): DataFrame = {
-    validateBqArgs(k, shortlist)
-    val spark = queries.sparkSession
-    val (mask, nAllowed) = idMask(corpus.ids, sortedIds(allowedIds), null)
-    topkBqBc(queries, embCol, broadcastOf(spark, corpus), k, metric,
-      shortlist, outputCol,
-      maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
-  }
+      outputCol: String = "matches"): DataFrame =
+    serveBq(queries, embCol, Seq(corpus), ShardMasks.Allow(allowedIds), k, metric, shortlist,
+      outputCol)
 
   /** [[topkBqFiltered]] with the allowed set as a one-column
     * DataFrame — the relational form ([[topkIvfPqFiltered]]'s
@@ -1236,14 +1241,9 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int,
-      outputCol: String): DataFrame = {
-    validateBqArgs(k, shortlist)
-    val spark = queries.sparkSession
-    val (mask, nAllowed) = allowedMasksFromDfMulti(Seq(corpus.ids), allowed, allowedIdCol).head
-    topkBqBc(queries, embCol, broadcastOf(spark, corpus), k, metric,
-      shortlist, outputCol,
-      maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
-  }
+      outputCol: String): DataFrame =
+    serveBq(queries, embCol, Seq(corpus), ShardMasks.AllowDf(allowed, allowedIdCol), k, metric,
+      shortlist, outputCol)
 
   /** [[topkBqFiltered]] then explode+unnest — the flat
     * (rank, index, score) shape of [[topkFlat]].
@@ -1281,40 +1281,32 @@ object Similarity {
       s"shortlist must be >= k, got $shortlist (k=$k) — the Hamming pass " +
         "only pre-screens; k results come from the SQ8 rerank")
 
-  /** [[topkBq]] against a CALLER-OWNED broadcast of the index, with
-    * an optional allowed-row mask (see [[topkIvfPqBc]] — the wave
-    * server creates, uses, and DESTROYS its shard broadcasts, so the
-    * plan-building body must not mint its own). Masked rows are skipped
-    * BEFORE their XOR+popcount; k and shortlist clamp as
-    * [[TopkFrame]] states.
+  /** The BQ family's resident serve over one index or many
+    * ([[serveSharded]]): the matches column under `outputCol`.
     */
-  private[graft] def topkBqBc(
-      queries: DataFrame,
-      embCol: String,
-      bc: Broadcast[CorpusIndexBq],
-      k: Int,
-      metric: Metric,
-      shortlist: Int,
-      outputCol: String = "matches",
-      maskBc: Broadcast[Array[Boolean]] = null,
-      allowedCount: Int = -1): DataFrame = {
-    val corpus = bc.value
-    validateBqArgs(k, shortlist)
-    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
-        shortlist, allowedCount) { c =>
-      val cx = bc.value
-      val mask = if (maskBc == null) null else maskBc.value
-      new BqBody(cx.ids, cx.thresholds, cx.nWords, c.sl, cx.sq8, metric) {
-        def screen(b: QueryBatch, i: Int, qWords: Array[Long], ham: TopSelector): Unit = {
-          var g = 0
-          while (g < cx.n) {
-            if (mask == null || mask(g)) ham.offer(hamming(qWords, cx.words, g * cx.nWords), g)
-            g += 1
-          }
+  private def serveBq(
+      queries: DataFrame, embCol: String, shards: Seq[CorpusIndexBq], masks: ShardMasks,
+      k: Int, metric: Metric, shortlist: Int, outputCol: String): DataFrame =
+    serveSharded(queries, embCol, outputCol, shards, masks, k, shortlist,
+        metric.higherIsBetter)(_.ids, _.dim, _ => validateBqArgs(k, shortlist)) {
+      (cx, mask, c, _) => bqBody(cx, mask, c, metric)
+    }
+
+  /** The BQ row body over one index: every row not masked out is
+    * screened (masked rows skip their XOR+popcount), k and the
+    * shortlist clamped as [[TopkFrame]] states.
+    */
+  private def bqBody(
+      cx: CorpusIndexBq, mask: Array[Boolean], c: TopkFrame.Clamp, metric: Metric): TopkBody =
+    new BqBody(cx.ids, cx.thresholds, cx.nWords, c.sl, cx.sq8, metric) {
+      def screen(b: QueryBatch, i: Int, qWords: Array[Long], ham: TopSelector): Unit = {
+        var g = 0
+        while (g < cx.n) {
+          if (mask == null || mask(g)) ham.offer(hamming(qWords, cx.words, g * cx.nWords), g)
+          g += 1
         }
       }
     }
-  }
 
   /** The BQ / IVF-BQ row body: sign-encode the query, let the family's
     * `screen` offer Hamming distances (masked rows skipped before their
@@ -1389,22 +1381,6 @@ object Similarity {
       shortlist: Int): DataFrame =
     flattenMatches(topkBq(queries, embCol, corpus, k, metric, shortlist, "matches"), embCol)
 
-  /** [[topkBqFlat]] over a caller-owned broadcast (see [[topkBqBc]])
-    * — the BQ wave server's per-shard partial.
-    */
-  private[graft] def topkBqFlatBc(
-      queries: DataFrame,
-      embCol: String,
-      bc: Broadcast[CorpusIndexBq],
-      k: Int,
-      metric: Metric,
-      shortlist: Int,
-      maskBc: Broadcast[Array[Boolean]] = null,
-      allowedCount: Int = -1): DataFrame =
-    flattenMatches(
-      topkBqBc(queries, embCol, bc, k, metric, shortlist, "matches",
-        maskBc, allowedCount), embCol)
-
   /** [[topkBqSharded]] restricted to an allowed-id subset — the
     * sharded composition of [[topkBqFiltered]] (allow mask of
     * [[serveSharded]]).
@@ -1454,23 +1430,20 @@ object Similarity {
     serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Deny(tombstoneIds), k, metric,
       shortlist)
 
-  /** The BQ family's [[serveSharded]] kernel (output keeps only
-    * `(qIdCol, index, score, rank)`).
+  /** The BQ family's flat sharded serve: [[serveBq]] over
+    * `(qIdCol, embCol)`, so the output keeps only
+    * `(qIdCol, index, score, rank)`.
     */
   private def serveBqSharded(
       queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexBq],
-      masks: ShardMasks, k: Int, metric: Metric, shortlist: Int): DataFrame = {
-    val q = queries.select(col(qIdCol), col(embCol))
-    serveSharded(queries, qIdCol, shards, masks, k, metric)(
-      _.ids, _ => validateBqArgs(k, shortlist)) { (bc, maskBc, nAllowed) =>
-      topkBqFlatBc(q, embCol, bc, k, metric, shortlist, maskBc, nAllowed)
-    }
-  }
+      masks: ShardMasks, k: Int, metric: Metric, shortlist: Int): DataFrame =
+    shardedFlat(serveBq(queries.select(col(qIdCol), col(embCol)), embCol, shards, masks, k,
+      metric, shortlist, "matches"), embCol)
 
   /** [[topkBqSharded]] with BOUNDED broadcast memory — the BQ family
     * member of [[topkIvfPqShardedWaves]]: the plain sharded form
-    * unions all B per-shard plans into one job, so every executor
-    * pins every shard's broadcast simultaneously — the bits AND the
+    * broadcasts all B shards in one payload, so every executor
+    * pins every shard simultaneously — the bits AND the
     * 8× larger SQ8 rerank envelope, i.e. the TOTAL index, exactly
     * the per-executor ceiling sharding exists to break (2.75 GB at
     * 10M×256, growing linearly). This form serves the shards in
@@ -1530,8 +1503,8 @@ object Similarity {
     topkShardedWavesCore[CorpusIndexBq](
       queries.sparkSession, qIdCol, metric, shardProviders, _.ids,
       validateBqArgs(k, shortlist),
-      partialOf = (bc, maskBc, nAllowed) =>
-        topkBqFlatBc(q, embCol, bc, k, metric, shortlist, maskBc, nAllowed),
+      partialOf = (bc, maskBc, nAllowed) => wavePartial(q, embCol, bc, maskBc, nAllowed,
+        bc.value.n, bc.value.dim, k, shortlist, metric.higherIsBetter)(bqBody(_, _, _, metric)),
       k = k, waveSize = waveSize, scratch = scratch,
       meter = meter, memoryPartials = memoryPartials,
       allowedIds = allowedIds, deniedIds = deniedIds)
@@ -1672,11 +1645,9 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int,
-      outputCol: String = "matches"): DataFrame = {
-    validateIvfBqArgs(k, nProbe, shortlist)
-    topkIvfBqBc(queries, embCol, broadcastOf(queries.sparkSession, corpus),
-      k, nProbe, shortlist, outputCol)
-  }
+      outputCol: String = "matches"): DataFrame =
+    serveIvfBq(queries, embCol, Seq(corpus), ShardMasks.Unmasked, k, nProbe, shortlist,
+      outputCol)
 
   /** FILTERED IVF+BQ search — [[topkIvfBq]] restricted to an
     * allowed-id subset: the mask skips masked members of the probed
@@ -1694,14 +1665,9 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int,
-      outputCol: String = "matches"): DataFrame = {
-    validateIvfBqArgs(k, nProbe, shortlist)
-    val spark = queries.sparkSession
-    val (mask, nAllowed) = idMask(corpus.ids, sortedIds(allowedIds), null)
-    topkIvfBqBc(queries, embCol, broadcastOf(spark, corpus), k, nProbe,
-      shortlist, outputCol,
-      maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
-  }
+      outputCol: String = "matches"): DataFrame =
+    serveIvfBq(queries, embCol, Seq(corpus), ShardMasks.Allow(allowedIds), k, nProbe, shortlist,
+      outputCol)
 
   /** [[topkIvfBqFiltered]] then explode+unnest — the flat
     * (rank, index, score) shape of [[topkFlat]].
@@ -1726,46 +1692,39 @@ object Similarity {
         "only pre-screens; k results come from the SQ8 rerank")
   }
 
-  /** [[topkIvfBq]] against a CALLER-OWNED broadcast with an optional
-    * allowed-row mask (the [[topkBqBc]] / [[topkIvfPqBc]] shape —
-    * wave servers own their broadcasts; masked members skip their
-    * popcount inside the probed-cell scan; k clamps to the allowed
-    * population).
+  /** The IVF+BQ family's resident serve over one index or many
+    * ([[serveSharded]], cosine): the matches column under `outputCol`.
     */
-  private[graft] def topkIvfBqBc(
-      queries: DataFrame,
-      embCol: String,
-      bc: Broadcast[CorpusIndexIvfBq],
-      k: Int,
-      nProbe: Int,
-      shortlist: Int,
-      outputCol: String = "matches",
-      maskBc: Broadcast[Array[Boolean]] = null,
-      allowedCount: Int = -1): DataFrame = {
-    val corpus = bc.value
-    validateIvfBqArgs(k, nProbe, shortlist)
-    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, higher = true,
-        shortlist, allowedCount) { c =>
-      val cx = bc.value
-      val mask = if (maskBc == null) null else maskBc.value
-      val probe = new CellProbe(cx.centroids, cx.nCells, cx.dim, nProbe)
-      new BqBody(cx.ids, cx.thresholds, cx.nWords, c.sl, cx.sq8, Metric.Cosine) {
-        // bits stream SEQUENTIALLY (CSR-position layout); only the
-        // shortlist bookkeeping touches the member indirection
-        def screen(b: QueryBatch, i: Int, qWords: Array[Long], ham: TopSelector): Unit = {
-          probe.pick(b.q64, i * b.dim)
-          var pi = 0
-          while (pi < probe.sel.size) {
-            val cell = probe.sel.pos(pi)
-            var mi = cx.cellStart(cell)
-            val end = cx.cellStart(cell + 1)
-            while (mi < end) {
-              val g = cx.cellMembers(mi)
-              if (mask == null || mask(g)) ham.offer(hamming(qWords, cx.words, mi * cx.nWords), g)
-              mi += 1
-            }
-            pi += 1
+  private def serveIvfBq(
+      queries: DataFrame, embCol: String, shards: Seq[CorpusIndexIvfBq], masks: ShardMasks,
+      k: Int, nProbe: Int, shortlist: Int, outputCol: String): DataFrame =
+    serveSharded(queries, embCol, outputCol, shards, masks, k, shortlist, higher = true)(
+        _.ids, _.dim, _ => validateIvfBqArgs(k, nProbe, shortlist)) {
+      (cx, mask, c, _) => ivfBqBody(cx, mask, c, nProbe)
+    }
+
+  /** The IVF+BQ row body over one index: masked members of the probed
+    * cells skip their popcount; k clamps to the allowed population.
+    */
+  private def ivfBqBody(
+      cx: CorpusIndexIvfBq, mask: Array[Boolean], c: TopkFrame.Clamp, nProbe: Int): TopkBody = {
+    val probe = new CellProbe(cx.centroids, cx.nCells, cx.dim, nProbe)
+    new BqBody(cx.ids, cx.thresholds, cx.nWords, c.sl, cx.sq8, Metric.Cosine) {
+      // bits stream SEQUENTIALLY (CSR-position layout); only the
+      // shortlist bookkeeping touches the member indirection
+      def screen(b: QueryBatch, i: Int, qWords: Array[Long], ham: TopSelector): Unit = {
+        probe.pick(b.q64, i * b.dim)
+        var pi = 0
+        while (pi < probe.sel.size) {
+          val cell = probe.sel.pos(pi)
+          var mi = cx.cellStart(cell)
+          val end = cx.cellStart(cell + 1)
+          while (mi < end) {
+            val g = cx.cellMembers(mi)
+            if (mask == null || mask(g)) ham.offer(hamming(qWords, cx.words, mi * cx.nWords), g)
+            mi += 1
           }
+          pi += 1
         }
       }
     }
@@ -1904,22 +1863,6 @@ object Similarity {
     serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Unmasked, k, nProbe,
       shortlist)
 
-  /** [[topkIvfBqFlat]] over a caller-owned broadcast (see
-    * [[topkIvfBqBc]]) — the wave server's per-shard partial.
-    */
-  private[graft] def topkIvfBqFlatBc(
-      queries: DataFrame,
-      embCol: String,
-      bc: Broadcast[CorpusIndexIvfBq],
-      k: Int,
-      nProbe: Int,
-      shortlist: Int,
-      maskBc: Broadcast[Array[Boolean]] = null,
-      allowedCount: Int = -1): DataFrame =
-    flattenMatches(
-      topkIvfBqBc(queries, embCol, bc, k, nProbe, shortlist, "matches",
-        maskBc, allowedCount), embCol)
-
   /** [[topkIvfBqSharded]] restricted to an allowed-id subset — the
     * [[topkBqShardedFiltered]] composition over the routed form (allow
     * mask of [[serveSharded]]).
@@ -1969,18 +1912,15 @@ object Similarity {
     serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Deny(tombstoneIds), k,
       nProbe, shortlist)
 
-  /** The IVF+BQ family's [[serveSharded]] kernel (output keeps only
-    * `(qIdCol, index, score, rank)`).
+  /** The IVF+BQ family's flat sharded serve: [[serveIvfBq]] over
+    * `(qIdCol, embCol)`, so the output keeps only
+    * `(qIdCol, index, score, rank)`.
     */
   private def serveIvfBqSharded(
       queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexIvfBq],
-      masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    val q = queries.select(col(qIdCol), col(embCol))
-    serveSharded(queries, qIdCol, shards, masks, k, Metric.Cosine)(
-      _.ids, _ => validateIvfBqArgs(k, nProbe, shortlist)) { (bc, maskBc, nAllowed) =>
-      topkIvfBqFlatBc(q, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed)
-    }
-  }
+      masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int): DataFrame =
+    shardedFlat(serveIvfBq(queries.select(col(qIdCol), col(embCol)), embCol, shards, masks, k,
+      nProbe, shortlist, "matches"), embCol)
 
   /** [[topkIvfBqSharded]] with BOUNDED broadcast memory — the routed
     * sibling of [[topkBqShardedWaves]] on the shared wave machinery
@@ -2029,8 +1969,8 @@ object Similarity {
     topkShardedWavesCore[CorpusIndexIvfBq](
       queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
       validateIvfBqArgs(k, nProbe, shortlist),
-      partialOf = (bc, maskBc, nAllowed) =>
-        topkIvfBqFlatBc(q, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed),
+      partialOf = (bc, maskBc, nAllowed) => wavePartial(q, embCol, bc, maskBc, nAllowed,
+        bc.value.n, bc.value.dim, k, shortlist, higher = true)(ivfBqBody(_, _, _, nProbe)),
       k = k, waveSize = waveSize, scratch = scratch,
       meter = meter, memoryPartials = memoryPartials,
       allowedIds = allowedIds, deniedIds = deniedIds)
@@ -2481,13 +2421,9 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0,
-      outputCol: String = "matches"): DataFrame = {
-    validateIvfPqArgs(corpus.ivf, k, nProbe, shortlist, corpus.rot)
-    val spark = queries.sparkSession
-    topkIvfPqBc(queries, embCol, broadcastOf(spark, corpus.ivf), k, nProbe,
-      shortlist, outputCol,
-      rotBc = spark.sparkContext.broadcast(corpus.rot))
-  }
+      outputCol: String = "matches"): DataFrame =
+    serveIvfPq(queries, embCol, Seq(corpus.ivf), ShardMasks.Unmasked, k, nProbe, shortlist,
+      outputCol, corpus.rot)
 
   /** [[topkIvfOpq]] exploded to the flat (query, rank, index, score)
     * shape of [[topkFlat]].
@@ -2581,9 +2517,9 @@ object Similarity {
 
   /** Top-k cosine against a sharded IVF+OPQ index — the
     * [[topkIvfPqSharded]] serve ([[serveSharded]]) with every shard's
-    * kernel rotating the query first (ONE rotation broadcast shared by
-    * all shard partials; scores from all shards live in the same
-    * rotated space because the build used one corpus-wide R).
+    * body rotating the query first (ONE rotation, riding the shards'
+    * broadcast; scores from all shards live in the same rotated space
+    * because the build used one corpus-wide R).
     */
   def topkIvfOpqSharded(
       queries: DataFrame,
@@ -3045,21 +2981,16 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0,
-      outputCol: String = "matches"): DataFrame = {
-    // validate BEFORE minting the broadcast: a failed require after
-    // broadcastOf leaks an undestroyed broadcast of the whole index
-    // (round-11 advisor)
-    validateIvfPqArgs(corpus, k, nProbe, shortlist)
-    topkIvfPqBc(queries, embCol,
-      broadcastOf(queries.sparkSession, corpus), k, nProbe, shortlist, outputCol)
-  }
+      outputCol: String = "matches"): DataFrame =
+    serveIvfPq(queries, embCol, Seq(corpus), ShardMasks.Unmasked, k, nProbe, shortlist,
+      outputCol)
 
   /** FILTERED IVF+PQ search — [[topkIvfPq]] restricted to an
     * allowed-id subset of the corpus (the vector-DB "metadata filter"
     * / FAISS `IDSelector` shape: serve top-k among documents matching
     * a predicate WITHOUT rebuilding a per-predicate index). The
     * allowed ids become a boolean mask over corpus row indices,
-    * broadcast beside the index (1 byte/corpus row — noise next to
+    * broadcast with the index (1 byte/corpus row — noise next to
     * the codes), and the kernel skips masked-out members INSIDE the
     * probed-cell scan, before their ADC dot. That pre-filter is exact
     * w.r.t. the probed cells, so no over-fetch factor is needed — but
@@ -3072,10 +3003,10 @@ object Similarity {
     * clamps to |allowed ∩ corpus| ([[TopkFrame]]'s mask clamp). An
     * all-true mask is bit-identical to [[topkIvfPq]].
     *
-    * Broadcast lifetime: the returned plan is LAZY, so the index and
-    * mask broadcasts this call mints cannot be destroyed eagerly —
-    * they live until Spark's ContextCleaner collects the unreferenced
-    * plan. A long-lived driver issuing many filtered serves should
+    * Broadcast lifetime: the returned plan is LAZY, so the one
+    * broadcast (index and mask) this call mints cannot be destroyed
+    * eagerly — it lives until Spark's ContextCleaner collects the
+    * unreferenced plan. A long-lived driver issuing many filtered serves should
     * prefer [[topkIvfPqShardedWaves]] (with `allowedIds`), which owns
     * its broadcasts per-wave and destroys them with each wave.
     */
@@ -3087,14 +3018,9 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0,
-      outputCol: String = "matches"): DataFrame = {
-    validateIvfPqArgs(corpus, k, nProbe, shortlist)
-    val (mask, nAllowed) = idMask(corpus.ids, sortedIds(allowedIds), null)
-    val spark = queries.sparkSession
-    topkIvfPqBc(queries, embCol, broadcastOf(spark, corpus),
-      k, nProbe, shortlist, outputCol,
-      maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
-  }
+      outputCol: String = "matches"): DataFrame =
+    serveIvfPq(queries, embCol, Seq(corpus), ShardMasks.Allow(allowedIds), k, nProbe, shortlist,
+      outputCol)
 
   /** [[topkIvfPqFiltered]] with the allowed set as a one-column
     * DataFrame — the relational form. The allowed ids NEVER collect
@@ -3115,14 +3041,9 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int,
-      outputCol: String): DataFrame = {
-    validateIvfPqArgs(corpus, k, nProbe, shortlist)
-    val (mask, nAllowed) = allowedMasksFromDfMulti(Seq(corpus.ids), allowed, allowedIdCol).head
-    val spark = queries.sparkSession
-    topkIvfPqBc(queries, embCol, broadcastOf(spark, corpus),
-      k, nProbe, shortlist, outputCol,
-      maskBc = spark.sparkContext.broadcast(mask), allowedCount = nAllowed)
-  }
+      outputCol: String): DataFrame =
+    serveIvfPq(queries, embCol, Seq(corpus), ShardMasks.AllowDf(allowed, allowedIdCol), k,
+      nProbe, shortlist, outputCol)
 
   /** Executor-side mask build for the DataFrame-allowed forms, for
     * MANY id arrays (one per shard; a flat index is the one-shard
@@ -3267,72 +3188,94 @@ object Similarity {
     final case class Deny(ids: Array[Long]) extends ShardMasks
   }
 
-  /** The one resident sharded serve behind every family's
-    * `topk{Bq,IvfBq,IvfPq}Sharded`, `…ShardedFiltered` (id-array and
-    * DataFrame forms), `…ShardedTombstoned` and [[topkIvfOpqSharded]].
-    * The family passes its shards' ids, its argument check and its
-    * kernel partial (a `topk*FlatBc` over the shard's broadcast).
+  /** The one resident serve behind every family's one-index serves
+    * (`topk{Bq,IvfBq,IvfPq,IvfOpq}` and the `…Filtered` forms: the
+    * one-shard case) and its 13 resident sharded serves
+    * (`topk{Bq,IvfBq,IvfPq}Sharded`, `…ShardedFiltered` by id array and
+    * by DataFrame, `…ShardedTombstoned`, [[topkIvfOpqSharded]]). The
+    * family passes its shards' ids and dimension, its argument check
+    * and its row body (`bqBody`, `ivfBqBody`, `ivfPqBody`: shard, mask,
+    * clamp and the OPQ rotation → [[TopkBody]]).
     *
-    *  - Validation: `check` runs on every shard BEFORE the first mask
-    *    job or broadcast, so a refused call mints nothing.
+    *  - Validation: `check` runs on every shard, the shards' dimensions
+    *    must agree, and the query column must be `array<float>` or
+    *    `array<double>` ([[TopkFrame.queryIsF32]]), all BEFORE the first
+    *    mask job or broadcast, so a refused call mints nothing.
     *  - Masks: `Unmasked` serves through the unmasked kernel path;
     *    `Allow`/`Deny` sort the set once and build each shard's
     *    [[idMask]] (ids living in other shards fall out as not-found,
     *    exactly the per-shard intersection); `AllowDf` builds every
     *    shard's mask in one distributed pass
     *    ([[allowedMasksFromDfMulti]]) without collecting the set.
-    *  - k clamp: each shard returns min(k, served rows in the shard),
-    *    so k > |allowed ∩ corpus| (or > the LIVE population under
-    *    `Deny`) returns every served row; an empty intersection
-    *    returns no rows.
-    *  - Merge: [[mergeShardPartials]] — score desc for higher-is-better
-    *    metrics (asc otherwise), ties to the lowest index, the exact
-    *    kernel's rule; output `(query columns…, index, score, rank)`.
-    *  - Broadcast lifetime: the plan is LAZY, so the shard and mask
-    *    broadcasts it mints cannot be destroyed eagerly — they live
-    *    until Spark's ContextCleaner collects the unreferenced plan,
-    *    and every executor pins every shard at once. Long-lived
-    *    drivers and indexes past one executor's memory should serve
-    *    through the `…ShardedWaves` forms ([[topkShardedWavesCore]]),
-    *    which destroy each wave's broadcasts.
+    *  - One pass: ONE broadcast holds the shards, their masks and
+    *    `rot`, and one [[TopkFrame.selectShards]] pass runs every
+    *    shard's body per query row into its own selector (k clamped to
+    *    the served rows in that shard) and merges them in the task —
+    *    score desc for higher-is-better metrics (asc otherwise), ties to
+    *    the lowest index, the exact kernel's rule — into min(k, Σ served)
+    *    matches per query ROW under `outputCol`. k above the allowed (or
+    *    LIVE, under `Deny`) population returns every served row; an
+    *    empty intersection returns empty matches. No shuffle, one job.
+    *  - Parallelism: with more than one shard, a query frame with fewer
+    *    partitions P than the default parallelism is split to
+    *    min(default parallelism, P × shards) partitions first
+    *    ([[TopkFrame.rows]]), so a small query frame still spreads over
+    *    the cores as the per-shard partials did.
+    *  - Broadcast lifetime: the plan is LAZY, so its broadcast cannot be
+    *    destroyed eagerly — it lives until Spark's ContextCleaner
+    *    collects the unreferenced plan, and every executor pins every
+    *    shard at once. Long-lived drivers and indexes past one
+    *    executor's memory should serve through the `…ShardedWaves`
+    *    forms ([[topkShardedWavesCore]]), which destroy each wave's
+    *    broadcasts.
     */
   private def serveSharded[I <: AnyRef: scala.reflect.ClassTag](
       queries: DataFrame,
-      qIdCol: String,
+      embCol: String,
+      outputCol: String,
       shards: Seq[I],
       masks: ShardMasks,
       k: Int,
-      metric: Metric)(
+      shortlist: Int,
+      higher: Boolean,
+      rot: Array[Double] = null)(
       ids: I => Array[Long],
+      dim: I => Int,
       check: I => Unit)(
-      partial: (Broadcast[I], Broadcast[Array[Boolean]], Int) => DataFrame): DataFrame = {
+      body: (I, Array[Boolean], TopkFrame.Clamp, Array[Double]) => TopkBody): DataFrame = {
     require(shards.nonEmpty, "Empty shard list")
     shards.foreach(check)
+    val d = dim(shards.head)
+    shards.foreach(sx => require(dim(sx) == d,
+      s"Dimension mismatch: shards have $d and ${dim(sx)} dimensions"))
+    TopkFrame.queryIsF32(queries.schema, embCol)
     val spark = queries.sparkSession
-    val shardMasks = masks match {
+    val shardMasks = (masks match {
       case ShardMasks.Unmasked => shards.map(_ => (null: Array[Boolean], -1))
       case ShardMasks.Allow(a) =>
         val sorted = sortedIds(a)
         shards.map(sx => idMask(ids(sx), sorted, null))
-      case ShardMasks.Deny(d) =>
-        val sorted = sortedIds(d)
+      case ShardMasks.Deny(dn) =>
+        val sorted = sortedIds(dn)
         shards.map(sx => idMask(ids(sx), null, sorted))
       case ShardMasks.AllowDf(allowed, idCol) =>
         allowedMasksFromDfMulti(shards.map(ids), allowed, idCol)
+    }).toArray
+    val bc = broadcastOf(spark, (shards.toArray, shardMasks.map(_._1), rot))
+    TopkFrame.selectShards(queries, embCol, outputCol, d, shards.map(ids(_).length).toArray, k,
+        higher, shortlist, shardMasks.map(_._2)) { (s, c) =>
+      val (sx, ms, r) = bc.value
+      body(sx(s), ms(s), c, r)
     }
-    val partials = shards.zip(shardMasks).map { case (sx, (mask, nAllowed)) =>
-      partial(broadcastOf(spark, sx),
-        if (mask == null) null else spark.sparkContext.broadcast(mask), nAllowed)
-    }
-    mergeShardPartials(partials, qIdCol, k, metric)
   }
 
-  /** The distributed union + row_number merge every sharded serve
-    * ends with — the resident serves, each wave's cut and the final
-    * wave merge, and [[topkBlocked]]: a partial's own `rank` is
+  /** The distributed union + row_number merge of the serves that
+    * build one partial per shard or block — each wave's cut and the
+    * final wave merge, and [[topkBlocked]] (the resident serves merge
+    * in the task, [[serveSharded]]): a partial's own `rank` is
     * dropped, then metric-aware ordering (score desc for
     * higher-is-better metrics, asc otherwise; ties to the lowest
-    * index, the exact kernel's rule) keeps k rows per query.
+    * index, the exact kernel's rule) keeps k rows per `qIdCol` value.
     */
   private def mergeShardPartials(
       partials: Seq[DataFrame], qIdCol: String, k: Int, metric: Metric): DataFrame = {
@@ -3345,10 +3288,10 @@ object Similarity {
   }
 
   /** The IVF+PQ argument contract, shared by the broadcast-owning
-    * wrappers (which must validate before they broadcast) and
-    * [[topkIvfPqBc]] (whose callers hand it an already-minted
-    * broadcast): [[validateIvfPqCall]], the SQ8 sidecar a rerank
-    * needs, and a non-null OPQ `rot`'s shape.
+    * serves (which must validate before they broadcast) and the
+    * IVF+PQ wave partial (whose shard is already broadcast):
+    * [[validateIvfPqCall]], the SQ8 sidecar a rerank needs, and a
+    * non-null OPQ `rot`'s shape.
     */
   private def validateIvfPqArgs(
       corpus: CorpusIndexIvfPq, k: Int, nProbe: Int, shortlist: Int,
@@ -3370,61 +3313,54 @@ object Similarity {
       s"shortlist must be 0 (off) or >= k, got $shortlist (k=$k)")
   }
 
-  /** [[topkIvfPq]] against a CALLER-OWNED broadcast of the index —
-    * the wave server ([[topkIvfPqShardedWaves]]) creates, uses, and
-    * DESTROYS its shard broadcasts explicitly, so the plan-building
-    * body must not mint its own. Driver-side metadata (k clamp,
-    * shortlist floor, schema) reads `bc.value`, which on the driver
-    * is the local object — no deserialization. A mask skips
-    * masked-out members INSIDE the probed-cell scan, before their ADC
-    * dot (the FAISS IDSelector analog: exact w.r.t. the probed cells,
-    * no post-filter over-fetch); `rotBc` is the OPQ rotation
+  /** The IVF+PQ/OPQ family's resident serve over one index or many
+    * ([[serveSharded]], cosine): the matches column under `outputCol`;
+    * a non-null `rot` (IVF+OPQ) is checked against each shard and rides
+    * the one broadcast.
+    */
+  private def serveIvfPq(
+      queries: DataFrame, embCol: String, shards: Seq[CorpusIndexIvfPq], masks: ShardMasks,
+      k: Int, nProbe: Int, shortlist: Int, outputCol: String,
+      rot: Array[Double] = null): DataFrame =
+    serveSharded(queries, embCol, outputCol, shards, masks, k, shortlist, higher = true, rot)(
+        _.ids, _.dim, validateIvfPqArgs(_, k, nProbe, shortlist, rot)) {
+      (cx, mask, c, r) => ivfPqBody(cx, mask, c, nProbe, r)
+    }
+
+  /** The IVF+PQ row body over one index: a mask skips masked-out
+    * members INSIDE the probed-cell scan, before their ADC dot (the
+    * FAISS IDSelector analog: exact w.r.t. the probed cells, no
+    * post-filter over-fetch); a non-null `rot` is the OPQ rotation
     * ([[AdcBody]]).
     */
-  private[graft] def topkIvfPqBc(
-      queries: DataFrame,
-      embCol: String,
-      bc: Broadcast[CorpusIndexIvfPq],
-      k: Int,
-      nProbe: Int,
-      shortlist: Int = 0,
-      outputCol: String = "matches",
-      maskBc: Broadcast[Array[Boolean]] = null,
-      allowedCount: Int = -1,
-      rotBc: Broadcast[Array[Double]] = null): DataFrame = {
-    val corpus = bc.value
-    validateIvfPqArgs(corpus, k, nProbe, shortlist, if (rotBc == null) null else rotBc.value)
-    TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, higher = true,
-        shortlist, allowedCount) { c =>
-      val cx = bc.value
-      val mask = if (maskBc == null) null else maskBc.value
-      val sq8 = cx.sq8.orNull
-      val probe = new CellProbe(cx.centroids, cx.nCells, cx.dim, nProbe)
-      new AdcBody(cx.ids, cx.dim, cx.m, cx.codebooks, if (rotBc == null) null else rotBc.value,
-          c.sl, true) {
-        // each probed member scores its cell's centroid dot plus its
-        // residual ADC dot, over |q|: cosine with no norm lookup
-        def scan(q: Array[Double], qo: Int, b: QueryBatch, i: Int, into: TopSelector): Unit = {
-          probe.pick(q, qo)
-          var pi = 0
-          while (pi < probe.sel.size) {
-            val cell = probe.sel.pos(pi)
-            val qc = probe.dots(cell)
-            var mi = cx.cellStart(cell)
-            val end = cx.cellStart(cell + 1)
-            while (mi < end) {
-              val g = cx.cellMembers(mi)
-              if (mask == null || mask(g))
-                into.offer(unitCosine(adcDot(lut, cx.codes, g * cx.m, cx.m, qc), b.qNorm(i)), g)
-              mi += 1
-            }
-            pi += 1
+  private def ivfPqBody(
+      cx: CorpusIndexIvfPq, mask: Array[Boolean], c: TopkFrame.Clamp, nProbe: Int,
+      rot: Array[Double]): TopkBody = {
+    val sq8 = cx.sq8.orNull
+    val probe = new CellProbe(cx.centroids, cx.nCells, cx.dim, nProbe)
+    new AdcBody(cx.ids, cx.dim, cx.m, cx.codebooks, rot, c.sl, true) {
+      // each probed member scores its cell's centroid dot plus its
+      // residual ADC dot, over |q|: cosine with no norm lookup
+      def scan(q: Array[Double], qo: Int, b: QueryBatch, i: Int, into: TopSelector): Unit = {
+        probe.pick(q, qo)
+        var pi = 0
+        while (pi < probe.sel.size) {
+          val cell = probe.sel.pos(pi)
+          val qc = probe.dots(cell)
+          var mi = cx.cellStart(cell)
+          val end = cx.cellStart(cell + 1)
+          while (mi < end) {
+            val g = cx.cellMembers(mi)
+            if (mask == null || mask(g))
+              into.offer(unitCosine(adcDot(lut, cx.codes, g * cx.m, cx.m, qc), b.qNorm(i)), g)
+            mi += 1
           }
+          pi += 1
         }
-        // the SQ8-residual rerank: v̂ ≈ c(g) + r̂(g)
-        def rerank(q: Array[Double], qo: Int, b: QueryBatch, i: Int, g: Int): Double =
-          unitCosine(sq8Dot(sq8, g, q, qo, probe.dots(cx.cellOf(g))), b.qNorm(i))
       }
+      // the SQ8-residual rerank: v̂ ≈ c(g) + r̂(g)
+      def rerank(q: Array[Double], qo: Int, b: QueryBatch, i: Int, g: Int): Double =
+        unitCosine(sq8Dot(sq8, g, q, qo, probe.dots(cx.cellOf(g))), b.qNorm(i))
     }
   }
 
@@ -3444,22 +3380,19 @@ object Similarity {
     flattenMatches(
       topkIvfPq(queries, embCol, corpus, k, nProbe, shortlist, "matches"), embCol)
 
-  /** [[topkIvfPqFlat]] over a caller-owned broadcast (see
-    * [[topkIvfPqBc]]) — the wave server's per-shard partial.
+  /** A wave's per-shard partial: the family's row `body` over a
+    * CALLER-OWNED broadcast of the shard `bc` and its optional mask,
+    * flattened. The wave server creates, uses and DESTROYS its shard
+    * broadcasts, so the plan-building body must not mint its own;
+    * driver-side metadata (k clamp, schema) reads `bc.value`, which on
+    * the driver is the local object — no deserialization.
     */
-  private[graft] def topkIvfPqFlatBc(
-      queries: DataFrame,
-      embCol: String,
-      bc: Broadcast[CorpusIndexIvfPq],
-      k: Int,
-      nProbe: Int,
-      shortlist: Int = 0,
-      maskBc: Broadcast[Array[Boolean]] = null,
-      allowedCount: Int = -1,
-      rotBc: Broadcast[Array[Double]] = null): DataFrame =
-    flattenMatches(
-      topkIvfPqBc(queries, embCol, bc, k, nProbe, shortlist, "matches",
-        maskBc, allowedCount, rotBc), embCol)
+  private def wavePartial[I](
+      queries: DataFrame, embCol: String, bc: Broadcast[I], maskBc: Broadcast[Array[Boolean]],
+      nAllowed: Int, n: Int, dim: Int, k: Int, shortlist: Int, higher: Boolean)(
+      body: (I, Array[Boolean], TopkFrame.Clamp) => TopkBody): DataFrame =
+    flattenMatches(TopkFrame.select(queries, embCol, "matches", dim, n, k, higher, shortlist,
+        nAllowed) { c => body(bc.value, if (maskBc == null) null else maskBc.value, c) }, embCol)
 
   private def flattenMatches(withMatches: DataFrame, embCol: String): DataFrame =
     withMatches
@@ -3469,6 +3402,15 @@ object Similarity {
       .withColumn("index", col("m.index"))
       .withColumn("score", col("m.score"))
       .drop("rank0", "m", embCol)
+
+  /** A resident sharded serve's flat rows: [[flattenMatches]] with
+    * `rank` last — `(query columns…, index, score, rank)`, one row per
+    * (query row, match).
+    */
+  private def shardedFlat(matches: DataFrame, embCol: String): DataFrame = {
+    val flat = flattenMatches(matches, embCol)
+    flat.select((flat.columns.filter(_ != "rank").map(col).toSeq :+ col("rank")): _*)
+  }
 
   /** `quantized = true` runs each block through the SQ8 path: each
     * block quantizes INSIDE its collect task and the f64 pack is
@@ -3770,22 +3712,23 @@ object Similarity {
       surviving.map(_._1).toIndexedSeq, numShards, surviving.map(_._2).toIndexedSeq)
   }
 
-  /** Top-k cosine against a SHARDED IVF+PQ index: every shard serves
-    * the query batch through [[topkIvfPqFlat]] (same ADC / optional
-    * SQ8-residual-rerank contract), and the per-shard partials merge
-    * DISTRIBUTED through [[serveSharded]] — one `row_number` shuffle
-    * instead of the round-9 smoke's driver-side collect+sort. Scores
-    * from different shards approximate the same cosine, so they merge
-    * directly; ties pin to the lowest index, matching the exact kernel
-    * (reference topk.rs:28-31). Keeps every query column.
+  /** Top-k cosine against a SHARDED IVF+PQ index in one pass
+    * ([[serveSharded]]): per query row, every shard's [[topkIvfPq]]
+    * body (same ADC / optional SQ8-residual-rerank contract) fills its
+    * own selector and the task merges them — one job, no shuffle.
+    * Scores from different shards approximate the same cosine, so they
+    * merge directly; ties pin to the lowest index, matching the exact
+    * kernel (reference topk.rs:28-31). Keeps every query column; ranks
+    * are per query row.
     *
-    * MEMORY NOTE: this form unions all B per-shard plans into one
-    * job, so every executor holds every shard's broadcast
-    * simultaneously — per-executor memory equals the TOTAL
-    * compressed index. Fine while Σ shards fits the executor
-    * envelope; past it, use [[topkIvfPqShardedWaves]], which bounds
-    * peak broadcast memory to one wave's shards for ~8% extra wall
-    * (measured at 10M×256: 0.88 GB peak vs 3.53 GB, identical rows).
+    * MEMORY NOTE: this form broadcasts all B shards in one payload, so
+    * every executor holds every shard simultaneously — per-executor
+    * memory equals the TOTAL compressed index. Fine while Σ shards
+    * fits the executor envelope; past it, use
+    * [[topkIvfPqShardedWaves]], which bounds peak broadcast memory to
+    * one wave's shards (measured at 10M×256 against the earlier
+    * per-shard-partial resident form: 0.88 GB peak vs 3.53 GB for ~8%
+    * extra wall, identical rows).
     */
   def topkIvfPqSharded(
       queries: DataFrame,
@@ -3824,7 +3767,8 @@ object Similarity {
   /** [[topkIvfPqSharded]] restricted to an allowed-id subset — the
     * sharded composition of [[topkIvfPqFiltered]] (allow mask of
     * [[serveSharded]]: each shard masks against the same sorted set,
-    * and the global k > |allowed| clamp emerges from the merge).
+    * and the global k > |allowed| clamp emerges from the in-task
+    * merge).
     */
   def topkIvfPqShardedFiltered(
       queries: DataFrame,
@@ -3857,20 +3801,16 @@ object Similarity {
     serveIvfPqSharded(queries, embCol, qIdCol, shards,
       ShardMasks.AllowDf(allowed, allowedIdCol), k, nProbe, shortlist)
 
-  /** The IVF+PQ/OPQ family's [[serveSharded]] kernel: every query
-    * column is kept, and a non-null `rot` (IVF+OPQ) is checked against
-    * each shard, then broadcast once and shared by every partial.
+  /** The IVF+PQ/OPQ family's flat sharded serve: [[serveIvfPq]], every
+    * query column kept. `qIdCol` names the query id, as in the wave
+    * forms; ranks are per query row.
     */
   private def serveIvfPqSharded(
       queries: DataFrame, embCol: String, qIdCol: String, shards: Seq[CorpusIndexIvfPq],
       masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int,
-      rot: Array[Double] = null): DataFrame = {
-    lazy val rotBc = if (rot == null) null else queries.sparkSession.sparkContext.broadcast(rot)
-    serveSharded(queries, qIdCol, shards, masks, k, Metric.Cosine)(
-      _.ids, validateIvfPqArgs(_, k, nProbe, shortlist, rot)) { (bc, maskBc, nAllowed) =>
-      topkIvfPqFlatBc(queries, embCol, bc, k, nProbe, shortlist, maskBc, nAllowed, rotBc)
-    }
-  }
+      rot: Array[Double] = null): DataFrame =
+    shardedFlat(serveIvfPq(queries, embCol, shards, masks, k, nProbe, shortlist, "matches", rot),
+      embCol)
 
   /** Live/peak shard-broadcast accounting for
     * [[topkIvfPqShardedWaves]] — the measurable proof that the wave
@@ -3926,8 +3866,8 @@ object Similarity {
   }
 
   /** [[topkIvfPqSharded]] with BOUNDED broadcast memory: the plain
-    * form unions all B per-shard plans into one job, so every
-    * executor holds every shard's broadcast simultaneously —
+    * form broadcasts all B shards in one payload, so every
+    * executor holds every shard simultaneously —
     * per-executor memory equals the TOTAL compressed index, exactly
     * the ceiling sharding exists to break. This form serves the
     * shards in waves of `waveSize`: each wave broadcasts only its
@@ -3940,7 +3880,9 @@ object Similarity {
     * shards (∝ max-shard at waveSize=1), measured by
     * [[ShardedServeStats]]; rows are IDENTICAL to the plain form
     * (per-wave top-k cuts are lossless for a global top-k, ties pin
-    * to lowest index both times — IvfPqSpec parity).
+    * to lowest index both times — IvfPqSpec parity) while `qIdCol`
+    * values are unique: the waves rank per `qIdCol` value, the plain
+    * form per query row.
     *
     * The returned DataFrame reads the scratch parquet lazily — the
     * caller owns `scratchDir`'s lifetime. When `scratchDir` is empty
@@ -4085,9 +4027,14 @@ object Similarity {
     topkShardedWavesCore[CorpusIndexIvfPq](
       queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
       validateIvfPqCall(k, nProbe, shortlist),
-      partialOf = (bc, maskBc, nAllowed) =>
-        topkIvfPqFlatBc(queries, embCol, bc, k, nProbe, shortlist,
-          maskBc, nAllowed, rotBc),
+      partialOf = (bc, maskBc, nAllowed) => {
+        val ix = bc.value
+        validateIvfPqArgs(ix, k, nProbe, shortlist, if (rotBc == null) null else rotBc.value)
+        wavePartial(queries, embCol, bc, maskBc, nAllowed, ix.n, ix.dim, k, shortlist,
+            higher = true) { (cx, mask, c) =>
+          ivfPqBody(cx, mask, c, nProbe, if (rotBc == null) null else rotBc.value)
+        }
+      },
       k = k, waveSize = waveSize, scratch = scratch, meter = meter,
       memoryPartials = memoryPartials,
       allowedIds = allowedIds, deniedIds = deniedIds)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * Hamming pre-screen (integer distances widened to `Double`, exactly)
   * and IVF probe-cell pick selects through this one class.
   */
-private[graft] final class TopSelector(val cap: Int, higher: Boolean, ids: Array[Long]) {
+private[graft] final class TopSelector(val cap: Int, higher: Boolean, val ids: Array[Long]) {
   val pos = new Array[Int](cap)
   val score = new Array[Double](cap)
   var size = 0
@@ -65,6 +65,48 @@ private[graft] final class TopSelector(val cap: Int, higher: Boolean, ids: Array
     val structs = new Array[Any](size)
     var r = 0
     while (r < size) { structs(r) = InternalRow(ids(pos(r)), score(r)); r += 1 }
+    new GenericArrayData(structs)
+  }
+
+  /** Kept entry `r` ranks before entry `o` of `that`: the better score
+    * in Spark's double order (-0.0 equals 0.0, NaN above every number),
+    * then the lower id — the order of a `row_number` over
+    * `(score desc|asc, index asc)`.
+    */
+  def precedes(r: Int, that: TopSelector, o: Int): Boolean = {
+    val a = score(r)
+    val b = that.score(o)
+    val c = if (a == b) 0 else java.lang.Double.compare(a, b)
+    if (c != 0) (if (higher) c > 0 else c < 0) else ids(pos(r)) < that.ids(that.pos(o))
+  }
+}
+
+private[graft] object TopSelector {
+
+  /** The best `cut` entries of selectors over disjoint id sets, merged
+    * k-way best-first ([[TopSelector.precedes]]) into one matches array.
+    */
+  def merged(sels: Array[TopSelector], cut: Int): GenericArrayData = {
+    val at = new Array[Int](sels.length)
+    var total = 0
+    sels.foreach(total += _.size)
+    total = math.min(total, cut)
+    val structs = new Array[Any](total)
+    var r = 0
+    while (r < total) {
+      var best = -1
+      var s = 0
+      while (s < sels.length) {
+        if (at(s) < sels(s).size && (best < 0 || sels(s).precedes(at(s), sels(best), at(best))))
+          best = s
+        s += 1
+      }
+      val w = sels(best)
+      val p = at(best)
+      structs(r) = InternalRow(w.ids(w.pos(p)), w.score(p))
+      at(best) = p + 1
+      r += 1
+    }
     new GenericArrayData(structs)
   }
 }
@@ -195,7 +237,10 @@ private[graft] object TopkFrame {
     * packs their non-null embeddings into one reused [[QueryBatch]] and
     * hands it to `body` (built once per partition), which fills
     * `out(i)` for packed row `i`; rows are emitted in input order with
-    * `out` appended and null embeddings given a null `out`.
+    * `out` appended and null embeddings given a null `out`. With
+    * `spread > 1` (one body per index) a frame of P partitions, fewer
+    * than the default parallelism, is first split round-robin into
+    * min(default parallelism, P × spread) partitions.
     */
   def rows(
       queries: DataFrame,
@@ -203,13 +248,19 @@ private[graft] object TopkFrame {
       out: StructField,
       dim: Int,
       batchRows: Int,
-      pack: Pack)(
+      pack: Pack,
+      spread: Int = 1)(
       body: () => (QueryBatch, Array[AnyRef]) => Unit): DataFrame = {
     val schema = queries.schema
     val embIdx = schema.fieldIndex(embCol)
     val f32In = queryIsF32(schema, embCol)
     val fieldTypes = schema.fields.map(_.dataType)
-    val outRdd = InternalRowBridge.toInternalRdd(queries).mapPartitions { it =>
+    val in = InternalRowBridge.toInternalRdd(queries)
+    val cores = queries.sparkSession.sparkContext.defaultParallelism
+    val parts = in.getNumPartitions
+    val src = if (spread > 1 && parts < cores)
+      in.map(_.copy()).repartition(math.min(cores.toLong, parts.toLong * spread).toInt) else in
+    val outRdd = src.mapPartitions { it =>
       val score = body()
       val b = new QueryBatch(dim, pack)
       // the scan reuses its rows, so each is copied into the batch
@@ -254,12 +305,7 @@ private[graft] object TopkFrame {
       StructType(schema.fields :+ out))
   }
 
-  /** The top-k frame: [[rows]] with the `outputCol` matches column, the
-    * clamps, one [[TopSelector]] of capacity k per packed row, and the
-    * emit of its `(ids(pos), score)` structs. `kernel` builds the
-    * family's scoring body once per partition; it is never built when k
-    * clamps to 0.
-    */
+  /** The top-k frame over one index: [[selectShards]]' one-shard case. */
   def select(
       queries: DataFrame,
       embCol: String,
@@ -272,20 +318,58 @@ private[graft] object TopkFrame {
       allowedCount: Int = -1,
       batchRows: Int = 1,
       pack: Pack = F64)(
-      kernel: Clamp => TopkBody): DataFrame = {
-    val c = clamp(n, k, shortlist, allowedCount)
+      kernel: Clamp => TopkBody): DataFrame =
+    selectShards(queries, embCol, outputCol, dim, Array(n), k, higher, shortlist,
+      Array(allowedCount), batchRows, pack)((_, c) => kernel(c))
+
+  /** The top-k frame over one or more indexes with disjoint ids, in one
+    * pass: [[rows]] with the `outputCol` matches column; per index `s`
+    * the clamps against its `ns(s)` rows and `allowedCounts(s)`, one
+    * [[TopSelector]] of capacity min(k, served rows in s) per packed
+    * row, and the body `kernel(s, clamp)` (built once per partition,
+    * never when its k clamps to 0); then each row's selectors merge
+    * best-first ([[TopSelector.merged]]) into min(k, Σ kept) matches.
+    * One index emits its selector as is.
+    */
+  def selectShards(
+      queries: DataFrame,
+      embCol: String,
+      outputCol: String,
+      dim: Int,
+      ns: Array[Int],
+      k: Int,
+      higher: Boolean,
+      shortlist: Int,
+      allowedCounts: Array[Int],
+      batchRows: Int = 1,
+      pack: Pack = F64)(
+      kernel: (Int, Clamp) => TopkBody): DataFrame = {
+    val cs = ns.indices.map(s => clamp(ns(s), k, shortlist, allowedCounts(s))).toArray
+    val served = cs.indices.filter(cs(_).kk > 0).toArray
     rows(queries, embCol, StructField(outputCol, MatchesType, nullable = true), dim,
-        batchRows, pack) { () =>
-      val body = if (c.kk == 0) null else kernel(c)
-      val sels = new Array[TopSelector](batchRows)
+        batchRows, pack, ns.length) { () =>
+      val bodies = served.map(s => kernel(s, cs(s)))
+      val sels = served.map(_ => new Array[TopSelector](batchRows))
+      val row = new Array[TopSelector](served.length)
       val empty = new GenericArrayData(new Array[Any](0))
       (b, out) => {
+        var j = 0
+        while (j < served.length) {
+          prepare(sels(j), b.m, cs(served(j)).kk, higher, bodies(j).ids)
+          bodies(j).score(b, sels(j))
+          j += 1
+        }
         var i = 0
-        if (body == null) while (i < b.m) { out(i) = empty; i += 1 }
-        else {
-          prepare(sels, b.m, c.kk, higher, body.ids)
-          body.score(b, sels)
-          while (i < b.m) { out(i) = sels(i).matches(); i += 1 }
+        while (i < b.m) {
+          out(i) = served.length match {
+            case 0 => empty
+            case 1 => sels(0)(i).matches()
+            case _ =>
+              j = 0
+              while (j < served.length) { row(j) = sels(j)(i); j += 1 }
+              TopSelector.merged(row, k)
+          }
+          i += 1
         }
       }
     }

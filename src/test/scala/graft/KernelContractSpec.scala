@@ -162,6 +162,39 @@ class KernelContractSpec extends AnyFunSuite {
     }
   }
 
+  test("kernel contract: an array<int> query column is refused before any broadcast") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val cx = Similarity.collectCorpus(corpusRows.toDF("id", "emb"), "id", "emb")
+    val bq = Similarity.quantizeBq(cx)
+    val ivfBq = Similarity.quantizeIvfBq(cx, nCells = 2)
+    val ivfPq = Similarity.quantizeIvfPq(cx, nCells = 2, m = 2, trainSample = 256)
+    val allowed = Array(1L, 2L)
+    val allowedDf = allowed.toSeq.toDF("id")
+    // the one-index serves outside the table: the filtered forms
+    val filtered: Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
+      "topkBqFiltered" -> ((q, k) =>
+        Similarity.topkBqFiltered(q, "emb", bq, allowed, k, Metric.Cosine, n)),
+      "topkBqFiltered df" -> ((q, k) => Similarity.topkBqFiltered(q, "emb", bq, allowedDf, "id",
+        k, Metric.Cosine, n, "matches")),
+      "topkIvfBqFiltered" -> ((q, k) =>
+        Similarity.topkIvfBqFiltered(q, "emb", ivfBq, allowed, k, nProbe = 2, shortlist = n)),
+      "topkIvfPqFiltered" -> ((q, k) =>
+        Similarity.topkIvfPqFiltered(q, "emb", ivfPq, allowed, k, nProbe = 2)),
+      "topkIvfPqFiltered df" -> ((q, k) => Similarity.topkIvfPqFiltered(q, "emb", ivfPq,
+        allowedDf, "id", k, nProbe = 2, shortlist = 0, outputCol = "matches")))
+    (kernels.filter(_.typed).map(kn => kn.name -> kn.run) ++ filtered).foreach {
+      case (name, run) =>
+        withClue(s"$name: ") {
+          val before = sc.broadcast(0).id
+          val e = intercept[IllegalArgumentException](run(queries(IntegerType), 3))
+          assert(e.getMessage.contains(
+            "Query column emb must be array<float>/array<double>, got array<int>"), e.getMessage)
+          assert(sc.broadcast(0).id - before == 1, "a broadcast was minted before refusing")
+        }
+    }
+  }
+
   test("kernel contract: every query column is kept") {
     kernels.filter(_.nested).foreach { kn =>
       withClue(s"${kn.name}: ") {

@@ -2,6 +2,8 @@ package graft
 
 import graft.ShardedFamilies.{K, Shortlist}
 import java.nio.file.Files
+import graft.operators.{Metric, Similarity}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -111,6 +113,128 @@ class ShardedServeSpec extends AnyFunSuite {
           assert(e.getMessage.contains("shortlist"), s"$form: ${e.getMessage}")
           assert(sc.broadcast(0).id - before == 1, s"$form minted a broadcast before refusing")
         }
+        // a non-float query column is refused by name before any broadcast
+        val qInt = q.withColumn("emb", col("emb").cast("array<int>"))
+        Seq[(String, () => Option[DataFrame])](
+          "unmasked" -> (() => Some(s.unmasked(qInt, Shortlist))),
+          "filtered" -> (() => s.filtered(qInt, Array(1L, 2L), Shortlist)),
+          "filteredDf" -> (() => s.filteredDf(qInt, allowedDf, Shortlist)),
+          "tombstoned" -> (() => s.tombstoned(qInt, Shortlist))).foreach { case (form, call) =>
+          val before = sc.broadcast(0).id
+          val got = scala.util.Try(call())
+          if (got != scala.util.Success(None)) {
+            val e = got.failed.get
+            assert(e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains(
+              "Query column emb must be array<float>/array<double>, got array<int>"),
+              s"$form: $e")
+            assert(sc.broadcast(0).id - before == 1,
+              s"$form minted a broadcast before refusing array<int>")
+          }
+        }
+      }
+    }
+  }
+
+  /** The query rows over `parts` partitions, with no exchange. */
+  private def queriesIn(parts: Int): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(queryRows, parts).toDF("qid", "emb")
+  }
+
+  /** What the jobs `run` starts did, seen by a listener:
+    * (jobs, tasks per stage, shuffle bytes written).
+    */
+  private def jobShape(run: => Unit): (Int, Map[Int, Int], Long) = {
+    val sc = spark.sparkContext
+    val group = s"shape-${System.nanoTime()}"
+    val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
+    val tasks = scala.collection.mutable.Map.empty[Int, Int]
+    var jobs = 0
+    var shuffled = 0L
+    @volatile var drained = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) { jobs += 1; e.stageIds.foreach(jobOfStage(_) = e.jobId) }
+        else if (g == s"$group-end") drained = true
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        if (jobOfStage.contains(e.stageId)) {
+          tasks(e.stageId) = tasks.getOrElse(e.stageId, 0) + 1
+          if (e.taskMetrics != null) shuffled += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        }
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "shape", interruptOnCancel = false)
+      try run finally sc.clearJobGroup()
+      // the bus delivers in order: once a later job's start arrives,
+      // every event of `run` has been seen
+      sc.setJobGroup(s"$group-end", "shape", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener events did not arrive")
+    } finally sc.removeSparkListener(l)
+    l.synchronized((jobs, tasks.toMap, shuffled))
+  }
+
+  test("a resident sharded serve is one pass: one job, one task per query partition, no shuffle") {
+    import spark.implicits._
+    ShardedFamilies.all(spark).foreach { f =>
+      withClue(s"${f.name}: ") {
+        val base = Files.createTempDirectory(s"sharded-shape-${f.name}").toString
+        f.write(rows(0L, 120L), s"$base/ix")
+        f.delete(Seq(3L, 7L).toDF("id"), s"$base/ix", s"$base/del")
+        val s = f.serves(s"$base/del")
+        val q = queriesIn(4)
+        Seq("unmasked" -> Some(s.unmasked(q, Shortlist)),
+            "filtered" -> s.filtered(q, Array(1L, 2L, 4L, 5L), Shortlist),
+            "filteredDf" -> s.filteredDf(q, Seq(1L, 2L, 4L, 5L).toDF("id"), Shortlist),
+            "tombstoned" -> s.tombstoned(q, Shortlist)).foreach {
+          case (form, Some(df)) =>
+            val (jobs, tasks, shuffled) = jobShape { df.collect(); () }
+            assert(jobs == 1 && tasks.values.sum == 4 && shuffled == 0L,
+              s"$form: $jobs jobs, tasks per stage $tasks, $shuffled shuffle bytes")
+          case _ =>
+        }
+      }
+    }
+  }
+
+  test("a resident sharded serve spreads a one-partition query frame over the cores") {
+    val corpus = rows(0L, 120L)
+    val want = math.min(spark.sparkContext.defaultParallelism, 4)
+    Seq[(String, DataFrame => DataFrame)](
+      "BQ" -> { val sh = Similarity.buildBqSharded(corpus, "id", "emb", 4)
+        q => Similarity.topkBqSharded(q, "qid", "emb", sh, K, Metric.Cosine, Shortlist) },
+      "IVF-BQ" -> { val sh = Similarity.buildIvfBqSharded(corpus, "id", "emb", 4, nCells = 2)
+        q => Similarity.topkIvfBqSharded(q, "qid", "emb", sh, K, 2, Shortlist) },
+      "IVF-PQ" -> { val sh = Similarity.buildIvfPqSharded(corpus, "id", "emb", 4, nCells = 2,
+          m = 4, trainSample = 256)
+        q => Similarity.topkIvfPqSharded(q, "emb", "qid", sh, K, 2, Shortlist) })
+      .foreach { case (name, serve) =>
+        withClue(s"$name: ") {
+          val df = serve(queriesIn(1))
+          val (_, tasks, _) = jobShape { df.collect(); () }
+          assert(tasks.values.max >= want, s"tasks per stage $tasks")
+          assert(served(df) == served(serve(queriesIn(4))))
+        }
+      }
+  }
+
+  test("a sharded serve ranks per query row: two rows with one qid get k matches each") {
+    import spark.implicits._
+    ShardedFamilies.all(spark).foreach { f =>
+      withClue(s"${f.name}: ") {
+        val base = Files.createTempDirectory(s"sharded-dupqid-${f.name}").toString
+        f.write(rows(0L, 120L), s"$base/ix")
+        val s = f.serves(s"$base/ix")
+        val Seq(a, b) = queryRows.take(2).map { case (_, e) => (7L, e) }
+        val alone = Seq(a, b).flatMap(r => served(s.unmasked(Seq(r).toDF("qid", "emb"), Shortlist)))
+        assert(alone.size == 2 * K)
+        assert(served(s.unmasked(Seq(a, b).toDF("qid", "emb"), Shortlist)) == alone.sorted)
       }
     }
   }
