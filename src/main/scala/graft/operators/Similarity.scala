@@ -3215,12 +3215,14 @@ object Similarity {
     *    the lowest index, the exact kernel's rule — into min(k, Σ served)
     *    matches per query ROW under `outputCol`. k above the allowed (or
     *    LIVE, under `Deny`) population returns every served row; an
-    *    empty intersection returns empty matches. No shuffle, one job.
-    *  - Parallelism: with more than one shard, a query frame with fewer
-    *    partitions P than the default parallelism is split to
-    *    min(default parallelism, P × shards) partitions first
-    *    ([[TopkFrame.rows]]), so a small query frame still spreads over
-    *    the cores as the per-shard partials did.
+    *    empty intersection returns empty matches. One job and no
+    *    shuffle, unless the query frame is split (next point).
+    *  - Parallelism: with more than one shard, a non-empty query frame
+    *    with fewer partitions P than the default parallelism is split
+    *    round-robin to min(default parallelism, P × shards) partitions
+    *    first ([[TopkFrame.rows]]): one shuffle of the query rows and a
+    *    second stage, so a small query frame still spreads over the
+    *    cores as the per-shard partials did.
     *  - Broadcast lifetime: the plan is LAZY, so its broadcast cannot be
     *    destroyed eagerly — it lives until Spark's ContextCleaner
     *    collects the unreferenced plan, and every executor pins every
@@ -3715,7 +3717,8 @@ object Similarity {
   /** Top-k cosine against a SHARDED IVF+PQ index in one pass
     * ([[serveSharded]]): per query row, every shard's [[topkIvfPq]]
     * body (same ADC / optional SQ8-residual-rerank contract) fills its
-    * own selector and the task merges them — one job, no shuffle.
+    * own selector and the task merges them — one job, no shuffle, for
+    * a query frame that is not split ([[serveSharded]]).
     * Scores from different shards approximate the same cosine, so they
     * merge directly; ties pin to the lowest index, matching the exact
     * kernel (reference topk.rs:28-31). Keeps every query column; ranks
@@ -3802,15 +3805,17 @@ object Similarity {
       ShardMasks.AllowDf(allowed, allowedIdCol), k, nProbe, shortlist)
 
   /** The IVF+PQ/OPQ family's flat sharded serve: [[serveIvfPq]], every
-    * query column kept. `qIdCol` names the query id, as in the wave
-    * forms; ranks are per query row.
+    * query column kept, ranks per query row. `qIdCol` must name a query
+    * column (as in the wave forms); it is resolved before any broadcast.
     */
   private def serveIvfPqSharded(
       queries: DataFrame, embCol: String, qIdCol: String, shards: Seq[CorpusIndexIvfPq],
       masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int,
-      rot: Array[Double] = null): DataFrame =
+      rot: Array[Double] = null): DataFrame = {
+    queries.col(qIdCol)
     shardedFlat(serveIvfPq(queries, embCol, shards, masks, k, nProbe, shortlist, "matches", rot),
       embCol)
+  }
 
   /** Live/peak shard-broadcast accounting for
     * [[topkIvfPqShardedWaves]] — the measurable proof that the wave

@@ -238,9 +238,11 @@ private[graft] object TopkFrame {
     * hands it to `body` (built once per partition), which fills
     * `out(i)` for packed row `i`; rows are emitted in input order with
     * `out` appended and null embeddings given a null `out`. With
-    * `spread > 1` (one body per index) a frame of P partitions, fewer
-    * than the default parallelism, is first split round-robin into
-    * min(default parallelism, P × spread) partitions.
+    * `spread > 1` (one body per index) a frame of P partitions,
+    * 0 < P < the default parallelism, is first split round-robin into
+    * min(default parallelism, P × spread) partitions: one shuffle of the
+    * query rows and a second stage, which `plans/fused_serve/split.json`
+    * weighs against serving the P partitions as they come.
     */
   def rows(
       queries: DataFrame,
@@ -258,7 +260,7 @@ private[graft] object TopkFrame {
     val in = InternalRowBridge.toInternalRdd(queries)
     val cores = queries.sparkSession.sparkContext.defaultParallelism
     val parts = in.getNumPartitions
-    val src = if (spread > 1 && parts < cores)
+    val src = if (spread > 1 && parts > 0 && parts < cores)
       in.map(_.copy()).repartition(math.min(cores.toLong, parts.toLong * spread).toInt) else in
     val outRdd = src.mapPartitions { it =>
       val score = body()

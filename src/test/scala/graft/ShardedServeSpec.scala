@@ -131,6 +131,21 @@ class ShardedServeSpec extends AnyFunSuite {
               s"$form minted a broadcast before refusing array<int>")
           }
         }
+        // a query id column that is not a query column is refused before any broadcast
+        val qNoId = q.withColumnRenamed("qid", "query_id")
+        Seq[(String, () => Option[DataFrame])](
+          "unmasked" -> (() => Some(s.unmasked(qNoId, Shortlist))),
+          "filtered" -> (() => s.filtered(qNoId, Array(1L, 2L), Shortlist)),
+          "filteredDf" -> (() => s.filteredDf(qNoId, allowedDf, Shortlist)),
+          "tombstoned" -> (() => s.tombstoned(qNoId, Shortlist))).foreach { case (form, call) =>
+          val before = sc.broadcast(0).id
+          val got = scala.util.Try(call())
+          if (got != scala.util.Success(None)) {
+            assert(got.isFailure && got.failed.get.getMessage.contains("qid"), s"$form: $got")
+            assert(sc.broadcast(0).id - before == 1,
+              s"$form minted a broadcast before refusing a missing qid column")
+          }
+        }
       }
     }
   }
@@ -222,6 +237,31 @@ class ShardedServeSpec extends AnyFunSuite {
           assert(served(df) == served(serve(queriesIn(4))))
         }
       }
+  }
+
+  test("a resident sharded serve of an empty query frame returns no rows") {
+    import spark.implicits._
+    ShardedFamilies.all(spark).foreach { f =>
+      withClue(s"${f.name}: ") {
+        val base = Files.createTempDirectory(s"sharded-empty-${f.name}").toString
+        f.write(rows(0L, 120L), s"$base/ix")
+        f.delete(Seq(3L, 7L).toDF("id"), s"$base/ix", s"$base/del")
+        val s = f.serves(s"$base/del")
+        // an optimised-away frame has no partitions at all
+        Seq("no partitions" -> queries.filter(lit(false)),
+            "empty partitions" -> queriesIn(1).filter(col("qid") < 0L)).foreach {
+          case (what, q) =>
+            Seq("unmasked" -> Some(s.unmasked(q, Shortlist)),
+                "filtered" -> s.filtered(q, Array(1L, 2L, 4L, 5L), Shortlist),
+                "filteredDf" -> s.filteredDf(q, Seq(1L, 2L, 4L, 5L).toDF("id"), Shortlist),
+                "tombstoned" -> s.tombstoned(q, Shortlist)).foreach {
+              case (form, Some(df)) =>
+                assert(df.collect().isEmpty && df.columns.contains("rank"), s"$form over $what")
+              case _ =>
+            }
+        }
+      }
+    }
   }
 
   test("a sharded serve ranks per query row: two rows with one qid get k matches each") {
