@@ -712,17 +712,8 @@ object ScaleSmoke {
       val nCells = 256
       val nProbe = 64
       val t3 = System.nanoTime()
-      val dimBq = shards.head.dim
-      val nTotBq = shards.map(_.n.toLong).sum
-      val colSumBq = new Array[Long](dimBq)
-      shards.foreach { s =>
-        val cs = Similarity.bqColSums(s.sq8)
-        var d = 0
-        while (d < dimBq) { colSumBq(d) += cs(d); d += 1 }
-      }
-      val ivfShards = shards.map(s =>
-        Similarity.ivfBqFromSq8(s.sq8, nCells, colSumGlobal = colSumBq,
-          nTotal = nTotBq))
+      val cutBq = graft.sources.IndexCodec.BqCut.global(shards.iterator.map(_.sq8))
+      val ivfShards = shards.map(s => Similarity.ivfBqFromSq8(s.sq8, nCells, cut = cutBq))
       println(f"ivf+bq sharded build from the SAME envelopes " +
         f"($nCells cells/shard, decode-from-envelope): " +
         f"${(System.nanoTime() - t3) / 1e9}%.2f s")
@@ -904,19 +895,11 @@ object ScaleSmoke {
       // decode-from-envelope cell training per shard) — and persist
       // it with the bq layout's own routing identity
       val t2 = System.nanoTime()
-      val colSum = new Array[Long](dim)
-      var nTotal = 0L
-      for (i <- 0 until nDirs) {
-        val sx = graft.sources.Source.readBqIndex(spark, bqDir(i))
-        val cs = Similarity.bqColSums(sx.sq8)
-        var d = 0
-        while (d < dim) { colSum(d) += cs(d); d += 1 }
-        nTotal += sx.n
-      }
+      val cut = graft.sources.IndexCodec.BqCut.global((0 until nDirs).iterator
+        .map(i => graft.sources.Source.readBqIndex(spark, bqDir(i)).sq8))
       val ivfShards = (0 until nDirs).map { i =>
-        val sx = graft.sources.Source.readBqIndex(spark, bqDir(i))
-        Similarity.ivfBqFromSq8(sx.sq8, nCells, colSumGlobal = colSum,
-          nTotal = nTotal)
+        Similarity.ivfBqFromSq8(graft.sources.Source.readBqIndex(spark, bqDir(i)).sq8, nCells,
+          cut = cut)
       }
       graft.sources.Sink.writeIvfBqShardedIndex(spark,
         Similarity.ShardedIvfBqBuild(ivfShards, hashModulus,

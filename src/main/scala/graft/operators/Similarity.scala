@@ -1,6 +1,7 @@
 package graft.operators
 
 import dev.ludovic.netlib.blas.BLAS
+import graft.sources.IndexCodec
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -1010,68 +1011,31 @@ object Similarity {
     bqFromSq8(quantizeSq8(cx))
 
   /** Derive the bit matrix from an SQ8 envelope (see [[quantizeBq]]
-    * for the integer-threshold contract). `colSum`/`nTotal` default to
-    * THIS envelope's own column totals; [[buildBqSharded]] passes the
-    * corpus-GLOBAL totals so every shard cuts on the same threshold.
+    * for the integer-threshold contract). `cut` defaults to THIS
+    * envelope's own [[IndexCodec.BqCut]]; [[buildBqSharded]] passes the
+    * corpus-GLOBAL cut so every shard cuts on the same threshold.
     */
   private[graft] def bqFromSq8(
       sq8: CorpusIndexSq8,
-      colSumGlobal: Array[Long] = null,
-      nTotal: Long = 0L): CorpusIndexBq = {
+      cut: IndexCodec.BqCut = null): CorpusIndexBq = {
     val nW = (sq8.dim + 63) >>> 6
-    val colSum =
-      if (colSumGlobal != null) colSumGlobal else bqColSums(sq8)
-    val nTot = if (nTotal > 0L) nTotal else sq8.n.toLong
-    require(colSum.length == sq8.dim,
-      s"column-total length ${colSum.length} != dim ${sq8.dim}")
+    val c = if (cut != null) cut else IndexCodec.BqCut.of(sq8)
+    require(c.colSum.length == sq8.dim,
+      s"column-total length ${c.colSum.length} != dim ${sq8.dim}")
     require(sq8.n.toLong * nW <= Int.MaxValue,
       s"bit matrix ${sq8.n} rows × $nW words exceeds a JVM array — " +
         "shard the corpus before binarizing")
-    // the integer cut, precomputed per dim: code·nTot > colSum ⟺
-    // code ≥ ⌊colSum/nTot⌋+1 (exact for integers whether or not nTot
-    // divides colSum) — one compare per element instead of a long
-    // multiply, and the artifact an encode-only append needs frozen
-    val cut = new Array[Int](sq8.dim)
-    var d0 = 0
-    while (d0 < sq8.dim) {
-      cut(d0) = (colSum(d0) / nTot + 1L).toInt
-      d0 += 1
-    }
+    // the integer cut per dim: one compare per element instead of a
+    // long multiply, and the artifact an encode-only append needs frozen
+    val bitCut = c.bitCut
     val words = new Array[Long](sq8.n * nW)
     var j = 0
     while (j < sq8.n) {
-      var d = 0
-      while (d < sq8.dim) {
-        if ((sq8.codes(j * sq8.dim + d) & 0xFF) >= cut(d))
-          words(j * nW + (d >>> 6)) |= 1L << (d & 63)
-        d += 1
-      }
+      IndexCodec.Bq.setBits(sq8.codes, j * sq8.dim, bitCut, words, j * nW)
       j += 1
     }
-    val thr = new Array[Double](sq8.dim)
-    var d1 = 0
-    while (d1 < sq8.dim) {
-      thr(d1) = sq8.dimMin(d1) +
-        (colSum(d1).toDouble / nTot) * sq8.dimScale(d1)
-      d1 += 1
-    }
-    CorpusIndexBq(sq8.ids, words, sq8.n, sq8.dim, nW, thr, cut, sq8)
-  }
-
-  /** Per-dim integer column totals of an SQ8 envelope's codes — the
-    * exact, order-independent quantity the BQ threshold cuts on.
-    */
-  private[graft] def bqColSums(sq8: CorpusIndexSq8): Array[Long] = {
-    val colSum = new Array[Long](sq8.dim)
-    var j = 0
-    while (j < sq8.n) {
-      var d = 0
-      while (d < sq8.dim) {
-        colSum(d) += (sq8.codes(j * sq8.dim + d) & 0xFF).toLong; d += 1
-      }
-      j += 1
-    }
-    colSum
+    CorpusIndexBq(sq8.ids, words, sq8.n, sq8.dim, nW, c.thresholds(sq8.dimMin, sq8.dimScale),
+      bitCut, sq8)
   }
 
   /** One binary-quantized index per hash-mod shard — the
@@ -1119,15 +1083,8 @@ object Similarity {
     val surviving = sq8Opts.zipWithIndex.collect { case (Some(s), b) => s -> b.toLong }
     require(surviving.nonEmpty, "Empty corpus")
     val sq8s = surviving.map(_._1)
-    val dim = sq8s.head.dim
-    val nTot = sq8s.map(_.n.toLong).sum
-    val colSum = new Array[Long](dim)
-    sq8s.foreach { s =>
-      val cs = bqColSums(s)
-      var d = 0
-      while (d < dim) { colSum(d) += cs(d); d += 1 }
-    }
-    ShardedBqBuild(sq8s.map(bqFromSq8(_, colSum, nTot)).toIndexedSeq,
+    val cut = IndexCodec.BqCut.global(sq8s.iterator)
+    ShardedBqBuild(sq8s.map(bqFromSq8(_, cut)).toIndexedSeq,
       numShards, surviving.map(_._2).toIndexedSeq)
   }
 
@@ -1564,34 +1521,24 @@ object Similarity {
     * integer-threshold contract ([[bqFromSq8]]), spherical cells
     * trained and assigned on the UNIT-NORMALIZED DEQUANTIZED rows
     * (same strided sample + k-means as IVF+PQ, ties to the lowest
-    * cell). `colSumGlobal`/`nTotal` as in [[bqFromSq8]] — the sharded
-    * builder passes corpus-global totals so every shard's bits cut
-    * identically.
+    * cell). `cut` as in [[bqFromSq8]] — the sharded builder passes the
+    * corpus-global cut so every shard's bits cut identically.
     */
   private[graft] def ivfBqFromSq8(
       sq8: CorpusIndexSq8,
       nCells: Int,
       trainSample: Int = 16384,
       iters: Int = 10,
-      colSumGlobal: Array[Long] = null,
-      nTotal: Long = 0L): CorpusIndexIvfBq = {
+      cut: IndexCodec.BqCut = null): CorpusIndexIvfBq = {
     require(nCells >= 1, s"nCells must be >= 1, got $nCells")
     require(trainSample >= 1, s"trainSample must be >= 1, got $trainSample")
-    val bq = bqFromSq8(sq8, colSumGlobal, nTotal)
+    val bq = bqFromSq8(sq8, cut)
     val d = sq8.dim
     val k = math.min(nCells, math.max(1, sq8.n))
-    // decode + unit-normalize (zero-norm rows stay zero)
     val unit = new Array[Double](sq8.n * d)
     java.util.stream.IntStream.range(0, sq8.n).parallel().forEach { g =>
-      val nrm = sq8.norms(g)
-      if (nrm > 1e-10) {
-        var dd = 0
-        while (dd < d) {
-          unit(g * d + dd) = (sq8.dimMin(dd) +
-            (sq8.codes(g * d + dd) & 0xFF) * sq8.dimScale(dd).toDouble) / nrm
-          dd += 1
-        }
-      }
+      IndexCodec.IvfBq.decodeUnit(sq8.codes, g * d, sq8.dimMin, sq8.dimScale, sq8.norms(g),
+        unit, g * d)
     }
     val step = math.max(1, sq8.n / trainSample)
     val sampleIdx = (0 until sq8.n by step).toArray
@@ -1604,17 +1551,7 @@ object Similarity {
     val centFlat = trainSphericalKmeans(sample, sn, d, k, iters)
     val cellOf = new Array[Int](sq8.n)
     java.util.stream.IntStream.range(0, sq8.n).parallel().forEach { g =>
-      val src = g * d
-      var best = 0; var bestDot = Double.NegativeInfinity
-      var c = 0
-      while (c < k) {
-        var dot = 0.0; var dd = 0
-        val cb = c * d
-        while (dd < d) { dot += unit(src + dd) * centFlat(cb + dd); dd += 1 }
-        if (dot > bestDot) { bestDot = dot; best = c }
-        c += 1
-      }
-      cellOf(g) = best
+      cellOf(g) = assignCell(unit, g * d, centFlat, k, d)
     }
     val (cellStart, cellMembers) = buildCsr(cellOf, k)
     // repack the bit matrix into CSR-position order (see the field
@@ -1786,17 +1723,9 @@ object Similarity {
     val surviving = sq8Opts.zipWithIndex.collect { case (Some(s), b) => s -> b.toLong }
     require(surviving.nonEmpty, "Empty corpus")
     val sq8s = surviving.map(_._1)
-    val dim = sq8s.head.dim
-    val nTot = sq8s.map(_.n.toLong).sum
-    val colSum = new Array[Long](dim)
-    sq8s.foreach { s =>
-      val cs = bqColSums(s)
-      var d = 0
-      while (d < dim) { colSum(d) += cs(d); d += 1 }
-    }
+    val cut = IndexCodec.BqCut.global(sq8s.iterator)
     ShardedIvfBqBuild(
-      sq8s.map(ivfBqFromSq8(_, nCells, trainSample, iters, colSum, nTot))
-        .toIndexedSeq,
+      sq8s.map(ivfBqFromSq8(_, nCells, trainSample, iters, cut)).toIndexedSeq,
       numShards, surviving.map(_._2).toIndexedSeq)
   }
 

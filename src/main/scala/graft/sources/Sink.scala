@@ -4,7 +4,7 @@ import graft.sources.ShardedLayout.{Manifest, ShardKey, carry, copyDir, shardDir
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Write-side of the pipeline (SURVEY §2.3 capstones produce datasets
   * someone has to persist). Two shapes matter at 100 TB:
@@ -317,46 +317,25 @@ object Sink {
     * batch or stream without re-reading the raw embeddings (a real
     * index outlives the job that built it; today's alternative
     * re-collects and re-quantizes the corpus per session). Layout:
-    * `path/vectors/` parquet, one row per vector (idx, id, code
-    * binary, norm, sq_norm), split so partitions stay near 64 MB;
-    * `path/meta/` a one-row parquet with (n, dim, dim_min,
-    * dim_scale). The index is broadcast-envelope sized by contract,
-    * so driver-side materialization here matches how it is built and
-    * shipped; [[graft.sources.Source.readSq8Index]] restores a
-    * byte-identical [[graft.operators.Similarity.CorpusIndexSq8]]
-    * (round-trip pinned in SinkSpec).
+    * [[IndexCodec.Sq8]], vectors split so partitions stay near 64 MB.
+    * The index is broadcast-envelope sized by contract, so driver-side
+    * materialization here matches how it is built and shipped;
+    * [[graft.sources.Source.readSq8Index]] restores a byte-identical
+    * [[graft.operators.Similarity.CorpusIndexSq8]] (round-trip pinned
+    * in SinkSpec).
     */
   def writeSq8Index(
       spark: org.apache.spark.sql.SparkSession,
       cx: graft.operators.Similarity.CorpusIndexSq8,
       path: String,
       overwrite: Boolean = false): Unit =
-    publishAtomically(spark, path, overwrite) { tmp =>
-      import spark.implicits._
-      // rows build EXECUTOR-side from one broadcast of the index — a
-      // driver-materialized per-vector Seq would transiently double the
-      // index's memory right at the broadcast-envelope ceiling
-      val slices = math.max(1, (cx.n.toLong * cx.dim / (64L << 20)).toInt)
-      val bc = spark.sparkContext.broadcast(cx)
-      try {
-        spark.sparkContext.parallelize(0 until cx.n, slices).map { j =>
-          val c = bc.value
-          (j, c.ids(j),
-            java.util.Arrays.copyOfRange(c.codes, j * c.dim, (j + 1) * c.dim),
-            c.norms(j), c.sqNorms(j))
-        }.toDF("idx", "id", "code", "norm", "sq_norm")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/vectors")
-      } finally bc.destroy()
-      Seq((cx.n, cx.dim, cx.dimMin.toSeq, cx.dimScale.toSeq))
-        .toDF("n", "dim", "dim_min", "dim_scale")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/meta")
-    }
+    publishAtomically(spark, path, overwrite)(IndexCodec.Sq8.write(spark, cx, _))
 
   /** Persist an OPQ index — the learned rotation plus the PQ index it
     * wraps (same train-once story as [[writePqIndex]]: the Procrustes
     * alternation + codebook training is the expensive step). Layout:
-    * `path/rot/` one meta row with the d×d rotation, `path/pq/` the
-    * standard [[writePqIndex]] layout.
+    * `path/rot/` ([[ShardedLayout.writeRotation]]) beside the
+    * [[IndexCodec.Pq]] layout under `path/pq/`.
     * [[graft.sources.Source.readOpqIndex]] restores byte-identically.
     */
   def writeOpqIndex(
@@ -366,15 +345,13 @@ object Sink {
       overwrite: Boolean = false): Unit =
     publishAtomically(spark, path, overwrite) { tmp =>
       ShardedLayout.writeRotation(spark, tmp, ox.dim, ox.rot)
-      writePqIndex(spark, ox.pq, s"$tmp/pq")
+      IndexCodec.Pq.write(spark, ox.pq, s"$tmp/pq")
     }
 
   /** Persist a binary-quantized index — bits + SQ8 envelope + the
     * integer-derived thresholds, same train-once story as
     * [[writeSq8Index]] (the build pays a full corpus collect; a
-    * serving session restores instead). Layout: `path/vectors/` one
-    * row per vector (idx, id, packed bit words, SQ8 codes, norms);
-    * `path/meta/` one row (n, dim, n_words, thresholds, grid bounds).
+    * serving session restores instead). Layout: [[IndexCodec.Bq]].
     * [[graft.sources.Source.readBqIndex]] restores a byte-identical
     * [[graft.operators.Similarity.CorpusIndexBq]].
     */
@@ -383,42 +360,7 @@ object Sink {
       bx: graft.operators.Similarity.CorpusIndexBq,
       path: String,
       overwrite: Boolean = false): Unit =
-    publishAtomically(spark, path, overwrite) { tmp =>
-      writeBqInto(spark, bx, tmp)
-    }
-
-  /** The flat BQ layout body written into an already-owned dir —
-    * shared by [[writeBqIndex]] and [[writeBqShardedIndex]] (one
-    * shard dir each, inside the sharded publish).
-    */
-  private def writeBqInto(
-      spark: org.apache.spark.sql.SparkSession,
-      bx: graft.operators.Similarity.CorpusIndexBq,
-      tmp: String): Unit = {
-    import spark.implicits._
-    val sq8 = bx.sq8
-    val bytesPerRow = 8L * bx.nWords + bx.dim
-    val slices = math.max(1, (bx.n.toLong * bytesPerRow / (64L << 20)).toInt)
-    val bc = spark.sparkContext.broadcast(bx)
-    try {
-      spark.sparkContext.parallelize(0 until bx.n, slices).map { j =>
-        val x = bc.value
-        (j, x.ids(j),
-          java.util.Arrays.copyOfRange(x.words, j * x.nWords, (j + 1) * x.nWords),
-          java.util.Arrays.copyOfRange(x.sq8.codes, j * x.dim, (j + 1) * x.dim),
-          x.sq8.norms(j), x.sq8.sqNorms(j))
-      }.toDF("idx", "id", "words", "code", "norm", "sq_norm")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/vectors")
-    } finally bc.destroy()
-    // bit_cut is the frozen-threshold artifact [[appendBqIndex]]
-    // encodes against (appended LAST so readers by name are
-    // untouched)
-    Seq((bx.n, bx.dim, bx.nWords, bx.thresholds.toSeq,
-        sq8.dimMin.toSeq, sq8.dimScale.toSeq, bx.bitCut.toSeq))
-      .toDF("n", "dim", "n_words", "thresholds", "dim_min", "dim_scale",
-        "bit_cut")
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/meta")
-  }
+    publishAtomically(spark, path, overwrite)(IndexCodec.Bq.write(spark, bx, _))
 
   /** Persist a SHARDED BQ build ([[graft.operators.Similarity
     * .buildBqSharded]]) — one [[writeBqIndex]]-layout dir per shard
@@ -440,7 +382,7 @@ object Sink {
       shards.size, hashModulus, shardHashVals)
     publishAtomically(spark, path, overwrite) { tmp =>
       ShardedLayout.writeShards(spark, tmp, shards, modulus, hashVals)(
-        _.n, writeBqInto(spark, _, _))
+        _.n, IndexCodec.Bq.write(spark, _, _))
     }
   }
 
@@ -481,20 +423,6 @@ object Sink {
     writeBqShardedIndex(spark, build.shards, path, overwrite,
       build.hashModulus, build.shardHashVals)
 
-  /** Row shape the scan-stage BQ encode emits (shard routing key, id,
-    * packed bit words, SQ8 codes, dequantized norms) — shared by
-    * [[writeBqShardedIndexDistributed]]'s encode pass and
-    * [[appendBqShardedIndex]].
-    */
-  private val bqEncSchema = StructType(Seq(
-    StructField("shard", LongType, nullable = false),
-    StructField("id", LongType, nullable = false),
-    StructField("words", ArrayType(LongType, containsNull = false),
-      nullable = false),
-    StructField("code", BinaryType, nullable = false),
-    StructField("norm", DoubleType, nullable = false),
-    StructField("sq_norm", DoubleType, nullable = false)))
-
   /** Build AND persist a sharded BQ index WITHOUT ever collecting the
     * corpus — the 100 TB build path for the measured-best serving
     * rung. [[graft.operators.Similarity.buildBqSharded]] funnels
@@ -512,10 +440,8 @@ object Sink {
     *     min/max are order-independent, so the grids are bit-equal);
     *  3. the bit threshold is the corpus-global INTEGER column total
     *     of the SQ8 codes — one more scan-stage fold of exact Long
-    *     sums (order-independent again), from which
-    *     `bit_cut = ⌊Σcode/n⌋+1` and the f64 query thresholds follow
-    *     by [[graft.operators.Similarity.bqFromSq8]]'s own
-    *     arithmetic;
+    *     sums into the one [[IndexCodec.BqCut]] the collect build
+    *     cuts on (order-independent again);
     *  4. one encode scan with the broadcast grid+cut — each row
     *     leaves its executor as (bit words, SQ8 codes, norms), ~8×
     *     narrower than the raw f64 vector — through ONE exchange
@@ -546,106 +472,75 @@ object Sink {
       path: String,
       overwrite: Boolean = false): Unit = {
     import graft.operators.Similarity
+    import IndexCodec.{Bq, BqCut}
     require(numShards >= 1, s"numShards must be >= 1, got $numShards")
     requireEmbColType(corpus, embCol)
-    val sc = spark.sparkContext
     val shardCol = ShardedLayout.hashOf(idCol, numShards)
     val counts = ShardedLayout.buildCounts(
       corpus.select(shardCol.as("shard"), col(idCol).cast(LongType).as("id")))
     val dim = corpus.select(col(embCol)).filter(col(embCol).isNotNull)
       .head().getSeq[Any](0).length
-    val nWords = (dim + 63) >>> 6
+    val widths = Bq.rowWidths(dim)
     counts.foreach { case (s, c) =>
-      require(c <= Int.MaxValue && c * nWords <= Int.MaxValue &&
-          c * dim <= Int.MaxValue,
-        s"shard $s holds $c rows × $nWords words / $dim codes — one shard " +
-          "must fit an index; raise numShards")
+      require(IndexCodec.fits(widths, c), s"shard $s holds $c rows × " +
+        s"${IndexCodec.describe(widths)} — one shard must fit an index; raise numShards")
     }
-    val nTot = counts.values.sum
     // pass 2: the corpus-global SQ8 grid (shared fold — bit-equal to
     // the collect-based build's grid)
     val (gridMin, gridScale) = Similarity.sq8GlobalBounds(corpus, embCol, dim)
     // pass 3: exact integer column totals of the SQ8 codes
-    val dd = dim
     val proj = corpus.select(col(embCol))
     val isF32 = proj.schema.head.dataType match {
       case ArrayType(FloatType, _) => true
       case _ => false
     }
-    val bcGrid = sc.broadcast((gridMin, gridScale))
-    val colSum: Array[Long] =
+    val bcGrid = spark.sparkContext.broadcast((gridMin, gridScale))
+    val cut =
       try {
         org.apache.spark.sql.graft.InternalRowBridge.toInternalRdd(proj)
           .mapPartitions { it =>
             val (mn, scl) = bcGrid.value
-            val acc = new Array[Long](dd)
-            val v = new Array[Double](dd)
-            val codes = new Array[Byte](dd)
+            val acc = new Array[Long](dim)
+            val v = new Array[Double](dim)
+            val codes = new Array[Byte](dim)
+            var n = 0L
             it.foreach { row =>
               val a = row.getArray(0)
-              require(a.numElements() == dd,
-                s"ragged embedding: ${a.numElements()} elements, corpus dim $dd")
+              require(a.numElements() == dim,
+                s"ragged embedding: ${a.numElements()} elements, corpus dim $dim")
               var d = 0
-              while (d < dd) {
+              while (d < dim) {
                 v(d) = if (isF32) a.getFloat(d).toDouble else a.getDouble(d)
                 d += 1
               }
-              Similarity.sq8EncodeRow(v, 0, dd, mn, scl, codes, 0)
-              var d2 = 0
-              while (d2 < dd) { acc(d2) += (codes(d2) & 0xFF).toLong; d2 += 1 }
+              Similarity.sq8EncodeRow(v, 0, dim, mn, scl, codes, 0)
+              BqCut.add(acc, codes, 0)
+              n += 1
             }
-            Iterator.single(acc)
+            Iterator.single(BqCut(acc, n))
           }
-          .treeReduce { (a, b) =>
-            var d = 0
-            while (d < dd) { a(d) += b(d); d += 1 }
-            a
-          }
+          .treeReduce(_ + _)
       } finally bcGrid.destroy()
-    // bqFromSq8's own threshold arithmetic over the global totals
-    val bitCut = new Array[Int](dd)
-    val thresholds = new Array[Double](dd)
-    var d0 = 0
-    while (d0 < dd) {
-      bitCut(d0) = (colSum(d0) / nTot + 1L).toInt
-      thresholds(d0) = gridMin(d0) + (colSum(d0).toDouble / nTot) * gridScale(d0)
-      d0 += 1
-    }
+    val meta = IndexCodec.BqMeta(0, dim, (dim + 63) >>> 6, cut.thresholds(gridMin, gridScale),
+      gridMin, gridScale, cut.bitCut)
     // pass 4: encode scan-stage, number by (shard | id) through the
     // one code-width exchange, land in the persisted layout
     val shardVals: Seq[Long] = counts.keys.toSeq.sorted
     val shardOut: Map[Long, Int] = shardVals.zipWithIndex.toMap
-    val nW = nWords
-    val bcEnc = sc.broadcast((gridMin, gridScale, bitCut))
-    try {
-      publishAtomically(spark, path, overwrite) { tmp =>
-        import spark.implicits._
-        ShardedLayout.writeManifest(spark, tmp,
-          Manifest(shardVals.size, nTot, ShardKey, numShards, shardVals))
-        val withShard = corpus.select(shardCol.as("shard"),
-          col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
-        val encoded = withShard.rdd.mapPartitions { it =>
-          val (mn, scl, cut) = bcEnc.value
-          it.map { row =>
-            val v = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
-            val codes = new Array[Byte](dd)
-            val sq = Similarity.sq8EncodeRow(v, 0, dd, mn, scl, codes, 0)
-            Row(row.getLong(0), row.getLong(1), bqBits(codes, cut, nW), codes,
-              math.sqrt(sq), sq)
-          }
-        }
-        ShardedLayout.writeShardParts(spark.createDataFrame(encoded, bqEncSchema),
-          element_at(typedLit(shardOut), col("shard")), lit(0L), s"$tmp/__vectors__")
-        ShardedLayout.installBuiltShards(spark, tmp, s"$tmp/__vectors__", shardVals) {
-          (s, dir) =>
-            Seq((counts(s).toInt, dd, nW, thresholds.toSeq, gridMin.toSeq,
-                gridScale.toSeq, bitCut.toSeq))
-              .toDF("n", "dim", "n_words", "thresholds", "dim_min",
-                "dim_scale", "bit_cut")
-              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
-        }
+    publishAtomically(spark, path, overwrite) { tmp =>
+      ShardedLayout.writeManifest(spark, tmp,
+        Manifest(shardVals.size, counts.values.sum, ShardKey, numShards, shardVals))
+      val withShard = corpus.select(shardCol.as("shard"),
+        col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
+      IndexCodec.encodeRouted(spark, withShard, shardVals.map(_ -> Bq.Enc(meta)).toMap,
+        Bq.payload) { encoded =>
+        ShardedLayout.writeShardParts(encoded, element_at(typedLit(shardOut), col("shard")),
+          lit(0L), s"$tmp/__vectors__")
       }
-    } finally bcEnc.destroy()
+      ShardedLayout.installBuiltShards(spark, tmp, s"$tmp/__vectors__", shardVals) {
+        (s, dir) => Bq.writeMeta(spark, dir, meta.copy(n = counts(s).toInt))
+      }
+    }
   }
 
   /** APPEND new rows to a persisted SHARDED BQ index — the
@@ -665,79 +560,43 @@ object Sink {
       embCol: String,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
-    import spark.implicits._
-    // the frozen encode artifacts are corpus-GLOBAL — every shard's
-    // meta carries the same grid/thresholds/cut (validated here so a
-    // corrupt mixed-grid index refuses instead of encoding wrong)
-    require(spark.read.parquet(s"${shardDir(indexPath, 0)}/meta")
-      .schema.fieldNames.contains("bit_cut"),
-      s"the BQ index at $indexPath predates the bit_cut meta column — " +
-        "appends need the frozen integer threshold; re-persist once to " +
-        "upgrade the layout")
-    val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath) { i =>
-      spark.read.parquet(s"${shardDir(indexPath, i)}/meta")
-        .select("n", "dim", "n_words", "thresholds", "dim_min", "dim_scale",
-          "bit_cut").head()
-    }(_.getInt(0).toLong, (m, grown) =>
-      // grown*dim guards the SQ8 code array read-back allocates (dim
-      // can be 64× nWords, so the words cap alone lets an append
-      // succeed whose restore would overflow Int)
-      grown <= Int.MaxValue && grown * m.getInt(2) <= Int.MaxValue &&
-        grown * m.getInt(1) <= Int.MaxValue)
-    val m0 = ap.metas(0)
-    ap.metas.zipWithIndex.foreach { case (m, i) =>
-      require(m.getSeq[Int](6) == m0.getSeq[Int](6) &&
-        m.getSeq[Double](3) == m0.getSeq[Double](3),
-        s"shard $i cuts on a different threshold than shard 0 — corrupt index")
+      overwrite: Boolean = false): Unit =
+    appendShardedCore(IndexCodec.Bq, spark, newRows, idCol, embCol, indexPath, outPath,
+      overwrite)(dir => IndexCodec.Bq.appendable(IndexCodec.Bq.readMeta(spark, dir), "BQ",
+      indexPath, "re-persist once to upgrade the layout")) { metas =>
+      // the frozen encode artifacts are corpus-GLOBAL — every shard's
+      // meta carries the same grid/thresholds/cut (validated so a
+      // corrupt mixed-grid index refuses instead of encoding wrong)
+      metas.zipWithIndex.foreach { case (m, i) => require(IndexCodec.Bq.sameCut(m, metas(0)),
+        s"shard $i cuts on a different threshold than shard 0 — corrupt index") }
+      metas.map(IndexCodec.Bq.Enc)
     }
-    val dim = m0.getInt(1)
-    val nWords = m0.getInt(2)
-    val dimMin = m0.getSeq[Float](4).toArray
-    val dimScale = m0.getSeq[Float](5).toArray
-    val bitCut = m0.getSeq[Int](6).toArray
 
-    val dd = dim
-    val nW = nWords
-    val bcG = spark.sparkContext.broadcast((dimMin, dimScale, bitCut))
-    try {
-      publishAtomically(spark, outPath, overwrite) { tmp =>
-        ShardedLayout.writeManifest(spark, tmp, ap.grown)
-        val encoded = ap.narrow.rdd.mapPartitions { it =>
-          val (mn, scale, cut) = bcG.value
-          it.map { row =>
-            val v = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
-            val codes = new Array[Byte](dd)
-            val sq = graft.operators.Similarity.sq8EncodeRow(
-              v, 0, dd, mn, scale, codes, 0)
-            Row(row.getLong(0), row.getLong(1), bqBits(codes, cut, nW), codes,
-              math.sqrt(sq), sq)
-          }
-        }
-        ShardedLayout.appendTail(spark, spark.createDataFrame(encoded, bqEncSchema),
-          ap.metas.map(_.getInt(0)), indexPath, tmp) { (i, dir) =>
-          Seq(((ap.metas(i).getInt(0) + ap.newOf(i)).toInt, dim,
-              nWords, m0.getSeq[Double](3), dimMin.toSeq, dimScale.toSeq,
-              bitCut.toSeq))
-            .toDF("n", "dim", "n_words", "thresholds", "dim_min",
-              "dim_scale", "bit_cut")
-            .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
+  /** The one routed encode-only append of the [[ShardedLayout]]
+    * families that pack rows by `idx` (BQ, IVF+PQ/OPQ): the append
+    * prelude with the family's grow cap, the batch encoded scan-stage
+    * with each destination shard's frozen encode, and the append tail
+    * with each shard's grown meta.
+    */
+  private def appendShardedCore[M <: IndexCodec.Stored](
+      layout: IndexCodec.Layout[M], spark: SparkSession, newRows: DataFrame, idCol: String,
+      embCol: String, indexPath: String, outPath: String, overwrite: Boolean)(
+      readMeta: String => M)(encodes: IndexedSeq[M] => IndexedSeq[IndexCodec.Encode]): Unit = {
+    val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath)(i =>
+      readMeta(shardDir(indexPath, i)))(_.n.toLong,
+      (m, grown) => IndexCodec.fits(layout.widths(m), grown))
+    val es = encodes(ap.metas)
+    publishAtomically(spark, outPath, overwrite) { tmp =>
+      ShardedLayout.writeManifest(spark, tmp, ap.grown)
+      IndexCodec.encodeRouted(spark, ap.narrow, es.indices.map(i => i.toLong -> es(i)).toMap,
+        layout.payload) { encoded =>
+        ShardedLayout.appendTail(spark, encoded, ap.metas.map(_.n), indexPath, tmp) {
+          (i, dir) =>
+            val m = ap.metas(i)
+            layout.writeMeta(spark, dir, layout.grown(m, m.n + ap.newOf(i).toInt))
         }
       }
-    } finally bcG.destroy()
-  }
-
-  /** Bit words of one SQ8-coded row: bit `d` is set iff
-    * `code(d) >= cut(d)` — the build's integer threshold contract.
-    */
-  private def bqBits(codes: Array[Byte], cut: Array[Int], nWords: Int): Array[Long] = {
-    val words = new Array[Long](nWords)
-    var d = 0
-    while (d < codes.length) {
-      if ((codes(d) & 0xFF) >= cut(d)) words(d >>> 6) |= 1L << (d & 63)
-      d += 1
     }
-    words
   }
 
   /** TOMBSTONE delete from a persisted sharded BQ index — the one
@@ -926,9 +785,10 @@ object Sink {
     * kernel's named error; an index persisted before the `bit_cut`
     * meta column refuses by name (re-persist once with the current
     * writer to upgrade). The result reads back through
-    * [[graft.sources.Source.readBqIndex]] and serves like any built
-    * index (SinkSpec pins old-row byte identity, new-row encode
-    * correctness, and search recall over the grown corpus).
+    * [[graft.sources.Source.readBqIndex]] (id-ascending, like a
+    * build) and serves like any built index (SinkSpec pins old-row
+    * byte identity, new-row encode correctness, and search recall
+    * over the grown corpus).
     */
   def appendBqIndex(
       spark: SparkSession,
@@ -937,74 +797,11 @@ object Sink {
       embCol: String,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
-    import spark.implicits._
-    requireEmbColType(newRows, embCol)
-    val metaDf = spark.read.parquet(s"$indexPath/meta")
-    require(metaDf.schema.fieldNames.contains("bit_cut"),
-      s"the BQ index at $indexPath predates the bit_cut meta column — " +
-        "appends need the frozen integer threshold; re-persist the index " +
-        "with writeBqIndex once to upgrade the layout")
-    val meta = metaDf
-      .select("n", "dim", "n_words", "thresholds", "dim_min", "dim_scale",
-        "bit_cut").head()
-    val oldN = meta.getInt(0)
-    val dim = meta.getInt(1)
-    val nWords = meta.getInt(2)
-    val thresholds = meta.getSeq[Double](3)
-    val dimMin = meta.getSeq[Float](4).toArray
-    val dimScale = meta.getSeq[Float](5).toArray
-    val bitCut = meta.getSeq[Int](6).toArray
-
-    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/vectors", indexPath)
-    // the dim product guards the SQ8 code array read-back allocates
-    // (dim can be 64× nWords — see the sharded append's same cap)
-    require(oldN + newN <= Int.MaxValue &&
-        (oldN + newN) * nWords.toLong <= Int.MaxValue &&
-        (oldN + newN) * dim.toLong <= Int.MaxValue,
-      s"index would grow to ${oldN + newN} rows × $nWords words / $dim " +
-        "codes — past the JVM array cap; shard the corpus (buildBqSharded) " +
-        "instead")
-
-    val dd = dim
-    val nW = nWords
-    val bcG = spark.sparkContext.broadcast((dimMin, dimScale, bitCut))
-    try {
-      publishAtomically(spark, outPath, overwrite) { tmp =>
-        val encoded = narrow.orderBy("id").rdd.zipWithIndex.mapPartitions { it =>
-          val (mn, sc, cut) = bcG.value
-          it.map { case (row, i) =>
-            val v = embDoubles(row.getLong(0), row.getSeq[Any](1), dd)
-            val codes = new Array[Byte](dd)
-            val sq = graft.operators.Similarity.sq8EncodeRow(
-              v, 0, dd, mn, sc, codes, 0)
-            val words = new Array[Long](nW)
-            var d = 0
-            while (d < dd) {
-              if ((codes(d) & 0xFF) >= cut(d)) words(d >>> 6) |= 1L << (d & 63)
-              d += 1
-            }
-            Row(oldN + i.toInt, row.getLong(0), words, codes, math.sqrt(sq), sq)
-          }
-        }
-        val encSchema = StructType(Seq(
-          StructField("idx", IntegerType, nullable = false),
-          StructField("id", LongType, nullable = false),
-          StructField("words", ArrayType(LongType, containsNull = false),
-            nullable = false),
-          StructField("code", BinaryType, nullable = false),
-          StructField("norm", DoubleType, nullable = false),
-          StructField("sq_norm", DoubleType, nullable = false)))
-        copyVectorsWithAppend(spark, tmp, s"$indexPath/vectors",
-          spark.createDataFrame(encoded, encSchema))
-        Seq(((oldN + newN).toInt, dim, nWords, thresholds,
-            dimMin.toSeq, dimScale.toSeq, bitCut.toSeq))
-          .toDF("n", "dim", "n_words", "thresholds", "dim_min", "dim_scale",
-            "bit_cut")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/meta")
-      }
-    } finally bcG.destroy()
-  }
+      overwrite: Boolean = false): Unit =
+    appendFlatCore(IndexCodec.Bq, spark, newRows, idCol, embCol, indexPath, outPath,
+      overwrite, "", "buildBqSharded")(dir => IndexCodec.Bq.appendable(
+      IndexCodec.Bq.readMeta(spark, dir), "BQ", indexPath,
+      "re-persist the index with writeBqIndex once to upgrade the layout"))(IndexCodec.Bq.Enc)
 
   /** Id hygiene shared by every encode-only append, flat and sharded:
     * refuse a null id, duplicate ids within the batch, and ids already
@@ -1029,34 +826,49 @@ object Sink {
         s"exists in the index at $indexPath")
   }
 
-  /** A flat append's `(id, emb)` batch, id-checked by
-    * [[requireFreshAppendIds]], with its size (the one `count()` the
-    * caps need).
+  /** The one flat encode-only append (SQ8, BQ, PQ, OPQ): the stored
+    * meta under `indexPath + sub` (`/pq` for OPQ), the `(id, emb)`
+    * batch id-checked by [[requireFreshAppendIds]] and held to the
+    * family's array cap (`hint` names the sharded build to use past
+    * it), then inside the publish: `rot/` carried forward when
+    * present, the batch encoded scan-stage in id order with pack
+    * positions continuing from the stored `n`, old vectors COPIED AS
+    * FILES (their bytes are already right — no decode, no re-encode,
+    * no shuffle) with the batch beside them as `append-part-*` files,
+    * and the grown meta.
     */
-  private def flatBatch(newRows: DataFrame, idCol: String, embCol: String,
-      storedVectorsDir: String, indexPath: String): (DataFrame, Long) = {
-    val narrow = newRows.select(
-      col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
-    requireFreshAppendIds(narrow, idCol, Seq(storedVectorsDir), indexPath)
-    (narrow, narrow.count())
-  }
-
-  /** The shared tail of every flat encode-only append: old vectors
-    * COPY AS FILES (their bytes are already right — no decode, no
-    * re-encode, no shuffle), the encoded batch lands beside them as
-    * `append-part-*` files in `destDir/vectors`. `destDir` is inside
-    * an in-flight atomic publish, so a crash mid-copy leaves no torn
-    * state at any readable path.
-    */
-  private def copyVectorsWithAppend(
-      spark: SparkSession, destDir: String, srcVectorsDir: String,
-      appendDf: DataFrame): Unit = {
-    appendDf.write.mode(SaveMode.ErrorIfExists).parquet(s"$destDir/__append__")
-    val appDir = new org.apache.hadoop.fs.Path(s"$destDir/__append__")
-    val fs = appDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    copyDir(spark, srcVectorsDir, s"$destDir/vectors")
-    ShardedLayout.movePartsInto(fs, appDir, new org.apache.hadoop.fs.Path(s"$destDir/vectors"))
-    fs.delete(appDir, true)
+  private def appendFlatCore[M <: IndexCodec.Stored](
+      layout: IndexCodec.Layout[M], spark: SparkSession, newRows: DataFrame, idCol: String,
+      embCol: String, indexPath: String, outPath: String, overwrite: Boolean, sub: String,
+      hint: String)(readMeta: String => M)(encode: M => IndexCodec.Encode): Unit = {
+    requireEmbColType(newRows, embCol)
+    val m = readMeta(s"$indexPath$sub")
+    val narrow = newRows.select(col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
+    requireFreshAppendIds(narrow, idCol, Seq(s"$indexPath$sub/vectors"), indexPath)
+    val oldN = m.n
+    val grown = oldN + narrow.count()
+    val widths = layout.widths(m)
+    require(IndexCodec.fits(widths, grown), s"index would grow to $grown rows × " +
+      s"${IndexCodec.describe(widths)} — past the JVM array cap; shard the corpus ($hint) " +
+      "instead")
+    val bc = spark.sparkContext.broadcast(encode(m))
+    try publishAtomically(spark, outPath, overwrite) { tmp =>
+      val dest = s"$tmp$sub"
+      carry(spark, indexPath, tmp, "rot")
+      val encoded = narrow.orderBy("id").rdd.zipWithIndex.mapPartitions { it =>
+        val e = bc.value
+        it.map { case (r, i) => e.row(Seq[Any](oldN + i.toInt, r.getLong(0)), r.getLong(0),
+          r.getSeq[Any](1)) }
+      }
+      spark.createDataFrame(encoded, IndexCodec.schema(IndexCodec.Pos, layout.payload))
+        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dest/__append__")
+      val appDir = new org.apache.hadoop.fs.Path(s"$dest/__append__")
+      val fs = appDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      copyDir(spark, s"$indexPath$sub/vectors", s"$dest/vectors")
+      ShardedLayout.movePartsInto(fs, appDir, new org.apache.hadoop.fs.Path(s"$dest/vectors"))
+      fs.delete(appDir, true)
+      layout.writeMeta(spark, dest, layout.grown(m, grown.toInt))
+    } finally bc.destroy()
   }
 
   /** APPEND new rows to a persisted flat SQ8 index — the
@@ -1078,149 +890,9 @@ object Sink {
       embCol: String,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
-    import spark.implicits._
-    requireEmbColType(newRows, embCol)
-    val meta = spark.read.parquet(s"$indexPath/meta")
-      .select("n", "dim", "dim_min", "dim_scale").head()
-    val oldN = meta.getInt(0)
-    val dim = meta.getInt(1)
-    val dimMin = meta.getSeq[Float](2).toArray
-    val dimScale = meta.getSeq[Float](3).toArray
-    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/vectors", indexPath)
-    require(oldN + newN <= Int.MaxValue &&
-        (oldN + newN) * dim.toLong <= Int.MaxValue,
-      s"index would grow to ${oldN + newN} rows × $dim codes — past the " +
-        "JVM array cap; shard the corpus (buildSq8Sharded) instead")
-    val dd = dim
-    val bcG = spark.sparkContext.broadcast((dimMin, dimScale))
-    try {
-      publishAtomically(spark, outPath, overwrite) { tmp =>
-        val encoded = narrow.orderBy("id").rdd.zipWithIndex.mapPartitions { it =>
-          val (mn, sc) = bcG.value
-          it.map { case (row, i) =>
-            val v = embDoubles(row.getLong(0), row.getSeq[Any](1), dd)
-            val codes = new Array[Byte](dd)
-            val sq = graft.operators.Similarity.sq8EncodeRow(
-              v, 0, dd, mn, sc, codes, 0)
-            Row(oldN + i.toInt, row.getLong(0), codes, math.sqrt(sq), sq)
-          }
-        }
-        val encSchema = StructType(Seq(
-          StructField("idx", IntegerType, nullable = false),
-          StructField("id", LongType, nullable = false),
-          StructField("code", BinaryType, nullable = false),
-          StructField("norm", DoubleType, nullable = false),
-          StructField("sq_norm", DoubleType, nullable = false)))
-        copyVectorsWithAppend(spark, tmp, s"$indexPath/vectors",
-          spark.createDataFrame(encoded, encSchema))
-        Seq(((oldN + newN).toInt, dim, dimMin.toSeq, dimScale.toSeq))
-          .toDF("n", "dim", "dim_min", "dim_scale")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/meta")
-      }
-    } finally bcG.destroy()
-  }
-
-  /** The PQ append body written into an already-owned dir — shared by
-    * [[appendPqIndex]] (destDir = the publish tmp) and
-    * [[appendOpqIndex]] (destDir = `tmp/pq`, with the frozen learned
-    * rotation applied to each new row first, exactly where the build
-    * applies it: PQ codes, PQ norms, and the SQ8 rerank sidecar are
-    * all computed in ROTATED space, matching `quantizeOpq`'s
-    * `quantizePq(rotateIndex(...))` composition).
-    *
-    * The effective codebook count `k` matters: `quantizePq` trains
-    * `k = min(256, n)` centroids and leaves the rest of the 256-slot
-    * block zero — encoding a new row against an untrained zero
-    * centroid would silently corrupt its code. A build's meta doesn't
-    * record k, but its build-time `n` does (k = min(256, build n)),
-    * and every append REWRITES meta with the grown n — so the first
-    * append derives k from the stored build n and persists it as a
-    * trailing `pq_k` meta column (readers are positional over the
-    * first six columns, untouched); later appends read it back.
-    */
-  private def appendPqInto(
-      spark: SparkSession,
-      narrow: DataFrame,
-      newN: Long,
-      pqPath: String,
-      destDir: String,
-      rot: Option[Array[Double]]): Unit = {
-    import spark.implicits._
-    val metaDf = spark.read.parquet(s"$pqPath/meta")
-    val meta = metaDf.head()
-    val oldN = meta.getInt(0)
-    val dim = meta.getInt(1)
-    val m = meta.getInt(2)
-    val codebooks = meta.getSeq[Float](3).toArray
-    val sq8Min = if (meta.isNullAt(4)) None else Some(meta.getSeq[Float](4).toArray)
-    val sq8Scale = if (meta.isNullAt(5)) None else Some(meta.getSeq[Float](5).toArray)
-    val k =
-      if (metaDf.schema.fieldNames.contains("pq_k"))
-        meta.getInt(metaDf.schema.fieldIndex("pq_k"))
-      else math.max(1, math.min(256, oldN))
-    require(oldN + newN <= Int.MaxValue &&
-        (oldN + newN) * m.toLong <= Int.MaxValue &&
-        (sq8Min.isEmpty || (oldN + newN) * dim.toLong <= Int.MaxValue),
-      s"index would grow to ${oldN + newN} rows × $m codes / $dim rerank " +
-        "codes — past the JVM array cap; shard the corpus " +
-        "(buildIvfPqSharded) instead")
-    val dd = dim
-    val mm = m
-    val subv = dim / m
-    val kk = k
-    val bcE = spark.sparkContext.broadcast(
-      (codebooks, sq8Min.orNull, sq8Scale.orNull, rot.orNull))
-    try {
-      val encoded = narrow.orderBy("id").rdd.zipWithIndex.mapPartitions { it =>
-        val (cb, s8mn, s8sc, rt) = bcE.value
-        it.map { case (row, i) =>
-          val raw = embDoubles(row.getLong(0), row.getSeq[Any](1), dd)
-          val v =
-            if (rt == null) raw
-            else {
-              val o = new Array[Double](dd)
-              graft.operators.Similarity.rotateRow(rt, raw, 0, dd, o, 0)
-              o
-            }
-          val pqc = new Array[Byte](mm)
-          graft.operators.Similarity.pqEncodeRow(
-            v, 0, dd, mm, subv, kk, cb, pqc, 0)
-          // PQ norms are EXACT (from the uncompressed row, f32-stored)
-          // while the sidecar's are the dequantized-grid values —
-          // quantizePq's exact split, replicated
-          var sq = 0.0
-          var d = 0
-          while (d < dd) { sq += v(d) * v(d); d += 1 }
-          if (s8mn != null) {
-            val c8 = new Array[Byte](dd)
-            val sq8 = graft.operators.Similarity.sq8EncodeRow(
-              v, 0, dd, s8mn, s8sc, c8, 0)
-            Row(oldN + i.toInt, row.getLong(0), pqc,
-              math.sqrt(sq).toFloat, sq.toFloat, c8, math.sqrt(sq8), sq8)
-          } else
-            Row(oldN + i.toInt, row.getLong(0), pqc,
-              math.sqrt(sq).toFloat, sq.toFloat, null, null, null)
-        }
-      }
-      val encSchema = StructType(Seq(
-        StructField("idx", IntegerType, nullable = false),
-        StructField("id", LongType, nullable = false),
-        StructField("code", BinaryType, nullable = false),
-        StructField("norm", FloatType, nullable = false),
-        StructField("sq_norm", FloatType, nullable = false),
-        StructField("sq8_code", BinaryType, nullable = true),
-        StructField("sq8_norm", DoubleType, nullable = true),
-        StructField("sq8_sq_norm", DoubleType, nullable = true)))
-      copyVectorsWithAppend(spark, destDir, s"$pqPath/vectors",
-        spark.createDataFrame(encoded, encSchema))
-      Seq(((oldN + newN).toInt, dim, m, codebooks.toSeq,
-          sq8Min.map(_.toSeq), sq8Scale.map(_.toSeq), k))
-        .toDF("n", "dim", "m", "codebooks", "sq8_dim_min", "sq8_dim_scale",
-          "pq_k")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$destDir/meta")
-    } finally bcE.destroy()
-  }
+      overwrite: Boolean = false): Unit =
+    appendFlatCore(IndexCodec.Sq8, spark, newRows, idCol, embCol, indexPath, outPath,
+      overwrite, "", "buildSq8Sharded")(IndexCodec.Sq8.readMeta(spark, _))(IndexCodec.Sq8.Enc)
 
   /** APPEND new rows to a persisted flat PQ index — the
     * [[appendBqIndex]] contract for the product-quantized rung: the
@@ -1231,6 +903,8 @@ object Sink {
     * publishes atomically at `outPath`. Codebooks are intentionally
     * NOT re-trained: moving a centroid would change OLD rows'
     * decode (a rebuild, not an append); re-train on a schedule.
+    * Encode runs over the TRAINED entries only: the first append
+    * records the build's count as `pq_k` ([[IndexCodec.Pq]]).
     * Reads back through [[graft.sources.Source.readPqIndex]].
     */
   def appendPqIndex(
@@ -1240,21 +914,19 @@ object Sink {
       embCol: String,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
-    requireEmbColType(newRows, embCol)
-    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/vectors", indexPath)
-    publishAtomically(spark, outPath, overwrite) { tmp =>
-      appendPqInto(spark, narrow, newN, indexPath, tmp, None)
-    }
-  }
+      overwrite: Boolean = false): Unit =
+    appendFlatCore(IndexCodec.Pq, spark, newRows, idCol, embCol, indexPath, outPath,
+      overwrite, "", "buildIvfPqSharded")(IndexCodec.Pq.readMeta(spark, _))(
+      IndexCodec.Pq.Enc(_, null))
 
   /** APPEND new rows to a persisted flat OPQ index — [[appendPqIndex]]
     * with the index's learned rotation applied to each new row first
     * (frozen like the codebooks: re-learning the rotation would
-    * re-align every OLD row's space — a rebuild). The rotation block
-    * copies through unchanged; the wrapped PQ payload grows by the
-    * encode-only contract. Reads back through
-    * [[graft.sources.Source.readOpqIndex]].
+    * re-align every OLD row's space — a rebuild; PQ codes, norms and
+    * the sidecar are all computed in rotated space, where the build
+    * quantized). The rotation block copies through unchanged; the
+    * wrapped PQ payload grows by the encode-only contract. Reads back
+    * through [[graft.sources.Source.readOpqIndex]].
     */
   def appendOpqIndex(
       spark: SparkSession,
@@ -1264,23 +936,16 @@ object Sink {
       indexPath: String,
       outPath: String,
       overwrite: Boolean = false): Unit = {
-    requireEmbColType(newRows, embCol)
     val (_, rot) = ShardedLayout.readRotation(spark, indexPath)
-    val (narrow, newN) = flatBatch(newRows, idCol, embCol, s"$indexPath/pq/vectors", indexPath)
-    publishAtomically(spark, outPath, overwrite) { tmp =>
-      copyDir(spark, s"$indexPath/rot", s"$tmp/rot")
-      appendPqInto(spark, narrow, newN, s"$indexPath/pq", s"$tmp/pq",
-        Some(rot))
-    }
+    appendFlatCore(IndexCodec.Pq, spark, newRows, idCol, embCol, indexPath, outPath,
+      overwrite, "/pq", "buildIvfPqSharded")(IndexCodec.Pq.readMeta(spark, _))(
+      IndexCodec.Pq.Enc(_, rot))
   }
 
   /** Persist an IVF+BQ index — centroids + CSR routing + the
     * CSR-position-ordered bit matrix + the SQ8 envelope, byte-exact.
-    * Layout: `path/vectors/` one row per CSR slot (slot, the member's
-    * original row index, id, bit words, SQ8 codes, norms — vectors
-    * restore in slot order so the sequential-bits layout survives);
-    * `path/meta/` one row (n, dim, n_words, n_cells, centroids,
-    * thresholds, cell_start, grid bounds).
+    * Layout: [[IndexCodec.IvfBq]] (one vectors row per CSR slot, so
+    * the sequential-bits layout survives).
     * [[graft.sources.Source.readIvfBqIndex]] restores byte-identically.
     */
   def writeIvfBqIndex(
@@ -1288,41 +953,7 @@ object Sink {
       ix: graft.operators.Similarity.CorpusIndexIvfBq,
       path: String,
       overwrite: Boolean = false): Unit =
-    publishAtomically(spark, path, overwrite) { tmp =>
-      writeIvfBqInto(spark, ix, tmp)
-    }
-
-  /** The IVF+BQ layout body written into an already-owned dir —
-    * shared by [[writeIvfBqIndex]] and [[writeIvfBqShardedIndex]].
-    */
-  private def writeIvfBqInto(
-      spark: org.apache.spark.sql.SparkSession,
-      ix: graft.operators.Similarity.CorpusIndexIvfBq,
-      tmp: String): Unit = {
-    import spark.implicits._
-    val bytesPerRow = 8L * ix.nWords + ix.dim
-    val slices = math.max(1, (ix.n.toLong * bytesPerRow / (64L << 20)).toInt)
-    val bc = spark.sparkContext.broadcast(ix)
-    try {
-      spark.sparkContext.parallelize(0 until ix.n, slices).map { p =>
-        val x = bc.value
-        val g = x.cellMembers(p) // original row index at CSR slot p
-        (p, g, x.ids(g),
-          java.util.Arrays.copyOfRange(x.words, p * x.nWords, (p + 1) * x.nWords),
-          java.util.Arrays.copyOfRange(x.sq8.codes, g * x.dim, (g + 1) * x.dim),
-          x.sq8.norms(g), x.sq8.sqNorms(g))
-      }.toDF("slot", "row", "id", "words", "code", "norm", "sq_norm")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/vectors")
-    } finally bc.destroy()
-    // bit_cut is the frozen-threshold artifact appendIvfBqShardedIndex
-    // encodes against (appended LAST so readers by name are untouched)
-    Seq((ix.n, ix.dim, ix.nWords, ix.nCells, ix.centroids.toSeq,
-        ix.thresholds.toSeq, ix.cellStart.toSeq,
-        ix.sq8.dimMin.toSeq, ix.sq8.dimScale.toSeq, ix.bitCut.toSeq))
-      .toDF("n", "dim", "n_words", "n_cells", "centroids",
-        "thresholds", "cell_start", "dim_min", "dim_scale", "bit_cut")
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/meta")
-  }
+    publishAtomically(spark, path, overwrite)(IndexCodec.IvfBq.write(spark, ix, _))
 
   /** Persist a SHARDED IVF+BQ build — the [[writeBqShardedIndex]]
     * shape over the routed rung (which the round-15 crossover probe
@@ -1343,7 +974,7 @@ object Sink {
         s"${build.shards.size} shards")
     publishAtomically(spark, path, overwrite) { tmp =>
       ShardedLayout.writeShards(spark, tmp, build.shards, build.hashModulus,
-        build.shardHashVals)(_.n, writeIvfBqInto(spark, _, _))
+        build.shardHashVals)(_.n, IndexCodec.IvfBq.write(spark, _, _))
     }
   }
 
@@ -1362,12 +993,11 @@ object Sink {
     *    metas so a corrupt mixed-grid index refuses): new rows
     *    SQ8-encode with clamping, bits cut at `code >= bit_cut` —
     *    the build's exact integer contract;
-    *  - cells are FROZEN per shard: each new row dequantizes +
-    *    unit-normalizes with [[graft.operators.Similarity
-    *    .ivfBqFromSq8]]'s own arithmetic and assigns to the stored
-    *    centroids (strict-max dot, ties to the lowest cell — the
-    *    build's rule). NO re-clustering: moving a centroid would
-    *    re-route OLD rows (a rebuild, not an append);
+    *  - cells are FROZEN per shard: each new row takes its cell
+    *    through [[IndexCodec.IvfBq.Enc]] (decoded, unit-normalized,
+    *    strict-max dot against the stored centroids, ties to the
+    *    lowest cell — the build's rule). NO re-clustering: moving a
+    *    centroid would re-route OLD rows (a rebuild, not an append);
     *  - the CSR stays REAL: appended members land at the END of
     *    their cell's bracket (old members keep their relative order
     *    — the stable-CSR invariant compaction also preserves), which
@@ -1398,187 +1028,106 @@ object Sink {
       indexPath: String,
       outPath: String,
       overwrite: Boolean = false): Unit = {
-    import spark.implicits._
-    import graft.operators.Similarity
-    require(spark.read.parquet(s"${shardDir(indexPath, 0)}/meta")
-      .schema.fieldNames.contains("bit_cut"),
-      s"the IVF+BQ index at $indexPath predates the bit_cut meta column — " +
-        "appends need the frozen integer threshold; read it once through " +
-        "readIvfBqShardedIndex (which re-derives the cut) and re-persist " +
-        "with writeIvfBqShardedIndex to upgrade the layout")
-    final case class ShardMeta(
-        n: Int, dim: Int, nWords: Int, nCells: Int,
-        centroids: Array[Double], thresholds: Seq[Double],
-        cellStart: Array[Int], dimMin: Array[Float],
-        dimScale: Array[Float], bitCut: Array[Int])
+    import IndexCodec.IvfBq
     val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath) { i =>
-      val m = spark.read.parquet(s"${shardDir(indexPath, i)}/meta")
-        .select("n", "dim", "n_words", "n_cells", "centroids", "thresholds",
-          "cell_start", "dim_min", "dim_scale", "bit_cut").head()
-      ShardMeta(m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3),
-        m.getSeq[Double](4).toArray, m.getSeq[Double](5),
-        m.getSeq[Int](6).toArray, m.getSeq[Float](7).toArray,
-        m.getSeq[Float](8).toArray, m.getSeq[Int](9).toArray)
-    }(_.n.toLong, (m, grown) => grown <= Int.MaxValue &&
-      grown * m.nWords <= Int.MaxValue && grown * m.dim <= Int.MaxValue)
+      val m = IvfBq.readMeta(spark, shardDir(indexPath, i))
+      IndexCodec.Bq.appendable(m.bq, "IVF+BQ", indexPath, "read it once through " +
+        "readIvfBqShardedIndex (which re-derives the cut) and re-persist with " +
+        "writeIvfBqShardedIndex to upgrade the layout")
+      m
+    }(_.n.toLong, (m, grown) => IndexCodec.fits(IvfBq.widths(m), grown))
     val metas = ap.metas
-    val m0 = metas(0)
-    val dim = m0.dim
-    val nWords = m0.nWords
     metas.zipWithIndex.foreach { case (m, i) =>
-      require(m.dim == dim && m.nWords == nWords &&
-          m.bitCut.sameElements(m0.bitCut) && m.thresholds == m0.thresholds &&
-          m.dimMin.sameElements(m0.dimMin) && m.dimScale.sameElements(m0.dimScale),
+      require(IndexCodec.Bq.sameCut(m.bq, metas(0).bq),
         s"shard $i cuts on a different grid/threshold than shard 0 — corrupt index")
     }
-
-    val dd = dim
-    val nW = nWords
     val sc = spark.sparkContext
-    val bcG = sc.broadcast((m0.dimMin, m0.dimScale, m0.bitCut))
-    val bcCells = sc.broadcast(
-      metas.zipWithIndex.map { case (m, i) => i.toLong -> (m.centroids, m.nCells) }.toMap)
-    try {
-      publishAtomically(spark, outPath, overwrite) { tmp =>
-        ShardedLayout.writeManifest(spark, tmp, ap.grown)
-        // scan-stage encode + frozen-cell assignment: raw vectors
-        // leave their executor as code-width rows
-        val encoded = ap.narrow.rdd.mapPartitions { it =>
-          val (mn, scl, cut) = bcG.value
-          val cells = bcCells.value
-          it.map { row =>
-            val sh = row.getLong(0)
-            val v = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
-            val codes = new Array[Byte](dd)
-            val sq = Similarity.sq8EncodeRow(v, 0, dd, mn, scl, codes, 0)
-            val nrm = math.sqrt(sq)
-            val words = bqBits(codes, cut, nW)
-            // ivfBqFromSq8's decode + unit-normalize (zero-norm rows
-            // stay zero) then the build's strict-max assignment
-            val unit = new Array[Double](dd)
-            if (nrm > 1e-10) {
-              var d2 = 0
-              while (d2 < dd) {
-                unit(d2) = (mn(d2) + (codes(d2) & 0xFF) * scl(d2).toDouble) / nrm
-                d2 += 1
-              }
-            }
-            val (cents, k) = cells(sh)
-            val cell = Similarity.assignCell(unit, 0, cents, k, dd)
-            Row(sh, row.getLong(1), cell, words, codes, nrm, sq)
-          }
-        }
-        val encSchema = StructType(Seq(
-          StructField("shard", LongType, nullable = false),
-          StructField("id", LongType, nullable = false),
-          StructField("cell", IntegerType, nullable = false),
-          StructField("words", ArrayType(LongType, containsNull = false),
-            nullable = false),
-          StructField("code", BinaryType, nullable = false),
-          StructField("norm", DoubleType, nullable = false),
-          StructField("sq_norm", DoubleType, nullable = false)))
-        spark.createDataFrame(encoded, encSchema)
-          .withColumn("shard_out", col("shard").cast(IntegerType))
+    publishAtomically(spark, outPath, overwrite) { tmp =>
+      ShardedLayout.writeManifest(spark, tmp, ap.grown)
+      // scan-stage encode + frozen-cell assignment: raw vectors
+      // leave their executor as code-width rows
+      IndexCodec.encodeRouted(spark, ap.narrow,
+        metas.indices.map(i => i.toLong -> IvfBq.Enc(metas(i))).toMap, IvfBq.encoded) {
+        _.withColumn("shard_out", col("shard").cast(IntegerType))
           .write.partitionBy("shard_out").mode(SaveMode.ErrorIfExists)
           .parquet(s"$tmp/__append__")
-        val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(sc.hadoopConfiguration)
-        val vecCols = Seq("slot", "row", "id", "words", "code", "norm", "sq_norm")
-        val vecSchema = StructType(Seq(
-          StructField("slot", IntegerType, nullable = false),
-          StructField("row", IntegerType, nullable = false),
-          StructField("id", LongType, nullable = false),
-          StructField("words", ArrayType(LongType, containsNull = false),
-            nullable = false),
-          StructField("code", BinaryType, nullable = false),
-          StructField("norm", DoubleType, nullable = false),
-          StructField("sq_norm", DoubleType, nullable = false)))
-        // per-shard remap/copy/meta tails are independent — guide §2.6
-        Par.shards(metas.indices) { i =>
-          val m = metas(i)
-          val dst = shardDir(tmp, i)
-          val part = new org.apache.hadoop.fs.Path(s"$tmp/__append__/shard_out=$i")
-          val nNew = ap.newOf(i).toInt
-          // untouched shard: bytes stay bytes
-          if (nNew == 0) copyDir(spark, shardDir(indexPath, i), dst)
-          else {
-            require(fs.exists(part),
-              s"encode pass produced no partition for shard $i at $part")
-            val batch = spark.read.parquet(part.toString)
-            // per-cell insert counts (≤ nCells rows to the driver)
-            val ins = new Array[Int](m.nCells)
-            batch.groupBy("cell").count().collect()
-              .foreach(r => ins(r.getInt(0)) = r.getLong(1).toInt)
-            val cumIns = new Array[Int](m.nCells + 1)
-            var c = 0
-            while (c < m.nCells) { cumIns(c + 1) = cumIns(c) + ins(c); c += 1 }
-            val newStart = new Array[Int](m.nCells + 1)
-            var c2 = 0
-            while (c2 <= m.nCells) {
-              newStart(c2) = m.cellStart(c2) + cumIns(c2); c2 += 1
-            }
-            // old members: slot shifts by the inserts into cells
-            // BEFORE theirs; row/id/bits/codes/norms byte-identical
-            val bcRemap = sc.broadcast((m.cellStart, cumIns))
-            try {
-              val oldRdd = spark.read
-                .parquet(s"${shardDir(indexPath, i)}/vectors")
-                .select(vecCols.map(col): _*).rdd.mapPartitions { it =>
-                  val (ost, cum) = bcRemap.value
-                  it.map { r =>
-                    val p = r.getInt(0)
-                    // bracket search: largest c with ost(c) <= p
-                    var lo = 0; var hi = ost.length - 1
-                    while (hi - lo > 1) {
-                      val mid = (lo + hi) >>> 1
-                      if (ost(mid) <= p) lo = mid else hi = mid
-                    }
-                    Row(p + cum(lo), r.getInt(1), r.getLong(2),
-                      r.getSeq[Long](3), r.get(4), r.getDouble(5),
-                      r.getDouble(6))
-                  }
-                }
-              val remappedOld = spark.createDataFrame(oldRdd, vecSchema)
-              // new members: row continues from old n in batch id
-              // order; slot lands at the END of the cell's new bracket
-              val endPlusCum: Map[Int, Int] = (0 until m.nCells)
-                .map(cc => cc -> (m.cellStart(cc + 1) + cumIns(cc))).toMap
-              val wCell = Window.partitionBy("cell").orderBy("id")
-              // dense corpus row numbers via a distributed sort +
-              // zipWithIndex (the flat appends' idiom) — the previous
-              // global-orderBy window funneled the whole batch
-              // through one task (guide §2); ids are unique (enforced
-              // above) so the range sort is a total, deterministic
-              // order
-              val slotted = batch
-                .withColumn("slot",
-                  (element_at(typedLit(endPlusCum), col("cell")) +
-                    row_number().over(wCell) - 1).cast(IntegerType))
-                .select(col("slot"), col("id"), col("words"), col("code"),
-                  col("norm"), col("sq_norm"))
-                .orderBy("id")
-              val baseN = m.n
-              val newRdd = slotted.rdd.zipWithIndex.map { case (r, j) =>
-                Row(r.getInt(0), (baseN + j).toInt, r.getLong(1),
-                  r.getSeq[Long](2), r.get(3), r.getDouble(4), r.getDouble(5))
-              }
-              val newMembers = spark.createDataFrame(newRdd, vecSchema)
-              remappedOld.unionAll(newMembers)
-                .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/vectors")
-            } finally bcRemap.destroy()
-            Seq(((m.n + nNew), dim, nWords, m.nCells, m.centroids.toSeq,
-                m.thresholds, newStart.toSeq, m.dimMin.toSeq,
-                m.dimScale.toSeq, m.bitCut.toSeq))
-              .toDF("n", "dim", "n_words", "n_cells", "centroids",
-                "thresholds", "cell_start", "dim_min", "dim_scale", "bit_cut")
-              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/meta")
-          }
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__append__"), true)
-        // re-adding a tombstoned id is refused by the stored-id clash —
-        // compact to free it
-        carry(spark, indexPath, tmp, "tombstones", "rot")
       }
-    } finally { bcG.destroy(); bcCells.destroy() }
+      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(sc.hadoopConfiguration)
+      val vecSchema = IndexCodec.schema(IvfBq.Key, IvfBq.payload)
+      // per-shard remap/copy/meta tails are independent — guide §2.6
+      Par.shards(metas.indices) { i =>
+        val m = metas(i)
+        val dst = shardDir(tmp, i)
+        val part = new org.apache.hadoop.fs.Path(s"$tmp/__append__/shard_out=$i")
+        val nNew = ap.newOf(i).toInt
+        // untouched shard: bytes stay bytes
+        if (nNew == 0) copyDir(spark, shardDir(indexPath, i), dst)
+        else {
+          require(fs.exists(part),
+            s"encode pass produced no partition for shard $i at $part")
+          val batch = spark.read.parquet(part.toString)
+          // per-cell insert counts (≤ nCells rows to the driver)
+          val ins = new Array[Int](m.nCells)
+          batch.groupBy("cell").count().collect()
+            .foreach(r => ins(r.getInt(0)) = r.getLong(1).toInt)
+          val cumIns = new Array[Int](m.nCells + 1)
+          var c = 0
+          while (c < m.nCells) { cumIns(c + 1) = cumIns(c) + ins(c); c += 1 }
+          val newStart = Array.tabulate(m.nCells + 1)(c2 => m.cellStart(c2) + cumIns(c2))
+          // old members: slot shifts by the inserts into cells
+          // BEFORE theirs; row/id/bits/codes/norms byte-identical
+          val bcRemap = sc.broadcast((m.cellStart, cumIns))
+          try {
+            val oldRdd = spark.read
+              .parquet(s"${shardDir(indexPath, i)}/vectors")
+              .select(vecSchema.fieldNames.toSeq.map(col): _*).rdd.mapPartitions { it =>
+                val (ost, cum) = bcRemap.value
+                it.map { r =>
+                  val p = r.getInt(0)
+                  // bracket search: largest c with ost(c) <= p
+                  var lo = 0; var hi = ost.length - 1
+                  while (hi - lo > 1) {
+                    val mid = (lo + hi) >>> 1
+                    if (ost(mid) <= p) lo = mid else hi = mid
+                  }
+                  Row.fromSeq((p + cum(lo)) +: r.toSeq.tail)
+                }
+              }
+            val remappedOld = spark.createDataFrame(oldRdd, vecSchema)
+            // new members: row continues from old n in batch id
+            // order; slot lands at the END of the cell's new bracket
+            val endPlusCum: Map[Int, Int] = (0 until m.nCells)
+              .map(cc => cc -> (m.cellStart(cc + 1) + cumIns(cc))).toMap
+            val wCell = Window.partitionBy("cell").orderBy("id")
+            // dense corpus row numbers via a distributed sort +
+            // zipWithIndex (the flat appends' idiom) — the previous
+            // global-orderBy window funneled the whole batch
+            // through one task (guide §2); ids are unique (enforced
+            // above) so the range sort is a total, deterministic
+            // order
+            val slotted = batch
+              .withColumn("slot",
+                (element_at(typedLit(endPlusCum), col("cell")) +
+                  row_number().over(wCell) - 1).cast(IntegerType))
+              .select(col("slot"), col("id"), col("words"), col("code"),
+                col("norm"), col("sq_norm"))
+              .orderBy("id")
+            val baseN = m.n
+            val newRdd = slotted.rdd.zipWithIndex.map { case (r, j) =>
+              Row.fromSeq(r.get(0) +: (baseN + j).toInt +: r.toSeq.tail)
+            }
+            val newMembers = spark.createDataFrame(newRdd, vecSchema)
+            remappedOld.unionAll(newMembers)
+              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/vectors")
+          } finally bcRemap.destroy()
+          IvfBq.writeMeta(spark, dst, m.copy(n = m.n + nNew, cellStart = newStart))
+        }
+      }
+      fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__append__"), true)
+      // re-adding a tombstoned id is refused by the stored-id clash —
+      // compact to free it
+      carry(spark, indexPath, tmp, "tombstones", "rot")
+    }
   }
 
   /** TOMBSTONE delete from a persisted sharded IVF+BQ index — the
@@ -1620,7 +1169,7 @@ object Sink {
       graft.operators.Similarity.compactIvfBq(sx, sorted))
     publishAtomically(spark, outPath, overwrite) { tmp =>
       ShardedLayout.writeShards(spark, tmp, compacted, manifest.hashModulus,
-        manifest.hashVals)(_.n, writeIvfBqInto(spark, _, _))
+        manifest.hashVals)(_.n, IndexCodec.IvfBq.write(spark, _, _))
     }
   }
 
@@ -1653,10 +1202,8 @@ object Sink {
     * [[writeSq8Index]]/[[writeIvfPqIndex]] for the one index family
     * that previously could not persist (#9d): codebook training is the
     * expensive step, so a serving session should restore it rather
-    * than retrain. Layout: `path/vectors/` one row per vector (idx,
-    * id, the m subspace codes, f32 norms, and the optional SQ8 rerank
-    * sidecar columns); `path/meta/` one row with (n, dim, m,
-    * codebooks, sq8 bounds). [[graft.sources.Source.readPqIndex]]
+    * than retrain. Layout: [[IndexCodec.Pq]] (the SQ8 rerank sidecar
+    * columns null without one). [[graft.sources.Source.readPqIndex]]
     * restores a byte-identical
     * [[graft.operators.Similarity.CorpusIndexPq]] (round-trip +
     * identical-search pinned in SinkSpec).
@@ -1666,38 +1213,13 @@ object Sink {
       px: graft.operators.Similarity.CorpusIndexPq,
       path: String,
       overwrite: Boolean = false): Unit =
-    publishAtomically(spark, path, overwrite) { tmp =>
-      import spark.implicits._
-      val sq8 = px.sq8
-      val bytesPerRow = px.m + sq8.map(_ => px.dim).getOrElse(0)
-      val slices = math.max(1, (px.n.toLong * bytesPerRow / (64L << 20)).toInt)
-      val bc = spark.sparkContext.broadcast(px)
-      try {
-        spark.sparkContext.parallelize(0 until px.n, slices).map { j =>
-          val x = bc.value
-          val s8 = x.sq8
-          (j, x.ids(j),
-            java.util.Arrays.copyOfRange(x.codes, j * x.m, (j + 1) * x.m),
-            x.norms(j), x.sqNorms(j),
-            s8.map(s => java.util.Arrays.copyOfRange(s.codes, j * x.dim, (j + 1) * x.dim)),
-            s8.map(s => s.norms(j)), s8.map(s => s.sqNorms(j)))
-        }.toDF("idx", "id", "code", "norm", "sq_norm",
-            "sq8_code", "sq8_norm", "sq8_sq_norm")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/vectors")
-      } finally bc.destroy()
-      Seq((px.n, px.dim, px.m, px.codebooks.toSeq,
-          sq8.map(_.dimMin.toSeq), sq8.map(_.dimScale.toSeq)))
-        .toDF("n", "dim", "m", "codebooks", "sq8_dim_min", "sq8_dim_scale")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/meta")
-    }
+    publishAtomically(spark, path, overwrite)(IndexCodec.Pq.write(spark, px, _))
 
   /** Persist an IVF+PQ index — the composition whose whole point is
     * "train the expensive parts once" (coarse cells + residual
     * codebooks), so persistence matters more here than anywhere
-    * else. Layout: `path/vectors/` one row per vector (idx, id,
-    * residual PQ codes, cell, optional residual-SQ8 codes);
-    * `path/meta/` one row with geometry + centroids + codebooks +
-    * SQ8 bounds. [[graft.sources.Source.readIvfPqIndex]] restores a
+    * else. Layout: [[IndexCodec.IvfPq]].
+    * [[graft.sources.Source.readIvfPqIndex]] restores a
     * byte-identical index (CSR rebuilt from `cell`, deterministic:
     * original row order groups stably).
     */
@@ -1706,42 +1228,7 @@ object Sink {
       ix: graft.operators.Similarity.CorpusIndexIvfPq,
       path: String,
       overwrite: Boolean = false): Unit =
-    publishAtomically(spark, path, overwrite)(writeIvfPqInto(spark, ix, _))
-
-  /** The raw vectors/ + meta/ write of one IVF+PQ index into `dir` —
-    * shared by the single-index publisher above and the sharded
-    * family's per-shard subdirectories (which must all land inside
-    * ONE atomic publish, not N separate ones: a sharded index is
-    * unreadable with any shard missing).
-    */
-  private def writeIvfPqInto(
-      spark: org.apache.spark.sql.SparkSession,
-      ix: graft.operators.Similarity.CorpusIndexIvfPq,
-      dir: String): Unit = {
-    import spark.implicits._
-    val sq8 = ix.sq8
-    val bytesPerRow = ix.m + sq8.map(_ => ix.dim).getOrElse(0)
-    val slices = math.max(1, (ix.n.toLong * bytesPerRow / (64L << 20)).toInt)
-    val bc = spark.sparkContext.broadcast(ix)
-    try {
-      spark.sparkContext.parallelize(0 until ix.n, slices).map { j =>
-        val x = bc.value
-        val s8 = x.sq8
-        (j, x.ids(j),
-          java.util.Arrays.copyOfRange(x.codes, j * x.m, (j + 1) * x.m),
-          x.cellOf(j),
-          s8.map(s => java.util.Arrays.copyOfRange(s.codes, j * x.dim, (j + 1) * x.dim)),
-          s8.map(s => s.norms(j)), s8.map(s => s.sqNorms(j)))
-      }.toDF("idx", "id", "code", "cell", "sq8_code", "sq8_norm", "sq8_sq_norm")
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/vectors")
-    } finally bc.destroy()
-    Seq((ix.n, ix.dim, ix.m, ix.nCells,
-        ix.centroids.toSeq, ix.codebooks.toSeq,
-        sq8.map(_.dimMin.toSeq), sq8.map(_.dimScale.toSeq)))
-      .toDF("n", "dim", "m", "n_cells", "centroids", "codebooks",
-        "sq8_dim_min", "sq8_dim_scale")
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
-  }
+    publishAtomically(spark, path, overwrite)(IndexCodec.IvfPq.write(spark, ix, _))
 
   /** Persist a SHARDED IVF+PQ index (the
     * [[graft.operators.Similarity.buildIvfPqSharded]] family — the
@@ -1786,7 +1273,7 @@ object Sink {
       modulus: Int,
       hashVals: Seq[Long]): Unit =
     ShardedLayout.writeShards(spark, tmp, shards, modulus, hashVals)(
-      _.n, writeIvfPqInto(spark, _, _))
+      _.n, IndexCodec.IvfPq.write(spark, _, _))
 
   /** Persist a sharded IVF+OPQ build — the rotation (`rot/`, one meta
     * row) beside the standard sharded layout, ONE atomic publish. The
@@ -1824,20 +1311,6 @@ object Sink {
       overwrite: Boolean): Unit =
     writeIvfPqShardedIndex(spark, build.shards, path, overwrite,
       build.hashModulus, build.shardHashVals)
-
-  /** Per-shard trained model the distributed builder broadcasts to
-    * its bounds/encode passes: the sample-trained coarse centroids +
-    * residual-PQ codebooks, plus the corpus-wide residual SQ8 bounds
-    * (null until pass D fills them / `withRerank = false`). `kPq` is
-    * the number of TRAINED codebook entries (`min(256, build n)`) —
-    * encode must never consider untrained (all-zero) entries, and
-    * after an append `n` grows past the build count, so the trained
-    * count rides the model (and the appended meta's `k_pq` column)
-    * instead of being re-derived from `n`.
-    */
-  private final case class IvfPqShardModel(
-      n: Int, k: Int, kPq: Int, centroids: Array[Double], codebooks: Array[Float],
-      sq8Min: Array[Float], sq8Scale: Array[Float])
 
   /** Schema contract mirror of `Similarity.collectCorpusOpt`: only
     * `array<float>`/`array<double>` embedding columns — the
@@ -1916,13 +1389,14 @@ object Sink {
     *     the scalar comparison semantics of `quantizeSq8` (skips NaN
     *     exactly like the driver loop; min/max are order-independent,
     *     so the distributed fold equals the driver scan);
-    *  5. one encode scan with the broadcast models — each row leaves
-    *     the executor as (cell, m-byte PQ code, SQ8 sidecar), ~6×
-    *     narrower than the raw vector — through ONE exchange
-    *     (partition by shard, `row_number` by id assigns the dense
-    *     pack `idx` the persisted format needs) and straight into the
-    *     `writeIvfPqShardedIndex` layout inside a single atomic
-    *     publish. Raw vectors never shuffle and never collect.
+    *  5. one encode scan with the broadcast models
+    *     ([[IndexCodec.IvfPq.Enc]]) — each row leaves the executor as
+    *     (cell, m-byte PQ code, SQ8 sidecar), ~6× narrower than the
+    *     raw vector — through ONE exchange (partition by shard,
+    *     `row_number` by id assigns the dense pack `idx` the persisted
+    *     format needs) and straight into the `writeIvfPqShardedIndex`
+    *     layout inside a single atomic publish. Raw vectors never
+    *     shuffle and never collect.
     *
     * The result restores through
     * [[graft.sources.Source.readIvfPqShardedIndex]] BYTE-IDENTICAL to
@@ -1949,6 +1423,7 @@ object Sink {
       overwrite: Boolean = false,
       rot: Array[Double] = null): Unit = {
     import graft.operators.Similarity
+    import IndexCodec.IvfPq
     require(numShards >= 1, s"numShards must be >= 1, got $numShards")
     require(nCells >= 1, s"nCells must be >= 1, got $nCells")
     require(trainSample >= 256, s"trainSample must be >= 256, got $trainSample")
@@ -2022,7 +1497,7 @@ object Sink {
     // map, so they fan out like the collect build's concurrent shard
     // builds (round-9 verdict #1; per-shard results are bit-identical
     // regardless of scheduling)
-    val models: Map[Long, IvfPqShardModel] = Par.shards(shardVals) { s =>
+    val models: Map[Long, IndexCodec.IvfPqMeta] = Par.shards(shardVals) { s =>
       val n = counts(s).toInt
       val k = kOf(s)
       val ids1 = sampleIds(s, step1(s)); val sn1 = ids1.length
@@ -2064,46 +1539,33 @@ object Sink {
         }
         j += 1
       }
-      s -> IvfPqShardModel(n, k, kPq, centroids, codebooks, null, null)
+      // a build meta records no k_pq: min(256, n) IS the trained count
+      s -> IndexCodec.IvfPqMeta(n, dim, m, k, centroids, codebooks, null, null, 0)
     }.toMap
 
     val withShard = corpus.select(shardCol.as("shard"),
       col(idCol).cast(LongType).as("id"), col(embCol).as("emb"))
-    val dd = dim
 
     // pass 4: corpus-wide residual SQ8 bounds (executor fold with the
     // quantizeSq8 comparison semantics — order-independent, so the
     // distributed fold equals the driver scan bit for bit)
-    val finalModels: Map[Long, IvfPqShardModel] =
+    val finalModels: Map[Long, IndexCodec.IvfPqMeta] =
       if (!withRerank) models
       else {
-        val bcM = sc.broadcast(models)
-        val bcRotB = if (rot == null) null else sc.broadcast(rot)
+        val bcE = sc.broadcast(models.map { case (s, mdl) => s -> IvfPq.Enc(mdl, rot) })
         try {
           val partials = withShard.rdd.mapPartitions { it =>
-            val ms = bcM.value
-            val rm = if (bcRotB == null) null else bcRotB.value
+            val es = bcE.value
             val acc = scala.collection.mutable.Map.empty[Long, (Array[Double], Array[Double])]
             it.foreach { row =>
               val sh = row.getLong(0)
-              val mdl = ms(sh)
-              val vRaw = embDoubles(row.getLong(1), row.getSeq[Any](2), dd)
-              val v =
-                if (rm == null) vRaw
-                else {
-                  val out = new Array[Double](dd)
-                  graft.operators.Similarity.rotateRow(rm, vRaw, 0, dd, out, 0)
-                  out
-                }
-              val u = unitVec(v)
-              val cell = graft.operators.Similarity.assignCell(u, 0, mdl.centroids, mdl.k, dd)
+              val (_, r) = es(sh).residual(embDoubles(row.getLong(1), row.getSeq[Any](2), dim))
               val (mn, mx) = acc.getOrElseUpdate(sh,
-                (Array.fill(dd)(Double.MaxValue), Array.fill(dd)(Double.MinValue)))
+                (Array.fill(dim)(Double.MaxValue), Array.fill(dim)(Double.MinValue)))
               var d = 0
-              while (d < dd) {
-                val r = u(d) - mdl.centroids(cell * dd + d)
-                if (r < mn(d)) mn(d) = r
-                if (r > mx(d)) mx(d) = r
+              while (d < dim) {
+                if (r(d) < mn(d)) mn(d) = r(d)
+                if (r(d) > mx(d)) mx(d) = r(d)
                 d += 1
               }
             }
@@ -2113,7 +1575,7 @@ object Sink {
               a.get(sh) match {
                 case Some((amn, amx)) =>
                   var d = 0
-                  while (d < dd) {
+                  while (d < dim) {
                     if (bmn(d) < amn(d)) amn(d) = bmn(d)
                     if (bmx(d) > amx(d)) amx(d) = bmx(d)
                     d += 1
@@ -2125,49 +1587,39 @@ object Sink {
           }
           models.map { case (s, mdl) =>
             val (mn, mx) = partials(s)
-            val dimMin = new Array[Float](dd)
-            val dimScale = new Array[Float](dd)
+            val dimMin = new Array[Float](dim)
+            val dimScale = new Array[Float](dim)
             var d = 0
-            while (d < dd) {
+            while (d < dim) {
               dimMin(d) = mn(d).toFloat
               dimScale(d) = if (mx(d) > mn(d)) ((mx(d) - mn(d)) / 255.0).toFloat else 0.0f
               d += 1
             }
             s -> mdl.copy(sq8Min = dimMin, sq8Scale = dimScale)
           }
-        } finally { bcM.destroy(); if (bcRotB != null) bcRotB.destroy() }
+        } finally bcE.destroy()
       }
 
     // pass 5: encode scan-stage, number by (shard | id) through the
     // one code-width exchange, land in the persisted layout
-    val bcF = sc.broadcast(finalModels)
-    val bcRotE = if (rot == null) null else sc.broadcast(rot)
-    try {
-      val shardOut: Map[Long, Int] = shardVals.zipWithIndex.toMap
-      publishAtomically(spark, path, overwrite) { tmp =>
-        import spark.implicits._
-        // the rotation rides the index (the writeIvfOpqShardedIndex
-        // layout) so the plain reader refuses and the OPQ reader +
-        // append path restore it
-        if (rot != null) ShardedLayout.writeRotation(spark, tmp, dd, rot)
-        ShardedLayout.writeManifest(spark, tmp,
-          Manifest(shardVals.size, counts.values.sum, ShardKey, numShards, shardVals))
-        val encoded = encodeWithModels(withShard, bcF, dd, m, sub, withRerank,
-          bcRotE)
-        ShardedLayout.writeShardParts(spark.createDataFrame(encoded, ivfPqEncSchema),
-          element_at(typedLit(shardOut), col("shard")), lit(0L), s"$tmp/__vectors__")
-        ShardedLayout.installBuiltShards(spark, tmp, s"$tmp/__vectors__", shardVals) {
-          (s, dir) =>
-            val mdl = finalModels(s)
-            Seq((mdl.n, dd, m, mdl.k,
-                mdl.centroids.toSeq, mdl.codebooks.toSeq,
-                Option(mdl.sq8Min).map(_.toSeq), Option(mdl.sq8Scale).map(_.toSeq)))
-              .toDF("n", "dim", "m", "n_cells", "centroids", "codebooks",
-                "sq8_dim_min", "sq8_dim_scale")
-              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
-        }
+    val shardOut: Map[Long, Int] = shardVals.zipWithIndex.toMap
+    publishAtomically(spark, path, overwrite) { tmp =>
+      // the rotation rides the index (the writeIvfOpqShardedIndex
+      // layout) so the plain reader refuses and the OPQ reader +
+      // append path restore it
+      if (rot != null) ShardedLayout.writeRotation(spark, tmp, dim, rot)
+      ShardedLayout.writeManifest(spark, tmp,
+        Manifest(shardVals.size, counts.values.sum, ShardKey, numShards, shardVals))
+      IndexCodec.encodeRouted(spark, withShard,
+        finalModels.map { case (s, mdl) => s -> IvfPq.Enc(mdl, rot) }, IvfPq.payload) {
+        encoded =>
+          ShardedLayout.writeShardParts(encoded, element_at(typedLit(shardOut), col("shard")),
+            lit(0L), s"$tmp/__vectors__")
       }
-    } finally { bcF.destroy(); if (bcRotE != null) bcRotE.destroy() }
+      ShardedLayout.installBuiltShards(spark, tmp, s"$tmp/__vectors__", shardVals) {
+        (s, dir) => IvfPq.writeMeta(spark, dir, finalModels(s))
+      }
+    }
   }
 
   /** [[writeIvfPqShardedIndexDistributed]] with an OPQ rotation in
@@ -2210,95 +1662,6 @@ object Sink {
       overwrite, rot)
   }
 
-  /** Row shape the scan-stage IVF+PQ encode emits: the shard routing
-    * key, the row id, and the ~6×-narrower encoded payload (m-byte PQ
-    * code + cell + optional SQ8 sidecar) — shared by the distributed
-    * builder's pass 5 and [[appendIvfPqShardedIndex]].
-    */
-  private val ivfPqEncSchema = StructType(Seq(
-    StructField("shard", LongType, nullable = false),
-    StructField("id", LongType, nullable = false),
-    StructField("code", BinaryType, nullable = false),
-    StructField("cell", IntegerType, nullable = false),
-    StructField("sq8_code", BinaryType, nullable = true),
-    StructField("sq8_norm", DoubleType, nullable = true),
-    StructField("sq8_sq_norm", DoubleType, nullable = true)))
-
-  /** The scan-stage encode of `(shard, id, emb)` rows against
-    * broadcast per-shard models — unit-normalize, assign the coarse
-    * cell, PQ-encode the residual over the TRAINED codebook entries
-    * (`mdl.kPq`, never the untrained tail), SQ8-encode the sidecar
-    * when the model carries bounds. The exact per-row arithmetic of
-    * the driver build ([[graft.operators.Similarity.quantizeIvfPq]])
-    * through the shared factored helpers, so every caller inherits
-    * the byte-parity argument. Raw vectors enter, code-width rows
-    * leave.
-    */
-  private def encodeWithModels(
-      withShard: DataFrame,
-      bcF: org.apache.spark.broadcast.Broadcast[Map[Long, IvfPqShardModel]],
-      dd: Int, mm: Int, subb: Int, wr: Boolean,
-      rotBc: org.apache.spark.broadcast.Broadcast[Array[Double]] = null)
-      : org.apache.spark.rdd.RDD[Row] =
-    withShard.rdd.mapPartitions { it =>
-      val ms = bcF.value
-      val rm = if (rotBc == null) null else rotBc.value
-      it.map { row =>
-        val sh = row.getLong(0); val id = row.getLong(1)
-        val mdl = ms(sh)
-        val vRaw = embDoubles(id, row.getSeq[Any](2), dd)
-        val v =
-          if (rm == null) vRaw
-          else {
-            val out = new Array[Double](dd)
-            graft.operators.Similarity.rotateRow(rm, vRaw, 0, dd, out, 0)
-            out
-          }
-        val u = unitVec(v)
-        val cell = graft.operators.Similarity.assignCell(u, 0, mdl.centroids, mdl.k, dd)
-        val res = new Array[Double](dd)
-        var d = 0
-        while (d < dd) { res(d) = u(d) - mdl.centroids(cell * dd + d); d += 1 }
-        val code = new Array[Byte](mm)
-        graft.operators.Similarity.pqEncodeRow(
-          res, 0, dd, mm, subb, mdl.kPq, mdl.codebooks, code, 0)
-        if (wr) {
-          val s8 = new Array[Byte](dd)
-          val sq = graft.operators.Similarity.sq8EncodeRow(
-            res, 0, dd, mdl.sq8Min, mdl.sq8Scale, s8, 0)
-          Row(sh, id, code, cell, s8, math.sqrt(sq), sq)
-        } else Row(sh, id, code, cell, null, null, null)
-      }
-    }
-
-  /** Read one persisted shard's TRAINED MODEL (meta only — the
-    * vectors never load): the append path needs centroids, codebooks,
-    * SQ8 bounds, and the trained-codebook count, not the corpus.
-    * `k_pq` is read by name when present (append-written metas carry
-    * it); build-written metas lack the column, and there
-    * `min(256, n)` IS the trained count because build-time `n` is the
-    * training corpus size.
-    */
-  private def readShardModel(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): IvfPqShardModel = {
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    val hasKpq = metaDf.schema.fieldNames.contains("k_pq")
-    val meta = metaDf.head()
-    val n = meta.getAs[Int]("n")
-    val kPq = if (hasKpq) meta.getAs[Int]("k_pq") else math.min(256, n)
-    IvfPqShardModel(
-      n,
-      meta.getAs[Int]("n_cells"),
-      kPq,
-      meta.getAs[Seq[Double]]("centroids").toArray,
-      meta.getAs[Seq[Float]]("codebooks").toArray,
-      if (meta.isNullAt(meta.fieldIndex("sq8_dim_min"))) null
-      else meta.getAs[Seq[Float]]("sq8_dim_min").toArray,
-      if (meta.isNullAt(meta.fieldIndex("sq8_dim_scale"))) null
-      else meta.getAs[Seq[Float]]("sq8_dim_scale").toArray)
-  }
-
   /** APPEND new rows to a persisted sharded IVF+PQ index — the daily
     * ingest of a growing corpus: encode-only, NO retraining, no
     * raw-vector collect, and the source index is never mutated (the
@@ -2311,18 +1674,17 @@ object Sink {
     *    balanced and deterministic; an OPQ rotation is applied first
     *    and carried forward with the tombstones.
     *  - Each row is encoded scan-stage with the destination shard's
-    *    broadcast model through [[encodeWithModels]] — the same
-    *    arithmetic the build ran, against the codebooks as trained
-    *    (`k_pq`); residuals outside the frozen SQ8 grid clamp to the
-    *    grid edge (rerank degrades gracefully for outliers instead
-    *    of corrupting).
+    *    frozen model ([[IndexCodec.IvfPq.Enc]]) — the same arithmetic
+    *    the build ran, against the codebooks as trained (`k_pq`);
+    *    residuals outside the frozen SQ8 grid clamp to the grid edge
+    *    (rerank degrades gracefully for outliers instead of
+    *    corrupting).
     *  - Old vectors are COPIED AS FILES (no decode/re-encode — the
     *    bytes are already right); new rows land as additional parquet
     *    files in each shard's `vectors/` with pack positions
     *    continuing from the old `n`. Meta is rewritten with the grown
-    *    `n` and an explicit `k_pq` (appended LAST so the positional
-    *    reader of build-written metas is untouched); the manifest's
-    *    `total_n` grows to match.
+    *    `n` and an explicit `k_pq`; the manifest's `total_n` grows to
+    *    match.
     *
     * Null and duplicate ids — within `newRows` or against the stored
     * index — throw (ids key an index; silent duplicates would serve
@@ -2342,60 +1704,27 @@ object Sink {
       indexPath: String,
       outPath: String,
       overwrite: Boolean = false): Unit = {
-    import spark.implicits._
     // an OPQ-rotated index appends fine — new rows must rotate with
     // the STORED R before encoding (frozen like the codebooks), and
     // the rotation is carried forward so the grown index serves
     // through the same OPQ reader
-    val rotStored: Array[Double] =
+    val rot =
       if (graft.sources.Source.hasOpqRotation(spark, indexPath))
         ShardedLayout.readRotation(spark, indexPath)._2
       else null
     // routing with the BUILD's modulus (ShardedLayout): a hash value
     // whose shard was dropped at build time has no model, and any
     // shard's codebooks can encode any row
-    val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath)(
-      i => readShardModel(spark, shardDir(indexPath, i)))(_.n.toLong,
-      (_, grown) => grown <= Int.MaxValue)
-    val models: Map[Long, IvfPqShardModel] =
-      ap.metas.zipWithIndex.map { case (m, i) => i.toLong -> m }.toMap
-    // dim falls out of each shard's centroid block; m does not
-    // (codebooks are always m·256·(dim/m) = 256·dim values), so m
-    // comes from the first shard's meta — every writer of this layout
-    // stamps one m across all shards
-    val dd = models.values.head.centroids.length / models.values.head.k
-    models.foreach { case (i, m) => require(m.centroids.length / m.k == dd,
-      s"shard $i dim ${m.centroids.length / m.k} != $dd — corrupt index") }
-    val mm = spark.read.parquet(s"${shardDir(indexPath, 0)}/meta")
-      .select("m").head().getInt(0)
-    val subb = dd / mm
-    val withRerank = models.values.head.sq8Min != null
-    require(models.values.forall(m => (m.sq8Min != null) == withRerank),
-      "corrupt index: shards disagree on the SQ8 sidecar")
-
-    val sc = spark.sparkContext
-    val bcF = sc.broadcast(models)
-    val bcRotA = if (rotStored == null) null else sc.broadcast(rotStored)
-    try {
-      publishAtomically(spark, outPath, overwrite) { tmp =>
-        // carries the build's routing identity forward (old manifests
-        // upgrade to the identity layout they in fact had)
-        ShardedLayout.writeManifest(spark, tmp, ap.grown)
-        val encoded = encodeWithModels(ap.narrow, bcF, dd, mm, subb, withRerank,
-          bcRotA)
-        ShardedLayout.appendTail(spark, spark.createDataFrame(encoded, ivfPqEncSchema),
-          ap.metas.map(_.n), indexPath, tmp) { (i, dir) =>
-          val mdl = ap.metas(i)
-          Seq((mdl.n + ap.newOf(i).toInt, dd, mm, mdl.k,
-              mdl.centroids.toSeq, mdl.codebooks.toSeq,
-              Option(mdl.sq8Min).map(_.toSeq), Option(mdl.sq8Scale).map(_.toSeq),
-              mdl.kPq))
-            .toDF("n", "dim", "m", "n_cells", "centroids", "codebooks",
-              "sq8_dim_min", "sq8_dim_scale", "k_pq")
-            .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/meta")
-        }
+    appendShardedCore(IndexCodec.IvfPq, spark, newRows, idCol, embCol, indexPath, outPath,
+      overwrite)(IndexCodec.IvfPq.readMeta(spark, _)) { metas =>
+      metas.zipWithIndex.foreach { case (mdl, i) =>
+        require(mdl.dim == metas(0).dim,
+          s"shard $i dim ${mdl.dim} != ${metas(0).dim} — corrupt index")
+        require((mdl.sq8Min != null) == (metas(0).sq8Min != null),
+          "corrupt index: shards disagree on the SQ8 sidecar")
       }
-    } finally { bcF.destroy(); if (bcRotA != null) bcRotA.destroy() }
+      metas.map(IndexCodec.IvfPq.Enc(_, rot))
+    }
   }
 
   /** TOMBSTONE delete from a persisted sharded IVF+PQ index — the

@@ -11,6 +11,13 @@ class SinkSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/out"
 
+  /** Pack position of `id` in an id-ascending restore. */
+  private def posOf(ids: Array[Long], id: Long): Int = {
+    val p = java.util.Arrays.binarySearch(ids, id)
+    assert(p >= 0, s"id $id not found")
+    p
+  }
+
   test("writePartitioned: partition dirs, lossless read-back, bounded file size") {
     val out = tmpDir("sink-part")
     val df = operators.Curate.split(
@@ -266,22 +273,22 @@ class SinkSpec extends AnyFunSuite {
     assert(grown.bitCut.sameElements(built.bitCut))
     assert(grown.sq8.dimMin.sameElements(built.sq8.dimMin))
     assert(grown.sq8.dimScale.sameElements(built.sq8.dimScale))
-    // old rows byte-identical at their original pack positions
+    // the grown index restores id-ascending; old rows byte-identical,
+    // found by id
+    assert(grown.ids.toSeq == all.map(_._1).sorted)
     for (j <- 0 until built.n) {
-      assert(grown.ids(j) == built.ids(j))
+      val g = posOf(grown.ids, built.ids(j))
       for (w <- 0 until built.nWords)
-        assert(grown.words(j * grown.nWords + w) == built.words(j * built.nWords + w))
+        assert(grown.words(g * grown.nWords + w) == built.words(j * built.nWords + w))
       for (d <- 0 until built.dim)
-        assert(grown.sq8.codes(j * grown.dim + d) == built.sq8.codes(j * built.dim + d))
-      assert(grown.sq8.norms(j) == built.sq8.norms(j))
+        assert(grown.sq8.codes(g * grown.dim + d) == built.sq8.codes(j * built.dim + d))
+      assert(grown.sq8.norms(g) == built.sq8.norms(j))
     }
-    // new rows: id-ascending after the old block, codes = direct
-    // encode against the FROZEN grid (clamped), bits = code >= cut
+    // new rows: codes = direct encode against the FROZEN grid
+    // (clamped), bits = code >= cut
     val oddVecs = odds.toMap
-    assert((built.n until grown.n).map(grown.ids).toSeq ==
-      odds.map(_._1).sorted)
-    for (j <- built.n until grown.n) {
-      val v = oddVecs(grown.ids(j)).toArray
+    for (id <- odds.map(_._1); j = posOf(grown.ids, id)) {
+      val v = oddVecs(id).toArray
       val expect = new Array[Byte](grown.dim)
       val sq = Similarity.sq8EncodeRow(v, 0, grown.dim,
         grown.sq8.dimMin, grown.sq8.dimScale, expect, 0)
@@ -727,12 +734,12 @@ class SinkSpec extends AnyFunSuite {
       assert(sx.thresholds.sameElements(build.shards.head.thresholds))
       assert(sx.bitCut.sameElements(build.shards.head.bitCut))
     }
-    // old rows byte-identical at their original positions per shard
+    // old rows byte-identical per shard, found by id
     build.shards.zip(grown).foreach { case (old, g) =>
       for (j <- 0 until old.n) {
-        assert(g.ids(j) == old.ids(j))
+        val p = posOf(g.ids, old.ids(j))
         for (w <- 0 until old.nWords)
-          assert(g.words(j * g.nWords + w) == old.words(j * old.nWords + w))
+          assert(g.words(p * g.nWords + w) == old.words(j * old.nWords + w))
       }
     }
     // routing: each appended id landed on pmod(xxhash64(id), modulus)
@@ -745,11 +752,11 @@ class SinkSpec extends AnyFunSuite {
       assert(grown(expectShard).ids.contains(id), s"id $id not in shard $expectShard")
     }
     // new rows encode against the frozen grid: spot-check one shard's
-    // appended block
+    // appended rows
     val g0 = grown.head
     val oddVecs = odds.toMap
-    for (j <- build.shards.head.n until g0.n) {
-      val v = oddVecs(g0.ids(j)).toArray
+    for (id <- g0.ids.filter(oddVecs.contains); j = posOf(g0.ids, id)) {
+      val v = oddVecs(id).toArray
       val expect = new Array[Byte](g0.dim)
       Similarity.sq8EncodeRow(v, 0, g0.dim, g0.sq8.dimMin, g0.sq8.dimScale,
         expect, 0)
@@ -1425,20 +1432,21 @@ class SinkSpec extends AnyFunSuite {
     // the grid is frozen — an append must never move the bounds
     assert(grown.dimMin.sameElements(built.dimMin))
     assert(grown.dimScale.sameElements(built.dimScale))
-    // old rows byte-identical at their original pack positions
+    // the grown index restores id-ascending; old rows byte-identical,
+    // found by id
+    assert(grown.ids.toSeq == all.map(_._1).sorted)
     for (j <- 0 until built.n) {
-      assert(grown.ids(j) == built.ids(j))
+      val g = posOf(grown.ids, built.ids(j))
       for (d <- 0 until built.dim)
-        assert(grown.codes(j * grown.dim + d) == built.codes(j * built.dim + d))
-      assert(grown.norms(j) == built.norms(j))
-      assert(grown.sqNorms(j) == built.sqNorms(j))
+        assert(grown.codes(g * grown.dim + d) == built.codes(j * built.dim + d))
+      assert(grown.norms(g) == built.norms(j))
+      assert(grown.sqNorms(g) == built.sqNorms(j))
     }
-    // new rows: id-ascending after the old block, codes + dequantized
-    // norms = the driver quantizer against the FROZEN grid, exactly
+    // new rows: codes + dequantized norms = the driver quantizer
+    // against the FROZEN grid, exactly
     val oddVecs = odds.toMap
-    assert((built.n until grown.n).map(grown.ids).toSeq == odds.map(_._1).sorted)
-    for (j <- built.n until grown.n) {
-      val v = oddVecs(grown.ids(j)).toArray
+    for (id <- odds.map(_._1); j = posOf(grown.ids, id)) {
+      val v = oddVecs(id).toArray
       val expect = new Array[Byte](grown.dim)
       val sq = Similarity.sq8EncodeRow(v, 0, grown.dim,
         grown.dimMin, grown.dimScale, expect, 0)
@@ -1493,17 +1501,19 @@ class SinkSpec extends AnyFunSuite {
     assert(grown.codebooks.sameElements(built.codebooks))
     assert(grown.sq8.get.dimMin.sameElements(built.sq8.get.dimMin))
     assert(grown.sq8.get.dimScale.sameElements(built.sq8.get.dimScale))
-    // old rows byte-identical (PQ codes, f32 norms, SQ8 sidecar)
+    // old rows byte-identical (PQ codes, f32 norms, SQ8 sidecar),
+    // found by id in the id-ascending restore
+    assert(grown.ids.toSeq == all.map(_._1).sorted)
     for (j <- 0 until built.n) {
-      assert(grown.ids(j) == built.ids(j))
+      val g = posOf(grown.ids, built.ids(j))
       for (s <- 0 until built.m)
-        assert(grown.codes(j * grown.m + s) == built.codes(j * built.m + s))
-      assert(grown.norms(j) == built.norms(j))
-      assert(grown.sqNorms(j) == built.sqNorms(j))
+        assert(grown.codes(g * grown.m + s) == built.codes(j * built.m + s))
+      assert(grown.norms(g) == built.norms(j))
+      assert(grown.sqNorms(g) == built.sqNorms(j))
       for (d <- 0 until built.dim)
-        assert(grown.sq8.get.codes(j * grown.dim + d) ==
+        assert(grown.sq8.get.codes(g * grown.dim + d) ==
           built.sq8.get.codes(j * built.dim + d))
-      assert(grown.sq8.get.norms(j) == built.sq8.get.norms(j))
+      assert(grown.sq8.get.norms(g) == built.sq8.get.norms(j))
     }
     // the build trained k = min(256, 150) = 150 centroids; the grown
     // meta's n is 300, so k is only recoverable because the append
@@ -1516,8 +1526,8 @@ class SinkSpec extends AnyFunSuite {
     // the raw row (f32), sidecar codes from the frozen grid
     val oddVecs = odds.toMap
     val sub = grown.dim / grown.m
-    for (j <- built.n until grown.n) {
-      val v = oddVecs(grown.ids(j)).toArray
+    for (id <- odds.map(_._1); j = posOf(grown.ids, id)) {
+      val v = oddVecs(id).toArray
       val expect = new Array[Byte](grown.m)
       Similarity.pqEncodeRow(v, 0, grown.dim, grown.m, sub,
         math.min(256, built.n), grown.codebooks, expect, 0)
@@ -1543,8 +1553,8 @@ class SinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/grown2/meta")
       .select("pq_k").head().getInt(0) == math.min(256, built.n))
     val extraVecs = extra.toMap
-    for (j <- grown.n until grown2.n) {
-      val v = extraVecs(grown2.ids(j)).toArray
+    for (id <- extra.map(_._1); j = posOf(grown2.ids, id)) {
+      val v = extraVecs(id).toArray
       val expect = new Array[Byte](grown2.m)
       Similarity.pqEncodeRow(v, 0, grown2.dim, grown2.m, sub,
         math.min(256, built.n), grown2.codebooks, expect, 0)
@@ -1598,14 +1608,16 @@ class SinkSpec extends AnyFunSuite {
     // the learned rotation is frozen and copied through byte-for-byte
     assert(grown.rot.sameElements(built.rot))
     assert(grown.pq.codebooks.sameElements(built.pq.codebooks))
-    // old rows of the wrapped PQ payload byte-identical
+    // old rows of the wrapped PQ payload byte-identical, found by id
+    // in the id-ascending restore
+    assert(grown.pq.ids.toSeq == all.map(_._1).sorted)
     for (j <- 0 until built.n) {
-      assert(grown.pq.ids(j) == built.pq.ids(j))
+      val g = posOf(grown.pq.ids, built.pq.ids(j))
       for (s <- 0 until built.pq.m)
-        assert(grown.pq.codes(j * grown.pq.m + s) == built.pq.codes(j * built.pq.m + s))
-      assert(grown.pq.norms(j) == built.pq.norms(j))
+        assert(grown.pq.codes(g * grown.pq.m + s) == built.pq.codes(j * built.pq.m + s))
+      assert(grown.pq.norms(g) == built.pq.norms(j))
       for (d <- 0 until built.dim)
-        assert(grown.pq.sq8.get.codes(j * grown.dim + d) ==
+        assert(grown.pq.sq8.get.codes(g * grown.dim + d) ==
           built.pq.sq8.get.codes(j * built.dim + d))
     }
     // new rows: ROTATE first (the build quantizes rotated data), then
@@ -1614,8 +1626,8 @@ class SinkSpec extends AnyFunSuite {
     val oddVecs = odds.toMap
     val sub = grown.dim / grown.pq.m
     val k = math.min(256, built.n)
-    for (j <- built.n until grown.n) {
-      val raw = oddVecs(grown.pq.ids(j)).toArray
+    for (id <- odds.map(_._1); j = posOf(grown.pq.ids, id)) {
+      val raw = oddVecs(id).toArray
       val v = new Array[Double](grown.dim)
       Similarity.rotateRow(grown.rot, raw, 0, grown.dim, v, 0)
       val expect = new Array[Byte](grown.pq.m)
@@ -1716,6 +1728,92 @@ class SinkSpec extends AnyFunSuite {
         assert(ShardedFamilies.messages(e).contains(expected),
           s"${f.name}: ${ShardedFamilies.messages(e)}")
       }
+    }
+  }
+
+  test("appended SQ8, BQ, PQ, OPQ and sharded BQ packs restore id-ascending: cosineAt finds every id") {
+    // an appended pack is a sorted old block then a sorted new block;
+    // Sq8Score.cosineAt (the rerankFullDim scorer) binary-searches ids,
+    // so every reader must restore one id-ascending order
+    import spark.implicits._
+    import graft.operators.Similarity
+    import graft.sources.Source
+    val rnd = new scala.util.Random(83)
+    val all = (0L until 300L).map(i => i -> Seq.fill(16)(rnd.nextGaussian()))
+    val evens = all.filter(_._1 % 2 == 0).toDF("id", "emb")
+    val odds = all.filter(_._1 % 2 != 0).toDF("id", "emb")
+    val base = Files.createTempDirectory("sink-sorted-restore").toString
+    Sink.writeSq8Index(spark, Similarity.collectCorpusSq8(evens, "id", "emb"), s"$base/sq8")
+    Sink.appendSq8Index(spark, odds, "id", "emb", s"$base/sq8", s"$base/sq8g")
+    Sink.writeBqIndex(spark, Similarity.collectCorpusBq(evens, "id", "emb"), s"$base/bq")
+    Sink.appendBqIndex(spark, odds, "id", "emb", s"$base/bq", s"$base/bqg")
+    Sink.writePqIndex(spark, Similarity.collectCorpusPq(evens, "id", "emb", 4), s"$base/pq")
+    Sink.appendPqIndex(spark, odds, "id", "emb", s"$base/pq", s"$base/pqg")
+    Sink.writeOpqIndex(spark, Similarity.collectCorpusOpq(evens, "id", "emb", 4), s"$base/opq")
+    Sink.appendOpqIndex(spark, odds, "id", "emb", s"$base/opq", s"$base/opqg")
+    Sink.writeBqShardedIndex(spark, Similarity.buildBqShardedWithLayout(evens, "id", "emb", 3),
+      s"$base/bqs", overwrite = false)
+    Sink.appendBqShardedIndex(spark, odds, "id", "emb", s"$base/bqs", s"$base/bqsg")
+    val bq = Source.readBqIndex(spark, s"$base/bqg")
+    val pq = Source.readPqIndex(spark, s"$base/pqg")
+    val opq = Source.readOpqIndex(spark, s"$base/opqg").pq
+    val restored = Seq(
+      "sq8" -> Seq(Source.readSq8Index(spark, s"$base/sq8g")),
+      "bq" -> Seq(bq.sq8), "pq" -> Seq(pq.sq8.get), "opq" -> Seq(opq.sq8.get),
+      "bq sharded" -> Source.readBqShardedIndex(spark, s"$base/bqsg").map(_.sq8))
+    // the SQ8 envelope or sidecar shares the index's id order
+    assert(bq.ids eq bq.sq8.ids)
+    assert(pq.sq8.get.ids.sameElements(pq.ids))
+    assert(opq.sq8.get.ids.sameElements(opq.ids))
+    val q = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.fill(16)(0.5))
+    restored.foreach { case (family, shards) =>
+      assert(shards.map(_.n).sum == 300, family)
+      shards.foreach { sx =>
+        (1 until sx.n).foreach(j => assert(sx.ids(j - 1) < sx.ids(j),
+          s"$family: unsorted ids at $j: ${sx.ids(j - 1)} !< ${sx.ids(j)}"))
+      }
+      all.map(_._1).foreach { id =>
+        assert(shards.exists(sx => Similarity.Sq8Score.cosineAt(id, q, sx) != null),
+          s"$family: cosineAt lost id $id")
+      }
+    }
+  }
+
+  test("index readers refuse an overgrown meta n and a wrong-length code row by name") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    import graft.sources.Source
+    val rnd = new scala.util.Random(89)
+    // 2048 dims: a meta n of 1.1M rows is small, but × 2048 codes it is
+    // past the JVM array cap (the Int product overflows)
+    val wide = (0L until 8L).map(i => i -> Seq.fill(2048)(rnd.nextGaussian())).toDF("id", "emb")
+    val base = Files.createTempDirectory("sink-refusals").toString
+    type Edit = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    def tamper(src: String, dst: String)(meta: Edit, vectors: Edit): Unit = {
+      vectors(spark.read.parquet(s"$src/vectors")).write.parquet(s"$dst/vectors")
+      meta(spark.read.parquet(s"$src/meta")).write.parquet(s"$dst/meta")
+    }
+    val grownN = (df: org.apache.spark.sql.DataFrame) => df.withColumn("n", lit(1100000))
+    Sink.writeSq8Index(spark, Similarity.collectCorpusSq8(wide, "id", "emb"), s"$base/sq8")
+    tamper(s"$base/sq8", s"$base/sq8x")(grownN, identity)
+    assert(intercept[IllegalArgumentException](Source.readSq8Index(spark, s"$base/sq8x"))
+      .getMessage.contains("past the JVM array cap"))
+    Sink.writePqIndex(spark, Similarity.collectCorpusPq(wide, "id", "emb", 8), s"$base/pq")
+    tamper(s"$base/pq", s"$base/pqx")(grownN, identity)
+    assert(intercept[IllegalArgumentException](Source.readPqIndex(spark, s"$base/pqx"))
+      .getMessage.contains("past the JVM array cap"))
+    // one IVF-PQ row's code one byte long and one byte short: refused
+    // by name (a longer one must not be truncated silently)
+    val rows = (0L until 300L).map(i => i -> Seq.fill(16)(rnd.nextGaussian())).toDF("id", "emb")
+    Sink.writeIvfPqIndex(spark, Similarity.quantizeIvfPq(
+      Similarity.collectCorpus(rows, "id", "emb"), 4, 4, trainSample = 256), s"$base/ivfpq")
+    Seq("long" -> concat(col("code"), lit(Array[Byte](7))),
+        "short" -> expr("substring(code, 2)")).foreach { case (how, code) =>
+      tamper(s"$base/ivfpq", s"$base/ivfpq-$how")(identity,
+        _.withColumn("code", when(col("idx") === 5, code).otherwise(col("code"))))
+      val e = intercept[IllegalArgumentException](Source.readIvfPqIndex(spark, s"$base/ivfpq-$how"))
+      assert(e.getMessage.contains("corrupt index: row 5 has") &&
+        e.getMessage.contains("codes, expected 4"), s"$how: ${e.getMessage}")
     }
   }
 }
