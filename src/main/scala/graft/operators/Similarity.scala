@@ -1553,19 +1553,33 @@ object Similarity {
     java.util.stream.IntStream.range(0, sq8.n).parallel().forEach { g =>
       cellOf(g) = assignCell(unit, g * d, centFlat, k, d)
     }
-    val (cellStart, cellMembers) = buildCsr(cellOf, k)
-    // repack the bit matrix into CSR-position order (see the field
-    // comment): probed cells then stream their bits sequentially
-    val cellWords = new Array[Long](bq.words.length)
+    ivfBqIndex(sq8, k, centFlat, bq.words, bq.nWords, bq.thresholds, bq.bitCut, cellOf)
+  }
+
+  /** The IVF+BQ index over `sq8`'s rows given each row's cell and its
+    * bits in row order: the CSR from [[buildCsr]], and the bit matrix
+    * repacked into CSR-slot order (see the `words` field) so probed
+    * cells stream their bits sequentially. The build and the reader
+    * both end here.
+    */
+  private[graft] def ivfBqIndex(
+      sq8: CorpusIndexSq8,
+      nCells: Int,
+      centroids: Array[Double],
+      rowWords: Array[Long],
+      nWords: Int,
+      thresholds: Array[Double],
+      bitCut: Array[Int],
+      cellOf: Array[Int]): CorpusIndexIvfBq = {
+    val (cellStart, cellMembers) = buildCsr(cellOf, nCells)
+    val words = new Array[Long](rowWords.length)
     var p = 0
     while (p < sq8.n) {
-      System.arraycopy(bq.words, cellMembers(p) * bq.nWords,
-        cellWords, p * bq.nWords, bq.nWords)
+      System.arraycopy(rowWords, cellMembers(p) * nWords, words, p * nWords, nWords)
       p += 1
     }
-    CorpusIndexIvfBq(sq8.ids, sq8.n, d, k, centFlat,
-      cellWords, bq.nWords, bq.thresholds, bq.bitCut, cellOf, cellStart,
-      cellMembers, sq8)
+    CorpusIndexIvfBq(sq8.ids, sq8.n, sq8.dim, nCells, centroids, words, nWords, thresholds,
+      bitCut, cellOf, cellStart, cellMembers, sq8)
   }
 
   /** Per-query cosine top-k against an IVF+BQ index: probe the
@@ -1727,55 +1741,6 @@ object Similarity {
     ShardedIvfBqBuild(
       sq8s.map(ivfBqFromSq8(_, nCells, trainSample, iters, cut)).toIndexedSeq,
       numShards, surviving.map(_._2).toIndexedSeq)
-  }
-
-  /** Drop TOMBSTONED rows from an IVF+BQ index — pure driver-side
-    * array surgery on a broadcast-sized shard (the compaction step of
-    * the persisted delete lifecycle): kept rows keep their original
-    * relative order, the CSR regroups through the same stable
-    * [[buildCsr]] the build used (so surviving members stay in
-    * original row order within each cell), the bit rows copy from
-    * their old CSR slots, and thresholds/grid/cut stay FROZEN —
-    * dropping rows never moves the integer threshold, the same
-    * invariant appends rely on. Serving the compacted index is
-    * bit-identical to the deny-masked serve of the input (bounded
-    * best-by-(hamming,id) selection is scan-order independent).
-    */
-  private[graft] def compactIvfBq(
-      ix: CorpusIndexIvfBq, sortedDeny: Array[Long]): CorpusIndexIvfBq = {
-    val (live, _) = idMask(ix.ids, null, sortedDeny)
-    val keep = (0 until ix.n).filter(live(_)).toArray
-    require(keep.nonEmpty, "compaction would empty the shard")
-    val n2 = keep.length
-    // old row -> old CSR slot (invert cellMembers once)
-    val oldSlotOf = new Array[Int](ix.n)
-    var p = 0
-    while (p < ix.n) { oldSlotOf(ix.cellMembers(p)) = p; p += 1 }
-    val ids2 = keep.map(ix.ids)
-    val cellOf2 = keep.map(ix.cellOf)
-    val (cellStart2, cellMembers2) = buildCsr(cellOf2, ix.nCells)
-    val words2 = new Array[Long](n2 * ix.nWords)
-    var p2 = 0
-    while (p2 < n2) {
-      val oldSlot = oldSlotOf(keep(cellMembers2(p2)))
-      System.arraycopy(ix.words, oldSlot * ix.nWords,
-        words2, p2 * ix.nWords, ix.nWords)
-      p2 += 1
-    }
-    val codes2 = new Array[Byte](n2 * ix.dim)
-    val norms2 = new Array[Double](n2)
-    val sqNorms2 = new Array[Double](n2)
-    var j = 0
-    while (j < n2) {
-      System.arraycopy(ix.sq8.codes, keep(j) * ix.dim, codes2, j * ix.dim, ix.dim)
-      norms2(j) = ix.sq8.norms(keep(j))
-      sqNorms2(j) = ix.sq8.sqNorms(keep(j))
-      j += 1
-    }
-    CorpusIndexIvfBq(ids2, n2, ix.dim, ix.nCells, ix.centroids, words2,
-      ix.nWords, ix.thresholds, ix.bitCut, cellOf2, cellStart2, cellMembers2,
-      CorpusIndexSq8(ids2, codes2, n2, ix.dim, ix.sq8.dimMin,
-        ix.sq8.dimScale, norms2, sqNorms2))
   }
 
   /** Merge per-shard [[topkIvfBq]] serves — the [[topkBqSharded]]
@@ -1942,32 +1907,8 @@ object Similarity {
     val sub = cx.dim / m
     val k = math.min(256, cx.n)
     val step = math.max(1, cx.n / trainSample)
-    val sampleIdx = (0 until cx.n by step).toArray
-    val sn = sampleIdx.length
-    val codebooks = new Array[Float](m * 256 * sub)
-    var j = 0
-    while (j < m) {
-      // gather the subspace slice of the sample
-      val pts = new Array[Double](sn * sub)
-      var s = 0
-      while (s < sn) {
-        val src = sampleIdx(s) * cx.dim + j * sub
-        var d = 0
-        while (d < sub) { pts(s * sub + d) = cx.data(src + d); d += 1 }
-        s += 1
-      }
-      val cent = trainPqSubspace(pts, sn, sub, k, iters)
-      var c4 = 0
-      while (c4 < k) {
-        var d = 0
-        while (d < sub) {
-          codebooks((j * 256 + c4) * sub + d) = cent(c4 * sub + d).toFloat
-          d += 1
-        }
-        c4 += 1
-      }
-      j += 1
-    }
+    val codebooks =
+      trainPqCodebooks(cx.data, (0 until cx.n by step).toArray, cx.dim, m, k, iters)
     // encode every row: nearest centroid per subspace (parallel — this
     // is the n·256·dim step)
     val codes = new Array[Byte](cx.n * m)
@@ -1991,9 +1932,42 @@ object Similarity {
       if (withRerank) Some(quantizeSq8(cx)) else None)
   }
 
+  /** Train `m` subspace codebooks of `k` entries on the sample rows
+    * `rows` of the row-major `dim`-wide `data`: each subspace's slice
+    * through [[trainPqSubspace]], packed as `m·256·sub` f32
+    * (`[subspace][entry][d]`, entries past `k` zero). Shared by
+    * [[quantizePq]] and the distributed IVF+PQ builder.
+    */
+  private[graft] def trainPqCodebooks(
+      data: Array[Double], rows: Array[Int], dim: Int, m: Int, k: Int,
+      iters: Int): Array[Float] = {
+    val sub = dim / m
+    val sn = rows.length
+    val codebooks = new Array[Float](m * 256 * sub)
+    var j = 0
+    while (j < m) {
+      val pts = new Array[Double](sn * sub)
+      var s = 0
+      while (s < sn) {
+        System.arraycopy(data, rows(s) * dim + j * sub, pts, s * sub, sub); s += 1
+      }
+      val cent = trainPqSubspace(pts, sn, sub, k, iters)
+      var c = 0
+      while (c < k) {
+        var d = 0
+        while (d < sub) {
+          codebooks((j * 256 + c) * sub + d) = cent(c * sub + d).toFloat; d += 1
+        }
+        c += 1
+      }
+      j += 1
+    }
+    codebooks
+  }
+
   /** One subspace's Lloyd k-means over a dense slice of the sampled
-    * rows — factored out of [[quantizePq]] (shared with the
-    * distributed builder, same non-drift contract as
+    * rows — the per-subspace step of [[trainPqCodebooks]] and of OPQ's
+    * rotation refresh (same non-drift contract as
     * [[trainSphericalKmeans]]). Deterministic: strided init, strict
     * `<` ties to the lowest centroid, empty clusters keep their
     * previous centroid. Returns the k·sub centroid block.

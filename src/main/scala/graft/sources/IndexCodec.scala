@@ -18,11 +18,15 @@ import scala.reflect.ClassTag
   *    by column name with the legacy rules (a pre-`bit_cut` BQ/IVF-BQ
   *    meta reads with a null cut, which the restore derives and an
   *    append refuses; flat PQ's trailing `pq_k` and IVF-PQ's `k_pq` are
-  *    written by appends only and default to `min(256, n)`);
+  *    written by appends only and default to `min(256, n)`; an IVF-BQ
+  *    meta with `cell_start` marks the slot-keyed layout, which still
+  *    reads and which append and compaction refuse);
   *  - the vectors row: one payload schema, the build write of a resident
   *    index and the restore from collected rows, with the corruption
   *    checks and the id-ascending canonical order every binary-search
-  *    consumer of `ids` relies on;
+  *    consumer of `ids` relies on. Every family keys its rows by pack
+  *    position ([[Pos]]); IVF-BQ and IVF-PQ carry each row's cell, and
+  *    their readers rebuild the CSR from the cells;
   *  - the frozen per-row [[Encode]] an append or a distributed build
   *    runs against stored artifacts, and the one BQ cut ([[BqCut]]).
   *
@@ -370,11 +374,19 @@ private[graft] object IndexCodec {
       m
     }
 
-    /** Whether two shards' metas cut on one grid and threshold. */
-    def sameCut(a: BqMeta, b: BqMeta): Boolean =
-      a.dim == b.dim && a.nWords == b.nWords && a.bitCut.sameElements(b.bitCut) &&
-        a.thresholds.sameElements(b.thresholds) && a.dimMin.sameElements(b.dimMin) &&
-        a.dimScale.sameElements(b.dimScale)
+    /** Refuse by name shards' metas that do not all cut on shard 0's
+      * grid and threshold: a sharded BQ or IVF-BQ index's frozen encode
+      * artifacts are corpus-global, so a mixed-grid index is corrupt.
+      */
+    def requireOneCut(metas: IndexedSeq[BqMeta]): Unit = {
+      val b = metas(0)
+      metas.zipWithIndex.foreach { case (a, i) =>
+        require(a.dim == b.dim && a.nWords == b.nWords && a.bitCut.sameElements(b.bitCut) &&
+          a.thresholds.sameElements(b.thresholds) && a.dimMin.sameElements(b.dimMin) &&
+          a.dimScale.sameElements(b.dimScale),
+          s"shard $i cuts on a different grid/threshold than shard 0 — corrupt index")
+      }
+    }
 
     /** Set the bits of the `cut.length` codes at `off`: bit `d` iff `code(d) >= cut(d)`. */
     def setBits(codes: Array[Byte], off: Int, cut: Array[Int], words: Array[Long],
@@ -445,93 +457,119 @@ private[graft] object IndexCodec {
 
   // ------------------------------------------------------------- IVF-BQ
 
-  /** `bitCut` is null for a pre-`bit_cut` layout. */
+  /** `bitCut` is null for a pre-`bit_cut` layout; `slotStart` is the
+    * `cell_start` of the slot-keyed layout (null for the current one),
+    * read only: see [[IvfBq.read]].
+    */
   final case class IvfBqMeta(n: Int, dim: Int, nWords: Int, nCells: Int, centroids: Array[Double],
-      thresholds: Array[Double], cellStart: Array[Int], dimMin: Array[Float],
-      dimScale: Array[Float], bitCut: Array[Int]) extends Stored {
+      thresholds: Array[Double], dimMin: Array[Float], dimScale: Array[Float],
+      bitCut: Array[Int], slotStart: Array[Int]) extends Stored {
     def bq: BqMeta = BqMeta(n, dim, nWords, thresholds, dimMin, dimScale, bitCut)
   }
 
-  object IvfBq {
+  object IvfBq extends Layout[IvfBqMeta] {
     private val metaSchema = StructType(Seq(field("n", IntegerType), field("dim", IntegerType),
       field("n_words", IntegerType), field("n_cells", IntegerType),
       field("centroids", arrayOf(DoubleType), nullable = true),
       field("thresholds", arrayOf(DoubleType), nullable = true),
-      field("cell_start", arrayOf(IntegerType), nullable = true),
       field("dim_min", arrayOf(FloatType), nullable = true),
       field("dim_scale", arrayOf(FloatType), nullable = true),
       field("bit_cut", arrayOf(IntegerType), nullable = true)))
 
     def writeMeta(spark: SparkSession, dir: String, m: IvfBqMeta): Unit =
       writeMetaRow(spark, dir, metaSchema, Seq(m.n, m.dim, m.nWords, m.nCells, m.centroids,
-        m.thresholds, m.cellStart, m.dimMin, m.dimScale, m.bitCut))
+        m.thresholds, m.dimMin, m.dimScale, m.bitCut))
 
     def readMeta(spark: SparkSession, dir: String): IvfBqMeta = {
       val r = readMetaRow(spark, dir)
       val m = IvfBqMeta(r.int("n"), r.int("dim"), r.int("n_words"), r.int("n_cells"),
-        r.arr[Double]("centroids"), r.arr[Double]("thresholds"), r.arr[Int]("cell_start"),
-        r.arr[Float]("dim_min"), r.arr[Float]("dim_scale"), r.opt[Int]("bit_cut"))
+        r.arr[Double]("centroids"), r.arr[Double]("thresholds"), r.arr[Float]("dim_min"),
+        r.arr[Float]("dim_scale"), r.opt[Int]("bit_cut"), r.opt[Int]("cell_start"))
       Bq.check(m.bq)
-      require(m.centroids.length == m.nCells.toLong * m.dim &&
-          m.cellStart.length == m.nCells + 1 && m.cellStart(m.nCells) == m.n,
-        s"corrupt index meta: n=${m.n} dim=${m.dim} nCells=${m.nCells} but " +
-          s"centroids=${m.centroids.length} " +
-          s"cellStart=${m.cellStart.length}/${m.cellStart.lastOption.getOrElse(-1)}")
+      require(m.centroids.length == m.nCells.toLong * m.dim,
+        s"corrupt index meta: ${m.centroids.length} centroid values for " +
+          s"nCells=${m.nCells} dim=${m.dim}")
+      val ss = m.slotStart
+      require(ss == null || (ss.length == m.nCells + 1 && ss(0) == 0 && ss(m.nCells) == m.n &&
+          (0 until m.nCells).forall(c => ss(c) <= ss(c + 1))),
+        s"corrupt index meta: n=${m.n} nCells=${m.nCells} but cell_start=${ss.mkString(",")}")
       m
     }
 
+    def grown(m: IvfBqMeta, n: Int): IvfBqMeta = m.copy(n = n)
     def widths(m: IvfBqMeta): Widths = Bq.widths(m.bq)
-    /** Stored key: the CSR slot, the member's row index, the id. */
-    val Key: Seq[StructField] =
-      Seq(field("slot", IntegerType), field("row", IntegerType), field("id", LongType))
-    val payload: Seq[StructField] = Bq.payload
-    /** An encoded new row's payload: its cell, then the BQ payload. */
-    val encoded: Seq[StructField] = field("cell", IntegerType) +: payload
+    /** A row's cell, then its BQ payload. */
+    val payload: Seq[StructField] = field("cell", IntegerType) +: Bq.payload
 
-    def write(spark: SparkSession, ix: CorpusIndexIvfBq, dir: String): Unit = {
-      writeVectors(spark, ix, ix.n, 8L * ix.nWords + ix.dim, schema(Key, payload, loose = true),
-        dir) { (x, p) =>
-        val g = x.cellMembers(p) // original row index at CSR slot p
-        Row(p, g, x.ids(g), slice(x.words, p, x.nWords), slice(x.sq8.codes, g, x.dim),
-          x.sq8.norms(g), x.sq8.sqNorms(g))
-      }
-      writeMeta(spark, dir, IvfBqMeta(ix.n, ix.dim, ix.nWords, ix.nCells, ix.centroids,
-        ix.thresholds, ix.cellStart, ix.sq8.dimMin, ix.sq8.dimScale, ix.bitCut))
+    private val Upgrade = "read it through readIvfBqShardedIndexWithTombstones, re-persist the " +
+      "shards with writeIvfBqShardedIndex and re-apply any tombstones with " +
+      "deleteFromIvfBqShardedIndex to upgrade the layout"
+
+    /** `m`, refused by name when it is the slot-keyed layout: appends
+      * and compaction rewrite rows by pack position and meta by `n`.
+      */
+    def current(m: IvfBqMeta, path: String): IvfBqMeta = {
+      require(m.slotStart == null, s"the IVF+BQ index at $path stores one row per CSR slot " +
+        s"with cell_start in meta (the layout before rows carried their cell); $Upgrade")
+      m
     }
 
-    /** Restored in stored order, bits in CSR-slot order (a pre-`bit_cut`
-      * layout derives the cut as [[Bq.read]] does).
+    /** `m`, refused by name unless an append can grow it. */
+    def appendable(m: IvfBqMeta, path: String): IvfBqMeta = {
+      Bq.appendable(current(m, path).bq, "IVF+BQ", path, Upgrade)
+      m
+    }
+
+    def write(spark: SparkSession, ix: CorpusIndexIvfBq, dir: String): Unit = {
+      val slotOf = new Array[Int](ix.n) // row -> its CSR slot, where its bits sit
+      var p = 0
+      while (p < ix.n) { slotOf(ix.cellMembers(p)) = p; p += 1 }
+      writeVectors(spark, (ix, slotOf), ix.n, 8L * ix.nWords + ix.dim,
+        schema(Pos, payload, loose = true), dir) { case ((x, slot), j) =>
+        Row(j, x.ids(j), x.cellOf(j), slice(x.words, slot(j), x.nWords),
+          slice(x.sq8.codes, j, x.dim), x.sq8.norms(j), x.sq8.sqNorms(j))
+      }
+      writeMeta(spark, dir, IvfBqMeta(ix.n, ix.dim, ix.nWords, ix.nCells, ix.centroids,
+        ix.thresholds, ix.sq8.dimMin, ix.sq8.dimScale, ix.bitCut, null))
+    }
+
+    /** Restored id-ascending, the CSR rebuilt from the per-row cells and
+      * the bits repacked into CSR-slot order ([[Similarity.ivfBqIndex]]).
+      * The slot-keyed layout (rows keyed `(slot, row, id)`, each with the
+      * bits of its slot, and `cell_start` in meta) reads to the same
+      * index, a row's cell taken from its slot's bracket; a pre-`bit_cut`
+      * layout derives the cut as [[Bq.read]] does.
       */
     def read(spark: SparkSession, dir: String): CorpusIndexIvfBq = {
       val m = readMeta(spark, dir)
-      val rows = collectRows(spark, dir, m.n, widths(m), "slot", "row", "id", "words", "code",
-        "norm", "sq_norm")
+      // the slot-keyed layout: the cell of each CSR slot
+      val slotCell = if (m.slotStart == null) null
+        else Array.tabulate(m.nCells)(c => Array.fill(m.slotStart(c + 1) - m.slotStart(c))(c))
+          .flatten
+      val rows = collectRows(spark, dir, m.n, widths(m),
+        (if (slotCell == null) Seq("idx", "id", "cell") else Seq("row", "id", "slot")) ++
+          Seq("words", "code", "norm", "sq_norm"): _*)
       val ids = new Array[Long](m.n)
+      val cellOf = new Array[Int](m.n)
       val words = new Array[Long](m.n * m.nWords)
       val sq8 = new Sq8Rows(m.n, m.dim)
-      val cellMembers = new Array[Int](m.n)
       rows.foreach { r =>
-        val p = pos(r, 0, m.n)
-        val g = pos(r, 1, m.n)
-        cellMembers(p) = g
-        ids(g) = r.getLong(2)
-        put(r.getSeq[Long](3).toArray, words, p, m.nWords, "words")
-        sq8.put(g, r, 4)
+        val j = pos(r, 0, m.n)
+        ids(j) = r.getLong(1)
+        cellOf(j) = if (slotCell == null) r.getInt(2) else slotCell(pos(r, 2, m.n))
+        put(r.getSeq[Long](3).toArray, words, j, m.nWords, "words")
+        sq8.put(j, r, 4)
       }
-      // cellOf from the CSR offsets: slot p lies in the cell whose
-      // [start, end) bracket contains it
-      val cellOf = new Array[Int](m.n)
-      var cell = 0
-      var p = 0
-      while (p < m.n) {
-        while (cell < m.nCells && m.cellStart(cell + 1) <= p) cell += 1
-        cellOf(cellMembers(p)) = cell
-        p += 1
-      }
+      val p = idOrder(ids)
       val env = sq8.index(ids, m.dimMin, m.dimScale)
-      CorpusIndexIvfBq(ids, m.n, m.dim, m.nCells, m.centroids, words, m.nWords, m.thresholds,
-        if (m.bitCut != null) m.bitCut else BqCut.of(env).bitCut, cellOf, m.cellStart,
-        cellMembers, env)
+      val (fIds, fWords, fCellOf, fEnv) =
+        if (p == null) (ids, words, cellOf, env)
+        else {
+          val pIds = p.map(ids)
+          (pIds, permute(words, m.nWords, p), p.map(cellOf), permuteSq8(env, p, pIds))
+        }
+      Similarity.ivfBqIndex(fEnv, m.nCells, m.centroids, fWords, m.nWords, m.thresholds,
+        if (m.bitCut != null) m.bitCut else BqCut.of(env).bitCut, fCellOf)
     }
 
     /** Row `off` of SQ8 `codes` decoded and unit-normalized into `out`

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.sources.ShardedLayout.{Manifest, ShardKey, carry, copyDir, shardDir, shardDirs}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
@@ -564,19 +564,15 @@ object Sink {
     appendShardedCore(IndexCodec.Bq, spark, newRows, idCol, embCol, indexPath, outPath,
       overwrite)(dir => IndexCodec.Bq.appendable(IndexCodec.Bq.readMeta(spark, dir), "BQ",
       indexPath, "re-persist once to upgrade the layout")) { metas =>
-      // the frozen encode artifacts are corpus-GLOBAL — every shard's
-      // meta carries the same grid/thresholds/cut (validated so a
-      // corrupt mixed-grid index refuses instead of encoding wrong)
-      metas.zipWithIndex.foreach { case (m, i) => require(IndexCodec.Bq.sameCut(m, metas(0)),
-        s"shard $i cuts on a different threshold than shard 0 — corrupt index") }
+      IndexCodec.Bq.requireOneCut(metas)
       metas.map(IndexCodec.Bq.Enc)
     }
 
   /** The one routed encode-only append of the [[ShardedLayout]]
-    * families that pack rows by `idx` (BQ, IVF+PQ/OPQ): the append
-    * prelude with the family's grow cap, the batch encoded scan-stage
-    * with each destination shard's frozen encode, and the append tail
-    * with each shard's grown meta.
+    * families, which all pack rows by `idx` (BQ, IVF+BQ, IVF+PQ/OPQ):
+    * the append prelude with the family's grow cap, the batch encoded
+    * scan-stage with each destination shard's frozen encode, and the
+    * append tail with each shard's grown meta.
     */
   private def appendShardedCore[M <: IndexCodec.Stored](
       layout: IndexCodec.Layout[M], spark: SparkSession, newRows: DataFrame, idCol: String,
@@ -693,12 +689,12 @@ object Sink {
       overwrite: Boolean = false): Unit =
     compactShardedCore(spark, indexPath, outPath, overwrite)
 
-  /** The one map-only compaction of the [[ShardedLayout]] families whose
-    * shards pack rows by an `idx` position (BQ, IVF+PQ/OPQ): drop the
-    * tombstoned rows of each shard's `vectors/`, renumber positions
-    * contiguously in original order, rewrite meta's `n` (by name, so
-    * every meta schema survives) and the manifest's `total_n`, write
-    * no `tombstones/`, and carry `rot/` forward.
+  /** The one map-only compaction of the [[ShardedLayout]] families,
+    * whose shards all pack rows by an `idx` position (BQ, IVF+BQ,
+    * IVF+PQ/OPQ): drop the tombstoned rows of each shard's `vectors/`,
+    * renumber positions contiguously in original order, rewrite meta's
+    * `n` (by name, so every meta schema survives) and the manifest's
+    * `total_n`, write no `tombstones/`, and carry `rot/` forward.
     */
   private def compactShardedCore(
       spark: SparkSession,
@@ -942,11 +938,11 @@ object Sink {
       IndexCodec.Pq.Enc(_, rot))
   }
 
-  /** Persist an IVF+BQ index — centroids + CSR routing + the
-    * CSR-position-ordered bit matrix + the SQ8 envelope, byte-exact.
-    * Layout: [[IndexCodec.IvfBq]] (one vectors row per CSR slot, so
-    * the sequential-bits layout survives).
-    * [[graft.sources.Source.readIvfBqIndex]] restores byte-identically.
+  /** Persist an IVF+BQ index — centroids, per-row cells, bits and SQ8
+    * envelope, byte-exact. Layout: [[IndexCodec.IvfBq]] (one vectors
+    * row per pack position carrying its cell, as IVF+PQ stores it).
+    * [[graft.sources.Source.readIvfBqIndex]] restores byte-identically,
+    * rebuilding the CSR and its sequential-bits layout from the cells.
     */
   def writeIvfBqIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -982,8 +978,8 @@ object Sink {
     * encode-only ingest for the ROUTED bit rung (the round-15
     * crossover probe's recommendation from ~50M rows/shard up), so a
     * user at the rung's own recommended scale no longer rebuilds the
-    * index per ingest batch. The [[ShardedLayout]] append envelope
-    * composed with the IVF structure:
+    * index per ingest batch: the [[appendBqShardedIndex]] envelope
+    * ([[appendShardedCore]]) with the IVF structure frozen per shard.
     *
     *  - rows route through the manifest's routing identity (any shard
     *    can host any row: the encode grid/cut are corpus-global and
@@ -998,27 +994,21 @@ object Sink {
     *    strict-max dot against the stored centroids, ties to the
     *    lowest cell — the build's rule). NO re-clustering: moving a
     *    centroid would re-route OLD rows (a rebuild, not an append);
-    *  - the CSR stays REAL: appended members land at the END of
-    *    their cell's bracket (old members keep their relative order
-    *    — the stable-CSR invariant compaction also preserves), which
-    *    shifts every later slot by the cells-before insert count, so
-    *    a touched shard's vectors rewrite through one scan-stage
-    *    slot remap (narrow code-width rows, never raw vectors);
-    *    UNTOUCHED shards copy as files, bytes identical;
-    *  - pack row indices continue from the shard's old `n` in batch
-    *    id order; meta rewrites `n` + `cell_start`; tombstones carry
-    *    forward; the grown index publishes atomically at `outPath`
-    *    (the source index is never mutated).
+    *  - old vectors copy as files; new rows land beside them with
+    *    their cell, pack positions continuing from the shard's old
+    *    `n`; meta rewrites `n`; tombstones carry forward; the grown
+    *    index publishes atomically at `outPath` (the source index is
+    *    never mutated). The reader rebuilds the CSR from the cells.
     *
     * Null, duplicate and stored ids, null embeddings and dim
-    * mismatches refuse by name. A pre-`bit_cut` IVF+BQ layout
-    * refuses by name with a NON-circular upgrade: the readers derive
-    * the cut ([[graft.sources.Source.readIvfBqShardedIndex]]), so
-    * read + re-persist once upgrades the layout. The result restores
-    * through the standard readers and serves like any built index
-    * (SinkSpec pins old-row byte identity, new-row re-encode
-    * equality, CSR validity, self-hit of appended rows, and the
-    * grown-corpus recall floor via `ann_ivfbq_append_gate`).
+    * mismatches refuse by name. A pre-`bit_cut` or slot-keyed IVF+BQ
+    * layout refuses by name with a NON-circular upgrade: the readers
+    * restore both, so read + re-persist (+ re-delete) upgrades the
+    * layout. The result restores through the standard readers and
+    * serves like any built index (SinkSpec pins old-row byte
+    * identity, new-row re-encode equality, CSR validity, self-hit of
+    * appended rows, and the grown-corpus recall floor via
+    * `ann_ivfbq_append_gate`).
     */
   def appendIvfBqShardedIndex(
       spark: SparkSession,
@@ -1027,108 +1017,13 @@ object Sink {
       embCol: String,
       indexPath: String,
       outPath: String,
-      overwrite: Boolean = false): Unit = {
-    import IndexCodec.IvfBq
-    val ap = ShardedLayout.prepareAppend(spark, newRows, idCol, embCol, indexPath) { i =>
-      val m = IvfBq.readMeta(spark, shardDir(indexPath, i))
-      IndexCodec.Bq.appendable(m.bq, "IVF+BQ", indexPath, "read it once through " +
-        "readIvfBqShardedIndex (which re-derives the cut) and re-persist with " +
-        "writeIvfBqShardedIndex to upgrade the layout")
-      m
-    }(_.n.toLong, (m, grown) => IndexCodec.fits(IvfBq.widths(m), grown))
-    val metas = ap.metas
-    metas.zipWithIndex.foreach { case (m, i) =>
-      require(IndexCodec.Bq.sameCut(m.bq, metas(0).bq),
-        s"shard $i cuts on a different grid/threshold than shard 0 — corrupt index")
+      overwrite: Boolean = false): Unit =
+    appendShardedCore(IndexCodec.IvfBq, spark, newRows, idCol, embCol, indexPath, outPath,
+      overwrite)(dir => IndexCodec.IvfBq.appendable(IndexCodec.IvfBq.readMeta(spark, dir),
+      indexPath)) { metas =>
+      IndexCodec.Bq.requireOneCut(metas.map(_.bq))
+      metas.map(IndexCodec.IvfBq.Enc)
     }
-    val sc = spark.sparkContext
-    publishAtomically(spark, outPath, overwrite) { tmp =>
-      ShardedLayout.writeManifest(spark, tmp, ap.grown)
-      // scan-stage encode + frozen-cell assignment: raw vectors
-      // leave their executor as code-width rows
-      IndexCodec.encodeRouted(spark, ap.narrow,
-        metas.indices.map(i => i.toLong -> IvfBq.Enc(metas(i))).toMap, IvfBq.encoded) {
-        _.withColumn("shard_out", col("shard").cast(IntegerType))
-          .write.partitionBy("shard_out").mode(SaveMode.ErrorIfExists)
-          .parquet(s"$tmp/__append__")
-      }
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(sc.hadoopConfiguration)
-      val vecSchema = IndexCodec.schema(IvfBq.Key, IvfBq.payload)
-      // per-shard remap/copy/meta tails are independent — guide §2.6
-      Par.shards(metas.indices) { i =>
-        val m = metas(i)
-        val dst = shardDir(tmp, i)
-        val part = new org.apache.hadoop.fs.Path(s"$tmp/__append__/shard_out=$i")
-        val nNew = ap.newOf(i).toInt
-        // untouched shard: bytes stay bytes
-        if (nNew == 0) copyDir(spark, shardDir(indexPath, i), dst)
-        else {
-          require(fs.exists(part),
-            s"encode pass produced no partition for shard $i at $part")
-          val batch = spark.read.parquet(part.toString)
-          // per-cell insert counts (≤ nCells rows to the driver)
-          val ins = new Array[Int](m.nCells)
-          batch.groupBy("cell").count().collect()
-            .foreach(r => ins(r.getInt(0)) = r.getLong(1).toInt)
-          val cumIns = new Array[Int](m.nCells + 1)
-          var c = 0
-          while (c < m.nCells) { cumIns(c + 1) = cumIns(c) + ins(c); c += 1 }
-          val newStart = Array.tabulate(m.nCells + 1)(c2 => m.cellStart(c2) + cumIns(c2))
-          // old members: slot shifts by the inserts into cells
-          // BEFORE theirs; row/id/bits/codes/norms byte-identical
-          val bcRemap = sc.broadcast((m.cellStart, cumIns))
-          try {
-            val oldRdd = spark.read
-              .parquet(s"${shardDir(indexPath, i)}/vectors")
-              .select(vecSchema.fieldNames.toSeq.map(col): _*).rdd.mapPartitions { it =>
-                val (ost, cum) = bcRemap.value
-                it.map { r =>
-                  val p = r.getInt(0)
-                  // bracket search: largest c with ost(c) <= p
-                  var lo = 0; var hi = ost.length - 1
-                  while (hi - lo > 1) {
-                    val mid = (lo + hi) >>> 1
-                    if (ost(mid) <= p) lo = mid else hi = mid
-                  }
-                  Row.fromSeq((p + cum(lo)) +: r.toSeq.tail)
-                }
-              }
-            val remappedOld = spark.createDataFrame(oldRdd, vecSchema)
-            // new members: row continues from old n in batch id
-            // order; slot lands at the END of the cell's new bracket
-            val endPlusCum: Map[Int, Int] = (0 until m.nCells)
-              .map(cc => cc -> (m.cellStart(cc + 1) + cumIns(cc))).toMap
-            val wCell = Window.partitionBy("cell").orderBy("id")
-            // dense corpus row numbers via a distributed sort +
-            // zipWithIndex (the flat appends' idiom) — the previous
-            // global-orderBy window funneled the whole batch
-            // through one task (guide §2); ids are unique (enforced
-            // above) so the range sort is a total, deterministic
-            // order
-            val slotted = batch
-              .withColumn("slot",
-                (element_at(typedLit(endPlusCum), col("cell")) +
-                  row_number().over(wCell) - 1).cast(IntegerType))
-              .select(col("slot"), col("id"), col("words"), col("code"),
-                col("norm"), col("sq_norm"))
-              .orderBy("id")
-            val baseN = m.n
-            val newRdd = slotted.rdd.zipWithIndex.map { case (r, j) =>
-              Row.fromSeq(r.get(0) +: (baseN + j).toInt +: r.toSeq.tail)
-            }
-            val newMembers = spark.createDataFrame(newRdd, vecSchema)
-            remappedOld.unionAll(newMembers)
-              .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/vectors")
-          } finally bcRemap.destroy()
-          IvfBq.writeMeta(spark, dst, m.copy(n = m.n + nNew, cellStart = newStart))
-        }
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/__append__"), true)
-      // re-adding a tombstoned id is refused by the stored-id clash —
-      // compact to free it
-      carry(spark, indexPath, tmp, "tombstones", "rot")
-    }
-  }
 
   /** TOMBSTONE delete from a persisted sharded IVF+BQ index — the
     * [[ShardedLayout]] delete (a delete never
@@ -1146,31 +1041,23 @@ object Sink {
     deleteFromShardedIndexCore(spark, deleteIds, idCol, indexPath, outPath,
       overwrite)
 
-  /** Compact a tombstoned sharded IVF+BQ index: driver-side array
-    * surgery per broadcast-sized shard ([[graft.operators.Similarity
-    * .compactIvfBq]] — kept rows keep their order, the CSR regroups
-    * stably, bit rows copy from their old slots, the frozen
-    * thresholds/grid never move), then one atomic re-publish with NO
-    * tombstone set. Serving the compacted index is bit-identical to
-    * the deny-masked serve of the input (SinkSpec pins it).
+  /** Compact a tombstoned sharded IVF+BQ index — the
+    * [[compactBqShardedIndex]] map-only compaction
+    * ([[compactShardedCore]]): kept rows keep their cells and order,
+    * the reader regroups the CSR stably, and the frozen
+    * thresholds/grid/centroids never move. Serving the compacted index
+    * is bit-identical to the deny-masked serve of the input (SinkSpec
+    * pins it). A slot-keyed layout refuses by name with the upgrade
+    * path.
     */
   def compactIvfBqShardedIndex(
       spark: SparkSession,
       indexPath: String,
       outPath: String,
       overwrite: Boolean = false): Unit = {
-    require(ShardedLayout.exists(spark, s"$indexPath/tombstones"),
-      s"no tombstones at $indexPath — nothing to compact")
-    val (shards, ts) = graft.sources.Source
-      .readIvfBqShardedIndexWithTombstones(spark, indexPath)
-    val sorted = graft.operators.Similarity.sortedIds(ts)
-    val manifest = ShardedLayout.readManifest(spark, indexPath)
-    val compacted = shards.map(sx =>
-      graft.operators.Similarity.compactIvfBq(sx, sorted))
-    publishAtomically(spark, outPath, overwrite) { tmp =>
-      ShardedLayout.writeShards(spark, tmp, compacted, manifest.hashModulus,
-        manifest.hashVals)(_.n, IndexCodec.IvfBq.write(spark, _, _))
-    }
+    Par.shards(shardDirs(indexPath, ShardedLayout.readManifest(spark, indexPath).numShards))(
+      dir => IndexCodec.IvfBq.current(IndexCodec.IvfBq.readMeta(spark, dir), indexPath))
+    compactShardedCore(spark, indexPath, outPath, overwrite)
   }
 
   /** Persist a trained PCA model — the pretransform's train-once
@@ -1383,7 +1270,7 @@ object Sink {
     *     collected (≈ 2·trainSample rows per shard, the only raw
     *     vectors the driver ever holds); coarse centroids + residual
     *     codebooks train through the SHARED loops
-    *     (`trainSphericalKmeans`/`trainPqSubspace` — bit-identical to
+    *     (`trainSphericalKmeans`/`trainPqCodebooks` — bit-identical to
     *     the driver build by construction);
     *  4. residual SQ8 bounds via an executor-side min/max fold with
     *     the scalar comparison semantics of `quantizeSq8` (skips NaN
@@ -1489,7 +1376,6 @@ object Sink {
         Similarity.rotateRow(rot, v, 0, dim, out, 0)
         id -> out
       }
-    val sub = dim / m
 
     // train per shard on the driver — sample-bounded work, through the
     // SAME loops the collect-based build runs. Shard trainings are
@@ -1517,28 +1403,8 @@ object Sink {
         while (d < dim) { resS(i2 * dim + d) = u(d) - centroids(cell * dim + d); d += 1 }
         i2 += 1
       }
-      val kPq = math.min(256, n)
-      val codebooks = new Array[Float](m * 256 * sub)
-      var j = 0
-      while (j < m) {
-        val pts = new Array[Double](sn2 * sub)
-        var s2 = 0
-        while (s2 < sn2) {
-          var d = 0
-          while (d < sub) { pts(s2 * sub + d) = resS(s2 * dim + j * sub + d); d += 1 }
-          s2 += 1
-        }
-        val cent = Similarity.trainPqSubspace(pts, sn2, sub, kPq, iters)
-        var c = 0
-        while (c < kPq) {
-          var d = 0
-          while (d < sub) {
-            codebooks((j * 256 + c) * sub + d) = cent(c * sub + d).toFloat; d += 1
-          }
-          c += 1
-        }
-        j += 1
-      }
+      val codebooks = Similarity.trainPqCodebooks(resS, Array.range(0, sn2), dim, m,
+        math.min(256, n), iters)
       // a build meta records no k_pq: min(256, n) IS the trained count
       s -> IndexCodec.IvfPqMeta(n, dim, m, k, centroids, codebooks, null, null, 0)
     }.toMap

@@ -603,8 +603,8 @@ class SinkSpec extends AnyFunSuite {
       assert(g.sq8.dimMin.sameElements(old.sq8.dimMin))
       assert(g.sq8.dimScale.sameElements(old.sq8.dimScale))
       // CSR is REAL after the append: brackets monotone, members
-      // grouped, and within a cell old members precede new in the
-      // build's stable g-ascending order
+      // grouped, and within a cell members ascend in row (= id) order
+      assert((1 until g.n).forall(j => g.ids(j - 1) < g.ids(j)), "ids not ascending")
       for (c <- 0 until g.nCells) {
         assert(g.cellStart(c) <= g.cellStart(c + 1))
         var prev = -1
@@ -615,33 +615,33 @@ class SinkSpec extends AnyFunSuite {
           prev = g.cellMembers(p)
         }
       }
-      // old rows: ids/codes/norms/cells byte-identical at their
-      // original row indices; bits byte-identical through each
-      // index's own slot map
+      // old rows, found by id: ids/codes/norms/cells byte-identical;
+      // bits byte-identical through each index's own slot map
       val oldSlot = slotOf(old); val newSlot = slotOf(g)
       for (j <- 0 until old.n) {
-        assert(g.ids(j) == old.ids(j))
-        assert(g.cellOf(j) == old.cellOf(j))
+        val p = posOf(g.ids, old.ids(j))
+        assert(g.cellOf(p) == old.cellOf(j))
         for (d <- 0 until old.dim)
-          assert(g.sq8.codes(j * g.dim + d) == old.sq8.codes(j * old.dim + d))
-        assert(g.sq8.norms(j) == old.sq8.norms(j))
+          assert(g.sq8.codes(p * g.dim + d) == old.sq8.codes(j * old.dim + d))
+        assert(g.sq8.norms(p) == old.sq8.norms(j))
         for (w <- 0 until old.nWords)
-          assert(g.words(newSlot(j) * g.nWords + w) ==
-            old.words(oldSlot(j) * old.nWords + w), s"row $j word $w")
+          assert(g.words(newSlot(p) * g.nWords + w) ==
+            old.words(oldSlot(j) * old.nWords + w), s"id ${old.ids(j)} word $w")
       }
-      // new rows: id-ascending after the old block; codes = frozen-
-      // grid encode; bits = code >= cut at their CSR slots; cell =
-      // the build's own strict-max assignment over frozen centroids
+      // new rows, found by id: codes = frozen-grid encode; bits =
+      // code >= cut at their CSR slots; cell = the build's own
+      // strict-max assignment over frozen centroids
       val oddVecs = odds.toMap
-      assert((old.n until g.n).map(g.ids).toSeq == (old.n until g.n).map(g.ids).sorted)
-      for (j <- old.n until g.n) {
-        val v = oddVecs(g.ids(j)).toArray
+      val fresh = g.ids.filter(oddVecs.contains)
+      assert(fresh.length == g.n - old.n)
+      for (id <- fresh; j = posOf(g.ids, id)) {
+        val v = oddVecs(id).toArray
         val expect = new Array[Byte](g.dim)
         val sq = Similarity.sq8EncodeRow(v, 0, g.dim, g.sq8.dimMin,
           g.sq8.dimScale, expect, 0)
         val nrm = math.sqrt(sq)
         for (d <- 0 until g.dim)
-          assert(g.sq8.codes(j * g.dim + d) == expect(d), s"row $j dim $d")
+          assert(g.sq8.codes(j * g.dim + d) == expect(d), s"id $id dim $d")
         assert(g.sq8.sqNorms(j) == sq)
         val unit = new Array[Double](g.dim)
         if (nrm > 1e-10)
@@ -650,11 +650,11 @@ class SinkSpec extends AnyFunSuite {
               g.sq8.dimScale(d).toDouble) / nrm
         assert(g.cellOf(j) ==
           Similarity.assignCell(unit, 0, g.centroids, g.nCells, g.dim),
-          s"row $j cell")
+          s"id $id cell")
         for (d <- 0 until g.dim) {
           val bit = (g.words(newSlot(j) * g.nWords + (d >>> 6)) >>> (d & 63)) & 1L
           val expBit = if ((expect(d) & 0xFF) >= g.bitCut(d)) 1L else 0L
-          assert(bit == expBit, s"row $j dim $d bit")
+          assert(bit == expBit, s"id $id dim $d bit")
         }
       }
     }
@@ -703,6 +703,68 @@ class SinkSpec extends AnyFunSuite {
       assert(l.bitCut.sameElements(r.bitCut))
       assert(l.words.sameElements(r.words))
     }
+    // the slot-keyed layout: one row per CSR slot keyed (slot, row, id)
+    // with that slot's bits, and cell_start in meta
+    import org.apache.spark.sql.types._
+    val slotted = s"$base/slotted"
+    spark.read.parquet(s"$base/ix/manifest").write.parquet(s"$slotted/manifest")
+    build.shards.zipWithIndex.foreach { case (x, i) =>
+      val vecRows = (0 until x.n).map { p =>
+        val g = x.cellMembers(p)
+        org.apache.spark.sql.Row(p, g, x.ids(g),
+          x.words.slice(p * x.nWords, (p + 1) * x.nWords).toSeq,
+          x.sq8.codes.slice(g * x.dim, (g + 1) * x.dim), x.sq8.norms(g), x.sq8.sqNorms(g))
+      }
+      spark.createDataFrame(java.util.Arrays.asList(vecRows: _*), StructType(Seq(
+          StructField("slot", IntegerType, false), StructField("row", IntegerType, false),
+          StructField("id", LongType, false), StructField("words", ArrayType(LongType, false)),
+          StructField("code", BinaryType), StructField("norm", DoubleType, false),
+          StructField("sq_norm", DoubleType, false))))
+        .write.parquet(f"$slotted/shard_$i%04d/vectors")
+      spark.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(x.n, x.dim,
+          x.nWords, x.nCells, x.centroids.toSeq, x.thresholds.toSeq, x.cellStart.toSeq,
+          x.sq8.dimMin.toSeq, x.sq8.dimScale.toSeq, x.bitCut.toSeq)), StructType(Seq(
+          StructField("n", IntegerType, false), StructField("dim", IntegerType, false),
+          StructField("n_words", IntegerType, false), StructField("n_cells", IntegerType, false),
+          StructField("centroids", ArrayType(DoubleType, false)),
+          StructField("thresholds", ArrayType(DoubleType, false)),
+          StructField("cell_start", ArrayType(IntegerType, false)),
+          StructField("dim_min", ArrayType(FloatType, false)),
+          StructField("dim_scale", ArrayType(FloatType, false)),
+          StructField("bit_cut", ArrayType(IntegerType, false)))))
+        .write.parquet(f"$slotted/shard_$i%04d/meta")
+    }
+    // it reads to the build's own in-memory index...
+    graft.sources.Source.readIvfBqShardedIndex(spark, slotted).zip(build.shards).foreach {
+      case (l, r) =>
+        assert(l.n == r.n && l.dim == r.dim && l.nCells == r.nCells && l.nWords == r.nWords)
+        assert(l.ids.sameElements(r.ids) && l.words.sameElements(r.words))
+        assert(l.cellOf.sameElements(r.cellOf) && l.cellStart.sameElements(r.cellStart))
+        assert(l.cellMembers.sameElements(r.cellMembers))
+        assert(l.centroids.sameElements(r.centroids) && l.thresholds.sameElements(r.thresholds))
+        assert(l.bitCut.sameElements(r.bitCut))
+        assert(l.sq8.ids.sameElements(r.sq8.ids) && l.sq8.codes.sameElements(r.sq8.codes))
+        assert(l.sq8.norms.sameElements(r.sq8.norms) &&
+          l.sq8.sqNorms.sameElements(r.sq8.sqNorms))
+        assert(l.sq8.dimMin.sameElements(r.sq8.dimMin) &&
+          l.sq8.dimScale.sameElements(r.sq8.dimScale))
+    }
+    // ...and append and compact refuse it by name, naming the upgrade
+    def upgradePath(e: IllegalArgumentException): Boolean = {
+      val msg = e.getMessage
+      msg.contains("CSR slot") && msg.contains("writeIvfBqShardedIndex") &&
+        msg.contains("deleteFromIvfBqShardedIndex")
+    }
+    assert(upgradePath(intercept[IllegalArgumentException] {
+      Sink.appendIvfBqShardedIndex(spark,
+        Seq(3000L -> Seq.fill(40)(0.1)).toDF("id", "emb"), "id", "emb",
+        slotted, s"$base/x4")
+    }))
+    Sink.deleteFromIvfBqShardedIndex(spark, Seq(0L).toDF("id"), "id", slotted,
+      s"$base/slotted-del")
+    assert(upgradePath(intercept[IllegalArgumentException] {
+      Sink.compactIvfBqShardedIndex(spark, s"$base/slotted-del", s"$base/x5")
+    }))
     // tombstones carry forward through the append
     Sink.deleteFromIvfBqShardedIndex(spark, Seq(1L).toDF("id"), "id",
       s"$base/grown", s"$base/del")
@@ -1776,6 +1838,33 @@ class SinkSpec extends AnyFunSuite {
         assert(shards.exists(sx => Similarity.Sq8Score.cosineAt(id, q, sx) != null),
           s"$family: cosineAt lost id $id")
       }
+    }
+  }
+
+  test("an appended sharded IVF+BQ index restores id-ascending: cosineAt finds every id") {
+    // evens built, odds appended: each shard's stored pack is a sorted
+    // old block then a sorted new block; Sq8Score.cosineAt (the
+    // rerankFullDim scorer over shard.sq8) binary-searches the ids
+    import spark.implicits._
+    import graft.operators.Similarity
+    val rnd = new scala.util.Random(91)
+    val all = (0L until 300L).map(i => i -> Seq.fill(16)(rnd.nextGaussian()))
+    val base = Files.createTempDirectory("sink-ivfbq-sorted").toString
+    Sink.writeIvfBqShardedIndex(spark, Similarity.buildIvfBqShardedWithLayout(
+      all.filter(_._1 % 2 == 0).toDF("id", "emb"), "id", "emb", numShards = 3, nCells = 4),
+      s"$base/ix")
+    Sink.appendIvfBqShardedIndex(spark, all.filter(_._1 % 2 != 0).toDF("id", "emb"), "id",
+      "emb", s"$base/ix", s"$base/grown")
+    val shards = graft.sources.Source.readIvfBqShardedIndex(spark, s"$base/grown")
+    assert(shards.map(_.n).sum == 300)
+    val q = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.fill(16)(0.5))
+    shards.foreach { sx =>
+      (1 until sx.n).foreach { j =>
+        assert(sx.ids(j - 1) < sx.ids(j), s"unsorted ids at $j: ${sx.ids(j - 1)} !< ${sx.ids(j)}")
+        assert(sx.sq8.ids(j - 1) < sx.sq8.ids(j), s"unsorted sq8 ids at $j")
+      }
+      sx.ids.foreach(id => assert(Similarity.Sq8Score.cosineAt(id, q, sx.sq8) != null,
+        s"cosineAt lost id $id"))
     }
   }
 
