@@ -1876,12 +1876,12 @@ object SparkEntry {
     }),
 
     // BOUNDED-MEMORY wave serving gate (round-10 verdict #1): the
-    // plain sharded search unions all B per-shard plans, pinning
-    // every shard's broadcast simultaneously — per-executor memory =
+    // plain sharded search broadcasts all B shards in one payload,
+    // pinning every shard simultaneously — per-executor memory =
     // the whole compressed index, the ceiling sharding exists to
     // break. The wave server holds only `waveSize` shards at a time
-    // (per-wave top-k partials persisted, broadcasts destroyed
-    // between waves). This gate pins BOTH properties: row parity
+    // (each wave's running top-k cut persisted, its broadcast
+    // destroyed before the next wave). This gate pins BOTH properties: row parity
     // with the all-resident form, and measured peak live broadcast
     // bytes = one wave's shards (< Σ shards). DuckDB pins the count
     // and the constant-TRUE booleans.

@@ -658,22 +658,6 @@ object Similarity {
     InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
   }
 
-  /** Scale path for corpora too large for one broadcast: split the
-    * corpus into `numBlocks` HASH-MOD blocks (`xxhash64(id) % B`), run
-    * the broadcast kernel per block (each yields ≤ k candidates per
-    * query), union, then one shuffle on the query id merges candidates
-    * to a global top-k. Returns the flat (query cols, rank, index,
-    * score) shape.
-    *
-    * Block membership is a pure filter predicate pushed to the corpus
-    * scan — the driver NEVER materializes the corpus id universe (at
-    * 100 TB that id array alone is billions of longs); each block's
-    * rows are collected only to build its broadcast index, exactly the
-    * memory the single-broadcast path would need for the whole corpus.
-    * Hash-mod (vs id ranges) also sends every row of a duplicated id
-    * to the SAME block, so duplicate ids can't straddle a boundary and
-    * double-enter the merge.
-    */
   /** Scalar-quantized (SQ8) corpus index: ONE BYTE per element plus
     * per-dimension affine parameters — 8× smaller than the f64 index
     * (4× vs f32). A 4M × 256-d corpus is 8.2 GB as f64 (far past the
@@ -1156,7 +1140,8 @@ object Similarity {
       metric: Metric,
       shortlist: Int,
       outputCol: String = "matches"): DataFrame =
-    serveBq(queries, embCol, Seq(corpus), ShardMasks.Unmasked, k, metric, shortlist, outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.Unmasked, k,
+      bqFamily(k, metric, shortlist))
 
   /** FILTERED BQ search — [[topkBq]] restricted to an allowed-id
     * subset (the FAISS `IDSelector` shape the IVF+PQ family already
@@ -1180,8 +1165,8 @@ object Similarity {
       metric: Metric,
       shortlist: Int,
       outputCol: String = "matches"): DataFrame =
-    serveBq(queries, embCol, Seq(corpus), ShardMasks.Allow(allowedIds), k, metric, shortlist,
-      outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.allow(allowedIds), k,
+      bqFamily(k, metric, shortlist))
 
   /** [[topkBqFiltered]] with the allowed set as a one-column
     * DataFrame — the relational form ([[topkIvfPqFiltered]]'s
@@ -1199,8 +1184,8 @@ object Similarity {
       metric: Metric,
       shortlist: Int,
       outputCol: String): DataFrame =
-    serveBq(queries, embCol, Seq(corpus), ShardMasks.AllowDf(allowed, allowedIdCol), k, metric,
-      shortlist, outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.AllowDf(allowed, allowedIdCol),
+      k, bqFamily(k, metric, shortlist))
 
   /** [[topkBqFiltered]] then explode+unnest — the flat
     * (rank, index, score) shape of [[topkFlat]].
@@ -1238,16 +1223,10 @@ object Similarity {
       s"shortlist must be >= k, got $shortlist (k=$k) — the Hamming pass " +
         "only pre-screens; k results come from the SQ8 rerank")
 
-  /** The BQ family's resident serve over one index or many
-    * ([[serveSharded]]): the matches column under `outputCol`.
-    */
-  private def serveBq(
-      queries: DataFrame, embCol: String, shards: Seq[CorpusIndexBq], masks: ShardMasks,
-      k: Int, metric: Metric, shortlist: Int, outputCol: String): DataFrame =
-    serveSharded(queries, embCol, outputCol, shards, masks, k, shortlist,
-        metric.higherIsBetter)(_.ids, _.dim, _ => validateBqArgs(k, shortlist)) {
-      (cx, mask, c, _) => bqBody(cx, mask, c, metric)
-    }
+  /** The BQ family as [[serveSharded]] and the wave loop serve it. */
+  private def bqFamily(k: Int, metric: Metric, shortlist: Int): ShardFamily[CorpusIndexBq] =
+    ShardFamily(metric.higherIsBetter, shortlist, null, _.ids, _.dim,
+      _ => validateBqArgs(k, shortlist), (cx, mask, c, _) => bqBody(cx, mask, c, metric))
 
   /** The BQ row body over one index: every row not masked out is
     * screened (masked rows skip their XOR+popcount), k and the
@@ -1351,7 +1330,7 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int): DataFrame =
-    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Allow(allowedIds), k, metric,
+    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.allow(allowedIds), k, metric,
       shortlist)
 
   /** [[topkBqShardedFiltered]] with the allowed set as a one-column
@@ -1384,18 +1363,18 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int): DataFrame =
-    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Deny(tombstoneIds), k, metric,
+    serveBqSharded(queries, qIdCol, embCol, shards, ShardMasks.deny(tombstoneIds), k, metric,
       shortlist)
 
-  /** The BQ family's flat sharded serve: [[serveBq]] over
+  /** The BQ family's flat sharded serve: [[serveSharded]] over
     * `(qIdCol, embCol)`, so the output keeps only
     * `(qIdCol, index, score, rank)`.
     */
   private def serveBqSharded(
       queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexBq],
       masks: ShardMasks, k: Int, metric: Metric, shortlist: Int): DataFrame =
-    shardedFlat(serveBq(queries.select(col(qIdCol), col(embCol)), embCol, shards, masks, k,
-      metric, shortlist, "matches"), embCol)
+    shardedFlat(serveSharded(queries.select(col(qIdCol), col(embCol)), embCol, "matches", shards,
+      masks, k, bqFamily(k, metric, shortlist)), embCol)
 
   /** [[topkBqSharded]] with BOUNDED broadcast memory — the BQ family
     * member of [[topkIvfPqShardedWaves]]: the plain sharded form
@@ -1404,16 +1383,18 @@ object Similarity {
     * 8× larger SQ8 rerank envelope, i.e. the TOTAL index, exactly
     * the per-executor ceiling sharding exists to break (2.75 GB at
     * 10M×256, growing linearly). This form serves the shards in
-    * waves of `waveSize` on the shared wave machinery: per-wave
-    * broadcasts → per-query top-k partial (k rows per query — the
-    * only state that outlives a wave) → destroy, so peak
-    * per-executor broadcast memory is ONE WAVE's shards, measured by
-    * `meter`. Rows are IDENTICAL to [[topkBqSharded]] (per-wave
-    * top-k cuts are lossless for a global top-k; ties pin to the
-    * lowest index both times — BqSpec parity at waveSize 1).
-    * `allowedIds`/`deniedIds` compose the [[topkBqFiltered]] /
-    * tombstone masks per wave (allow ∧ ¬deny), built only while the
-    * shard is live and destroyed with it. Scratch-dir policy,
+    * waves of `waveSize` on the shared wave machinery
+    * ([[topkShardedWavesCore]]): per wave one broadcast and one pass
+    * that merges each query row's carried matches into its running
+    * top-k (the cut — the only state that outlives a wave) → persist
+    * → destroy, so peak per-executor broadcast memory is ONE WAVE's
+    * shards, measured by `meter`. Rows are IDENTICAL to
+    * [[topkBqSharded]], ranked per query row (per-wave top-k cuts are
+    * lossless for a global top-k; ties pin to the lowest index both
+    * times — BqSpec parity at waveSize 1). `allowedIds`/`deniedIds`
+    * compose the [[topkBqFiltered]] / tombstone masks per wave
+    * (allow ∧ ¬deny), built only while the shard is live and
+    * destroyed with it. Scratch-dir policy,
     * `memoryPartials`, and the cluster refusal are
     * [[topkIvfPqShardedWaves]]'s, verbatim.
     */
@@ -1455,17 +1436,10 @@ object Similarity {
       meter: ShardedServeMeter,
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
-      deniedIds: Array[Long] = null): DataFrame = {
-    val q = queries.select(col(qIdCol), col(embCol))
-    topkShardedWavesCore[CorpusIndexBq](
-      queries.sparkSession, qIdCol, metric, shardProviders, _.ids,
-      validateBqArgs(k, shortlist),
-      partialOf = (bc, maskBc, nAllowed) => wavePartial(q, embCol, bc, maskBc, nAllowed,
-        bc.value.n, bc.value.dim, k, shortlist, metric.higherIsBetter)(bqBody(_, _, _, metric)),
-      k = k, waveSize = waveSize, scratch = scratch,
-      meter = meter, memoryPartials = memoryPartials,
-      allowedIds = allowedIds, deniedIds = deniedIds)
-  }
+      deniedIds: Array[Long] = null): DataFrame =
+    topkShardedWavesCore(queries.select(col(qIdCol), col(embCol)), embCol, shardProviders,
+        bqFamily(k, metric, shortlist), k, waveSize, scratch, meter, memoryPartials, allowedIds,
+        deniedIds)(validateBqArgs(k, shortlist))
 
   /** IVF + binary quantization — coarse spherical cells ROUTE, sign
     * bits PRE-SCREEN, the SQ8 envelope RERANKS: the [[topkBq]] scan
@@ -1597,8 +1571,8 @@ object Similarity {
       nProbe: Int,
       shortlist: Int,
       outputCol: String = "matches"): DataFrame =
-    serveIvfBq(queries, embCol, Seq(corpus), ShardMasks.Unmasked, k, nProbe, shortlist,
-      outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.Unmasked, k,
+      ivfBqFamily(k, nProbe, shortlist))
 
   /** FILTERED IVF+BQ search — [[topkIvfBq]] restricted to an
     * allowed-id subset: the mask skips masked members of the probed
@@ -1617,8 +1591,8 @@ object Similarity {
       nProbe: Int,
       shortlist: Int,
       outputCol: String = "matches"): DataFrame =
-    serveIvfBq(queries, embCol, Seq(corpus), ShardMasks.Allow(allowedIds), k, nProbe, shortlist,
-      outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.allow(allowedIds), k,
+      ivfBqFamily(k, nProbe, shortlist))
 
   /** [[topkIvfBqFiltered]] then explode+unnest — the flat
     * (rank, index, score) shape of [[topkFlat]].
@@ -1643,16 +1617,12 @@ object Similarity {
         "only pre-screens; k results come from the SQ8 rerank")
   }
 
-  /** The IVF+BQ family's resident serve over one index or many
-    * ([[serveSharded]], cosine): the matches column under `outputCol`.
+  /** The IVF+BQ family (cosine) as [[serveSharded]] and the wave loop
+    * serve it.
     */
-  private def serveIvfBq(
-      queries: DataFrame, embCol: String, shards: Seq[CorpusIndexIvfBq], masks: ShardMasks,
-      k: Int, nProbe: Int, shortlist: Int, outputCol: String): DataFrame =
-    serveSharded(queries, embCol, outputCol, shards, masks, k, shortlist, higher = true)(
-        _.ids, _.dim, _ => validateIvfBqArgs(k, nProbe, shortlist)) {
-      (cx, mask, c, _) => ivfBqBody(cx, mask, c, nProbe)
-    }
+  private def ivfBqFamily(k: Int, nProbe: Int, shortlist: Int): ShardFamily[CorpusIndexIvfBq] =
+    ShardFamily(true, shortlist, null, _.ids, _.dim, _ => validateIvfBqArgs(k, nProbe, shortlist),
+      (cx, mask, c, _) => ivfBqBody(cx, mask, c, nProbe))
 
   /** The IVF+BQ row body over one index: masked members of the probed
     * cells skip their popcount; k clamps to the allowed population.
@@ -1770,7 +1740,7 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int): DataFrame =
-    serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Allow(allowedIds), k,
+    serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.allow(allowedIds), k,
       nProbe, shortlist)
 
   /** [[topkIvfBqShardedFiltered]] with the allowed set as a
@@ -1803,18 +1773,18 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int): DataFrame =
-    serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.Deny(tombstoneIds), k,
+    serveIvfBqSharded(queries, qIdCol, embCol, shards, ShardMasks.deny(tombstoneIds), k,
       nProbe, shortlist)
 
-  /** The IVF+BQ family's flat sharded serve: [[serveIvfBq]] over
+  /** The IVF+BQ family's flat sharded serve: [[serveSharded]] over
     * `(qIdCol, embCol)`, so the output keeps only
     * `(qIdCol, index, score, rank)`.
     */
   private def serveIvfBqSharded(
       queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexIvfBq],
       masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int): DataFrame =
-    shardedFlat(serveIvfBq(queries.select(col(qIdCol), col(embCol)), embCol, shards, masks, k,
-      nProbe, shortlist, "matches"), embCol)
+    shardedFlat(serveSharded(queries.select(col(qIdCol), col(embCol)), embCol, "matches", shards,
+      masks, k, ivfBqFamily(k, nProbe, shortlist)), embCol)
 
   /** [[topkIvfBqSharded]] with BOUNDED broadcast memory — the routed
     * sibling of [[topkBqShardedWaves]] on the shared wave machinery
@@ -1858,17 +1828,10 @@ object Similarity {
       meter: ShardedServeMeter,
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
-      deniedIds: Array[Long] = null): DataFrame = {
-    val q = queries.select(col(qIdCol), col(embCol))
-    topkShardedWavesCore[CorpusIndexIvfBq](
-      queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
-      validateIvfBqArgs(k, nProbe, shortlist),
-      partialOf = (bc, maskBc, nAllowed) => wavePartial(q, embCol, bc, maskBc, nAllowed,
-        bc.value.n, bc.value.dim, k, shortlist, higher = true)(ivfBqBody(_, _, _, nProbe)),
-      k = k, waveSize = waveSize, scratch = scratch,
-      meter = meter, memoryPartials = memoryPartials,
-      allowedIds = allowedIds, deniedIds = deniedIds)
-  }
+      deniedIds: Array[Long] = null): DataFrame =
+    topkShardedWavesCore(queries.select(col(qIdCol), col(embCol)), embCol, shardProviders,
+        ivfBqFamily(k, nProbe, shortlist), k, waveSize, scratch, meter, memoryPartials,
+        allowedIds, deniedIds)(validateIvfBqArgs(k, nProbe, shortlist))
 
   final case class CorpusIndexPq(
       ids: Array[Long],
@@ -2325,8 +2288,8 @@ object Similarity {
       nProbe: Int,
       shortlist: Int = 0,
       outputCol: String = "matches"): DataFrame =
-    serveIvfPq(queries, embCol, Seq(corpus.ivf), ShardMasks.Unmasked, k, nProbe, shortlist,
-      outputCol, corpus.rot)
+    serveSharded(queries, embCol, outputCol, Seq(corpus.ivf), ShardMasks.Unmasked, k,
+      ivfPqFamily(k, nProbe, shortlist, corpus.rot))
 
   /** [[topkIvfOpq]] exploded to the flat (query, rank, index, score)
     * shape of [[topkFlat]].
@@ -2885,8 +2848,8 @@ object Similarity {
       nProbe: Int,
       shortlist: Int = 0,
       outputCol: String = "matches"): DataFrame =
-    serveIvfPq(queries, embCol, Seq(corpus), ShardMasks.Unmasked, k, nProbe, shortlist,
-      outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.Unmasked, k,
+      ivfPqFamily(k, nProbe, shortlist))
 
   /** FILTERED IVF+PQ search — [[topkIvfPq]] restricted to an
     * allowed-id subset of the corpus (the vector-DB "metadata filter"
@@ -2922,8 +2885,8 @@ object Similarity {
       nProbe: Int,
       shortlist: Int = 0,
       outputCol: String = "matches"): DataFrame =
-    serveIvfPq(queries, embCol, Seq(corpus), ShardMasks.Allow(allowedIds), k, nProbe, shortlist,
-      outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.allow(allowedIds), k,
+      ivfPqFamily(k, nProbe, shortlist))
 
   /** [[topkIvfPqFiltered]] with the allowed set as a one-column
     * DataFrame — the relational form. The allowed ids NEVER collect
@@ -2945,8 +2908,8 @@ object Similarity {
       nProbe: Int,
       shortlist: Int,
       outputCol: String): DataFrame =
-    serveIvfPq(queries, embCol, Seq(corpus), ShardMasks.AllowDf(allowed, allowedIdCol), k,
-      nProbe, shortlist, outputCol)
+    serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.AllowDf(allowed, allowedIdCol),
+      k, ivfPqFamily(k, nProbe, shortlist))
 
   /** Executor-side mask build for the DataFrame-allowed forms, for
     * MANY id arrays (one per shard; a flat index is the one-shard
@@ -3080,59 +3043,51 @@ object Similarity {
       (mask, n)
     }
 
-  /** Where a resident sharded serve's per-shard masks come from (see
-    * [[serveSharded]]).
+  /** Where a sharded serve's per-shard masks come from (see
+    * [[serveSharded]]): id sets, each sorted once per serve (null: no
+    * such set; both null is the unmasked kernel path), or an allowed-id
+    * DataFrame.
     */
   private sealed trait ShardMasks
   private object ShardMasks {
-    case object Unmasked extends ShardMasks
-    final case class Allow(ids: Array[Long]) extends ShardMasks
+    final case class Ids(sortedAllow: Array[Long], sortedDeny: Array[Long]) extends ShardMasks
     final case class AllowDf(allowed: DataFrame, idCol: String) extends ShardMasks
-    final case class Deny(ids: Array[Long]) extends ShardMasks
+    val Unmasked: ShardMasks = Ids(null, null)
+    def allow(ids: Array[Long]): ShardMasks = Ids(sortedIds(ids), null)
+    def deny(ids: Array[Long]): ShardMasks = Ids(null, sortedIds(ids))
   }
+
+  /** What a family supplies to a sharded serve ([[servePass]]): the
+    * metric's direction, the shortlist, the OPQ rotation that rides the
+    * pass's broadcast (null: none), its shards' ids and dimension, its
+    * argument check and its row body (shard, mask, clamp and the
+    * rotation → [[TopkBody]]); `bqFamily`, `ivfBqFamily` and
+    * `ivfPqFamily` build one.
+    */
+  private final case class ShardFamily[I](
+      higher: Boolean,
+      shortlist: Int,
+      rot: Array[Double],
+      ids: I => Array[Long],
+      dim: I => Int,
+      check: I => Unit,
+      body: (I, Array[Boolean], TopkFrame.Clamp, Array[Double]) => TopkBody)
 
   /** The one resident serve behind every family's one-index serves
     * (`topk{Bq,IvfBq,IvfPq,IvfOpq}` and the `…Filtered` forms: the
     * one-shard case) and its 13 resident sharded serves
     * (`topk{Bq,IvfBq,IvfPq}Sharded`, `…ShardedFiltered` by id array and
-    * by DataFrame, `…ShardedTombstoned`, [[topkIvfOpqSharded]]). The
-    * family passes its shards' ids and dimension, its argument check
-    * and its row body (`bqBody`, `ivfBqBody`, `ivfPqBody`: shard, mask,
-    * clamp and the OPQ rotation → [[TopkBody]]).
+    * by DataFrame, `…ShardedTombstoned`, [[topkIvfOpqSharded]]): one
+    * [[servePass]] over every shard, whose broadcast the lazy plan
+    * keeps.
     *
-    *  - Validation: `check` runs on every shard, the shards' dimensions
-    *    must agree, and the query column must be `array<float>` or
-    *    `array<double>` ([[TopkFrame.queryIsF32]]), all BEFORE the first
-    *    mask job or broadcast, so a refused call mints nothing.
-    *  - Masks: `Unmasked` serves through the unmasked kernel path;
-    *    `Allow`/`Deny` sort the set once and build each shard's
-    *    [[idMask]] (ids living in other shards fall out as not-found,
-    *    exactly the per-shard intersection); `AllowDf` builds every
-    *    shard's mask in one distributed pass
-    *    ([[allowedMasksFromDfMulti]]) without collecting the set.
-    *  - One pass: ONE broadcast holds the shards, their masks and
-    *    `rot`, and one [[TopkFrame.selectShards]] pass runs every
-    *    shard's body per query row into its own selector (k clamped to
-    *    the served rows in that shard) and merges them in the task —
-    *    score desc for higher-is-better metrics (asc otherwise), ties to
-    *    the lowest index, the exact kernel's rule — into min(k, Σ served)
-    *    matches per query ROW under `outputCol`. k above the allowed (or
-    *    LIVE, under `Deny`) population returns every served row; an
-    *    empty intersection returns empty matches. One job and no
-    *    shuffle, unless the query frame is split (next point).
-    *  - Parallelism: with more than one shard, a non-empty query frame
-    *    with fewer partitions P than the default parallelism is split
-    *    round-robin to min(default parallelism, P × shards) partitions
-    *    first ([[TopkFrame.rows]]): one shuffle of the query rows and a
-    *    second stage, so a small query frame still spreads over the
-    *    cores as the per-shard partials did.
     *  - Broadcast lifetime: the plan is LAZY, so its broadcast cannot be
     *    destroyed eagerly — it lives until Spark's ContextCleaner
     *    collects the unreferenced plan, and every executor pins every
     *    shard at once. Long-lived drivers and indexes past one
     *    executor's memory should serve through the `…ShardedWaves`
-    *    forms ([[topkShardedWavesCore]]), which destroy each wave's
-    *    broadcasts.
+    *    forms ([[topkShardedWavesCore]]), which run one pass per wave
+    *    and destroy its broadcast once the wave's cut is persisted.
     */
   private def serveSharded[I <: AnyRef: scala.reflect.ClassTag](
       queries: DataFrame,
@@ -3141,46 +3096,84 @@ object Similarity {
       shards: Seq[I],
       masks: ShardMasks,
       k: Int,
-      shortlist: Int,
-      higher: Boolean,
-      rot: Array[Double] = null)(
-      ids: I => Array[Long],
-      dim: I => Int,
-      check: I => Unit)(
-      body: (I, Array[Boolean], TopkFrame.Clamp, Array[Double]) => TopkBody): DataFrame = {
+      fam: ShardFamily[I]): DataFrame =
+    servePass(queries, embCol, outputCol, shards, masks, k, fam)._1
+
+  /** What a sharded pass broadcasts: the shards, their masks (null:
+    * unmasked) and the OPQ rotation (null: none).
+    */
+  private type ShardPayload[I] = (Array[I], Array[Array[Boolean]], Array[Double])
+
+  /** One sharded pass — [[serveSharded]] over all shards, and each wave
+    * of [[topkShardedWavesCore]] over its shards — returning the lazy
+    * frame and the one broadcast it minted.
+    *
+    *  - Validation: the family's `check` runs on every shard, the
+    *    shards' dimensions must agree, and the query column must be
+    *    `array<float>` or `array<double>` ([[TopkFrame.queryIsF32]]),
+    *    all BEFORE the first mask job or broadcast, so a refused call
+    *    mints nothing.
+    *  - Masks: `Ids` builds each shard's [[idMask]] against the sorted
+    *    sets (ids living in other shards fall out as not-found, exactly
+    *    the per-shard intersection; both sets null serves through the
+    *    unmasked kernel path); `AllowDf` builds every shard's mask in
+    *    one distributed pass ([[allowedMasksFromDfMulti]]) without
+    *    collecting the set.
+    *  - One pass: ONE broadcast holds the shards, their masks and the
+    *    family's `rot`, and one [[TopkFrame.selectShards]] pass runs
+    *    every shard's body per query row into its own selector (k
+    *    clamped to the served rows in that shard) and merges them in
+    *    the task — score desc for higher-is-better metrics (asc
+    *    otherwise), ties to the lowest index, the exact kernel's rule —
+    *    into min(k, Σ served) matches per query ROW under `outputCol`.
+    *    With `carry`, `outputCol` already holds each row's matches over
+    *    other shards and merges in as one more selector. k above the
+    *    allowed (or LIVE, under a deny set) population returns every
+    *    served row; an empty intersection returns empty matches. One
+    *    job and no shuffle, unless the query frame is split (next
+    *    point).
+    *  - Parallelism: with more than one shard, a non-empty query frame
+    *    with fewer partitions P than the default parallelism is split
+    *    round-robin to min(default parallelism, P × shards) partitions
+    *    first ([[TopkFrame.rows]]): one shuffle of the query rows and a
+    *    second stage, so a small query frame still spreads over the
+    *    cores as the per-shard partials did.
+    */
+  private def servePass[I <: AnyRef: scala.reflect.ClassTag](
+      queries: DataFrame,
+      embCol: String,
+      outputCol: String,
+      shards: Seq[I],
+      masks: ShardMasks,
+      k: Int,
+      fam: ShardFamily[I],
+      carry: Boolean = false): (DataFrame, Broadcast[ShardPayload[I]]) = {
     require(shards.nonEmpty, "Empty shard list")
-    shards.foreach(check)
-    val d = dim(shards.head)
-    shards.foreach(sx => require(dim(sx) == d,
-      s"Dimension mismatch: shards have $d and ${dim(sx)} dimensions"))
+    shards.foreach(fam.check)
+    val d = fam.dim(shards.head)
+    shards.foreach(sx => require(fam.dim(sx) == d,
+      s"Dimension mismatch: shards have $d and ${fam.dim(sx)} dimensions"))
     TopkFrame.queryIsF32(queries.schema, embCol)
-    val spark = queries.sparkSession
     val shardMasks = (masks match {
-      case ShardMasks.Unmasked => shards.map(_ => (null: Array[Boolean], -1))
-      case ShardMasks.Allow(a) =>
-        val sorted = sortedIds(a)
-        shards.map(sx => idMask(ids(sx), sorted, null))
-      case ShardMasks.Deny(dn) =>
-        val sorted = sortedIds(dn)
-        shards.map(sx => idMask(ids(sx), null, sorted))
+      case ShardMasks.Ids(a, dn) => shards.map(sx => idMask(fam.ids(sx), a, dn))
       case ShardMasks.AllowDf(allowed, idCol) =>
-        allowedMasksFromDfMulti(shards.map(ids), allowed, idCol)
+        allowedMasksFromDfMulti(shards.map(fam.ids), allowed, idCol)
     }).toArray
-    val bc = broadcastOf(spark, (shards.toArray, shardMasks.map(_._1), rot))
-    TopkFrame.selectShards(queries, embCol, outputCol, d, shards.map(ids(_).length).toArray, k,
-        higher, shortlist, shardMasks.map(_._2)) { (s, c) =>
+    val bc = broadcastOf(queries.sparkSession, (shards.toArray, shardMasks.map(_._1), fam.rot))
+    val body = fam.body // the tasks need the body alone, not the driver-side check
+    (TopkFrame.selectShards(queries, embCol, outputCol, d, shards.map(fam.ids(_).length).toArray,
+        k, fam.higher, fam.shortlist, shardMasks.map(_._2), carry = carry) { (s, c) =>
       val (sx, ms, r) = bc.value
       body(sx(s), ms(s), c, r)
-    }
+    }, bc)
   }
 
-  /** The distributed union + row_number merge of the serves that
-    * build one partial per shard or block — each wave's cut and the
-    * final wave merge, and [[topkBlocked]] (the resident serves merge
-    * in the task, [[serveSharded]]): a partial's own `rank` is
-    * dropped, then metric-aware ordering (score desc for
-    * higher-is-better metrics, asc otherwise; ties to the lowest
-    * index, the exact kernel's rule) keeps k rows per `qIdCol` value.
+  /** The distributed union + row_number merge of [[topkBlocked]]'s
+    * per-block partials (the sharded serves merge in the task,
+    * [[servePass]]): a partial's own `rank` is dropped, then
+    * metric-aware ordering (score desc for higher-is-better metrics,
+    * asc otherwise; ties to the lowest index, the exact kernel's rule)
+    * keeps k rows per `qIdCol` value.
     */
   private def mergeShardPartials(
       partials: Seq[DataFrame], qIdCol: String, k: Int, metric: Metric): DataFrame = {
@@ -3192,11 +3185,9 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** The IVF+PQ argument contract, shared by the broadcast-owning
-    * serves (which must validate before they broadcast) and the
-    * IVF+PQ wave partial (whose shard is already broadcast):
-    * [[validateIvfPqCall]], the SQ8 sidecar a rerank needs, and a
-    * non-null OPQ `rot`'s shape.
+  /** The IVF+PQ argument contract, which every serve checks before it
+    * broadcasts: [[validateIvfPqCall]], the SQ8 sidecar a rerank needs,
+    * and a non-null OPQ `rot`'s shape.
     */
   private def validateIvfPqArgs(
       corpus: CorpusIndexIvfPq, k: Int, nProbe: Int, shortlist: Int,
@@ -3218,19 +3209,16 @@ object Similarity {
       s"shortlist must be 0 (off) or >= k, got $shortlist (k=$k)")
   }
 
-  /** The IVF+PQ/OPQ family's resident serve over one index or many
-    * ([[serveSharded]], cosine): the matches column under `outputCol`;
-    * a non-null `rot` (IVF+OPQ) is checked against each shard and rides
-    * the one broadcast.
+  /** The IVF+PQ/OPQ family (cosine) as [[serveSharded]] and the wave
+    * loop serve it; a non-null `rot` (IVF+OPQ) is checked against each
+    * shard and rides the pass's broadcast.
     */
-  private def serveIvfPq(
-      queries: DataFrame, embCol: String, shards: Seq[CorpusIndexIvfPq], masks: ShardMasks,
-      k: Int, nProbe: Int, shortlist: Int, outputCol: String,
-      rot: Array[Double] = null): DataFrame =
-    serveSharded(queries, embCol, outputCol, shards, masks, k, shortlist, higher = true, rot)(
-        _.ids, _.dim, validateIvfPqArgs(_, k, nProbe, shortlist, rot)) {
-      (cx, mask, c, r) => ivfPqBody(cx, mask, c, nProbe, r)
-    }
+  private def ivfPqFamily(
+      k: Int, nProbe: Int, shortlist: Int, rot: Array[Double] = null)
+      : ShardFamily[CorpusIndexIvfPq] =
+    ShardFamily(true, shortlist, rot, _.ids, _.dim,
+      validateIvfPqArgs(_, k, nProbe, shortlist, rot),
+      (cx, mask, c, r) => ivfPqBody(cx, mask, c, nProbe, r))
 
   /** The IVF+PQ row body over one index: a mask skips masked-out
     * members INSIDE the probed-cell scan, before their ADC dot (the
@@ -3285,20 +3273,6 @@ object Similarity {
     flattenMatches(
       topkIvfPq(queries, embCol, corpus, k, nProbe, shortlist, "matches"), embCol)
 
-  /** A wave's per-shard partial: the family's row `body` over a
-    * CALLER-OWNED broadcast of the shard `bc` and its optional mask,
-    * flattened. The wave server creates, uses and DESTROYS its shard
-    * broadcasts, so the plan-building body must not mint its own;
-    * driver-side metadata (k clamp, schema) reads `bc.value`, which on
-    * the driver is the local object — no deserialization.
-    */
-  private def wavePartial[I](
-      queries: DataFrame, embCol: String, bc: Broadcast[I], maskBc: Broadcast[Array[Boolean]],
-      nAllowed: Int, n: Int, dim: Int, k: Int, shortlist: Int, higher: Boolean)(
-      body: (I, Array[Boolean], TopkFrame.Clamp) => TopkBody): DataFrame =
-    flattenMatches(TopkFrame.select(queries, embCol, "matches", dim, n, k, higher, shortlist,
-        nAllowed) { c => body(bc.value, if (maskBc == null) null else maskBc.value, c) }, embCol)
-
   private def flattenMatches(withMatches: DataFrame, embCol: String): DataFrame =
     withMatches
       .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
@@ -3317,7 +3291,29 @@ object Similarity {
     flat.select((flat.columns.filter(_ != "rank").map(col).toSeq :+ col("rank")): _*)
   }
 
-  /** `quantized = true` runs each block through the SQ8 path: each
+  /** Scale path for corpora too large for one broadcast: split the
+    * corpus into `numBlocks` HASH-MOD blocks (`xxhash64(id) % B`), run
+    * the broadcast kernel per block (each yields ≤ k candidates per
+    * query), union, then one shuffle on the query id merges candidates
+    * to a global top-k ([[mergeShardPartials]]). Returns the flat
+    * (query cols, rank, index, score) shape. The merge still ranks per
+    * `qIdCol` VALUE, not per query row as the sharded serves do: two
+    * query rows sharing an id (or both null) get one top-k between
+    * them. Chaining the blocks through one carried top-k, as the wave
+    * serves do, would keep every block's lazy plan — and so its
+    * broadcast — pinned in each task, the footprint blocking exists to
+    * avoid.
+    *
+    * Block membership is a pure filter predicate pushed to the corpus
+    * scan — the driver NEVER materializes the corpus id universe (at
+    * 100 TB that id array alone is billions of longs); each block's
+    * rows are collected only to build its broadcast index, exactly the
+    * memory the single-broadcast path would need for the whole corpus.
+    * Hash-mod (vs id ranges) also sends every row of a duplicated id
+    * to the SAME block, so duplicate ids can't straddle a boundary and
+    * double-enter the merge.
+    *
+    * `quantized = true` runs each block through the SQ8 path: each
     * block quantizes INSIDE its collect task and the f64 pack is
     * dropped there, so peak driver memory is the ≤ 8 in-flight
     * blocks' f64 packs plus all completed blocks' codes — never the
@@ -3667,7 +3663,7 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0): DataFrame =
-    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.Deny(tombstoneIds),
+    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.deny(tombstoneIds),
       k, nProbe, shortlist)
 
   /** [[topkIvfPqSharded]] restricted to an allowed-id subset — the
@@ -3685,7 +3681,7 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0): DataFrame =
-    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.Allow(allowedIds),
+    serveIvfPqSharded(queries, embCol, qIdCol, shards, ShardMasks.allow(allowedIds),
       k, nProbe, shortlist)
 
   /** [[topkIvfPqShardedFiltered]] with the allowed set as a
@@ -3707,7 +3703,7 @@ object Similarity {
     serveIvfPqSharded(queries, embCol, qIdCol, shards,
       ShardMasks.AllowDf(allowed, allowedIdCol), k, nProbe, shortlist)
 
-  /** The IVF+PQ/OPQ family's flat sharded serve: [[serveIvfPq]], every
+  /** The IVF+PQ/OPQ family's flat sharded serve: [[serveSharded]], every
     * query column kept, ranks per query row. `qIdCol` must name a query
     * column (as in the wave forms); it is resolved before any broadcast.
     */
@@ -3716,7 +3712,8 @@ object Similarity {
       masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int,
       rot: Array[Double] = null): DataFrame = {
     queries.col(qIdCol)
-    shardedFlat(serveIvfPq(queries, embCol, shards, masks, k, nProbe, shortlist, "matches", rot),
+    shardedFlat(serveSharded(queries, embCol, "matches", shards, masks, k,
+      ivfPqFamily(k, nProbe, shortlist, rot)),
       embCol)
   }
 
@@ -3778,19 +3775,19 @@ object Similarity {
     * executor holds every shard simultaneously —
     * per-executor memory equals the TOTAL compressed index, exactly
     * the ceiling sharding exists to break. This form serves the
-    * shards in waves of `waveSize`: each wave broadcasts only its
-    * shards, reduces the union to a per-query top-k partial (k rows
-    * per query per wave — the only state that outlives a wave),
-    * PERSISTS the partial as parquet under `scratchDir`, then
-    * `destroy()`s the wave's broadcasts before the next wave starts.
-    * The final merge unions the k-row partials — broadcast-free — and
-    * re-ranks. Peak per-executor broadcast memory is one wave's
-    * shards (∝ max-shard at waveSize=1), measured by
-    * [[ShardedServeStats]]; rows are IDENTICAL to the plain form
-    * (per-wave top-k cuts are lossless for a global top-k, ties pin
-    * to lowest index both times — IvfPqSpec parity) while `qIdCol`
-    * values are unique: the waves rank per `qIdCol` value, the plain
-    * form per query row.
+    * shards in waves of `waveSize` ([[topkShardedWavesCore]]): each
+    * wave broadcasts only its shards and runs the plain form's one
+    * pass over them, merging each query row's matches carried from the
+    * earlier waves into a running top-k (the cut: the query rows with
+    * their matches — the only state that outlives a wave), PERSISTS
+    * the cut as parquet under `scratchDir`, then `destroy()`s the
+    * wave's broadcast before the next wave reads the cut. Peak
+    * per-executor broadcast memory is one wave's shards (∝ max-shard
+    * at waveSize=1), measured by [[ShardedServeStats]]; rows are
+    * IDENTICAL to the plain form, ranked per query row (per-wave
+    * top-k cuts are lossless for a global top-k, ties pin to lowest
+    * index both times — IvfPqSpec parity). No wave shuffles unless it
+    * splits a small query frame, as the plain form does.
     *
     * The returned DataFrame reads the scratch parquet lazily — the
     * caller owns `scratchDir`'s lifetime. When `scratchDir` is empty
@@ -3801,11 +3798,11 @@ object Similarity {
     * filesystems and the final merge would read nothing, so a
     * non-local master with no explicit scratch REFUSES with a named
     * error instead of silently corrupting results (round-11 verdict
-    * #2). On a cluster, pass a shared filesystem path; the partials
-    * are |queries| × k narrow rows per wave, marginal next to the
-    * scans.
+    * #2). On a cluster, pass a shared filesystem path; a cut holds
+    * every query row (its columns, k matches and, until the last wave,
+    * its embedding), marginal next to the scans.
     *
-    * `memoryPartials = true` keeps the per-wave partials as EAGER
+    * `memoryPartials = true` keeps the per-wave cuts as EAGER
     * `localCheckpoint`s in the block manager (MEMORY_AND_DISK)
     * instead of parquet scratch — no per-wave write+read, which the
     * round-12/13 A/B isolated as the wave-serve's overhead vs the
@@ -3915,7 +3912,10 @@ object Similarity {
     * only when its wave starts and its result is dropped when the
     * wave ends, so a caller paging shards off a persisted layout (the
     * streaming bounded serve) holds at most one wave's indexes on the
-    * driver — the same bound the broadcasts get on the executors.
+    * driver — the same bound the broadcasts get on the executors. The
+    * IVF+OPQ rotation comes as `rot` or as `rotBc`, a caller-owned
+    * broadcast read on the driver only; either way it rides each
+    * wave's one broadcast. `qIdCol` must name a query column.
     */
   private[graft] def topkIvfPqWavesCore(
       queries: DataFrame,
@@ -3931,27 +3931,18 @@ object Similarity {
       memoryPartials: Boolean = false,
       allowedIds: Array[Long] = null,
       deniedIds: Array[Long] = null,
-      rotBc: Broadcast[Array[Double]] = null): DataFrame =
-    topkShardedWavesCore[CorpusIndexIvfPq](
-      queries.sparkSession, qIdCol, Metric.Cosine, shardProviders, _.ids,
-      validateIvfPqCall(k, nProbe, shortlist),
-      partialOf = (bc, maskBc, nAllowed) => {
-        val ix = bc.value
-        validateIvfPqArgs(ix, k, nProbe, shortlist, if (rotBc == null) null else rotBc.value)
-        wavePartial(queries, embCol, bc, maskBc, nAllowed, ix.n, ix.dim, k, shortlist,
-            higher = true) { (cx, mask, c) =>
-          ivfPqBody(cx, mask, c, nProbe, if (rotBc == null) null else rotBc.value)
-        }
-      },
-      k = k, waveSize = waveSize, scratch = scratch, meter = meter,
-      memoryPartials = memoryPartials,
-      allowedIds = allowedIds, deniedIds = deniedIds)
+      rotBc: Broadcast[Array[Double]] = null,
+      rot: Array[Double] = null): DataFrame = {
+    queries.col(qIdCol)
+    topkShardedWavesCore(queries, embCol, shardProviders,
+        ivfPqFamily(k, nProbe, shortlist, if (rotBc == null) rot else rotBc.value), k,
+        waveSize, scratch, meter, memoryPartials, allowedIds, deniedIds)(
+      validateIvfPqCall(k, nProbe, shortlist))
+  }
 
   /** [[topkIvfPqShardedWaves]] for an IVF+OPQ build — every wave's
-    * kernel rotates the query with the ONE shared rotation broadcast
-    * (created here, destroyed after the waves materialize — the
-    * final merge reads the per-wave partials, never the rotation).
-    * Same bounded-memory, mask, and scratch contracts.
+    * kernel rotates the query with `rot`, which rides each wave's one
+    * broadcast. Same bounded-memory, mask, and scratch contracts.
     */
   def topkIvfOpqShardedWaves(
       queries: DataFrame,
@@ -3969,37 +3960,42 @@ object Similarity {
       allowedIds: Array[Long] = null,
       deniedIds: Array[Long] = null): DataFrame =
     serveWaves(queries, shards, scratchDir, memoryPartials) { (providers, scratch, mem) =>
-      validateIvfPqCall(k, nProbe, shortlist)
-      val rotBc = queries.sparkSession.sparkContext.broadcast(rot)
-      try topkIvfPqWavesCore(queries, embCol, qIdCol, providers, k, nProbe, shortlist,
-        waveSize, scratch, meter, mem, allowedIds, deniedIds, rotBc)
-      finally rotBc.destroy()
+      topkIvfPqWavesCore(queries, embCol, qIdCol, providers, k, nProbe, shortlist,
+        waveSize, scratch, meter, mem, allowedIds, deniedIds, rot = rot)
     }
 
   /** The index-family-agnostic wave loop — ONE machinery serves
-    * IVF+PQ, BQ, and IVF+BQ shards ([[topkIvfPqShardedWaves]] /
-    * [[topkBqShardedWaves]] / [[topkIvfBqShardedWaves]]): per wave,
-    * invoke at most `waveSize` shard providers, broadcast each shard
-    * (+ its optional allow∧¬deny [[idMask]], built only while the
-    * shard is live), cut the wave's partials to k rows per query with
-    * [[mergeShardPartials]] (the only state that outlives the wave),
-    * persist that cut (parquet scratch or eager localCheckpoint), then
-    * DESTROY the wave's broadcasts. Peak per-executor broadcast memory
-    * is one wave's shards, metered; the final broadcast-free
-    * [[mergeShardPartials]] re-ranks the wave cuts. Per-wave top-k
-    * cuts are lossless for a global top-k because the merge order is
-    * total (ties pin to the lowest index). `check`, the family's
-    * index-free argument check, runs before the first shard loads or
-    * broadcasts.
+    * IVF+PQ/OPQ, BQ, and IVF+BQ shards ([[topkIvfPqShardedWaves]] /
+    * [[topkBqShardedWaves]] / [[topkIvfBqShardedWaves]] and the
+    * streaming wave serves). `check`, the family's index-free argument
+    * check, runs before the first shard loads. Per wave:
+    *  - invoke at most `waveSize` shard providers (concurrently) and
+    *    meter each shard's size while its broadcast lives;
+    *  - run ONE [[servePass]] over the wave's shards — one broadcast of
+    *    the shards, their allow∧¬deny [[idMask]]s (built only while the
+    *    shards are live) and the OPQ rotation, and one
+    *    [[TopkFrame.selectShards]] pass whose query frame is the
+    *    previous wave's cut (wave 0 reads `queries` itself): each query
+    *    row's carried matches merge with the wave's selectors by the
+    *    in-task rule, so the cut stays each row's exact top-k over the
+    *    waves so far (wave shards are disjoint; the merge order is total,
+    *    ties to the lowest index);
+    *  - persist the cut — the query rows with their running matches,
+    *    and their embeddings until the last wave — as an EAGER
+    *    `localCheckpoint` (in the block manager, lineage cut so a lost
+    *    block fails loudly instead of recomputing against a destroyed
+    *    broadcast) or as parquet under `scratch/wave_N`, then destroy
+    *    the wave's broadcast.
+    * Peak per-executor broadcast memory is one wave's shards, metered.
+    * Ranks are per query row, like the resident forms, and nothing is
+    * shuffled unless a pass splits its query frame ([[servePass]]).
+    * The result is the last cut's flat rows ([[shardedFlat]]).
     */
-  private[graft] def topkShardedWavesCore[I <: AnyRef](
-      spark: org.apache.spark.sql.SparkSession,
-      qIdCol: String,
-      metric: Metric,
+  private def topkShardedWavesCore[I <: AnyRef: scala.reflect.ClassTag](
+      queries: DataFrame,
+      embCol: String,
       shardProviders: Seq[() => I],
-      ids: I => Array[Long],
-      check: => Unit,
-      partialOf: (Broadcast[I], Broadcast[Array[Boolean]], Int) => DataFrame,
+      fam: ShardFamily[I],
       k: Int,
       waveSize: Int,
       scratch: String,
@@ -4007,59 +4003,34 @@ object Similarity {
       memoryPartials: Boolean,
       allowedIds: Array[Long],
       deniedIds: Array[Long])(
-      implicit ct: scala.reflect.ClassTag[I]): DataFrame = {
+      check: => Unit): DataFrame = {
     require(shardProviders.nonEmpty, "Empty shard list")
     require(waveSize >= 1, s"waveSize must be >= 1, got $waveSize")
     check
     val waves = shardProviders.grouped(waveSize).toIndexedSeq
-    val sorted = if (allowedIds == null) null else sortedIds(allowedIds)
-    val sortedDeny = if (deniedIds == null) null else sortedIds(deniedIds)
-    val memParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    waves.zipWithIndex.foreach { case (wave, wi) =>
+    val masks = ShardMasks.Ids(if (allowedIds == null) null else sortedIds(allowedIds),
+      if (deniedIds == null) null else sortedIds(deniedIds))
+    val cut = waves.indices.foldLeft(queries) { (q, wi) =>
       // a wave's shards are ALL live at once by definition (the peak
       // bound is the wave, not one shard), so loading them
-      // concurrently (guide §2.6 — independent read jobs overlap)
-      // changes wall time, never the memory bound
-      val sized = graft.sources.Par.shards(wave) { load =>
+      // concurrently changes wall time, never the memory bound
+      val sized = graft.sources.Par.shards(waves(wi)) { load =>
         val ix = load()
         ix -> org.apache.spark.util.SizeEstimator.estimate(ix)
       }
-      // per-shard masks ride each wave: built only while the shard is
-      // live (the allow/deny sets sort ONCE per serve), broadcast with
-      // the shard, destroyed with it — the mask never outlives its
-      // wave, so the one-wave peak bound carries over to filtered and
-      // tombstoned serving
-      val bcs = sized.map { case (ix, bytes) =>
-        val (mask, nAllowed) = idMask(ids(ix), sorted, sortedDeny)
-        val maskBc = if (mask == null) null else spark.sparkContext.broadcast(mask)
-        val bc = broadcastOf(spark, ix)
-        meter.add(bytes)
-        (bc, bytes, maskBc, nAllowed)
-      }
+      val (served, bc) = servePass(q, embCol, "matches", sized.map(_._1), masks, k, fam,
+        carry = wi > 0)
+      sized.foreach(s => meter.add(s._2))
       try {
-        val partial = mergeShardPartials(
-          bcs.map { case (bc, _, maskBc, nAllowed) => partialOf(bc, maskBc, nAllowed) },
-          qIdCol, k, metric).drop("rank")
-        if (memoryPartials)
-          // eager localCheckpoint: materialized in the block manager
-          // (MEMORY_AND_DISK) while this wave's broadcasts are still
-          // live, lineage CUT so a lost block can never re-demand a
-          // destroyed broadcast (it fails loudly instead of silently
-          // recomputing wrong) — the round-12 wave-overhead A/B's
-          // in-memory path, skipping the parquet write+read per wave.
-          // Fit for local mode / reliable block managers; the parquet
-          // scratch stays the durable cluster default.
-          memParts += partial.localCheckpoint(true)
-        else
-          partial.write.mode("overwrite").parquet(s"$scratch/wave_$wi")
-      } finally bcs.foreach { case (bc, bytes, maskBc, _) =>
-        bc.destroy(); if (maskBc != null) maskBc.destroy(); meter.sub(bytes)
-      }
+        val kept = if (wi == waves.length - 1) served.drop(embCol) else served
+        if (memoryPartials) kept.localCheckpoint(true)
+        else {
+          kept.write.mode("overwrite").parquet(s"$scratch/wave_$wi")
+          q.sparkSession.read.parquet(s"$scratch/wave_$wi")
+        }
+      } finally { bc.destroy(); sized.foreach(s => meter.sub(s._2)) }
     }
-    val parts =
-      if (memoryPartials) memParts.toSeq
-      else waves.indices.map(wi => spark.read.parquet(s"$scratch/wave_$wi"))
-    mergeShardPartials(parts, qIdCol, k, metric)
+    shardedFlat(cut, embCol)
   }
 
   // ===== SQ8 point-lookup scoring (candidate rerank beyond the f64

@@ -83,6 +83,20 @@ private[graft] final class TopSelector(val cap: Int, higher: Boolean, val ids: A
 
 private[graft] object TopSelector {
 
+  /** A full selector over a matches array (best-first, as
+    * [[TopSelector.matches]] writes it): each entry keeps its own id.
+    */
+  def of(matches: ArrayData, higher: Boolean): TopSelector = {
+    val n = matches.numElements()
+    val sel = new TopSelector(n, higher, new Array[Long](n))
+    while (sel.size < n) {
+      val e = matches.getStruct(sel.size, 2)
+      sel.ids(sel.size) = e.getLong(0); sel.pos(sel.size) = sel.size
+      sel.score(sel.size) = e.getDouble(1); sel.size += 1
+    }
+    sel
+  }
+
   /** The best `cut` entries of selectors over disjoint id sets, merged
     * k-way best-first ([[TopSelector.precedes]]) into one matches array.
     */
@@ -242,7 +256,9 @@ private[graft] object TopkFrame {
     * 0 < P < the default parallelism, is first split round-robin into
     * min(default parallelism, P × spread) partitions: one shuffle of the
     * query rows and a second stage, which `plans/fused_serve/split.json`
-    * weighs against serving the P partitions as they come.
+    * weighs against serving the P partitions as they come. With
+    * `carry`, `out` names a column the frame already has: it is replaced
+    * in place, and `out(i)` arrives holding packed row `i`'s value of it.
     */
   def rows(
       queries: DataFrame,
@@ -251,12 +267,14 @@ private[graft] object TopkFrame {
       dim: Int,
       batchRows: Int,
       pack: Pack,
-      spread: Int = 1)(
+      spread: Int = 1,
+      carry: Boolean = false)(
       body: () => (QueryBatch, Array[AnyRef]) => Unit): DataFrame = {
     val schema = queries.schema
     val embIdx = schema.fieldIndex(embCol)
     val f32In = queryIsF32(schema, embCol)
     val fieldTypes = schema.fields.map(_.dataType)
+    val outIdx = if (carry) schema.fieldIndex(out.name) else fieldTypes.length
     val in = InternalRowBridge.toInternalRdd(queries)
     val cores = queries.sparkSession.sparkContext.defaultParallelism
     val parts = in.getNumPartitions
@@ -276,10 +294,10 @@ private[graft] object TopkFrame {
         def next(): InternalRow = {
           if (!hasNext) throw new NoSuchElementException
           val row = rows(at)
-          val vals = new Array[Any](fieldTypes.length + 1)
+          val vals = new Array[Any](if (carry) fieldTypes.length else fieldTypes.length + 1)
           var f = 0
           while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-          if (!row.isNullAt(embIdx)) { vals(fieldTypes.length) = packed(pi); pi += 1 }
+          if (!row.isNullAt(embIdx)) { vals(outIdx) = packed(pi); pi += 1 }
           at += 1
           new GenericInternalRow(vals)
         }
@@ -296,7 +314,11 @@ private[graft] object TopkFrame {
           var i = 0
           var r = 0
           while (r < n) {
-            if (!rows(r).isNullAt(embIdx)) { b.put(i, rows(r).getArray(embIdx), f32In); i += 1 }
+            if (!rows(r).isNullAt(embIdx)) {
+              b.put(i, rows(r).getArray(embIdx), f32In)
+              if (carry) packed(i) = rows(r).get(outIdx, fieldTypes(outIdx))
+              i += 1
+            }
             r += 1
           }
           if (m > 0) score(b, packed)
@@ -304,7 +326,7 @@ private[graft] object TopkFrame {
       }
     }
     InternalRowBridge.fromInternalRdd(queries.sparkSession, outRdd,
-      StructType(schema.fields :+ out))
+      StructType(if (carry) schema.fields.updated(outIdx, out) else schema.fields :+ out))
   }
 
   /** The top-k frame over one index: [[selectShards]]' one-shard case. */
@@ -331,7 +353,11 @@ private[graft] object TopkFrame {
     * row, and the body `kernel(s, clamp)` (built once per partition,
     * never when its k clamps to 0); then each row's selectors merge
     * best-first ([[TopSelector.merged]]) into min(k, Σ kept) matches.
-    * One index emits its selector as is.
+    * One index emits its selector as is. With `carry`, `outputCol` is
+    * already a matches column of `queries` holding each row's running
+    * top-k over other indexes with disjoint ids: it merges in as one
+    * more selector and the result replaces it (with no index served,
+    * the carried matches come back as they were).
     */
   def selectShards(
       queries: DataFrame,
@@ -344,15 +370,16 @@ private[graft] object TopkFrame {
       shortlist: Int,
       allowedCounts: Array[Int],
       batchRows: Int = 1,
-      pack: Pack = F64)(
+      pack: Pack = F64,
+      carry: Boolean = false)(
       kernel: (Int, Clamp) => TopkBody): DataFrame = {
     val cs = ns.indices.map(s => clamp(ns(s), k, shortlist, allowedCounts(s))).toArray
     val served = cs.indices.filter(cs(_).kk > 0).toArray
     rows(queries, embCol, StructField(outputCol, MatchesType, nullable = true), dim,
-        batchRows, pack, ns.length) { () =>
+        batchRows, pack, ns.length, carry) { () =>
       val bodies = served.map(s => kernel(s, cs(s)))
       val sels = served.map(_ => new Array[TopSelector](batchRows))
-      val row = new Array[TopSelector](served.length)
+      val row = new Array[TopSelector](if (carry) served.length + 1 else served.length)
       val empty = new GenericArrayData(new Array[Any](0))
       (b, out) => {
         var j = 0
@@ -363,13 +390,13 @@ private[graft] object TopkFrame {
         }
         var i = 0
         while (i < b.m) {
-          out(i) = served.length match {
+          j = 0
+          while (j < served.length) { row(j) = sels(j)(i); j += 1 }
+          if (carry) row(j) = TopSelector.of(out(i).asInstanceOf[ArrayData], higher)
+          out(i) = row.length match {
             case 0 => empty
-            case 1 => sels(0)(i).matches()
-            case _ =>
-              j = 0
-              while (j < served.length) { row(j) = sels(j)(i); j += 1 }
-              TopSelector.merged(row, k)
+            case 1 => row(0).matches()
+            case _ => TopSelector.merged(row, k)
           }
           i += 1
         }

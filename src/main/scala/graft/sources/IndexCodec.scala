@@ -374,6 +374,18 @@ private[graft] object IndexCodec {
       m
     }
 
+    /** How a refused sharded BQ (`family` "Bq") or IVF-BQ ("IvfBq")
+      * index at `path` upgrades. The build must carry the manifest's
+      * routing identity: a build that dropped an empty hash shard does
+      * not route by directory number, and no reader returns the identity.
+      */
+    def shardedUpgrade(family: String, path: String): String =
+      s"to upgrade the layout, read the shards and tombstones with " +
+        s"read${family}ShardedIndexWithTombstones, build a Sharded${family}Build from those " +
+        s"shards and the hash_modulus and shard_hash_vals columns of $path/manifest, " +
+        s"re-persist it with write${family}ShardedIndex and re-apply any tombstones with " +
+        s"deleteFrom${family}ShardedIndex"
+
     /** Refuse by name shards' metas that do not all cut on shard 0's
       * grid and threshold: a sharded BQ or IVF-BQ index's frozen encode
       * artifacts are corpus-global, so a mixed-grid index is corrupt.
@@ -501,22 +513,19 @@ private[graft] object IndexCodec {
     /** A row's cell, then its BQ payload. */
     val payload: Seq[StructField] = field("cell", IntegerType) +: Bq.payload
 
-    private val Upgrade = "read it through readIvfBqShardedIndexWithTombstones, re-persist the " +
-      "shards with writeIvfBqShardedIndex and re-apply any tombstones with " +
-      "deleteFromIvfBqShardedIndex to upgrade the layout"
-
     /** `m`, refused by name when it is the slot-keyed layout: appends
       * and compaction rewrite rows by pack position and meta by `n`.
       */
     def current(m: IvfBqMeta, path: String): IvfBqMeta = {
       require(m.slotStart == null, s"the IVF+BQ index at $path stores one row per CSR slot " +
-        s"with cell_start in meta (the layout before rows carried their cell); $Upgrade")
+        "with cell_start in meta (the layout before rows carried their cell); " +
+        Bq.shardedUpgrade("IvfBq", path))
       m
     }
 
     /** `m`, refused by name unless an append can grow it. */
     def appendable(m: IvfBqMeta, path: String): IvfBqMeta = {
-      Bq.appendable(current(m, path).bq, "IVF+BQ", path, Upgrade)
+      Bq.appendable(current(m, path).bq, "IVF+BQ", path, Bq.shardedUpgrade("IvfBq", path))
       m
     }
 

@@ -563,7 +563,7 @@ object Sink {
       overwrite: Boolean = false): Unit =
     appendShardedCore(IndexCodec.Bq, spark, newRows, idCol, embCol, indexPath, outPath,
       overwrite)(dir => IndexCodec.Bq.appendable(IndexCodec.Bq.readMeta(spark, dir), "BQ",
-      indexPath, "re-persist once to upgrade the layout")) { metas =>
+      indexPath, IndexCodec.Bq.shardedUpgrade("Bq", indexPath))) { metas =>
       IndexCodec.Bq.requireOneCut(metas)
       metas.map(IndexCodec.Bq.Enc)
     }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.{Similarity, TopSelector, TopkFrame}
 import graft.sources.{ShardedLayout, Source}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
@@ -391,12 +390,16 @@ object EventStream {
     * index — the exact ceiling sharding exists to break. This serve
     * instead pages the persisted shards
     * ([[graft.sources.Source.readIvfPqShardedIndex]] layout) through
-    * the driver in waves of `waveSize` per micro-batch: each wave
-    * loads only its shards from `indexPath`, broadcasts them, reduces
-    * the batch to per-query top-k partials, and destroys the
-    * broadcasts before the next wave — peak DRIVER and EXECUTOR index
-    * memory are both one wave, never Σ-shards, measured by `meter`
-    * across the whole stream.
+    * the driver in waves of `waveSize` per micro-batch, on
+    * [[graft.operators.Similarity.topkShardedWavesCore]]: each wave
+    * loads only its shards from `indexPath`, mints one broadcast of
+    * them, merges them into each query row's running top-k carried
+    * from the earlier waves (wave 0 reads the micro-batch itself, so
+    * the batch is scanned once and never persisted), persists that
+    * cut and destroys the broadcast before the next wave — peak DRIVER
+    * and EXECUTOR index memory are both one wave, never Σ-shards,
+    * measured by `meter` across the whole stream. Ranks are per query
+    * row.
     *
     * The memory/IO trade is explicit: a bounded serve re-reads each
     * unpinned shard's parquet once per micro-batch (sequential
@@ -421,13 +424,14 @@ object EventStream {
     * `meter.pinnedShardBytes` record it. An explicit
     * `residentShards >= 0` overrides the budget entirely.
     *
-    * Each micro-batch writes its wave partials under
+    * Each micro-batch writes its wave cuts under
     * `<scratch>/batch_<id>` and deletes them after `onBatch` returns,
     * so `onBatch` MUST consume its DataFrame synchronously
     * (collect/write — anything that runs the plan). Scratch policy is
     * [[graft.operators.Similarity.topkIvfPqShardedWaves]]'s: the
-    * temp-dir default refuses off local mode (wave partials need a
-    * filesystem every executor can read). The scratch is NAMESPACED
+    * temp-dir default refuses off local mode (wave cuts need a
+    * filesystem every executor can read; with the local-mode default,
+    * the cuts are in-memory checkpoints instead). The scratch is NAMESPACED
     * per serve instance (`serve_<uuid8>` under the resolved root):
     * two serves wired at the same explicit shared-FS root both start
     * at batch_0, and without the namespace serve A's overwrite-mode
@@ -451,7 +455,8 @@ object EventStream {
     * it must enforce what the plain reader's refusal enforces.
     *
     * An index with `rot/` (IVF+OPQ) rotates every query with its
-    * persisted rotation. The wave, residency and kernel arguments
+    * persisted rotation, read once at wiring time; it rides each
+    * wave's broadcast. The wave, residency and kernel arguments
     * (`nProbe`, `shortlist`) are checked at wiring time, so a refused
     * call never starts a stream. Returns the configured
     * `DataStreamWriter` — the caller attaches trigger/checkpoint and
@@ -477,7 +482,7 @@ object EventStream {
       residentBudgetBytes, meter, Similarity.validateIvfPqCall(k, nProbe, shortlist))(
       Source.readIvfPqIndex) { w =>
       Similarity.topkIvfPqWavesCore(w.batch, embCol, qIdCol, w.shards, k, nProbe, shortlist,
-        waveSize, w.scratch, meter, w.memoryPartials, allowedIds, w.tombstones, w.rotBc)
+        waveSize, w.scratch, meter, w.memoryPartials, allowedIds, w.tombstones, rot = w.rot)
     }(onBatch)
 
   /** STREAMING bounded serve over a PERSISTED sharded BQ index — the
@@ -537,10 +542,10 @@ object EventStream {
         waveSize, w.scratch, meter, w.memoryPartials, allowedIds, w.tombstones)
     }(onBatch)
 
-  /** One micro-batch's inputs to a family's wave core: the persisted
-    * batch, the shard providers, its scratch dir (empty with
-    * in-memory partials), the tombstone deny set (null: none) and the
-    * OPQ rotation broadcast (null: no `rot/`).
+  /** One micro-batch's inputs to a family's wave core: the batch, the
+    * shard providers, its scratch dir (empty with in-memory cuts), the
+    * tombstone deny set (null: none) and the OPQ rotation (null: no
+    * `rot/`).
     */
   private final case class WaveBatch[I](
       batch: DataFrame,
@@ -548,7 +553,7 @@ object EventStream {
       scratch: String,
       memoryPartials: Boolean,
       tombstones: Array[Long],
-      rotBc: Broadcast[Array[Double]])
+      rot: Array[Double])
 
   /** The one streaming sharded wave serve behind
     * `topkServe{IvfPq,Bq,IvfBq}ShardedWaves` (contract on
@@ -559,8 +564,8 @@ object EventStream {
     * scratch namespace; reads the tombstones, the OPQ rotation and the
     * manifest ([[graft.sources.ShardedLayout]]); and walks the
     * residency policy, reading shards through the family's `read`.
-    * Per micro-batch it persists the batch, runs the family's wave
-    * core `serve`, hands the result to `onBatch`, then unpersists and
+    * Per micro-batch it runs the family's wave core `serve` (whose
+    * wave 0 scans the batch once), hands the result to `onBatch`, then
     * deletes the batch scratch.
     */
   private def serveShardedWaves[I <: AnyRef](
@@ -580,7 +585,7 @@ object EventStream {
     require(residentShards >= -1,
       s"residentShards must be >= 0, or -1 for budget-priced auto, got $residentShards")
     check
-    // default-scratch local-mode serves keep per-wave partials as
+    // default-scratch local-mode serves keep per-wave cuts as
     // eager localCheckpoints instead of parquet scratch (the
     // [[graft.operators.Similarity.memoryPartialsDefault]] policy:
     // two fewer materialization round-trips per wave, same shard
@@ -601,11 +606,10 @@ object EventStream {
     }
     // an OPQ rotation is auto-applied the same way (this serve also
     // bypasses the plain reader's rotation refusal — serving rotated
-    // codebooks against unrotated queries would be silently wrong):
-    // one long-lived broadcast for the stream's lifetime
-    val rotBc =
+    // codebooks against unrotated queries would be silently wrong)
+    val rot =
       if (!ShardedLayout.exists(spark, s"$indexPath/rot")) null
-      else spark.sparkContext.broadcast(ShardedLayout.readRotation(spark, indexPath)._2)
+      else ShardedLayout.readRotation(spark, indexPath)._2
     // manifest read once at wiring time; shards page per wave
     val numShards = ShardedLayout.readManifest(spark, indexPath).numShards
     def load(i: Int): I = read(spark, ShardedLayout.shardDir(indexPath, i))
@@ -648,16 +652,10 @@ object EventStream {
     val providers = (0 until numShards).map(i => () => shardAt(i))
     queries.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       val batchScratch = if (memParts) "" else s"$scratchRoot/batch_$batchId"
-      // every wave is its own action over the micro-batch plan;
-      // without a persist each wave would RE-SCAN the source offsets
-      // (⌈B/waveSize⌉ scans per batch)
-      val pinnedBatch = batch.toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        onBatch(serve(WaveBatch(pinnedBatch, providers, batchScratch, memParts, tombstones,
-          rotBc)), batchId)
+        onBatch(serve(WaveBatch(batch.toDF(), providers, batchScratch, memParts, tombstones,
+          rot)), batchId)
       } finally {
-        pinnedBatch.unpersist()
         if (!memParts) {
           val p = new org.apache.hadoop.fs.Path(batchScratch)
           p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)

@@ -43,9 +43,9 @@ class ShardedServeSpec extends AnyFunSuite {
     df.select("qid", "rank", "index", "score").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
 
-  /** Every row a streaming serve delivers for the queries, in one batch. */
-  private def streamed(s: ShardedFamilies.Serves, allowed: Array[Long], residentShards: Int)
-      : Served = {
+  /** Every row a streaming serve delivers for the query rows, in one batch. */
+  private def streamed(s: ShardedFamilies.Serves, allowed: Array[Long], residentShards: Int,
+      qRows: Seq[(Long, Seq[Double])] = queryRows): Served = {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, Seq[Double])]
@@ -53,7 +53,7 @@ class ShardedServeSpec extends AnyFunSuite {
     val q = s.stream(mem.toDF().toDF("qid", "emb"), allowed, residentShards, Shortlist) {
       (df, _) => out.synchronized { out ++= served(df) }; ()
     }.start()
-    try { mem.addData(queryRows); q.processAllAvailable() } finally q.stop()
+    try { mem.addData(qRows); q.processAllAvailable() } finally q.stop()
     out.toSeq.sorted
   }
 
@@ -275,6 +275,69 @@ class ShardedServeSpec extends AnyFunSuite {
         val alone = Seq(a, b).flatMap(r => served(s.unmasked(Seq(r).toDF("qid", "emb"), Shortlist)))
         assert(alone.size == 2 * K)
         assert(served(s.unmasked(Seq(a, b).toDF("qid", "emb"), Shortlist)) == alone.sorted)
+        assert(served(s.waves(Seq(a, b).toDF("qid", "emb"), null, null)) == alone.sorted)
+        assert(served(s.wavesCore(Seq(a, b).toDF("qid", "emb"), () => (), Shortlist)) ==
+          alone.sorted)
+        assert(streamed(s, null, residentShards = 0, Seq(a, b)) == alone.sorted)
+      }
+    }
+  }
+
+  test("a wave serve is one pass per wave: no shuffle, and a row's matches carry across the waves") {
+    ShardedFamilies.all(spark).foreach { f =>
+      withClue(s"${f.name}: ") {
+        val base = Files.createTempDirectory(s"sharded-wave-shape-${f.name}").toString
+        f.write(rows(0L, 120L), s"$base/ix")
+        val s = f.serves(s"$base/ix")
+        Seq[(String, DataFrame => DataFrame)](
+          "waves" -> (q => s.waves(q, null, null)),
+          "wavesCore" -> (q => s.wavesCore(q, () => (), Shortlist))).foreach {
+          case (form, serve) =>
+            val (jobs, tasks, shuffled) = jobShape { serve(queriesIn(4)).collect(); () }
+            assert(shuffled == 0L,
+              s"$form: $jobs jobs, tasks per stage $tasks, $shuffled shuffle bytes")
+        }
+      }
+    }
+    // parquet cuts too
+    val corpus = rows(0L, 120L)
+    val ivfPq = Similarity.buildIvfPqSharded(corpus, "id", "emb", 3, nCells = 2, m = 4,
+      trainSample = 256)
+    val scratch = Files.createTempDirectory("sharded-wave-shape-parquet").toString
+    val (_, _, shuffled) = jobShape {
+      Similarity.topkIvfPqShardedWaves(queriesIn(4), "emb", "qid", ivfPq, K, 2, Shortlist,
+        waveSize = 1, scratchDir = scratch).collect(); ()
+    }
+    assert(shuffled == 0L, s"parquet cuts: $shuffled shuffle bytes")
+
+    // an allow set in the first two waves' shards only: wave 1 merges
+    // into the carried matches, and wave 2, all masked out, returns them
+    Seq[(String, Seq[Array[Long]], (Array[Long], Int) => DataFrame, Array[Long] => DataFrame)](
+      { val sh = Similarity.buildBqSharded(corpus, "id", "emb", 3)
+        ("BQ euclidean", sh.map(_.ids),
+          (a, w) => Similarity.topkBqShardedWaves(queries, "qid", "emb", sh, K,
+            Metric.Euclidean, Shortlist, waveSize = w, allowedIds = a),
+          a => Similarity.topkBqShardedFiltered(queries, "qid", "emb", sh, a, K,
+            Metric.Euclidean, Shortlist)) },
+      { val sh = Similarity.buildIvfBqSharded(corpus, "id", "emb", 3, nCells = 2)
+        ("IVF-BQ", sh.map(_.ids),
+          (a, w) => Similarity.topkIvfBqShardedWaves(queries, "qid", "emb", sh, K, 2, Shortlist,
+            waveSize = w, allowedIds = a),
+          a => Similarity.topkIvfBqShardedFiltered(queries, "qid", "emb", sh, a, K, 2,
+            Shortlist)) },
+      ("IVF-PQ", ivfPq.map(_.ids),
+        (a, w) => Similarity.topkIvfPqShardedWaves(queries, "emb", "qid", ivfPq, K, 2,
+          Shortlist, waveSize = w, allowedIds = a),
+        a => Similarity.topkIvfPqShardedFiltered(queries, "emb", "qid", ivfPq, a, K, 2,
+          Shortlist))).foreach { case (name, ids, waves, resident) =>
+      withClue(s"$name: ") {
+        assert(ids.size == 3)
+        val allowed = ids(0).take(3) ++ ids(1).take(3)
+        val want = served(resident(allowed))
+        assert(want.size == queryRows.size * K && want.forall(r => allowed.contains(r._3)))
+        assert(served(waves(allowed, 1)) == want)
+        assert(served(waves(ids(0).take(3), 1)) == served(resident(ids(0).take(3))))
+        assert(served(waves(ids(0).take(3), 1)).size == queryRows.size * 3)
       }
     }
   }

@@ -444,6 +444,79 @@ class SinkSpec extends AnyFunSuite {
     }
   }
 
+  test("legacy sharded BQ and IVF-BQ layouts upgrade as their refusals say, keeping a dropped-shard routing") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    import graft.sources.{ShardedLayout, Source}
+    val rnd = new scala.util.Random(131)
+    // hash shard 2 of 4 holds no row, so the build drops it and the
+    // routing identity is not directory i ↔ hash value i
+    val ids = (0L until 600L).toDF("id").filter(ShardedLayout.hashOf("id", 4) =!= 2L)
+      .as[Long].collect().take(240)
+    val cDf = ids.toSeq.map(i => i -> Seq.fill(40)(rnd.nextGaussian())).toDF("id", "emb")
+    val fresh = (5000L until 5080L).map(i => i -> Seq.fill(40)(rnd.nextGaussian()))
+      .toDF("id", "emb")
+    val base = Files.createTempDirectory("sink-legacy-upgrade").toString
+    /** (family, build + write → hash values, write restored shards with a
+      * routing identity, append, each shard's ids)
+      */
+    Seq[(String, String => Seq[Long], (String, Int, IndexedSeq[Long], String) => Unit,
+        (String, String) => Unit, String => Seq[Set[Long]])](
+      ("Bq",
+        p => {
+          val b = Similarity.buildBqShardedWithLayout(cDf, "id", "emb", numShards = 4)
+          Sink.writeBqShardedIndex(spark, b, p, overwrite = false); b.shardHashVals },
+        (from, modulus, vals, p) => Sink.writeBqShardedIndex(spark, Similarity.ShardedBqBuild(
+          Source.readBqShardedIndexWithTombstones(spark, from)._1, modulus, vals), p,
+          overwrite = false),
+        (in, out) => Sink.appendBqShardedIndex(spark, fresh, "id", "emb", in, out),
+        p => Source.readBqShardedIndex(spark, p).map(_.ids.toSet)),
+      ("IvfBq",
+        p => {
+          val b = Similarity.buildIvfBqShardedWithLayout(cDf, "id", "emb", 4, nCells = 2)
+          Sink.writeIvfBqShardedIndex(spark, b, p); b.shardHashVals },
+        (from, modulus, vals, p) => Sink.writeIvfBqShardedIndex(spark,
+          Similarity.ShardedIvfBqBuild(
+            Source.readIvfBqShardedIndexWithTombstones(spark, from)._1, modulus, vals), p),
+        (in, out) => Sink.appendIvfBqShardedIndex(spark, fresh, "id", "emb", in, out),
+        p => Source.readIvfBqShardedIndex(spark, p).map(_.ids.toSet)))
+      .foreach { case (family, build, rewrite, append, shardIds) =>
+        withClue(s"$family: ") {
+          val ix = s"$base/$family/ix"
+          assert(build(ix) == Seq(0L, 1L, 3L))
+          // the pre-bit_cut layout
+          val legacy = s"$base/$family/legacy"
+          spark.read.parquet(s"$ix/manifest").write.parquet(s"$legacy/manifest")
+          (0 until 3).foreach { i =>
+            spark.read.parquet(f"$ix/shard_$i%04d/vectors")
+              .write.parquet(f"$legacy/shard_$i%04d/vectors")
+            spark.read.parquet(f"$ix/shard_$i%04d/meta").drop("bit_cut")
+              .write.parquet(f"$legacy/shard_$i%04d/meta")
+          }
+          val msg = intercept[IllegalArgumentException](append(legacy, s"$base/$family/x"))
+            .getMessage
+          Seq("bit_cut", s"read${family}ShardedIndexWithTombstones", s"Sharded${family}Build",
+              s"hash_modulus and shard_hash_vals columns of $legacy/manifest",
+              s"write${family}ShardedIndex", s"deleteFrom${family}ShardedIndex")
+            .foreach(w => assert(msg.contains(w), s"$w not in: $msg"))
+          // follow it: the legacy index has no tombstones to re-apply
+          assert(ShardedLayout.readTombstones(spark, legacy).isEmpty)
+          val m = spark.read.parquet(s"$legacy/manifest").head()
+          rewrite(legacy, m.getAs[Int]("hash_modulus"),
+            m.getAs[Seq[Long]]("shard_hash_vals").toIndexedSeq, s"$base/$family/up")
+          append(ix, s"$base/$family/ix-grown")
+          append(s"$base/$family/up", s"$base/$family/up-grown")
+          val want = shardIds(s"$base/$family/ix-grown")
+          assert(shardIds(s"$base/$family/up-grown") == want)
+          // the identity routing a bare shard list would record sends
+          // some of the same rows elsewhere
+          rewrite(legacy, 3, IndexedSeq(0L, 1L, 2L), s"$base/$family/naive")
+          append(s"$base/$family/naive", s"$base/$family/naive-grown")
+          assert(shardIds(s"$base/$family/naive-grown") != want)
+        }
+      }
+  }
+
   test("sharded BQ persist + tombstone lifecycle: byte restore, masked == complement == compacted, refusals") {
     import spark.implicits._
     import graft.operators.{Metric, Similarity}
