@@ -186,13 +186,25 @@ object Similarity {
       corpus: CorpusIndex,
       k: Int,
       metric: Metric,
-      outputCol: String = "matches"): DataFrame = {
+      outputCol: String = "matches"): DataFrame =
+    exactTopk(queries, embCol, corpus, k, metric, outputCol, TopkFrame.Nested)
+
+  /** [[topk]] in either frame layout. */
+  private def exactTopk(
+      queries: DataFrame,
+      embCol: String,
+      corpus: CorpusIndex,
+      k: Int,
+      metric: Metric,
+      outputCol: String,
+      layout: TopkFrame.Layout): DataFrame = {
     // reference dtype rule: both sides f32 → f32 GEMM (2× throughput,
     // scores widened to f64 at the output boundary); any f64 → f64
     val useF32 = TopkFrame.queryIsF32(queries.schema, embCol) && corpus.isF32
     val bc = broadcastOf(queries.sparkSession, corpus)
     TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
-        batchRows = 512, pack = if (useF32) TopkFrame.F32 else TopkFrame.F64) { _ =>
+        batchRows = 512, pack = if (useF32) TopkFrame.F32 else TopkFrame.F64,
+        layout = layout) { _ =>
       val cx = bc.value
       val blas = BLAS.getInstance()
       new TopkBody(cx.ids) {
@@ -263,9 +275,12 @@ object Similarity {
     }
   }
 
-  /** topk then explode+unnest (the reference's documented consumption
-    * pattern — README.md:114-124): one row per (query, match) with
-    * `index`, `score`, `rank` columns.
+  /** [[topk]] in the reference's documented consumption shape, the
+    * explode+unnest of its matches (README.md:114-124), emitted by the
+    * kernel frame itself ([[TopkFrame.Flat]]): one row per (query,
+    * match) with the query columns minus `embCol`, then `rank`
+    * (1-based), `index` and `score`. A null embedding or k = 0 emits
+    * no rows.
     */
   def topkFlat(
       queries: DataFrame,
@@ -273,7 +288,7 @@ object Similarity {
       corpus: CorpusIndex,
       k: Int,
       metric: Metric): DataFrame =
-    flattenMatches(topk(queries, embCol, corpus, k, metric, "matches"), embCol)
+    exactTopk(queries, embCol, corpus, k, metric, "matches", TopkFrame.Flat)
 
   /** All pairwise dot products — `pmm.matmul`. Adds `outputCol` =
     * array of |corpus| doubles (or floats when both sides are f32,
@@ -286,13 +301,37 @@ object Similarity {
       queries: DataFrame,
       embCol: String,
       corpus: CorpusIndex,
-      outputCol: String = "scores"): DataFrame = {
+      outputCol: String = "scores"): DataFrame =
+    matmulFrame(queries, embCol, corpus, outputCol, flat = false)
+
+  /** [[matmul]], or with `flat` its (query, corpus position) pairs
+    * emitted by the frame: the query columns minus `embCol`, then
+    * `score` (the matmul element type) and `index`, the position's id
+    * in the broadcast corpus.
+    */
+  private def matmulFrame(
+      queries: DataFrame,
+      embCol: String,
+      corpus: CorpusIndex,
+      outputCol: String,
+      flat: Boolean): DataFrame = {
     val useF32 = TopkFrame.queryIsF32(queries.schema, embCol) && corpus.isF32
     val bc = broadcastOf(queries.sparkSession, corpus)
-    val out = StructField(outputCol,
-      ArrayType(if (useF32) FloatType else DoubleType, containsNull = false), nullable = true)
+    val scoreType = if (useF32) FloatType else DoubleType
+    val out = StructField(outputCol, ArrayType(scoreType, containsNull = false), nullable = true)
+    val pairs = TopkFrame.Expand(
+      Seq(StructField("score", scoreType, nullable = false),
+        StructField("index", LongType, nullable = false)),
+      () => {
+        val ids = bc.value.ids
+        (scores, j, vals, at) => {
+          vals(at) = if (useF32) scores.getFloat(j) else scores.getDouble(j)
+          vals(at + 1) = ids(j)
+        }
+      })
     TopkFrame.rows(queries, embCol, out, corpus.dim, 512,
-        if (useF32) TopkFrame.F32 else TopkFrame.F64) { () =>
+        if (useF32) TopkFrame.F32 else TopkFrame.F64,
+        flat = if (flat) Some(pairs) else None) { () =>
       val cx = bc.value
       val blas = BLAS.getInstance()
       var scores = new Array[Double](0)
@@ -336,26 +375,16 @@ object Similarity {
   }
 
   /** matmul then flatten (the reference's `flatten=True`): one row per
-    * (query, corpus) pair with the corpus position mapped back to its
-    * id via a broadcast join — `index` + `score` columns. The score
+    * (query, corpus) pair, emitted by the kernel frame with the corpus
+    * position mapped back to its id from the broadcast corpus — the
+    * query columns minus `embCol`, then `score` and `index`. The score
     * dtype FOLLOWS the matmul output: both-f32 inputs keep f32 scores
-    * through the exploded form, per the reference's dtype rule in
-    * flatten mode (tests/test_polars_matmul.py:369); any f64 input
-    * yields f64 (an unconditional f64 cast here widened the f32 case
-    * — round-2 verdict missing-item #3).
+    * through the flat form, per the reference's dtype rule in flatten
+    * mode (tests/test_polars_matmul.py:369); any f64 input yields f64.
+    * A null embedding emits no rows.
     */
-  def matmulFlat(queries: DataFrame, embCol: String, corpus: CorpusIndex): DataFrame = {
-    val spark = queries.sparkSession
-    val withScores = matmul(queries, embCol, corpus, "scores")
-    val posToId = spark.createDataFrame(
-      corpus.ids.toIndexedSeq.zipWithIndex.map { case (id, pos) => (pos, id) })
-      .toDF("pos", "index")
-    withScores
-      .select((withScores.columns.filter(_ != "scores").map(col).toSeq :+
-        posexplode(col("scores")).as(Seq("pos", "score"))): _*)
-      .join(broadcast(posToId), Seq("pos"))
-      .drop("pos", embCol)
-  }
+  def matmulFlat(queries: DataFrame, embCol: String, corpus: CorpusIndex): DataFrame =
+    matmulFrame(queries, embCol, corpus, "scores", flat = true)
 
   /** The reference's `flatten=True` BUFFER shape (reference
     * `python/polars_matmul/__init__.py:121-187` hands numpy one bare
@@ -835,12 +864,24 @@ object Similarity {
       k: Int,
       metric: Metric,
       outputCol: String = "matches",
-      tileRows: Int = 8192): DataFrame = {
+      tileRows: Int = 8192): DataFrame =
+    sq8Topk(queries, embCol, corpus, k, metric, outputCol, tileRows, TopkFrame.Nested)
+
+  /** [[topkSq8]] in either frame layout. */
+  private def sq8Topk(
+      queries: DataFrame,
+      embCol: String,
+      corpus: CorpusIndexSq8,
+      k: Int,
+      metric: Metric,
+      outputCol: String,
+      tileRows: Int,
+      layout: TopkFrame.Layout): DataFrame = {
     require(tileRows >= 1, s"tileRows must be >= 1, got $tileRows")
     TopkFrame.queryIsF32(queries.schema, embCol) // refuses before the broadcast
     val bc = broadcastOf(queries.sparkSession, corpus)
     TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
-        batchRows = 512, pack = TopkFrame.F32WideNorm) { _ =>
+        batchRows = 512, pack = TopkFrame.F32WideNorm, layout = layout) { _ =>
       val cx = bc.value
       val blas = BLAS.getInstance()
       // clamp the tile width ONCE and bound both buffers in Long math:
@@ -892,8 +933,8 @@ object Similarity {
     }
   }
 
-  /** [[topkSq8]] then explode+unnest — the flat (rank, index, score)
-    * shape of [[topkFlat]].
+  /** [[topkSq8]] in the flat (rank, index, score) shape of
+    * [[topkFlat]].
     */
   def topkSq8Flat(
       queries: DataFrame,
@@ -901,7 +942,7 @@ object Similarity {
       corpus: CorpusIndexSq8,
       k: Int,
       metric: Metric): DataFrame =
-    flattenMatches(topkSq8(queries, embCol, corpus, k, metric, "matches"), embCol)
+    sq8Topk(queries, embCol, corpus, k, metric, "matches", 8192, TopkFrame.Flat)
 
   /** A metric score from a dot product and both sides' norms — the
     * per-candidate scoring every non-fused pass shares (SQ8 tiles, the
@@ -1077,11 +1118,11 @@ object Similarity {
     * (per-shard Hamming shortlists only WIDEN the candidate pool vs
     * one global shortlist) and the task merges them into k. Queries
     * must carry `qIdCol`; output is the flat (qIdCol, index, score,
-    * rank) shape of [[topkFlat]], ranked per query row — which means
-    * queries with a NULL embedding produce NO output rows (the
-    * posexplode of their null match array yields nothing), unlike
-    * [[topkBq]]'s null-passthrough match column. Same shape as every
-    * sharded flat serve ([[topkIvfPqSharded]], [[topkIvfBqSharded]]).
+    * rank) shape ([[TopkFrame.ShardedFlat]]), ranked per query row —
+    * which means queries with a NULL embedding produce NO output rows,
+    * unlike [[topkBq]]'s null-passthrough match column. Same shape as
+    * every sharded flat serve ([[topkIvfPqSharded]],
+    * [[topkIvfBqSharded]]).
     */
   def topkBqSharded(
       queries: DataFrame,
@@ -1187,8 +1228,8 @@ object Similarity {
     serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.AllowDf(allowed, allowedIdCol),
       k, bqFamily(k, metric, shortlist))
 
-  /** [[topkBqFiltered]] then explode+unnest — the flat
-    * (rank, index, score) shape of [[topkFlat]].
+  /** [[topkBqFiltered]] in the flat (rank, index, score) shape of
+    * [[topkFlat]].
     */
   def topkBqFilteredFlat(
       queries: DataFrame,
@@ -1198,9 +1239,8 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int): DataFrame =
-    flattenMatches(
-      topkBqFiltered(queries, embCol, corpus, allowedIds, k, metric,
-        shortlist, "matches"), embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus), ShardMasks.allow(allowedIds), k,
+      bqFamily(k, metric, shortlist), TopkFrame.Flat)
 
   /** [[topkBqFilteredFlat]] with the allowed set as a one-column
     * DataFrame (never collected — see [[topkBqFiltered]]).
@@ -1214,9 +1254,9 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int): DataFrame =
-    flattenMatches(
-      topkBqFiltered(queries, embCol, corpus, allowed, allowedIdCol, k,
-        metric, shortlist, "matches"), embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus),
+      ShardMasks.AllowDf(allowed, allowedIdCol), k, bqFamily(k, metric, shortlist),
+      TopkFrame.Flat)
 
   private[graft] def validateBqArgs(k: Int, shortlist: Int): Unit =
     require(shortlist >= k,
@@ -1305,8 +1345,8 @@ object Similarity {
     }
   }
 
-  /** [[topkBq]] exploded to one row per (query, match) — the same
-    * flat shape as [[topkFlat]].
+  /** [[topkBq]] as one row per (query, match) — the same flat shape
+    * as [[topkFlat]].
     */
   def topkBqFlat(
       queries: DataFrame,
@@ -1315,7 +1355,8 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int): DataFrame =
-    flattenMatches(topkBq(queries, embCol, corpus, k, metric, shortlist, "matches"), embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus), ShardMasks.Unmasked, k,
+      bqFamily(k, metric, shortlist), TopkFrame.Flat)
 
   /** [[topkBqSharded]] restricted to an allowed-id subset — the
     * sharded composition of [[topkBqFiltered]] (allow mask of
@@ -1373,8 +1414,8 @@ object Similarity {
   private def serveBqSharded(
       queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexBq],
       masks: ShardMasks, k: Int, metric: Metric, shortlist: Int): DataFrame =
-    shardedFlat(serveSharded(queries.select(col(qIdCol), col(embCol)), embCol, "matches", shards,
-      masks, k, bqFamily(k, metric, shortlist)), embCol)
+    serveSharded(queries.select(col(qIdCol), col(embCol)), embCol, "matches", shards,
+      masks, k, bqFamily(k, metric, shortlist), TopkFrame.ShardedFlat)
 
   /** [[topkBqSharded]] with BOUNDED broadcast memory — the BQ family
     * member of [[topkIvfPqShardedWaves]]: the plain sharded form
@@ -1594,8 +1635,8 @@ object Similarity {
     serveSharded(queries, embCol, outputCol, Seq(corpus), ShardMasks.allow(allowedIds), k,
       ivfBqFamily(k, nProbe, shortlist))
 
-  /** [[topkIvfBqFiltered]] then explode+unnest — the flat
-    * (rank, index, score) shape of [[topkFlat]].
+  /** [[topkIvfBqFiltered]] in the flat (rank, index, score) shape
+    * of [[topkFlat]].
     */
   def topkIvfBqFilteredFlat(
       queries: DataFrame,
@@ -1605,9 +1646,8 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int): DataFrame =
-    flattenMatches(
-      topkIvfBqFiltered(queries, embCol, corpus, allowedIds, k, nProbe,
-        shortlist, "matches"), embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus), ShardMasks.allow(allowedIds), k,
+      ivfBqFamily(k, nProbe, shortlist), TopkFrame.Flat)
 
   private[graft] def validateIvfBqArgs(k: Int, nProbe: Int, shortlist: Int): Unit = {
     require(k >= 0, s"k must be >= 0, got $k")
@@ -1651,8 +1691,8 @@ object Similarity {
     }
   }
 
-  /** [[topkIvfBq]] exploded to the flat (query, rank, index, score)
-    * shape of [[topkFlat]].
+  /** [[topkIvfBq]] in the flat (query, rank, index, score) shape of
+    * [[topkFlat]].
     */
   def topkIvfBqFlat(
       queries: DataFrame,
@@ -1661,7 +1701,8 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int): DataFrame =
-    flattenMatches(topkIvfBq(queries, embCol, corpus, k, nProbe, shortlist, "matches"), embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus), ShardMasks.Unmasked, k,
+      ivfBqFamily(k, nProbe, shortlist), TopkFrame.Flat)
 
   /** One IVF+BQ index per hash-mod shard, derived ENTIRELY from
     * [[buildSq8Sharded]]'s envelopes — no second collect: bits from
@@ -1783,8 +1824,8 @@ object Similarity {
   private def serveIvfBqSharded(
       queries: DataFrame, qIdCol: String, embCol: String, shards: Seq[CorpusIndexIvfBq],
       masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int): DataFrame =
-    shardedFlat(serveSharded(queries.select(col(qIdCol), col(embCol)), embCol, "matches", shards,
-      masks, k, ivfBqFamily(k, nProbe, shortlist)), embCol)
+    serveSharded(queries.select(col(qIdCol), col(embCol)), embCol, "matches", shards,
+      masks, k, ivfBqFamily(k, nProbe, shortlist), TopkFrame.ShardedFlat)
 
   /** [[topkIvfBqSharded]] with BOUNDED broadcast memory — the routed
     * sibling of [[topkBqShardedWaves]] on the shared wave machinery
@@ -2041,7 +2082,7 @@ object Similarity {
       metric: Metric,
       shortlist: Int = 0,
       outputCol: String = "matches"): DataFrame =
-    topkPqImpl(queries, embCol, corpus, k, metric, shortlist, outputCol, null)
+    topkPqImpl(queries, embCol, corpus, k, metric, shortlist, outputCol, null, TopkFrame.Nested)
 
   /** [[topkPq]] body with an optional query-side ROTATION (the OPQ
     * hook, see [[AdcBody]]).
@@ -2054,7 +2095,8 @@ object Similarity {
       metric: Metric,
       shortlist: Int,
       outputCol: String,
-      rot: Array[Double]): DataFrame = {
+      rot: Array[Double],
+      layout: TopkFrame.Layout): DataFrame = {
     require(shortlist == 0 || shortlist >= k,
       s"shortlist must be 0 (off) or >= k, got $shortlist (k=$k)")
     require(shortlist == 0 || corpus.sq8.nonEmpty,
@@ -2066,7 +2108,7 @@ object Similarity {
     val bc = broadcastOf(spark, corpus)
     val rotBc = if (rot == null) null else spark.sparkContext.broadcast(rot)
     TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
-        shortlist) { c =>
+        shortlist, layout = layout) { c =>
       val cx = bc.value
       val sq8 = cx.sq8.orNull
       new AdcBody(cx.ids, cx.dim, cx.m, cx.codebooks, if (rotBc == null) null else rotBc.value,
@@ -2142,8 +2184,8 @@ object Similarity {
     dot
   }
 
-  /** [[topkPq]] then explode+unnest — the flat (rank, index, score)
-    * shape of [[topkFlat]].
+  /** [[topkPq]] in the flat (rank, index, score) shape of
+    * [[topkFlat]].
     */
   def topkPqFlat(
       queries: DataFrame,
@@ -2152,7 +2194,7 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int = 0): DataFrame =
-    flattenMatches(topkPq(queries, embCol, corpus, k, metric, shortlist, "matches"), embCol)
+    topkPqImpl(queries, embCol, corpus, k, metric, shortlist, "matches", null, TopkFrame.Flat)
 
   /** OPQ — optimized product quantization (Ge et al., CVPR'13
     * non-parametric form): a learned ORTHOGONAL rotation R applied
@@ -2219,10 +2261,10 @@ object Similarity {
       shortlist: Int = 0,
       outputCol: String = "matches"): DataFrame =
     topkPqImpl(queries, embCol, corpus.pq, k, metric, shortlist, outputCol,
-      corpus.rot)
+      corpus.rot, TopkFrame.Nested)
 
-  /** [[topkOpq]] exploded to the flat (query, rank, index, score)
-    * shape of [[topkFlat]].
+  /** [[topkOpq]] in the flat (query, rank, index, score) shape of
+    * [[topkFlat]].
     */
   def topkOpqFlat(
       queries: DataFrame,
@@ -2231,7 +2273,8 @@ object Similarity {
       k: Int,
       metric: Metric,
       shortlist: Int = 0): DataFrame =
-    flattenMatches(topkOpq(queries, embCol, corpus, k, metric, shortlist, "matches"), embCol)
+    topkPqImpl(queries, embCol, corpus.pq, k, metric, shortlist, "matches", corpus.rot,
+      TopkFrame.Flat)
 
   // ===== IVF+OPQ: the learned rotation composed with the routed
   // residual-PQ family (FAISS's `OPQ16,IVF…,PQ16` index-factory
@@ -2291,8 +2334,8 @@ object Similarity {
     serveSharded(queries, embCol, outputCol, Seq(corpus.ivf), ShardMasks.Unmasked, k,
       ivfPqFamily(k, nProbe, shortlist, corpus.rot))
 
-  /** [[topkIvfOpq]] exploded to the flat (query, rank, index, score)
-    * shape of [[topkFlat]].
+  /** [[topkIvfOpq]] in the flat (query, rank, index, score) shape of
+    * [[topkFlat]].
     */
   def topkIvfOpqFlat(
       queries: DataFrame,
@@ -2301,9 +2344,8 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0): DataFrame =
-    flattenMatches(
-      topkIvfOpq(queries, embCol, corpus, k, nProbe, shortlist, "matches"),
-      embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus.ivf), ShardMasks.Unmasked, k,
+      ivfPqFamily(k, nProbe, shortlist, corpus.rot), TopkFrame.Flat)
 
   /** A sharded IVF+OPQ build: ONE corpus-wide rotation (every shard
     * must rotate identically or the merge compares scores from
@@ -2973,8 +3015,8 @@ object Similarity {
     } finally { bc.destroy(); () }
   }
 
-  /** [[topkIvfPqFiltered]] then explode+unnest — the flat
-    * (rank, index, score) shape of [[topkFlat]].
+  /** [[topkIvfPqFiltered]] in the flat (rank, index, score) shape
+    * of [[topkFlat]].
     */
   def topkIvfPqFilteredFlat(
       queries: DataFrame,
@@ -2984,9 +3026,8 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0): DataFrame =
-    flattenMatches(
-      topkIvfPqFiltered(queries, embCol, corpus, allowedIds,
-        k, nProbe, shortlist, "matches"), embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus), ShardMasks.allow(allowedIds), k,
+      ivfPqFamily(k, nProbe, shortlist), TopkFrame.Flat)
 
   /** [[topkIvfPqFilteredFlat]] with the allowed set as a one-column
     * DataFrame (see the priced DataFrame overload of
@@ -3001,9 +3042,9 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int): DataFrame =
-    flattenMatches(
-      topkIvfPqFiltered(queries, embCol, corpus, allowed, allowedIdCol,
-        k, nProbe, shortlist, "matches"), embCol)
+    serveSharded(queries, embCol, "matches", Seq(corpus),
+      ShardMasks.AllowDf(allowed, allowedIdCol), k, ivfPqFamily(k, nProbe, shortlist),
+      TopkFrame.Flat)
 
   /** The sorted copy of an allow or deny set that [[idMask]] searches
     * — sorted ONCE per serve, however many shards or waves mask
@@ -3096,8 +3137,9 @@ object Similarity {
       shards: Seq[I],
       masks: ShardMasks,
       k: Int,
-      fam: ShardFamily[I]): DataFrame =
-    servePass(queries, embCol, outputCol, shards, masks, k, fam)._1
+      fam: ShardFamily[I],
+      layout: TopkFrame.Layout = TopkFrame.Nested): DataFrame =
+    servePass(queries, embCol, outputCol, shards, masks, k, fam, layout = layout)._1
 
   /** What a sharded pass broadcasts: the shards, their masks (null:
     * unmasked) and the OPQ rotation (null: none).
@@ -3125,7 +3167,8 @@ object Similarity {
     *    clamped to the served rows in that shard) and merges them in
     *    the task — score desc for higher-is-better metrics (asc
     *    otherwise), ties to the lowest index, the exact kernel's rule —
-    *    into min(k, Σ served) matches per query ROW under `outputCol`.
+    *    into min(k, Σ served) matches per query ROW under `outputCol`,
+    *    or emitted as flat rows by a flat `layout`.
     *    With `carry`, `outputCol` already holds each row's matches over
     *    other shards and merges in as one more selector. k above the
     *    allowed (or LIVE, under a deny set) population returns every
@@ -3147,7 +3190,8 @@ object Similarity {
       masks: ShardMasks,
       k: Int,
       fam: ShardFamily[I],
-      carry: Boolean = false): (DataFrame, Broadcast[ShardPayload[I]]) = {
+      carry: Boolean = false,
+      layout: TopkFrame.Layout = TopkFrame.Nested): (DataFrame, Broadcast[ShardPayload[I]]) = {
     require(shards.nonEmpty, "Empty shard list")
     shards.foreach(fam.check)
     val d = fam.dim(shards.head)
@@ -3162,7 +3206,8 @@ object Similarity {
     val bc = broadcastOf(queries.sparkSession, (shards.toArray, shardMasks.map(_._1), fam.rot))
     val body = fam.body // the tasks need the body alone, not the driver-side check
     (TopkFrame.selectShards(queries, embCol, outputCol, d, shards.map(fam.ids(_).length).toArray,
-        k, fam.higher, fam.shortlist, shardMasks.map(_._2), carry = carry) { (s, c) =>
+        k, fam.higher, fam.shortlist, shardMasks.map(_._2), carry = carry,
+        layout = layout) { (s, c) =>
       val (sx, ms, r) = bc.value
       body(sx(s), ms(s), c, r)
     }, bc)
@@ -3260,8 +3305,8 @@ object Similarity {
   private def unitCosine(dot: Double, qNorm: Double): Double =
     if (qNorm <= 1e-10) 0.0 else dot / qNorm
 
-  /** [[topkIvfPq]] then explode+unnest — the flat (rank, index, score)
-    * shape of [[topkFlat]].
+  /** [[topkIvfPq]] in the flat (rank, index, score) shape of
+    * [[topkFlat]].
     */
   def topkIvfPqFlat(
       queries: DataFrame,
@@ -3270,26 +3315,8 @@ object Similarity {
       k: Int,
       nProbe: Int,
       shortlist: Int = 0): DataFrame =
-    flattenMatches(
-      topkIvfPq(queries, embCol, corpus, k, nProbe, shortlist, "matches"), embCol)
-
-  private def flattenMatches(withMatches: DataFrame, embCol: String): DataFrame =
-    withMatches
-      .select((withMatches.columns.filter(_ != "matches").map(col).toSeq :+
-        posexplode(col("matches")).as(Seq("rank0", "m"))): _*)
-      .withColumn("rank", col("rank0") + 1)
-      .withColumn("index", col("m.index"))
-      .withColumn("score", col("m.score"))
-      .drop("rank0", "m", embCol)
-
-  /** A resident sharded serve's flat rows: [[flattenMatches]] with
-    * `rank` last — `(query columns…, index, score, rank)`, one row per
-    * (query row, match).
-    */
-  private def shardedFlat(matches: DataFrame, embCol: String): DataFrame = {
-    val flat = flattenMatches(matches, embCol)
-    flat.select((flat.columns.filter(_ != "rank").map(col).toSeq :+ col("rank")): _*)
-  }
+    serveSharded(queries, embCol, "matches", Seq(corpus), ShardMasks.Unmasked, k,
+      ivfPqFamily(k, nProbe, shortlist), TopkFrame.Flat)
 
   /** Scale path for corpora too large for one broadcast: split the
     * corpus into `numBlocks` HASH-MOD blocks (`xxhash64(id) % B`), run
@@ -3712,9 +3739,8 @@ object Similarity {
       masks: ShardMasks, k: Int, nProbe: Int, shortlist: Int,
       rot: Array[Double] = null): DataFrame = {
     queries.col(qIdCol)
-    shardedFlat(serveSharded(queries, embCol, "matches", shards, masks, k,
-      ivfPqFamily(k, nProbe, shortlist, rot)),
-      embCol)
+    serveSharded(queries, embCol, "matches", shards, masks, k,
+      ivfPqFamily(k, nProbe, shortlist, rot), TopkFrame.ShardedFlat)
   }
 
   /** Live/peak shard-broadcast accounting for
@@ -3980,16 +4006,19 @@ object Similarity {
     *    in-task rule, so the cut stays each row's exact top-k over the
     *    waves so far (wave shards are disjoint; the merge order is total,
     *    ties to the lowest index);
-    *  - persist the cut — the query rows with their running matches,
-    *    and their embeddings until the last wave — as an EAGER
-    *    `localCheckpoint` (in the block manager, lineage cut so a lost
-    *    block fails loudly instead of recomputing against a destroyed
-    *    broadcast) or as parquet under `scratch/wave_N`, then destroy
-    *    the wave's broadcast.
+    *  - persist the cut — the query rows with their embeddings and
+    *    running matches; the last wave's pass emits the flat rows
+    *    ([[TopkFrame.ShardedFlat]]) and is itself the last cut — as an
+    *    EAGER `localCheckpoint` (in the block manager, lineage cut so a
+    *    lost block fails loudly instead of recomputing against a
+    *    destroyed broadcast) or as parquet under `scratch/wave_N`, read
+    *    back lazily under the schema the pass emitted, then
+    *    destroy the wave's broadcast and unpersist the previous
+    *    wave's in-memory cut, which nothing reads any more.
     * Peak per-executor broadcast memory is one wave's shards, metered.
     * Ranks are per query row, like the resident forms, and nothing is
     * shuffled unless a pass splits its query frame ([[servePass]]).
-    * The result is the last cut's flat rows ([[shardedFlat]]).
+    * The result is the last cut.
     */
   private def topkShardedWavesCore[I <: AnyRef: scala.reflect.ClassTag](
       queries: DataFrame,
@@ -4010,7 +4039,9 @@ object Similarity {
     val waves = shardProviders.grouped(waveSize).toIndexedSeq
     val masks = ShardMasks.Ids(if (allowedIds == null) null else sortedIds(allowedIds),
       if (deniedIds == null) null else sortedIds(deniedIds))
-    val cut = waves.indices.foldLeft(queries) { (q, wi) =>
+    // the in-memory cut the next wave reads (none: `queries` or parquet)
+    var held: Option[org.apache.spark.rdd.RDD[_]] = None
+    try waves.indices.foldLeft(queries) { (q, wi) =>
       // a wave's shards are ALL live at once by definition (the peak
       // bound is the wave, not one shard), so loading them
       // concurrently changes wall time, never the memory bound
@@ -4019,19 +4050,32 @@ object Similarity {
         ix -> org.apache.spark.util.SizeEstimator.estimate(ix)
       }
       val (served, bc) = servePass(q, embCol, "matches", sized.map(_._1), masks, k, fam,
-        carry = wi > 0)
+        carry = wi > 0,
+        layout = if (wi == waves.length - 1) TopkFrame.ShardedFlat else TopkFrame.Nested)
       sized.foreach(s => meter.add(s._2))
-      try {
-        val kept = if (wi == waves.length - 1) served.drop(embCol) else served
-        if (memoryPartials) kept.localCheckpoint(true)
+      val cut = try {
+        if (memoryPartials) served.localCheckpoint(true)
         else {
-          kept.write.mode("overwrite").parquet(s"$scratch/wave_$wi")
-          q.sparkSession.read.parquet(s"$scratch/wave_$wi")
+          served.write.mode("overwrite").parquet(s"$scratch/wave_$wi")
+          // read back under the emitted schema: a file source would
+          // mark every column nullable, the cut is as the pass wrote it
+          InternalRowBridge.fromInternalRdd(q.sparkSession, InternalRowBridge.toInternalRdd(
+            q.sparkSession.read.parquet(s"$scratch/wave_$wi")), served.schema)
         }
       } finally { bc.destroy(); sized.foreach(s => meter.sub(s._2)) }
+      held.foreach(InternalRowBridge.releaseLocalCheckpoint)
+      held = if (memoryPartials) checkpointedRdd(cut) else None
+      cut
+    } catch {
+      case e: Throwable => held.foreach(InternalRowBridge.releaseLocalCheckpoint); throw e
     }
-    shardedFlat(cut, embCol)
   }
+
+  /** The block-manager RDD behind an eager `localCheckpoint`. */
+  private def checkpointedRdd(cut: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    cut.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
 
   // ===== SQ8 point-lookup scoring (candidate rerank beyond the f64
   // broadcast envelope) =====

@@ -194,12 +194,20 @@ private[graft] abstract class RowBody(ids: Array[Long]) extends TopkBody(ids) {
   * The kernel contract:
   *  - Query column: `array<float>` or `array<double>`; any other type
   *    is refused by name before a job runs ("Query column emb must be
-  *    array<float>/array<double>, got array<int>"). The output keeps
-  *    every query column and adds a nullable
+  *    array<float>/array<double>, got array<int>"). The nested output
+  *    keeps every query column and adds a nullable
   *    `array<struct<index:bigint,score:double>>` column.
-  *  - A null query embedding yields null matches. A non-null embedding
-  *    of the wrong length is refused ("Dimension mismatch: query has …
-  *    elements, corpus has …"), whatever k is.
+  *  - The flat output ([[TopkFrame.Flat]], [[TopkFrame.ShardedFlat]])
+  *    is emitted by the frame itself, one row per (query row, match)
+  *    in match order: the query columns minus the embedding, then
+  *    non-null `rank: int` (1-based), `index: bigint` and
+  *    `score: double` — rank first in the one-index forms, last in the
+  *    sharded and wave forms. A query column with one of those names
+  *    is replaced by the emitted one. It equals `posexplode` of the
+  *    nested column, with no generator in the plan.
+  *  - A null query embedding yields null matches, so no flat rows. A
+  *    non-null embedding of the wrong length is refused ("Dimension
+  *    mismatch: query has … elements, corpus has …"), whatever k is.
   *  - Clamps: with a mask (`allowedCount >= 0`) the served population
   *    is min(allowedCount, n), else n. k clamps to [0, population]:
   *    k ≤ 0 (or an empty population) yields empty arrays, and k above
@@ -247,11 +255,24 @@ private[graft] object TopkFrame {
     Clamp(kk, if (shortlist <= 0) 0 else math.min(shortlist, nEff))
   }
 
+  /** A flat [[rows]] output: entry `j` of a query row's array value
+    * becomes one row — the query columns minus the embedding (and minus
+    * a carried column and any column named like a `tail` column), then
+    * `tail`, whose values `entry()` (built once per partition) writes
+    * into `vals` from index `at`.
+    */
+  final case class Expand(
+      tail: Seq[StructField],
+      entry: () => (ArrayData, Int, Array[Any], Int) => Unit)
+
   /** The query frame: each partition copies up to `batchRows` rows,
     * packs their non-null embeddings into one reused [[QueryBatch]] and
     * hands it to `body` (built once per partition), which fills
     * `out(i)` for packed row `i`; rows are emitted in input order with
     * `out` appended and null embeddings given a null `out`. With
+    * `flat`, `out(i)` is an array and each of its entries is emitted as
+    * a row instead ([[Expand]]); a null embedding or an empty array
+    * emits none, as `posexplode` would. With
     * `spread > 1` (one body per index) a frame of P partitions,
     * 0 < P < the default parallelism, is first split round-robin into
     * min(default parallelism, P × spread) partitions: one shuffle of the
@@ -268,13 +289,24 @@ private[graft] object TopkFrame {
       batchRows: Int,
       pack: Pack,
       spread: Int = 1,
-      carry: Boolean = false)(
+      carry: Boolean = false,
+      flat: Option[Expand] = None)(
       body: () => (QueryBatch, Array[AnyRef]) => Unit): DataFrame = {
     val schema = queries.schema
     val embIdx = schema.fieldIndex(embCol)
     val f32In = queryIsF32(schema, embCol)
     val fieldTypes = schema.fields.map(_.dataType)
     val outIdx = if (carry) schema.fieldIndex(out.name) else fieldTypes.length
+    // a flat row keeps every query column but the embedding, the carried
+    // one and one named like a tail column, which the tail replaces (as
+    // `withColumn` would: a query frame may already carry a `score`)
+    val sameName: (String, String) => Boolean =
+      if (queries.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean) _ == _
+      else _.equalsIgnoreCase(_)
+    val tailNames = flat.fold(Seq.empty[String])(_.tail.map(_.name))
+    val keep = fieldTypes.indices.filter(f => f != embIdx && f != outIdx &&
+      !tailNames.exists(sameName(_, schema(f).name))).toArray
+    val width = keep.length + flat.fold(0)(_.tail.length)
     val in = InternalRowBridge.toInternalRdd(queries)
     val cores = queries.sparkSession.sparkContext.defaultParallelism
     val parts = in.getNumPartitions
@@ -282,24 +314,55 @@ private[graft] object TopkFrame {
       in.map(_.copy()).repartition(math.min(cores.toLong, parts.toLong * spread).toInt) else in
     val outRdd = src.mapPartitions { it =>
       val score = body()
+      val entry = flat.map(_.entry()).orNull
       val b = new QueryBatch(dim, pack)
       // the scan reuses its rows, so each is copied into the batch
       val rows = new Array[InternalRow](batchRows)
       val packed = new Array[AnyRef](batchRows)
       new Iterator[InternalRow] {
         private var n = 0   // rows in the batch
-        private var at = 0  // next row to emit
+        private var at = 0  // next row to take
         private var pi = 0  // its packed index, when non-null
-        def hasNext: Boolean = at < n || (it.hasNext && { fill(); true })
+        // flat: the taken row's kept columns, its entries and the next one
+        private val base = new Array[Any](keep.length)
+        private var ents: ArrayData = null
+        private var len = 0
+        private var j = 0
+        private def more: Boolean = at < n || (it.hasNext && { fill(); true })
+        def hasNext: Boolean =
+          if (entry == null) more
+          else {
+            while (j >= len && more) {
+              val row = rows(at)
+              at += 1
+              j = 0
+              len = 0
+              if (!row.isNullAt(embIdx)) {
+                ents = packed(pi).asInstanceOf[ArrayData]; pi += 1
+                len = ents.numElements()
+                var f = 0
+                while (f < keep.length) { base(f) = row.get(keep(f), fieldTypes(keep(f))); f += 1 }
+              }
+            }
+            j < len
+          }
         def next(): InternalRow = {
           if (!hasNext) throw new NoSuchElementException
-          val row = rows(at)
-          val vals = new Array[Any](if (carry) fieldTypes.length else fieldTypes.length + 1)
-          var f = 0
-          while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
-          if (!row.isNullAt(embIdx)) { vals(outIdx) = packed(pi); pi += 1 }
-          at += 1
-          new GenericInternalRow(vals)
+          if (entry != null) {
+            val vals = new Array[Any](width)
+            System.arraycopy(base, 0, vals, 0, keep.length)
+            entry(ents, j, vals, keep.length)
+            j += 1
+            new GenericInternalRow(vals)
+          } else {
+            val row = rows(at)
+            val vals = new Array[Any](if (carry) fieldTypes.length else fieldTypes.length + 1)
+            var f = 0
+            while (f < fieldTypes.length) { vals(f) = row.get(f, fieldTypes(f)); f += 1 }
+            if (!row.isNullAt(embIdx)) { vals(outIdx) = packed(pi); pi += 1 }
+            at += 1
+            new GenericInternalRow(vals)
+          }
         }
         private def fill(): Unit = {
           n = 0; at = 0; pi = 0
@@ -325,8 +388,38 @@ private[graft] object TopkFrame {
         }
       }
     }
-    InternalRowBridge.fromInternalRdd(queries.sparkSession, outRdd,
-      StructType(if (carry) schema.fields.updated(outIdx, out) else schema.fields :+ out))
+    InternalRowBridge.fromInternalRdd(queries.sparkSession, outRdd, StructType(flat match {
+      case Some(e) => keep.map(schema.fields) ++ e.tail
+      case None => if (carry) schema.fields.updated(outIdx, out) else schema.fields :+ out
+    }))
+  }
+
+  /** What a top-k frame emits ([[selectShards]]). */
+  sealed trait Layout
+  /** One row per query row, its matches under the output column. */
+  case object Nested extends Layout
+  /** One row per (query row, match), in the order of its matches: the
+    * query columns minus the embedding, then `rank` (1-based), `index`
+    * and `score` — the one-index flat forms' shape.
+    */
+  case object Flat extends Layout
+  /** [[Flat]] with `rank` last (`index`, `score`, `rank`) — the sharded
+    * and wave flat forms' shape.
+    */
+  case object ShardedFlat extends Layout
+
+  /** A flat layout's [[Expand]] of a matches array. */
+  private def expandMatches(rankLast: Boolean): Expand = {
+    val rank = StructField("rank", IntegerType, nullable = false)
+    val hit = Seq(StructField("index", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false))
+    val (r, h) = if (rankLast) (2, 0) else (0, 1)
+    Expand(if (rankLast) hit :+ rank else rank +: hit, () => (ms, j, vals, at) => {
+      val e = ms.getStruct(j, 2)
+      vals(at + r) = j + 1
+      vals(at + h) = e.get(0, LongType)
+      vals(at + h + 1) = e.get(1, DoubleType)
+    })
   }
 
   /** The top-k frame over one index: [[selectShards]]' one-shard case. */
@@ -341,10 +434,11 @@ private[graft] object TopkFrame {
       shortlist: Int = 0,
       allowedCount: Int = -1,
       batchRows: Int = 1,
-      pack: Pack = F64)(
+      pack: Pack = F64,
+      layout: Layout = Nested)(
       kernel: Clamp => TopkBody): DataFrame =
     selectShards(queries, embCol, outputCol, dim, Array(n), k, higher, shortlist,
-      Array(allowedCount), batchRows, pack)((_, c) => kernel(c))
+      Array(allowedCount), batchRows, pack, layout = layout)((_, c) => kernel(c))
 
   /** The top-k frame over one or more indexes with disjoint ids, in one
     * pass: [[rows]] with the `outputCol` matches column; per index `s`
@@ -357,7 +451,8 @@ private[graft] object TopkFrame {
     * already a matches column of `queries` holding each row's running
     * top-k over other indexes with disjoint ids: it merges in as one
     * more selector and the result replaces it (with no index served,
-    * the carried matches come back as they were).
+    * the carried matches come back as they were). A flat `layout`
+    * emits each row's matches as rows ([[Flat]], [[ShardedFlat]]).
     */
   def selectShards(
       queries: DataFrame,
@@ -371,12 +466,18 @@ private[graft] object TopkFrame {
       allowedCounts: Array[Int],
       batchRows: Int = 1,
       pack: Pack = F64,
-      carry: Boolean = false)(
+      carry: Boolean = false,
+      layout: Layout = Nested)(
       kernel: (Int, Clamp) => TopkBody): DataFrame = {
     val cs = ns.indices.map(s => clamp(ns(s), k, shortlist, allowedCounts(s))).toArray
     val served = cs.indices.filter(cs(_).kk > 0).toArray
+    val flat = layout match {
+      case Nested => None
+      case Flat => Some(expandMatches(rankLast = false))
+      case ShardedFlat => Some(expandMatches(rankLast = true))
+    }
     rows(queries, embCol, StructField(outputCol, MatchesType, nullable = true), dim,
-        batchRows, pack, ns.length, carry) { () =>
+        batchRows, pack, ns.length, carry, flat) { () =>
       val bodies = served.map(s => kernel(s, cs(s)))
       val sels = served.map(_ => new Array[TopSelector](batchRows))
       val row = new Array[TopSelector](if (carry) served.length + 1 else served.length)

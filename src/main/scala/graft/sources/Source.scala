@@ -180,13 +180,6 @@ object Source {
       path: String): (IndexedSeq[graft.operators.Similarity.CorpusIndexBq], Array[Long]) =
     (readBqShardedIndexShards(spark, path), ShardedLayout.readTombstones(spark, path))
 
-  /** The tombstone id set of a persisted sharded BQ index — empty
-    * when `tombstones/` is absent.
-    */
-  def readBqShardedIndexTombstones(
-      spark: SparkSession, path: String): Array[Long] =
-    ShardedLayout.readTombstones(spark, path)
-
   private def readBqShardedIndexShards(
       spark: SparkSession,
       path: String): IndexedSeq[graft.operators.Similarity.CorpusIndexBq] =
@@ -214,13 +207,6 @@ object Source {
       spark: SparkSession,
       path: String): (IndexedSeq[graft.operators.Similarity.CorpusIndexIvfBq], Array[Long]) =
     (readIvfBqShardedIndexShards(spark, path), ShardedLayout.readTombstones(spark, path))
-
-  /** The tombstone id set of a persisted sharded IVF+BQ index —
-    * empty when `tombstones/` is absent.
-    */
-  def readIvfBqShardedIndexTombstones(
-      spark: SparkSession, path: String): Array[Long] =
-    ShardedLayout.readTombstones(spark, path)
 
   private def readIvfBqShardedIndexShards(
       spark: SparkSession,
@@ -381,12 +367,12 @@ object Source {
     (rot, readIvfPqShardedIndexShards(spark, path), ShardedLayout.readTombstones(spark, path))
   }
 
-  /** The tombstone id set of a persisted sharded index — empty when
-    * the `tombstones/` directory is absent (never-deleted index or
+  /** The tombstone id set of any persisted sharded index (BQ, IVF+BQ,
+    * IVF+PQ or IVF+OPQ: one [[ShardedLayout]]) — empty when the
+    * `tombstones/` directory is absent (never-deleted index or
     * post-compaction).
     */
-  def readIvfPqShardedIndexTombstones(
-      spark: SparkSession, path: String): Array[Long] =
+  def readShardedIndexTombstones(spark: SparkSession, path: String): Array[Long] =
     ShardedLayout.readTombstones(spark, path)
 
   private def readIvfPqShardedIndexShards(

@@ -35,4 +35,12 @@ object InternalRowBridge {
 
   def fromInternalRdd(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[ClassicSession].internalCreateDataFrame(rdd, schema)
+
+  /** Drops a locally checkpointed RDD's blocks without waiting, as the
+    * ContextCleaner would: `RDD.unpersist` does the same but warns each
+    * time that the truncated lineage cannot be recomputed, which is the
+    * point of releasing a cut nothing reads any more.
+    */
+  def releaseLocalCheckpoint(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

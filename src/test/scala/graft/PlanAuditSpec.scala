@@ -472,4 +472,26 @@ class PlanAuditSpec extends AnyFunSuite {
       !p.contains("BroadcastNestedLoopJoin"),
       s"assignment should be kernel-side, not a join:\n$p")
   }
+
+  test("flat top-k serves: the kernel frame emits the flat rows — no Generate in the executed plan") {
+    import graft.operators.{Metric, Similarity}
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val corpus = (0L until 600L).map(i => i -> Seq.fill(8)(rnd.nextGaussian())).toDF("id", "emb")
+    val queries = (0L until 12L).map(i => (i, Seq.fill(8)(rnd.nextGaussian()), s"q$i"))
+      .toDF("qid", "emb", "tag")
+    val cx = Similarity.collectCorpus(corpus, "id", "emb")
+    val shards = Similarity.buildIvfPqSharded(corpus, "id", "emb", 2, nCells = 2, m = 4,
+      trainSample = 256)
+    Seq(
+      "topkFlat" -> Similarity.topkFlat(queries, "emb", cx, 5, Metric.Cosine),
+      "topkSq8Flat" -> Similarity.topkSq8Flat(queries, "emb", Similarity.quantizeSq8(cx), 5,
+        Metric.Cosine),
+      "topkIvfPqShardedTombstoned" -> Similarity.topkIvfPqShardedTombstoned(queries, "emb", "qid",
+        shards, Array(3L, 4L), 5, nProbe = 2)).foreach { case (name, df) =>
+      assert(df.collect().length == 12 * 5, name)
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Generate"), s"$name plans a generator:\n$p")
+    }
+  }
 }

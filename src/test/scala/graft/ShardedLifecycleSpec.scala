@@ -70,6 +70,22 @@ class ShardedLifecycleSpec extends AnyFunSuite {
     }
   }
 
+  test("readShardedIndexTombstones reads every family's tombstones: none, the deleted ids, none after compact") {
+    ShardedFamilies.all(spark).foreach { f =>
+      withClue(s"${f.name}: ") {
+        val base = Files.createTempDirectory(s"sharded-ts-${f.name}").toString
+        val corpus = rows(0L, 120L)
+        f.write(corpus, s"$base/ix")
+        assert(graft.sources.Source.readShardedIndexTombstones(spark, s"$base/ix").isEmpty)
+        f.delete(corpus.filter(col("id") % 7 === 0).select("id"), s"$base/ix", s"$base/del")
+        assert(graft.sources.Source.readShardedIndexTombstones(spark, s"$base/del").sorted.toSeq ==
+          (0L until 120L).filter(_ % 7 == 0))
+        f.compact(s"$base/del", s"$base/c")
+        assert(graft.sources.Source.readShardedIndexTombstones(spark, s"$base/c").isEmpty)
+      }
+    }
+  }
+
   test("a failed append publish leaves nothing behind, out of place and in place") {
     ShardedFamilies.all(spark).foreach { f =>
       withClue(s"${f.name}: ") {

@@ -376,4 +376,26 @@ class ShardedServeSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("an in-memory wave serve releases each wave's cut once the next cut is materialized") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val shards = Similarity.buildIvfPqSharded(rows(0L, 120L), "id", "emb", 3, nCells = 2, m = 4,
+      trainSample = 256)
+    assert(shards.size == 3)
+    val want = served(Similarity.topkIvfPqSharded(queries, "emb", "qid", shards, K, 2, Shortlist))
+    def persisted() = sc.getPersistentRDDs.keySet
+    def cached() = sc.getRDDStorageInfo.map(_.id).toSet
+    val before = persisted()
+    val cut = Similarity.topkIvfPqShardedWaves(queries, "emb", "qid", shards, K, 2, Shortlist,
+      waveSize = 1, memoryPartials = true)
+    // three waves, three cuts: only the last, which the result reads, is kept
+    val kept = persisted() -- before
+    assert(kept.size == 1, s"persisted cuts left: $kept")
+    eventually(timeout(10.seconds)) {
+      assert((cached() -- before).subsetOf(kept), s"cached RDDs: ${cached()}")
+    }
+    assert(served(cut) == want)
+  }
 }
