@@ -18,11 +18,12 @@ import org.apache.spark.unsafe.Platform
   *
   * Shape: the corpus (the small "index" side) is collected once,
   * packed into a flat primitive matrix with precomputed norms, and
-  * **broadcast**; queries stay distributed and each partition runs a
-  * blocked BLAS GEMM (`dev.ludovic.netlib` — the same BLAS MLlib
-  * uses) against the corpus block, fusing normalize → multiply →
-  * select exactly like the reference's single Rust pass — but
-  * scaled out over executors. No |Q|×|C| cross join ever exists.
+  * **broadcast**; queries stay distributed and each partition scores
+  * them in one [[DotKernel]] pass: a tile of query panels × 8 corpus
+  * rows is computed (one fixed `Math.fma` chain per score), normalized
+  * and selected while it is in cache, like the reference's single Rust
+  * pass — but scaled out over executors. No |Q|×|C| cross join, and no
+  * |Q|×|C| score buffer, ever exists.
   *
   * For corpora too big to broadcast (>~1-2 GB) use [[Similarity.topkBlocked]]:
   * corpus is split into broadcastable blocks, each block contributes
@@ -52,8 +53,8 @@ object Metric {
   *  - array<float> corpus: `dataF` holds the matrix (the reference's
   *    f32 fast path) and `f64` is null, so the index costs 4 B/element
   *    on the driver and in every broadcast.
-  * `data` is the f64 view every f64 reader uses (mixed-precision
-  * GEMM, the quantizers, the stream serve): `f64` itself, or for an
+  * `data` is the f64 view the f64 readers outside the exact kernel
+  * use (the quantizers, the IVF builds): `f64` itself, or for an
   * f32 corpus the f32 matrix widened with `Float.toDouble` on first
   * use — exactly the values a packed f64 copy holds. The view is
   * transient: a broadcast never carries it, and a JVM that needs it
@@ -177,8 +178,9 @@ object Similarity {
   /** Per-query top-k against a broadcast corpus, on the
     * [[TopkFrame]] contract (null rows, the k clamp, ties to the lower
     * id — the reference leaves ties arbitrary, src/topk.rs:19-30 — and
-    * the refusals). The body is one batched BLAS GEMM per 512 queries
-    * with the metric fused into its output buffer.
+    * the refusals). The body is one [[DotKernel]] pass per 512 queries:
+    * every score an FMA chain in the pack's precision, the metric and
+    * the select fused into its tiles.
     */
   def topk(
       queries: DataFrame,
@@ -198,79 +200,25 @@ object Similarity {
       metric: Metric,
       outputCol: String,
       layout: TopkFrame.Layout): DataFrame = {
-    // reference dtype rule: both sides f32 → f32 GEMM (2× throughput,
+    // reference dtype rule: both sides f32 → f32 kernel (2× throughput,
     // scores widened to f64 at the output boundary); any f64 → f64
     val useF32 = TopkFrame.queryIsF32(queries.schema, embCol) && corpus.isF32
+    // Zero-norm cosine guard follows the reference's per-path epsilon:
+    // the f32 kernel zeroes at norm ≤ 1e-6 (src/metrics.rs:331-334 — the
+    // looser bound papers over f32 accumulation error), the f64 kernel at
+    // ≤ 1e-10 (src/metrics.rs:277-289). A vector with norm in
+    // [1e-10, 1e-6) therefore scores 0.0 on the f32 path and divides on
+    // the f64 path, exactly like the reference.
+    val normEps = if (useF32) 1e-6 else 1e-10
     val bc = broadcastOf(queries.sparkSession, corpus)
     TopkFrame.select(queries, embCol, outputCol, corpus.dim, corpus.n, k, metric.higherIsBetter,
         batchRows = 512, pack = if (useF32) TopkFrame.F32 else TopkFrame.F64,
         layout = layout) { _ =>
       val cx = bc.value
-      val blas = BLAS.getInstance()
+      val dk = new DotKernel
       new TopkBody(cx.ids) {
-        private var scores = new Array[Double](0)
-        private var scoresF = new Array[Float](0)
-        def score(b: QueryBatch, sels: Array[TopSelector]): Unit = {
-          val mRows = b.m
-          val len = mRows * cx.n
-          if (scores.length < len) {
-            scores = new Array[Double](len)
-            if (useF32) scoresF = new Array[Float](len)
-          }
-          if (useF32) {
-            blas.sgemm("T", "N", cx.n, mRows, cx.dim, 1.0f, cx.dataF, cx.dim,
-              b.q32, cx.dim, 0.0f, scoresF, cx.n)
-            var j = 0
-            while (j < len) { scores(j) = scoresF(j).toDouble; j += 1 }
-          } else {
-            // scores = Q (m×dim) · C^T (dim×n), row-major out (see SURVEY §3)
-            blas.dgemm("T", "N", cx.n, mRows, cx.dim, 1.0, cx.data, cx.dim,
-              b.q64, cx.dim, 0.0, scores, cx.n)
-          }
-          // metric post-processing fused into the GEMM output buffer in
-          // one specialized pass (the per-candidate virtual dispatch a
-          // `match` inside the selection loop costs is measurable at
-          // 10M+ candidates per batch)
-          metric match {
-            case Metric.Dot => ()
-            case Metric.Cosine =>
-              // Zero-norm guard follows the reference's per-path epsilon:
-              // the f32 kernel zeroes at norm ≤ 1e-6 (src/metrics.rs:331-334
-              // — the looser bound papers over f32 accumulation error), the
-              // f64 kernel at ≤ 1e-10 (src/metrics.rs:277-289). A vector
-              // with norm in [1e-10, 1e-6) therefore scores 0.0 on the f32
-              // path and divides on the f64 path, exactly like the reference.
-              val normEps = if (useF32) 1e-6 else 1e-10
-              var qi = 0
-              while (qi < mRows) {
-                val base = qi * cx.n
-                val qn = b.qNorm(qi)
-                var j = 0
-                while (j < cx.n) {
-                  scores(base + j) =
-                    if (qn <= normEps || cx.norms(j) <= normEps) 0.0
-                    else scores(base + j) / (qn * cx.norms(j))
-                  j += 1
-                }
-                qi += 1
-              }
-            case Metric.Euclidean =>
-              var qi = 0
-              while (qi < mRows) {
-                val base = qi * cx.n
-                val qs = b.qSq(qi)
-                var j = 0
-                while (j < cx.n) {
-                  scores(base + j) =
-                    math.sqrt(math.max(0.0, qs + cx.sqNorms(j) - 2.0 * scores(base + j)))
-                  j += 1
-                }
-                qi += 1
-              }
-          }
-          var qi = 0
-          while (qi < mRows) { sels(qi).offerRow(scores, qi * cx.n, cx.n); qi += 1 }
-        }
+        def score(b: QueryBatch, sels: Array[TopSelector]): Unit =
+          dk.topk(b, cx, 0, cx.n, metric, normEps, sels)
       }
     }
   }
@@ -333,23 +281,21 @@ object Similarity {
         if (useF32) TopkFrame.F32 else TopkFrame.F64,
         flat = if (flat) Some(pairs) else None) { () =>
       val cx = bc.value
-      val blas = BLAS.getInstance()
+      val dk = new DotKernel
       var scores = new Array[Double](0)
       var scoresF = new Array[Float](0)
       (b, res) => {
         val n = cx.n
         if (useF32) {
           if (scoresF.length < b.m * n) scoresF = new Array[Float](b.m * n)
-          blas.sgemm("T", "N", n, b.m, cx.dim, 1.0f, cx.dataF, cx.dim,
-            b.q32, cx.dim, 0.0f, scoresF, n)
+          dk.matmul(b, cx, scoresF)
           var i = 0
           while (i < b.m) {
             res(i) = scoreRow(scoresF, Platform.FLOAT_ARRAY_OFFSET, 4, i, n); i += 1
           }
         } else {
           if (scores.length < b.m * n) scores = new Array[Double](b.m * n)
-          blas.dgemm("T", "N", n, b.m, cx.dim, 1.0, cx.data, cx.dim,
-            b.q64, cx.dim, 0.0, scores, n)
+          dk.matmul(b, cx, scores)
           var i = 0
           while (i < b.m) {
             res(i) = scoreRow(scores, Platform.DOUBLE_ARRAY_OFFSET, 8, i, n); i += 1
@@ -397,7 +343,7 @@ object Similarity {
     * the result is one n_q·n_c-element array, the same single
     * allocation the reference returns — numpy-interop ergonomics, not
     * an at-scale operator (that's [[matmulFlat]], which keeps pairs
-    * relational). The GEMM itself still runs distributed; only the
+    * relational). The kernel itself still runs distributed; only the
     * final concatenation is a single-task aggregation, so the
     * broadcast-corpus envelope (~1-2 GB) plus |q|·|c| doubles of
     * result bound the caller. A null query embedding nulls the WHOLE
@@ -435,17 +381,18 @@ object Similarity {
       .select(col("n_queries"), lit(corpus.n.toLong).as("n_corpus"), col("scores"))
   }
 
-  /** All pairs (id1 < id2) with cosine ≥ threshold, via the GEMM
-    * kernel: the corpus is broadcast once, each query partition runs a
-    * blocked dgemm against it, and ONLY qualifying pairs materialize —
-    * output is proportional to matches, never to n². This replaces a
-    * BroadcastNestedLoopJoin + per-pair cosine expression (the round-2
-    * shape of `Dedup.embeddingPairsExact`, 2.7× DuckDB at sf0.1) with
-    * the same batched BLAS pass the top-k kernel uses.
+  /** All pairs (id1 < id2) with cosine ≥ threshold, via the exact
+    * kernel: the corpus is broadcast once, each query partition runs
+    * one [[DotKernel]] pass against it with the threshold filter in its
+    * tile epilogue, and ONLY qualifying pairs materialize — output is
+    * proportional to matches, never to n², and no batch × n score buffer
+    * exists. This replaces a BroadcastNestedLoopJoin + per-pair cosine
+    * expression (the round-2 shape of `Dedup.embeddingPairsExact`, 2.7×
+    * DuckDB at sf0.1) with the same fused pass the top-k kernel uses.
     *
     * Each unordered pair is emitted exactly once, by the lower-id row
-    * (the inner loop skips corpus ids ≤ the query id). Null
-    * embeddings never pair (filtered before the GEMM, matching the
+    * (the epilogue skips corpus ids ≤ the query id). Null
+    * embeddings never pair (filtered before the kernel, matching the
     * null-propagation of the expression form). Cosine is computed in
     * f64 and returned RAW — callers round for their oracle contract.
     * Zero-norm vectors score 0.0 (the kernel's cosine guard).
@@ -482,61 +429,22 @@ object Similarity {
       StructField("score", DoubleType, nullable = false)))
     val outRdd = InternalRowBridge.toInternalRdd(q).mapPartitions { it =>
       val c = bc.value
-      val blas = BLAS.getInstance()
+      val dk = new DotKernel
+      val b = new QueryBatch(c.dim, TopkFrame.F64)
       it.map(_.copy()).grouped(512).flatMap { batch =>
         val mRows = batch.length
         val qIds = new Array[Long](mRows)
-        val qm = new Array[Double](mRows * c.dim)
-        val qNorms = new Array[Double](mRows)
-        val qSq = new Array[Double](mRows)
+        b.ensure(mRows)
+        b.m = mRows
         var i = 0
         batch.foreach { row =>
           qIds(i) = row.getLong(0)
-          val emb = row.getArray(1)
-          if (emb.numElements() != c.dim) throw new IllegalArgumentException(
-            s"Dimension mismatch: row has ${emb.numElements()} elements, corpus has ${c.dim}")
-          val da = emb.toDoubleArray()
-          System.arraycopy(da, 0, qm, i * c.dim, c.dim)
-          var d = 0; var sq = 0.0
-          while (d < c.dim) { val v = da(d); sq += v * v; d += 1 }
-          qSq(i) = sq; qNorms(i) = math.sqrt(sq)
+          b.put(i, row.getArray(1), f32In = false)
           i += 1
         }
-        val scores = new Array[Double](mRows * c.n)
-        if (mRows > 0) blas.dgemm("T", "N", c.n, mRows, c.dim, 1.0, c.data, c.dim,
-          qm, c.dim, 0.0, scores, c.n)
-        val out = new scala.collection.mutable.ArrayBuffer[InternalRow]()
-        var qi = 0
-        while (qi < mRows) {
-          val base = qi * c.n
-          val qid = qIds(qi)
-          val qn = qNorms(qi)
-          // corpus ids are sorted ascending: binary-search the first
-          // id strictly greater than qid, emit only above it — each
-          // unordered pair materializes exactly once
-          var lo = 0; var hi = c.n
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (c.ids(mid) <= qid) lo = mid + 1 else hi = mid
-          }
-          var j = lo
-          while (j < c.n) {
-            val dot = scores(base + j)
-            val s = m match {
-              case Metric.Dot => dot
-              case Metric.Cosine =>
-                val cn = c.norms(j)
-                if (qn <= 1e-10 || cn <= 1e-10) 0.0 else dot / (qn * cn)
-              case Metric.Euclidean =>
-                math.sqrt(math.max(0.0, qSq(qi) + c.sqNorms(j) - 2.0 * dot))
-            }
-            val keep = if (m.higherIsBetter) s >= threshold else s <= threshold
-            if (keep) out += InternalRow(qid, c.ids(j), s)
-            j += 1
-          }
-          qi += 1
-        }
-        out.iterator
+        val out = Array.fill(mRows)(new scala.collection.mutable.ArrayBuffer[InternalRow]())
+        dk.pairs(b, c, m, threshold, qIds, out)
+        out.iterator.flatMap(_.iterator)
       }
     }
     InternalRowBridge.fromInternalRdd(spark, outRdd, outSchema)
@@ -851,8 +759,8 @@ object Similarity {
 
   /** Per-query top-k against an SQ8 corpus on the [[TopkFrame]]
     * contract: the broadcast is the BYTE matrix and scoring DEQUANTIZES
-    * TILES of corpus rows into a reusable f32 buffer for the same sgemm
-    * the f32 path runs. Compute memory is O(tileRows·dim) per task no
+    * TILES of corpus rows into a reusable f32 buffer for one BLAS
+    * sgemm per tile. Compute memory is O(tileRows·dim) per task no
     * matter how big the (compressed) broadcast is — the full f32 corpus
     * is never materialized anywhere. The decode is amortized over the
     * query batch inside each GEMM call (~1/mRows of the FLOPs).
@@ -945,15 +853,17 @@ object Similarity {
     sq8Topk(queries, embCol, corpus, k, metric, "matches", 8192, TopkFrame.Flat)
 
   /** A metric score from a dot product and both sides' norms — the
-    * per-candidate scoring every non-fused pass shares (SQ8 tiles, the
-    * SQ8 reranks, both PQ passes, the stream serve). The cosine
-    * zero-norm guard is the reference's f64 epsilon, 1e-10.
+    * per-candidate scoring every pass shares (the exact kernel's tile
+    * epilogues, SQ8 tiles, the SQ8 reranks, both PQ passes). The cosine
+    * zero-norm guard `normEps` is the reference's f64 epsilon, 1e-10,
+    * except on the exact both-f32 path (1e-6, see [[topk]]).
     */
   private[graft] def scoreOf(
       metric: Metric, dot: Double, qNorm: Double, qSq: Double,
-      cNorm: Double, cSq: Double): Double = metric match {
+      cNorm: Double, cSq: Double, normEps: Double = 1e-10): Double = metric match {
     case Metric.Dot => dot
-    case Metric.Cosine => if (qNorm <= 1e-10 || cNorm <= 1e-10) 0.0 else dot / (qNorm * cNorm)
+    case Metric.Cosine =>
+      if (qNorm <= normEps || cNorm <= normEps) 0.0 else dot / (qNorm * cNorm)
     case Metric.Euclidean => math.sqrt(math.max(0.0, qSq + cSq - 2.0 * dot))
   }
 
@@ -4184,7 +4094,7 @@ object Similarity {
 
   /** Nearest-centroid assignment (Rocchio classification / cluster
     * labeling): compute [[groupCentroids]], then label every vector
-    * with its highest-cosine centroid through the SAME broadcast GEMM
+    * with its highest-cosine centroid through the SAME broadcast exact
     * kernel as `pmm.topk` at k=1 — centroids are a tiny corpus by
     * construction, so assignment is one zero-shuffle scan of the
     * vectors (the plan shape that labels 100 TB of embeddings in one

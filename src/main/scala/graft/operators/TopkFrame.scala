@@ -41,25 +41,6 @@ private[graft] final class TopSelector(val cap: Int, higher: Boolean, val ids: A
     if (size < cap) size += 1
   }
 
-  /** Offers every position `p < n` scoring `s(base + p)`. A score
-    * strictly worse than the kept worst cannot enter, so it is skipped
-    * against a local copy of that worst before any call — the dense
-    * GEMM row's hot loop.
-    */
-  def offerRow(s: Array[Double], base: Int, n: Int): Unit = {
-    val hi = higher
-    var worst = if (size < cap) Double.NaN else score(cap - 1) // NaN: not full, offer all
-    var p = 0
-    while (p < n) {
-      val v = s(base + p)
-      if (!(if (hi) v < worst else v > worst)) {
-        offer(v, p)
-        if (size == cap) worst = score(cap - 1)
-      }
-      p += 1
-    }
-  }
-
   /** The kept entries as a matches array: `(ids(pos), score)` structs. */
   def matches(): GenericArrayData = {
     val structs = new Array[Any](size)
@@ -138,7 +119,7 @@ private[graft] final class QueryBatch(val dim: Int, pack: TopkFrame.Pack) {
   var qSq = new Array[Double](0)
   var qNorm = new Array[Double](0)
 
-  private[operators] def ensure(rows: Int): Unit = if (qSq.length < rows) {
+  private[graft] def ensure(rows: Int): Unit = if (qSq.length < rows) {
     if (pack == TopkFrame.F64) q64 = new Array[Double](rows * dim)
     else q32 = new Array[Float](rows * dim)
     qSq = new Array[Double](rows); qNorm = new Array[Double](rows)
@@ -217,6 +198,15 @@ private[graft] abstract class RowBody(ids: Array[Long]) extends TopkBody(ids) {
   *    metrics, ascending for euclidean), equal scores by the lower
   *    corpus id ([[TopSelector]]), so results never depend on scan
   *    order, batch or partitioning.
+  *  - Arithmetic: a score never depends on its batch either. The exact
+  *    kernel ([[DotKernel]]) computes each dot as one sequential
+  *    `Math.fma(q(d), c(d), acc)` chain over d = 0 … dim−1 from +0.0 —
+  *    in f32 for an f32 query against an f32 corpus, else in f64 — then
+  *    the metric in f64: cosine `s / (‖q‖·‖c‖)` (0.0 at a norm ≤ 1e-6 on
+  *    the f32 path, ≤ 1e-10 on the f64 one), euclidean
+  *    `sqrt(max(0, ‖q‖² + ‖c‖² − 2s))`. The approximate kernels score
+  *    one query row at a time, or through a tile GEMM (SQ8) whose
+  *    scores are not pinned to this arithmetic.
   */
 private[graft] object TopkFrame {
 

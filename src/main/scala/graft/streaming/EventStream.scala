@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Similarity, TopSelector, TopkFrame}
+import graft.operators.{DotKernel, QueryBatch, Similarity, TopSelector, TopkFrame}
 import graft.sources.{ShardedLayout, Source}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -669,14 +669,16 @@ object EventStream {
     * scored per micro-batch against a STATIC broadcast corpus index —
     * the online form of [[graft.operators.Similarity.topkFlat]].
     * Implemented as a stateless typed `mapPartitions` (stream-legal:
-    * no shuffle, no state), batching rows into the same BLAS dgemm
-    * the batch kernel runs, so serving throughput matches the batch
-    * path per executor. Output: (qid, rank, index, score), append
-    * mode. Same contract as the batch kernel: ties to the lower
-    * corpus id, k clamped to [0, |corpus|], null embeddings dropped
-    * (a serving stream has nothing to attach a null result to).
-    * Works identically on a bounded DataFrame — StreamingSpec asserts
-    * byte-parity with `topkFlat` on the replayed stream.
+    * no shuffle, no state), batching rows through the same exact
+    * kernel the batch path runs (`DotKernel`: an f64 FMA chain per
+    * score, the same bits whatever the micro-batch), so serving
+    * throughput matches the batch path per executor. Output: (qid,
+    * rank, index, score), append mode. Same contract as the batch
+    * kernel: ties to the lower corpus id, k clamped to [0, |corpus|],
+    * null embeddings dropped (a serving stream has nothing to attach a
+    * null result to). Works identically on a bounded DataFrame —
+    * StreamingSpec asserts it equals `topkFlat` over f64 queries on
+    * raw scores, and on the replayed stream.
     */
   def topkServe(
       queries: DataFrame,
@@ -700,52 +702,31 @@ object EventStream {
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val cx = bc.value
-        val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
-        // score matrix is batch × TILE, not batch × corpus: the serving
-        // path previously materialized 512 × |corpus| doubles per
-        // micro-batch (~16 GB at a 4M-vector index — round-4 advisor),
-        // inheriting the untiled batch shape while being pitched for
-        // large static indexes. Tiling the corpus dimension with a
-        // running top-k (same scheme as topkSq8) bounds per-task memory
-        // at 512 × corpusTile doubles regardless of index size; the
-        // GEMM reads each tile in place via the offset dgemm variant.
+        val dk = new DotKernel
+        // the kernel keeps no batch × corpus score matrix; `corpusTile`
+        // still bounds each pass over the corpus, the running top-k per
+        // query carried across them (the scheme topkSq8 uses)
         val tw0 = math.min(ct, math.max(cx.n, 1))
-        val scores = new Array[Double](512 * tw0)
-        // running top-k per query, carried across corpus tiles
         val sels = new Array[TopSelector](512)
+        val b = new QueryBatch(cx.dim, TopkFrame.F64)
         it.grouped(512).flatMap { batch =>
           val mRows = batch.length
-          val q = new Array[Double](mRows * cx.dim)
-          val qNorms = new Array[Double](mRows)
-          val qSq = new Array[Double](mRows)
+          b.ensure(mRows)
+          b.m = mRows
           var i = 0
           batch.foreach { case (_, emb) =>
             if (emb.length != cx.dim) throw new IllegalArgumentException(
               s"Dimension mismatch: query has ${emb.length} elements, corpus has ${cx.dim}")
-            System.arraycopy(emb, 0, q, i * cx.dim, cx.dim)
+            System.arraycopy(emb, 0, b.q64, i * cx.dim, cx.dim)
             var d = 0; var sq = 0.0
             while (d < cx.dim) { val v = emb(d); sq += v * v; d += 1 }
-            qSq(i) = sq; qNorms(i) = math.sqrt(sq); i += 1
+            b.qSq(i) = sq; b.qNorm(i) = math.sqrt(sq); i += 1
           }
           TopkFrame.prepare(sels, mRows, kk, higher, cx.ids)
           var t0 = 0
-          while (t0 < cx.n && mRows > 0 && kk > 0) {
+          while (t0 < cx.n && kk > 0) {
             val tw = math.min(tw0, cx.n - t0)
-            blas.dgemm("T", "N", tw, mRows, cx.dim, 1.0,
-              cx.data, t0 * cx.dim, cx.dim, q, 0, cx.dim, 0.0, scores, 0, tw)
-            var qi = 0
-            while (qi < mRows) {
-              val sel = sels(qi)
-              val base = qi * tw
-              var j = 0
-              while (j < tw) {
-                val g = t0 + j // global corpus position
-                sel.offer(Similarity.scoreOf(m, scores(base + j), qNorms(qi), qSq(qi),
-                  cx.norms(g), cx.sqNorms(g)), g)
-                j += 1
-              }
-              qi += 1
-            }
+            dk.topk(b, cx, t0, t0 + tw, m, 1e-10, sels)
             t0 += tw
           }
           batch.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>

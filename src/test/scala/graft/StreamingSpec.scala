@@ -56,6 +56,36 @@ class StreamingSpec extends AnyFunSuite {
     assert(served.nonEmpty)
   }
 
+  test("streaming topk serving over f64 queries equals topkFlat on raw scores, and a 1-row micro-batch serves the same rows as a 512-row one") {
+    import spark.implicits._
+    import graft.operators.{Metric, Similarity}
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rnd = new scala.util.Random(31)
+    val dim = 37
+    // an f32 corpus, which the f64 kernel widens as it reads it
+    val corpus = (0L until 1000L).map(i => (i, Seq.fill(dim)(rnd.nextGaussian().toFloat)))
+    val cx = Similarity.collectCorpus(corpus.toDF("id", "emb"), "id", "emb")
+    val queries = (0L until 512L).map(i => (i, Seq.fill(dim)(rnd.nextGaussian())))
+    val qdf = queries.toDF("qid", "emb").coalesce(1)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("qid", "rank", "index", "score")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    for (metric <- Seq(Metric.Cosine, Metric.Dot, Metric.Euclidean)) {
+      // one 512-row batch, raw scores compared exactly
+      val served = rows(EventStream.topkServe(qdf, "qid", "emb", cx, 10, metric))
+      assert(served == rows(Similarity.topkFlat(qdf, "emb", cx, 10, metric)), s"$metric")
+      assert(served.size == 5120)
+      // four of its rows again, each alone in its own micro-batch
+      val picked = Seq(0, 1, 300, 511)
+      val mem = MemoryStream[(Long, Seq[Double])]
+      val name = s"serve_single_$metric"
+      val q = EventStream.topkServe(mem.toDF.toDF("qid", "emb"), "qid", "emb", cx, 10, metric)
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      try picked.foreach { i => mem.addData(queries(i)); q.processAllAvailable() }
+      finally q.stop()
+      assert(rows(spark.table(name)) == served.filter(r => picked.contains(r._1.toInt)), s"$metric")
+    }
+  }
+
   test("streaming dedup keeps exactly the batch-exact distinct set") {
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
